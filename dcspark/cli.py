@@ -604,10 +604,10 @@ def cmd_test(args: argparse.Namespace) -> int:
     elif args.results_path:
         # explicit schema: an all-pass run has every `reason` NULL, which
         # would fail dict type inference
-        from .engine import RESULTS_DDL
+        from .engine import RESULTS_DDL, rows_frame
 
-        rows = spark.createDataFrame(result.results, schema=RESULTS_DDL)
-        write_results(rows, args.results_path)
+        write_results(rows_frame(spark, result.results, RESULTS_DDL),
+                      args.results_path)
     if args.violations_path and result.violations is not None:
         write_results(result.violations, args.violations_path)
     if args.publish:

@@ -1,30 +1,39 @@
-"""Distribution-drift checks (KS, PSI) as single-pass aggregate contributions.
+"""Distribution-drift checks (KS, PSI) against a reference snapshot.
 
 Engine extension (SURVEY.md §2.5). Both statistics are computed against a
 *reference snapshot* (FIXTURES.md §3 ``ref_stats``): the snapshot is built once
 from a reference sample with ``build_ref_stats`` (approxQuantile = Spark's
-Greenwald-Khanna sketch, the t-digest-equivalent path), then drift evaluation on
-the current table costs ONLY conditional-sum columns folded into the engine's
-shared multi-aggregate scan — no extra shuffle, no second pass:
+Greenwald-Khanna sketch, the t-digest-equivalent path). Evaluating every drift
+check of a table then costs ONE narrow bucket job of its own
+(``drift_bucket_rows``), run beside the engine's shared multi-aggregate scan:
+each value gets a grid bucket |{g in grid : g < value}| from one binary search
+(``grid_buckets``), and a groupBy(check, bucket) count ships at most
+checks x (grid + 1) rows per input partition, whatever the table size. Its
+per-bucket counts fold into the scan's per-partition metric rows:
 
-- KS: current CDF evaluated at the reference quantile grid via
-  ``sum(when(col <= q_i, 1))``; statistic = sup_i |F_cur(q_i) - p_i|.
-- PSI: current counts per reference bin via ``sum(when(edge_k < col <= edge_k+1))``;
+- KS: current CDF at the reference quantile grid, ``count(col <= q_i)`` as
+  cumulative bucket counts; statistic = sup_i |F_cur(q_i) - p_i|.
+- PSI: current counts per reference bin (edge_k < col <= edge_k+1);
   statistic = sum (p - q) * ln(p / q) with epsilon smoothing.
+
+The streaming path (``drift_agg_exprs``) keeps the conditional-sum form.
 """
 
 from __future__ import annotations
 
+import bisect
 import math
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 DEFAULT_QUANTILES = 199
 DEFAULT_BINS = 20
 EPS = 1e-6
+# drift rows' key for a NULL partition value: no str() of a real value has it
+NULL_PARTITION = "\x00null"
 
 REF_STATS_DDL = (
     "column string, bin_edges array<double>, bin_probs array<double>, "
@@ -175,24 +184,74 @@ def cat_bucket_expr(col: str, categories: List[str]) -> F.Column:
     """Category bucket index: position in the snapshot's category list, or
     len(categories) (the OTHER bucket) for values outside it. One
     array_position over a literal array — codegen-friendly at any domain
-    size, mirroring bucket_expr's one-expression shape."""
+    size."""
     arr = F.array(*[F.lit(c) for c in categories])
     pos = F.array_position(arr, F.col(col).cast("string"))
     return F.when(pos > 0, pos - 1).otherwise(F.lit(len(categories)))
 
 
-def bucket_expr(col: str, grid: List[float]) -> F.Column:
-    """Grid-bucket index: |{g in grid : g < value}| via a literal-array filter.
+def _grid_splits(grid: List[float]) -> Tuple[List[float], List[int]]:
+    """Bucketizer splits for one grid, and the grid bucket each output index
+    stands for.
 
-    For an ascending grid (duplicates allowed) the set {j: g[j] < value} is a
-    prefix, so ``value <= g[i]  <=>  bucket <= i`` — cumulative bucket counts
-    reproduce exactly the per-grid-point ``count(value <= g_i)`` sums. One
-    expression regardless of grid size, so the enclosing aggregate stays small
-    enough for whole-stage codegen (a 199-point grid as individual CASE-sum
-    columns forces the fallback interpreted path and erratic runtimes).
-    """
-    arr = F.array(*[F.lit(float(x)) for x in grid])
-    return F.size(F.filter(arr, lambda x: F.col(col) > x))
+    The grid bucket of a value v is |{g in grid : g < v}| under Spark's
+    ordering (NaN greatest, -0.0 == 0.0), duplicates included. For an
+    ascending grid the set {j : g[j] < v} is a prefix, so cumulative bucket
+    counts reproduce the per-grid-point ``count(v <= g_i)`` sums exactly.
+    Bucketizer's intervals are closed on the left, so it runs on f = -v over
+    the negated, deduplicated grid: |{g < v}| = n - |{-g <= f}|, which is
+    constant on each interval [s_i, s_i+1). Output indices past the
+    intervals: len(splits) - 1 is NaN (the "keep" bucket, above every grid
+    point) and len(splits) is v = -inf (below every grid point; Bucketizer
+    closes its last interval on the right too, so f = +inf would otherwise
+    share it with a +inf split)."""
+    neg = sorted(-float(g) + 0.0 for g in grid if not math.isnan(g))
+    n = len(neg)
+    splits = sorted(set(neg))
+    if not splits or splits[0] != -math.inf:
+        splits.insert(0, -math.inf)
+    if splits[-1] != math.inf:
+        splits.append(math.inf)
+    if len(splits) < 3:  # Bucketizer's minimum; an extra split changes nothing
+        splits.insert(1, 0.0)
+    buckets = [n - bisect.bisect_right(neg, s) for s in splits[:-1]]
+    return splits, buckets + [n, 0]
+
+
+def grid_buckets(
+    df: DataFrame,
+    grids: List[Tuple[str, List[float]]],
+    carry: Sequence[Column] = (),
+) -> Tuple[DataFrame, List[List[int]]]:
+    """The one drift bucket kernel: ``carry`` plus a column ``__gb{i}`` per
+    ``grids[i] = (column, grid)`` holding a Bucketizer index, NULL for a NULL
+    value; ``maps[i][int(index)]`` is the grid bucket (see _grid_splits).
+
+    One multi-column Bucketizer: a JVM binary search per value, O(log grid),
+    and no per-grid literals in the plan, since callers group by the raw
+    index and map it on the driver. -0.0 becomes 0.0 before the search:
+    Spark compares them equal, ``Arrays.binarySearch`` does not."""
+    from pyspark.ml.feature import Bucketizer
+
+    neg, split_lists, maps = [], [], []
+    for i, (col, grid) in enumerate(grids):
+        f = -F.col(col).cast("double")
+        neg.append(F.when(f == 0.0, F.lit(0.0)).otherwise(f).alias(f"__gf{i}"))
+        splits, buckets = _grid_splits(grid)
+        split_lists.append(splits)
+        maps.append(buckets)
+    if not grids:
+        return df.select(*carry), maps
+    out = Bucketizer(
+        splitsArray=split_lists, handleInvalid="keep",
+        inputCols=[f"__gf{i}" for i in range(len(grids))],
+        outputCols=[f"__gb{i}" for i in range(len(grids))],
+    ).transform(df.select(*carry, *neg))
+    return out.select(*out.columns[:len(carry)], *[
+        F.when(F.col(f"__gf{i}") == math.inf, F.lit(float(len(s))))
+        .otherwise(F.col(f"__gb{i}")).alias(f"__gb{i}")
+        for i, s in enumerate(split_lists)
+    ]), maps
 
 
 def drift_grid(stats: dict, method: str) -> List[float]:
@@ -229,40 +288,50 @@ def drift_bucket_rows(
     with aliases identical to the old per-grid-point aggregate columns, so
     merge/checkpoint/statistic folding are unchanged.
     """
-    structs = []
-    for chk in checks:
-        if "categories" in chk["stats"]:
-            be = cat_bucket_expr(chk["column"], chk["stats"]["categories"])
-        else:
-            be = bucket_expr(chk["column"], drift_grid(chk["stats"], chk["method"]))
-        b = F.when(F.col(chk["column"]).isNotNull(), be)
-        structs.append(F.struct(F.lit(chk["prefix"]).alias("p"), b.alias("b")))
-    sel = [F.explode(F.array(*structs)).alias("pb")]
-    head: List[F.Column] = []
+    carry: List[Column] = []
     if partition_col:
-        # coalesce NULL partition values to the string "None": the engine's
-        # merge looks partitions up by str(partition_value), so a Python-None
-        # key here would collide with the no-partition sentinel and those
-        # rows' drift counts would silently drop out of the global statistic
-        head = [F.coalesce(F.col(partition_col).cast("string"),
-                           F.lit("None")).alias("__part")]
-    ex = df.select(*(head + sel)).select(
-        *(["__part"] if partition_col else []),
-        F.col("pb.p").alias("p"), F.col("pb.b").alias("b"),
-    )
-    grp = (["__part"] if partition_col else []) + ["p", "b"]
-    counted = ex.groupBy(*grp).agg(F.count(F.lit(1)).alias("c")).collect()
+        # NULL partition values key under NULL_PARTITION: a Python-None key
+        # would collide with the no-partition sentinel (those rows' counts
+        # would drop out of the global statistic), and str(None) with a real
+        # "None" partition
+        carry.append(F.coalesce(F.col(partition_col).cast("string"),
+                                F.lit(NULL_PARTITION)).alias("__part"))
+    grids: List[Tuple[str, List[float]]] = []
+    bucket_cols: List[Column] = []
+    for k, chk in enumerate(checks):
+        if "categories" in chk["stats"]:
+            alias = f"__cb{k}"
+            carry.append(F.when(
+                F.col(chk["column"]).isNotNull(),
+                cat_bucket_expr(chk["column"], chk["stats"]["categories"]),
+            ).alias(alias))
+        else:
+            alias = f"__gb{len(grids)}"
+            grids.append((chk["column"], drift_grid(chk["stats"], chk["method"])))
+        bucket_cols.append(F.col(alias).cast("int"))
+    bucketed, maps = grid_buckets(df, grids, carry)
+    structs = [F.struct(F.lit(k).alias("k"), b.alias("b"))
+               for k, b in enumerate(bucket_cols)]
+    head = ["__part"] if partition_col else []
+    ex = bucketed.select(*head, F.explode(F.array(*structs)).alias("kb")) \
+        .select(*head, F.col("kb.k").alias("k"), F.col("kb.b").alias("b"))
+    counted = ex.groupBy(*head, "k", "b").agg(F.count(F.lit(1)).alias("c")).collect()
 
-    by_check = {chk["prefix"]: chk for chk in checks}
+    # grid checks' raw Bucketizer indices -> grid buckets, in check order
+    grid_maps = iter(maps)
+    to_bucket = [None if "categories" in chk["stats"] else next(grid_maps)
+                 for chk in checks]
     out: Dict[Optional[str], Dict[str, int]] = {}
     for row in counted:
         part = row["__part"] if partition_col else None
-        chk = by_check[row["p"]]
+        chk = checks[row["k"]]
         d = out.setdefault(part, {})
         prefix, method = chk["prefix"], chk["method"]
         b = row["b"]
         if b is None:  # null column values: counted nowhere (parity with <=-sums)
             continue
+        if to_bucket[row["k"]] is not None:
+            b = to_bucket[row["k"]][b]
         c = row["c"]
         d[f"{prefix}__count"] = d.get(f"{prefix}__count", 0) + c
         if method == "psi":

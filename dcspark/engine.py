@@ -6,11 +6,13 @@ Execution plan per model (scale rationale in SURVEY.md §4):
    ``df.schema``; never trigger a scan (anti-goal parity with the reference).
 2. ONE shared multi-aggregate scan computes every agg-kind metric at once:
    null-counts, invalid-counts (length/range/enum/regex/format/not-equal),
-   row_count, freshness max / retention min timestamps, and the KS/PSI drift grid
-   sums. Catalyst fuses these into a single Exchange + partial (map-side) aggregate;
-   with a partition column we run ``groupBy(partition_col)`` instead and merge
-   partition rows into the global metrics on the driver (all metrics are
-   decomposable: sum/min/max), which also powers checkpoint/resume.
+   row_count, freshness max / retention min timestamps. Catalyst fuses these
+   into a single Exchange + partial (map-side) aggregate; with a partition
+   column we run ``groupBy(partition_col)`` instead and merge partition rows
+   into the global metrics on the driver (all metrics are decomposable:
+   sum/min/max), which also powers checkpoint/resume. The KS/PSI drift checks
+   run beside it as one narrow bucket job (drift.drift_bucket_rows) whose
+   per-bucket counts merge into the same partition rows.
 3. The audio decode-conformance pass (Arrow mapInPandas) aggregates its per-row
    flags through the same partitioned/mergeable path.
 4. Dedicated jobs that genuinely need their own shuffle: uniqueness (groupBy-key
@@ -22,6 +24,8 @@ Execution plan per model (scale rationale in SURVEY.md §4):
    predicates in a single scan (array-of-structs -> filter -> explode) with a
    per-check row cap (default 500 — parity with DATACONTRACT_MAX_ERRORS,
    /root/reference/datacontract/engines/fastjsonschema/check_jsonschema.py:55-63).
+   Every check family's capped rows are collected to the driver; ``validate``
+   turns them into the violations frame once (``rows_frame``).
 
 All checks report results (no short-circuiting), matching the reference's
 worst-result-wins fold (/root/reference/datacontract/model/run.py:65-75).
@@ -59,6 +63,35 @@ RESULTS_DDL = (
     "result string, metric_value double, threshold string, reason string, "
     "row_count bigint, ts_start timestamp, ts_end timestamp"
 )
+
+
+def rows_frame(spark: SparkSession, rows: List[Any], ddl: str) -> DataFrame:
+    """Driver-side rows as a DataFrame of schema ``ddl``: tuples in column
+    order (``Row`` included) or dicts keyed by column name.
+
+    The rows reach the JVM as one Arrow table, so the frame plans as a single
+    ``LocalTableScan`` and reading or writing it starts no Python worker
+    (``createDataFrame(list)`` plans a Python RDD, one worker task per
+    slice). Timestamps mean what they mean to ``createDataFrame(list)``:
+    aware values are instants, naive ones are local time."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    if rows and isinstance(rows[0], dict):
+        columns = [[r.get(name) for r in rows] for name in arrow.names]
+    else:
+        columns = [list(c) for c in zip(*rows)] or [[] for _ in arrow.names]
+    arrays = []
+    for values, f in zip(columns, arrow):
+        if pa.types.is_timestamp(f.type):
+            values = [v.astimezone() if v is not None and v.tzinfo is None else v
+                      for v in values]
+        arrays.append(pa.array(values, type=f.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow),
+                                 schema=schema)
 
 
 @dataclass
@@ -301,7 +334,9 @@ class Validator:
             data_contract_id=spec.id,
             data_contract_version=spec.info.version if spec.info else None,
         )
-        self._violation_frames: List[DataFrame] = []
+        # capped violation rows in VIOLATIONS_DDL column order; None until a
+        # violation pass runs (a pass that finds no rows still yields a frame)
+        self._violation_rows: Optional[List[tuple]] = None
         self._results_rows: List[dict] = []
         self._metrics: Dict[str, Optional[float]] = {}
         self._phase_timings: Dict[str, Dict[str, float]] = {}
@@ -336,7 +371,8 @@ class Validator:
             for child in children:
                 self.run.checks.extend(child.run.checks)
                 self.run.logs.extend(child.run.logs)
-                self._violation_frames.extend(child._violation_frames)
+                if child._violation_rows is not None:
+                    self._add_violations(child._violation_rows)
                 self._results_rows.extend(child._results_rows)
                 self._metrics.update(child._metrics)
                 self._phase_timings.update(child._phase_timings)
@@ -346,10 +382,8 @@ class Validator:
 
         self.run.finish()
         violations = None
-        if self._violation_frames:
-            violations = self._violation_frames[0]
-            for vf in self._violation_frames[1:]:
-                violations = violations.unionByName(vf)
+        if self._violation_rows is not None:
+            violations = rows_frame(self.spark, self._violation_rows, VIOLATIONS_DDL)
         return ValidationResult(
             run=self.run,
             results=self._results_rows,
@@ -368,11 +402,16 @@ class Validator:
         child.tables = self.tables
         child.config = self.config
         child.run = self.run.model_copy(update={"checks": [], "logs": []})
-        child._violation_frames = []
+        child._violation_rows = None
         child._results_rows = []
         child._metrics = {}
         child._phase_timings = {}
         return child
+
+    def _add_violations(self, rows: List[tuple]) -> None:
+        if self._violation_rows is None:
+            self._violation_rows = []
+        self._violation_rows.extend(rows)
 
     # -- per-model orchestration --------------------------------------------
 
@@ -723,11 +762,12 @@ class Validator:
     ) -> Tuple[Dict[str, Column], Dict[str, str], List[dict]]:
         """Shared-scan aggregate columns + merge ops + drift bucket-job specs.
 
-        Drift grids are NOT inlined as per-grid-point aggregate columns: a
-        199-point grid would push the aggregate past the whole-stage-codegen
-        field limit and onto the erratic interpreted path. They run as one
-        narrow bucket-groupBy job (drift_mod.drift_bucket_rows) whose output
-        aliases are folded into the same per-partition metric rows.
+        Drift checks add no aggregate columns: a 199-point grid as
+        per-grid-point sums would push the aggregate past the
+        whole-stage-codegen field limit. Each spec is one drift check of the
+        table's bucket job (drift_mod.drift_bucket_rows), which runs beside
+        the shared scan; _merge_drift_rows folds its counts into the
+        per-partition metric rows, and ``ops`` sums them like the scan's own.
         """
         exprs: Dict[str, Column] = {"__total_count": F.count(F.lit(1))}
         ops: Dict[str, str] = {"__total_count": "sum"}
@@ -775,7 +815,9 @@ class Validator:
                 zero[alias] = 0
         if partition_col:
             for prow in part_rows:
-                prow.update(drift_rows.get(str(prow.get(partition_col)), zero))
+                pid = prow.get(partition_col)
+                key = drift_mod.NULL_PARTITION if pid is None else str(pid)
+                prow.update(drift_rows.get(key, zero))
         elif part_rows:
             part_rows[0].update(drift_rows.get(None, zero))
 
@@ -1259,8 +1301,7 @@ class Validator:
                     (self.run.runId, part, audio_chk.key, clip_id, observed, audio_chk.expected)
                     for part, clip_id, observed in audio_vio[: self.config.violation_cap]
                 ]
-                self._violation_frames.append(
-                    self.spark.createDataFrame(vio_rows, schema=VIOLATIONS_DDL))
+                self._add_violations(vio_rows)
 
         for chk, res in fused_fp_results:
             self._record_audio_fp(chk, res)
@@ -1302,8 +1343,7 @@ class Validator:
                     for r in audio_fv_rows if int(r["t"]) == li
                 ][: self.config.violation_cap]
                 if vio_rows:
-                    self._violation_frames.append(
-                        self.spark.createDataFrame(vio_rows, schema=VIOLATIONS_DDL))
+                    self._add_violations(vio_rows)
 
         if failed_agg:
             self._collect_agg_violations(model_name, df, failed_agg, partition_col)
@@ -1425,9 +1465,7 @@ class Validator:
             .filter(F.col("__rn") <= cap)
             .drop("__rn")
         )
-        self._violation_frames.append(
-            self.spark.createDataFrame(capped.collect(), schema=VIOLATIONS_DDL)
-        )
+        self._add_violations(capped.collect())
 
     # -- approx uniqueness (HLL sketch in the shared scan; zero extra shuffle) --
 
@@ -1570,8 +1608,7 @@ class Validator:
         self._record(chk, metric, result, reason, None,
                      diagnostics={"dup_values": res["dup_values"], "dup_rows": res["dup_rows"]})
         if res["vio_rows"]:
-            self._violation_frames.append(
-                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
+            self._add_violations(res["vio_rows"])
 
     # -- per-group aggregate thresholds (group quality checks) ----------------
 
@@ -1633,8 +1670,7 @@ class Validator:
         )
         self._record(chk, metric, result, reason, None)
         if res["vio_rows"]:
-            self._violation_frames.append(
-                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
+            self._add_violations(res["vio_rows"])
 
     # -- audio content uniqueness (fingerprint near-dup) ----------------------
 
@@ -1856,14 +1892,13 @@ class Validator:
 
         feat = f"f_{chk.params['feature']}"
         edges = [float(x) for x in stats["bin_edges"]]
-        rows = (compact
-                .filter(F.col("decode_error").isNull()
-                        & F.col(feat).isNotNull())
-                .groupBy(drift_mod.bucket_expr(feat, edges).alias("__b"))
-                .count().collect())
+        bucketed, (to_bucket,) = drift_mod.grid_buckets(
+            compact.filter(F.col("decode_error").isNull()
+                           & F.col(feat).isNotNull()),
+            [(feat, edges)])
         counts = [0] * (len(edges) + 1)
-        for r in rows:
-            counts[int(r["__b"])] += int(r["count"])
+        for r in bucketed.groupBy("__gb0").count().collect():
+            counts[to_bucket[int(r["__gb0"])]] += int(r["count"])
         stat = drift_mod.drift_statistic_from_counts(
             counts, stats, chk.params["method"])
         return {"stat": stat, "rows": sum(counts)}
@@ -2002,8 +2037,7 @@ class Validator:
             reason = None if metric == 0 else fail_reason(metric)
         self._record(chk, metric, result, reason, None)
         if res["vio_rows"]:
-            self._violation_frames.append(
-                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
+            self._add_violations(res["vio_rows"])
 
     def _record_audio_fp(self, chk: CompiledCheck, res: dict) -> None:
         self._record_zero_default(
@@ -2207,8 +2241,7 @@ class Validator:
                 pres, preason = chk.eval_metric(pm, {})
                 self._record(chk, pm, pres, preason, None, partition_id=pid)
         if res["vio_rows"]:
-            self._violation_frames.append(
-                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
+            self._add_violations(res["vio_rows"])
 
     # -- transcript equality vs oracle reference (join check) ------------------
 
@@ -2283,8 +2316,7 @@ class Validator:
                 pres, preason = chk.eval_metric(pm, {})
                 self._record(chk, pm, pres, preason, None, partition_id=pid)
         if res["vio_rows"]:
-            self._violation_frames.append(
-                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
+            self._add_violations(res["vio_rows"])
 
     # -- SQL quality ----------------------------------------------------------
 

@@ -95,9 +95,9 @@ def validate_stream(
         if results_sink:
             # explicit schema: an all-pass batch has every reason NULL,
             # which would fail dict type inference
-            from .engine import RESULTS_DDL
+            from .engine import RESULTS_DDL, rows_frame
 
-            rows = spark.createDataFrame(result.results, schema=RESULTS_DDL)
+            rows = rows_frame(spark, result.results, RESULTS_DDL)
             rows.withColumn("batch_id", F.lit(batch_id)) \
                 .write.mode("append").parquet(results_sink)
         if on_batch:
@@ -323,10 +323,10 @@ def validate_iceberg_increments(
         tables.update(static_tables)
     result = validate(spark, spec, tables, config)
     if results_sink:
-        from .engine import RESULTS_DDL
+        from .engine import RESULTS_DDL, rows_frame
         from .io import write_results
 
-        rows = spark.createDataFrame(result.results, schema=RESULTS_DDL) \
+        rows = rows_frame(spark, result.results, RESULTS_DDL) \
             .withColumn("snapshot_id", F.lit(current).cast("long"))
         write_results(rows, results_sink, fmt="iceberg")
     tmp = state_path + f".tmp-{_uuid.uuid4().hex}"

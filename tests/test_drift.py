@@ -184,22 +184,25 @@ models:
 
 
 def test_bucket_rows_null_partition_keyed_as_string(spark):
-    """Review finding: NULL partition values must key under the string
-    'None' (the engine merges by str(partition_value)) — a Python-None key
-    would collide with the no-partition sentinel and those rows' counts
-    silently vanish from the global drift statistic."""
+    """Review findings: NULL partition values must key under a string (the
+    engine merges by partition string) — a Python-None key would collide
+    with the no-partition sentinel and those rows' counts silently vanish
+    from the global drift statistic. The string is NULL_PARTITION, not
+    str(None): a real "None" partition keeps counts of its own."""
     from dcspark import drift as drift_mod
     from pyspark.sql import functions as F
 
     df = spark.range(100).select(
         (F.col("id") % 10).cast("double").alias("x"),
-        F.when(F.col("id") % 4 == 0, None).otherwise(
-            (F.col("id") % 2).cast("string")).alias("bucket"))
+        F.when(F.col("id") % 4 == 0, None)
+        .when(F.col("id") % 4 == 1, F.lit("None"))
+        .otherwise((F.col("id") % 2).cast("string")).alias("bucket"))
     stats = drift_mod.build_ref_stats(df.select("x"), ["x"])
     checks = [{"prefix": "c0", "column": "x", "method": "ks", "stats": stats["x"]}]
     out = drift_mod.drift_bucket_rows(df, checks, partition_col="bucket")
-    assert "None" in out, f"null partition missing: {list(out)}"
     assert None not in out
+    assert out[drift_mod.NULL_PARTITION]["c0__count"] == 25
+    assert out["None"]["c0__count"] == 25
     total = sum(d.get("c0__count", 0) for d in out.values())
     assert total == 100  # every row counted exactly once
 
@@ -213,3 +216,32 @@ def test_build_ref_stats_all_null_column_clear_error(spark):
     df = spark.range(10).select(F.lit(None).cast("double").alias("y"))
     with pytest.raises(ValueError, match="no non-null values.*'y'"):
         drift_mod.build_ref_stats(df, ["y"])
+
+
+def test_drift_job_plan_has_no_lambda(spark, monkeypatch):
+    """The bucket job bins each value with one binary search
+    (drift.grid_buckets), not a literal-array lambda that runs once per grid
+    point."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql import functions as F
+
+    from dcspark import drift as drift_mod
+
+    df = spark.range(200).select((F.col("id") % 17).cast("double").alias("x"),
+                                 (F.col("id") % 3).cast("string").alias("p"))
+    stats = drift_mod.build_ref_stats(df.select("x"), ["x"])
+    checks = [{"prefix": "c0", "column": "x", "method": "ks", "stats": stats["x"]},
+              {"prefix": "c1", "column": "x", "method": "psi", "stats": stats["x"]}]
+    plans = []
+    collect = DataFrame.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().toString())
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    out = drift_mod.drift_bucket_rows(df, checks, partition_col="p")
+    assert sum(d["c0__count"] for d in out.values()) == 200
+    assert len(plans) == 1
+    assert "lambdafunction" not in plans[0].lower()
+    assert "bucketizer" in plans[0].lower()

@@ -129,7 +129,8 @@ def test_shared_agg_is_single_exchange(spark):
 
 def test_shared_agg_keeps_whole_stage_codegen(spark):
     """~20 metric columns must stay on the codegen path (the drift grids are
-    deliberately NOT inlined here — see drift.bucket_expr)."""
+    deliberately NOT inlined here — they run as their own bucket job, see
+    drift.drift_bucket_rows)."""
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     cols = [F.sum(F.when(F.col("l_quantity") > k, 1).otherwise(0)).alias(f"c{k}")
             for k in range(20)]
