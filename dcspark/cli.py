@@ -373,35 +373,6 @@ def _resolve_where(args: argparse.Namespace, spec) -> dict:
     return {model: args.where}
 
 
-#: CompiledCheck.kind -> (Spark JOB identity, variant detail) — the dry-run's
-#: summary of the engine's batching (engine._run_model groups exactly these
-#: ways). The job identity decides row grouping in the printed jobs table
-#: (same identity = genuinely the same Spark job); the detail is the
-#: per-variant annotation printed beneath when a job carries several.
-_EXEC_SHAPE = {
-    "schema_present": ("driver-only schema check (no scan)", None),
-    "schema_type": ("driver-only schema check (no scan)", None),
-    "agg": ("shared multi-aggregate scan", "one pass for ALL agg checks"),
-    "freshness": ("shared multi-aggregate scan", "freshness rides the shared pass"),
-    "retention": ("shared multi-aggregate scan", "retention rides the shared pass"),
-    "unique": ("dedicated exact-uniqueness job (two-phase salted groupBy)", None),
-    "reference": ("anti-join vs the parent table (broadcast when it fits)", None),
-    "join_equality": ("key-join equality vs the reference table", None),
-    "sql": ("user SQL job", None),
-    "group": ("dedicated groupBy job", None),
-    "drift": ("binned aggregate vs --ref-stats snapshot", None),
-    "history": ("metric-history window read (results table)", None),
-    "audio": ("fused audio decode pass",
-              "ONE mapInArrow payload scan shared by every audio rule"),
-    "audio_quality": ("fused audio decode pass", "feature bounds ride it"),
-    "image": ("fused image decode pass", "one mapInArrow payload scan"),
-    "image_fp": ("fused image decode pass", "content-uniqueness rides it"),
-    "image_drift": ("fused image decode pass", "feature histograms ride it"),
-    "image_quality": ("fused image decode pass", "feature bounds ride it"),
-    "video": ("fused video decode pass (one mapInArrow payload scan)", None),
-}
-
-
 def _test_dry_run(spec, args: argparse.Namespace) -> int:
     """`test --dry-run`: compile every rule and print the execution plan —
     check inventory, the Spark job each check rides, effective row scopes —
@@ -410,6 +381,7 @@ def _test_dry_run(spec, args: argparse.Namespace) -> int:
     pre-flight for a 10^12-row run: catch typo'd filters, missing columns
     in scopes, or an accidental per-check fan-out before paying for a scan."""
     from .compile import create_checks
+    from .engine import family_groups, plan_audio_scan, plan_model
 
     server_format = None
     if args.server and args.server in (spec.servers or {}):
@@ -429,74 +401,28 @@ def _test_dry_run(spec, args: argparse.Namespace) -> int:
         if scopes:
             print("  row scope (ANDed, pushed into the source scan): "
                   + " AND ".join(scopes))
-        # Conditional batchings derive from the SAME predicates the engine
-        # applies (engine.plan_approx_unique / plan_fused_audio_fp), so the
-        # printed plan can't drift from actual execution. Two inputs the
-        # dry-run can't see are caveated: whether --partition-col exists in
-        # the data (assumed yes when the flag is given) and whether the
-        # --ref-stats snapshot carries each audio-drift feature (assumed yes
-        # when --ref-stats is given).
-        from .audio import BYTES_COL
-        from .engine import plan_approx_unique, plan_fused_audio_fp
-
-        unique_mode = getattr(args, "unique_mode", "exact") or "exact"
-        approx_unique = set(
-            id(c) for c in plan_approx_unique(
-                [c for c in checks if c.kind == "unique"], unique_mode))
-        audio_scan_will_run = any(
-            c.kind in ("audio", "audio_quality") for c in checks
-        ) or (bool(getattr(args, "ref_stats", None))
-              and any(c.kind == "audio_drift" for c in checks))
-        resume_active = bool(getattr(args, "partition_col", None)
-                             and getattr(args, "checkpoint_dir", None))
-        fused_fp = set(id(c) for c in plan_fused_audio_fp(
-            [c for c in checks if c.kind == "audio_fp"],
-            default_bytes_col=BYTES_COL,
-            audio_scan_will_run=audio_scan_will_run,
-            partition_resume_active=resume_active,
-        ))
-
-        def shape_of(c) -> tuple:
-            """(job identity, variant detail): identity decides grouping —
-            same identity means genuinely the same Spark job; jobs that are
-            SEPARATE per check (dedicated fp jobs with different reasons)
-            carry the reason in the IDENTITY so they never merge."""
-            if c.kind == "unique":
-                if id(c) in approx_unique:
-                    return ("shared multi-aggregate scan",
-                            "HLL approx-distinct sketch — --unique-mode approx")
-                return _EXEC_SHAPE["unique"]
-            if c.kind == "reference":
-                if (getattr(args, "reference_mode", "exact") or "exact") == "approx":
-                    return ("parent Bloom bitset + MAP-ONLY child membership "
-                            "probe (--reference-mode approx; falls back to "
-                            "the exact anti-join over the bitset budget)", None)
-                return _EXEC_SHAPE["reference"]
-            if c.kind == "audio_fp":
-                if id(c) in fused_fp:
-                    return ("fused audio decode pass",
-                            "fingerprints ride the same scan")
-                why = ("checkpoint-resume active" if resume_active
-                       else "custom bytes_col"
-                       if c.params.get("bytes_col", BYTES_COL) != BYTES_COL
-                       else "no co-running audio scan")
-                return (f"dedicated fingerprint decode job ({why})", None)
-            if c.kind == "audio_drift":
-                if audio_scan_will_run:
-                    return ("fused audio decode pass",
-                            "feature histograms ride it IF the --ref-stats "
-                            "snapshot carries the feature")
-                return ("skipped unless --ref-stats provides the feature "
-                        "snapshot (then rides a fused decode pass)", None)
-            return _EXEC_SHAPE.get(c.kind, (f"dedicated job ({c.kind})", None))
-
+        # Job shapes come from the engine's own family table and planning
+        # (engine.FAMILIES / plan_model), so the printed plan can't drift
+        # from actual execution. Two inputs the dry-run can't see are
+        # caveated: whether --partition-col exists in the data (assumed yes
+        # when the flag is given) and whether the --ref-stats snapshot
+        # carries each audio-drift feature (assumed yes when --ref-stats is
+        # given).
+        plan = plan_model(
+            family_groups(checks),
+            unique_mode=getattr(args, "unique_mode", "exact") or "exact",
+            reference_mode=getattr(args, "reference_mode", "exact") or "exact",
+            audio_scan=plan_audio_scan(
+                checks, lambda c: bool(getattr(args, "ref_stats", None))),
+            resume_active=bool(getattr(args, "partition_col", None)
+                               and getattr(args, "checkpoint_dir", None)))
         # one printed row per JOB IDENTITY (the same-job batchings — fused
         # decode pass, shared scan — merge; genuinely separate jobs never
         # do), with per-variant detail as indented sub-lines when a job
         # carries more than one
         by_job: dict = {}
         for c in checks:
-            job, detail = shape_of(c)
+            job, detail = plan.shape_of(c)
             by_job.setdefault(job, {}).setdefault(detail, []).append(c)
         print("  jobs:")
         for job, variants in sorted(

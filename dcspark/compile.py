@@ -109,10 +109,6 @@ def _invalid_count(col: str, invalid_pred: Column) -> Column:
     )
 
 
-def _fmt(v: Any) -> str:
-    return str(v)
-
-
 # ---------------------------------------------------------------------------
 # Field-level generators (parity: data_contract_checks.py:104-447)
 # ---------------------------------------------------------------------------

@@ -1,34 +1,45 @@
 """Validation executor: plans and runs all compiled checks with minimal passes.
 
-Execution plan per model (scale rationale in SURVEY.md §4):
+``FAMILIES`` is the execution plan. Each entry is one check family: the
+compiled kinds it serves, how its checks become Spark jobs, the Validator
+method that computes them, its ``phase_timings`` label and the job that
+``test --dry-run`` prints for it. ``plan_model`` turns one model's checks
+into jobs from that table; the engine and the dry-run both call it, so the
+printed plan is the executed one. Per model (scale rationale in SURVEY.md §4):
 
-1. Schema checks (field_is_present / field_type) — driver-side against
+1. Driver-only: schema checks (field_is_present / field_type) against
    ``df.schema``; never trigger a scan (anti-goal parity with the reference).
-2. ONE shared multi-aggregate scan computes every agg-kind metric at once:
-   null-counts, invalid-counts (length/range/enum/regex/format/not-equal),
-   row_count, freshness max / retention min timestamps. Catalyst fuses these
-   into a single Exchange + partial (map-side) aggregate; with a partition
-   column we run ``groupBy(partition_col)`` instead and merge partition rows
-   into the global metrics on the driver (all metrics are decomposable:
-   sum/min/max), which also powers checkpoint/resume. The KS/PSI drift checks
-   run beside it as one narrow bucket job (drift.drift_bucket_rows) whose
-   per-bucket counts merge into the same partition rows.
-3. The audio decode-conformance pass (Arrow mapInPandas) aggregates its per-row
-   flags through the same partitioned/mergeable path.
-4. Dedicated jobs that genuinely need their own shuffle: uniqueness (groupBy-key
-   duplicate count — map-side partial aggregation bounds shuffle volume by the
-   number of DISTINCT keys per partition, AQE handles skew), referential integrity
-   (anti-join; broadcast hint when the parent is declared small), and scalar SQL
-   quality queries.
+2. The shared scan: ONE multi-aggregate scan computes every agg-kind metric
+   at once: null-counts, invalid-counts (length/range/enum/regex/format/
+   not-equal), row_count, freshness max / retention min timestamps. Catalyst
+   fuses these into a single Exchange + partial (map-side) aggregate; with a
+   partition column we run ``groupBy(partition_col)`` instead and merge
+   partition rows into the global metrics on the driver (all metrics are
+   decomposable: sum/min/max), which also powers checkpoint/resume. The
+   KS/PSI drift checks run beside it as one narrow bucket job
+   (drift.drift_bucket_rows) whose per-bucket counts merge into the same
+   partition rows. The audio decode pass (one Arrow ``mapInArrow`` scan)
+   runs beside it too and aggregates its per-row flags through the same
+   partitioned/mergeable path.
+3. One job per check, or per image payload column, for the families that
+   genuinely need their own shuffle or decode: uniqueness (groupBy-key
+   duplicate count — map-side partial aggregation bounds shuffle volume by
+   the number of DISTINCT keys per partition, AQE handles skew), referential
+   integrity (anti-join; broadcast hint when the parent is declared small),
+   transcript equality, group thresholds, fingerprints, image and video
+   decode, and scalar SQL quality queries. They run concurrently and record
+   afterwards in table order.
+4. After the model: metric-history checks judge this run's metrics.
 5. A violations pass runs ONLY for checks that failed, evaluating all failed
    predicates in a single scan (array-of-structs -> filter -> explode) with a
-   per-check row cap (default 500 — parity with DATACONTRACT_MAX_ERRORS,
-   /root/reference/datacontract/engines/fastjsonschema/check_jsonschema.py:55-63).
+   per-check row cap (default 500 — parity with the reference CLI's
+   DATACONTRACT_MAX_ERRORS, datacontract/engines/fastjsonschema/
+   check_jsonschema.py:55-63).
    Every check family's capped rows are collected to the driver; ``validate``
    turns them into the violations frame once (``rows_frame``).
 
 All checks report results (no short-circuiting), matching the reference's
-worst-result-wins fold (/root/reference/datacontract/model/run.py:65-75).
+worst-result-wins fold (datacontract/model/run.py:65-75).
 """
 
 from __future__ import annotations
@@ -38,8 +49,9 @@ import json
 import math
 import os
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Dict, List, Optional, Tuple
+from typing import Any, Callable, Dict, List, Optional, Tuple
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -280,10 +292,41 @@ def _missing_table_error(path: str, exc: Exception) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# job-shape planning predicates — shared by the engine and `test --dry-run`
-# (cli._test_dry_run), so the printed plan derives from the SAME logic the
-# engine executes and cannot drift from it.
+# check families: the execution plan, shared by the engine and `test --dry-run`
+# (cli._test_dry_run), so the printed plan is the plan the engine runs
 # ---------------------------------------------------------------------------
+
+# how a family's checks become Spark jobs
+DRIVER = "driver"                # on the driver, no job
+SHARED_SCAN = "shared_scan"      # ride the model's one shared scan
+PER_CHECK = "per_check"          # one job per check
+PER_BYTES_COL = "per_bytes_col"  # one decode job per payload column
+AFTER_MODEL = "after_model"      # after every other check of the model
+
+
+@dataclass(eq=False)
+class Family:
+    """One check family. ``compute`` names the Validator method that runs
+    its checks (called ``(model_name, df, check)``, or with the check list
+    for DRIVER / SHARED_SCAN / PER_BYTES_COL / AFTER_MODEL); ``label`` is
+    the ``phase_timings`` prefix of its jobs. ``plan`` maps a shape variant
+    to the dry-run's (job, detail): the variant is "scan" for a check that
+    ``to_scan`` moves into the shared scan, else ``variant(check, plan)``,
+    else the check's kind; "" is the fallback. ``fail`` holds the
+    zero-is-pass reason per kind (other kinds are judged by
+    ``chk.eval_metric``); ``needs_columns`` checks error out without a job
+    when a column they read is missing."""
+    kinds: Tuple[str, ...]
+    jobs: str
+    compute: str
+    label: str
+    plan: Dict[str, Tuple[str, Optional[str]]]
+    fail: Dict[str, str] = dc_field(default_factory=dict)
+    needs_columns: bool = False
+    to_scan: Optional[Callable[[List["CompiledCheck"], "ModelPlan"],
+                               List["CompiledCheck"]]] = None
+    variant: Optional[Callable[["CompiledCheck", "ModelPlan"], str]] = None
+
 
 def plan_approx_unique(unique_checks: List["CompiledCheck"], unique_mode: str
                        ) -> List["CompiledCheck"]:
@@ -312,6 +355,154 @@ def plan_fused_audio_fp(fp_checks: List["CompiledCheck"], *,
     if fusible and audio_scan_will_run and not partition_resume_active:
         return fusible
     return []
+
+
+def plan_audio_scan(checks: List["CompiledCheck"],
+                    has_snapshot: Callable[["CompiledCheck"], bool]) -> bool:
+    """Whether the shared scan runs the audio decode pass: a decode-conformance
+    or signal-quality rule, or a loudness-drift rule whose reference snapshot
+    exists (``has_snapshot``; a drift rule without one errors at no cost)."""
+    return any(c.kind in ("audio", "audio_quality")
+               or (c.kind == "audio_drift" and has_snapshot(c)) for c in checks)
+
+
+_SCAN_JOB = "shared multi-aggregate scan"
+_AUDIO_JOB = "fused audio decode pass"
+_IMAGE_JOB = "fused image decode pass"
+_FP_JOB = "dedicated fingerprint decode job"
+
+FAMILIES: Tuple[Family, ...] = (
+    Family(("schema_present", "schema_type"), DRIVER, "_run_schema_checks", "",
+           {"": ("driver-only schema check (no scan)", None)}),
+    Family(("agg", "freshness", "retention"), SHARED_SCAN, "_run_shared_scan",
+           "shared_scan",
+           {"agg": (_SCAN_JOB, "one pass for ALL agg checks"),
+            "freshness": (_SCAN_JOB, "freshness rides the shared pass"),
+            "retention": (_SCAN_JOB, "retention rides the shared pass")},
+           needs_columns=True),
+    Family(("drift",), SHARED_SCAN, "_run_shared_scan", "shared_scan",
+           {"": ("binned aggregate vs --ref-stats snapshot", None)},
+           needs_columns=True),
+    Family(("audio", "audio_quality", "audio_drift"), SHARED_SCAN,
+           "_run_shared_scan", "shared_scan",
+           {"audio": (_AUDIO_JOB,
+                      "ONE mapInArrow payload scan shared by every audio rule"),
+            "audio_quality": (_AUDIO_JOB, "feature bounds ride it"),
+            "audio_drift": (_AUDIO_JOB, "feature histograms ride it IF the "
+                            "--ref-stats snapshot carries the feature"),
+            "no_scan": ("skipped unless --ref-stats provides the feature "
+                        "snapshot (then rides a fused decode pass)", None)},
+           variant=lambda c, plan: c.kind if plan.audio_scan else "no_scan"),
+    Family(("unique",), PER_CHECK, "_unique_compute", "unique",
+           {"": ("dedicated exact-uniqueness job (two-phase salted groupBy)", None),
+            "scan": (_SCAN_JOB, "HLL approx-distinct sketch — --unique-mode approx")},
+           needs_columns=True,
+           to_scan=lambda cs, plan: plan_approx_unique(cs, plan.unique_mode)),
+    Family(("reference",), PER_CHECK, "_reference_compute", "reference",
+           {"": ("anti-join vs the parent table (broadcast when it fits)", None),
+            "approx": ("parent Bloom bitset + MAP-ONLY child membership probe "
+                       "(--reference-mode approx; falls back to the exact "
+                       "anti-join over the bitset budget)", None)},
+           needs_columns=True, variant=lambda c, plan: plan.reference_mode),
+    Family(("join_equality",), PER_CHECK, "_join_equality_compute", "join_eq",
+           {"": ("key-join equality vs the reference table", None)}),
+    Family(("group",), PER_CHECK, "_group_compute", "group",
+           {"": ("dedicated groupBy job", None)},
+           fail={"group": "{n} group(s) violate {p[threshold]}"},
+           needs_columns=True),
+    Family(("audio_fp",), PER_CHECK, "_audio_fp_compute", "audio_fp",
+           {"scan": (_AUDIO_JOB, "fingerprints ride the same scan"),
+            "resume": (f"{_FP_JOB} (checkpoint-resume active)", None),
+            "bytes_col": (f"{_FP_JOB} (custom bytes_col)", None),
+            "": (f"{_FP_JOB} (no co-running audio scan)", None)},
+           fail={"audio_fp": "{n} near-duplicate clip pair(s)"},
+           to_scan=lambda cs, plan: plan_fused_audio_fp(
+               cs, default_bytes_col=audio_mod.BYTES_COL,
+               audio_scan_will_run=plan.audio_scan,
+               partition_resume_active=plan.resume_active),
+           variant=lambda c, plan: (
+               "resume" if plan.resume_active else "bytes_col"
+               if c.params.get("bytes_col", audio_mod.BYTES_COL) != audio_mod.BYTES_COL
+               else "")),
+    Family(("image", "image_quality", "image_fp", "image_drift"), PER_BYTES_COL,
+           "_image_family_compute", "image_decode",
+           {"image": (_IMAGE_JOB, "one mapInPandas payload scan"),
+            "image_quality": (_IMAGE_JOB, "feature bounds ride it"),
+            "image_fp": (_IMAGE_JOB, "content-uniqueness rides it"),
+            "image_drift": (_IMAGE_JOB, "feature histograms ride it")},
+           fail={"image": "{n} image payload(s) failed decode or dimension conformance",
+                 "image_quality": "{n} image(s) outside decoded-feature bounds",
+                 "image_fp": "{n} near-duplicate image pair(s)"}),
+    Family(("video",), PER_CHECK, "_video_compute", "video",
+           {"": ("fused video decode pass (one mapInPandas payload scan)", None)},
+           fail={"video": "{n} video payload(s) failed decode or "
+                          "stream-header conformance"}),
+    Family(("sql",), PER_CHECK, "_sql_compute", "sql", {"": ("user SQL job", None)}),
+    Family(("history",), AFTER_MODEL, "_run_history_checks", "",
+           {"": ("metric-history window read (results table)", None)}),
+)
+
+_FAMILY_OF = {kind: fam for fam in FAMILIES for kind in fam.kinds}
+
+
+def family_groups(checks: List["CompiledCheck"]
+                  ) -> List[Tuple[Family, List["CompiledCheck"]]]:
+    """``checks`` by family in table order (check order kept within one);
+    a kind without a family fails loudly instead of going unchecked."""
+    unknown = sorted({c.kind for c in checks} - set(_FAMILY_OF))
+    if unknown:
+        raise ValueError(f"no check family runs kind(s) {unknown}")
+    return [(fam, [c for c in checks if c.kind in fam.kinds]) for fam in FAMILIES]
+
+
+@dataclass
+class ModelPlan:
+    """One model's checks as Spark jobs (``plan_model``)."""
+    unique_mode: str = "exact"
+    reference_mode: str = "exact"
+    audio_scan: bool = False     # the shared scan runs the audio decode pass
+    resume_active: bool = False  # the per-partition checkpoint manifest path
+    scan: List["CompiledCheck"] = dc_field(default_factory=list)
+    # (family, phase label, check — or the check list of a PER_BYTES_COL
+    # job) in submission order
+    jobs: List[Tuple[Family, str, Any]] = dc_field(default_factory=list)
+    after: List[Tuple[Family, List["CompiledCheck"]]] = dc_field(default_factory=list)
+    shapes: Dict[int, Tuple[str, Optional[str]]] = dc_field(default_factory=dict)
+
+    @property
+    def scan_label(self) -> str:
+        return "shared_scan+fused_decode" if self.audio_scan else "shared_scan"
+
+    def shape_of(self, chk: "CompiledCheck") -> Tuple[str, Optional[str]]:
+        """The dry-run's (job, detail) for ``chk``."""
+        return self.shapes[id(chk)]
+
+
+def plan_model(groups: List[Tuple[Family, List["CompiledCheck"]]],
+               **modes: Any) -> ModelPlan:
+    """Place each family's checks (``family_groups``) into the model's jobs;
+    ``modes`` are the ModelPlan switches (unique_mode, reference_mode,
+    audio_scan, resume_active)."""
+    plan = ModelPlan(**modes)
+    for fam, checks in groups:
+        moved = {id(c) for c in (fam.to_scan(checks, plan) if fam.to_scan else [])}
+        rest = [c for c in checks if id(c) not in moved]
+        plan.scan += [c for c in checks if id(c) in moved or fam.jobs == SHARED_SCAN]
+        if fam.jobs == PER_CHECK:
+            plan.jobs += [(fam, f"{fam.label}:{c.key}", c) for c in rest]
+        elif fam.jobs == PER_BYTES_COL:
+            by_col: Dict[str, List[CompiledCheck]] = {}
+            for c in rest:
+                by_col.setdefault(c.params["bytes_col"], []).append(c)
+            plan.jobs += [(fam, f"{fam.label}:{col}", grp)
+                          for col, grp in sorted(by_col.items())]
+        elif fam.jobs == AFTER_MODEL and rest:
+            plan.after.append((fam, rest))
+        for c in checks:
+            variant = ("scan" if id(c) in moved
+                       else fam.variant(c, plan) if fam.variant else c.kind)
+            plan.shapes[id(c)] = fam.plan.get(variant) or fam.plan[""]
+    return plan
 
 
 # ---------------------------------------------------------------------------
@@ -440,34 +631,14 @@ class Validator:
         if self.config.sample_fraction is not None:
             df = self._sample_frame(model_name, df)
 
-        schema_checks = [c for c in checks if c.kind in ("schema_present", "schema_type")]
-        agg_checks = [c for c in checks if c.kind in ("agg", "freshness", "retention") or c.agg_alias == "__row_count"]
-        drift_checks = [c for c in checks if c.kind == "drift"]
-        unique_checks = [c for c in checks if c.kind == "unique"]
-        reference_checks = [c for c in checks if c.kind == "reference"]
-        sql_checks = [c for c in checks if c.kind == "sql"]
-        audio_checks = [c for c in checks if c.kind == "audio"]
-        join_eq_checks = [c for c in checks if c.kind == "join_equality"]
-        group_checks = [c for c in checks if c.kind == "group"]
-        audio_fp_checks = [c for c in checks if c.kind == "audio_fp"]
-        # the whole image family (decode-conformance, signal-quality,
-        # content-uniqueness, luminance-drift) shares ONE fused decode pass
-        # per payload column
-        image_family = [c for c in checks
-                        if c.kind in ("image", "image_quality", "image_fp",
-                                      "image_drift")]
-        video_checks = [c for c in checks if c.kind == "video"]
-        audio_drift_checks = [c for c in checks if c.kind == "audio_drift"]
-        audio_quality_checks = [c for c in checks if c.kind == "audio_quality"]
-        history_checks = [c for c in checks if c.kind == "history"]
-
-        self._run_schema_checks(schema_checks, df)
+        groups = family_groups(checks)
+        for fam, cs in groups:
+            if fam.jobs == DRIVER:
+                getattr(self, fam.compute)(model_name, df, cs)
 
         # checks on absent columns can't scan — report error, drop from data
         # path; dotted paths resolve through nested structs
         def runnable(chk: CompiledCheck) -> bool:
-            if chk.kind == "sql":
-                return True
             req = chk.params.get("require_cols") or (
                 [chk.field] if chk.field else [])
             for c in req:
@@ -490,101 +661,34 @@ class Validator:
                     return False
             return True
 
-        agg_checks = [c for c in agg_checks if runnable(c)]
-        drift_checks = [c for c in drift_checks if runnable(c)]
-        unique_checks = [c for c in unique_checks if runnable(c)]
-        reference_checks = [c for c in reference_checks if runnable(c)]
-        group_checks = [c for c in group_checks if runnable(c)]
-
-        # uniqueness joins the shared scan as an HLL sketch in approx mode —
-        # the dedicated groupBy job (and its shuffle) disappears entirely
-        # (predicate shared with `test --dry-run`: plan_approx_unique)
-        approx_unique = plan_approx_unique(unique_checks, self.config.unique_mode)
-        unique_checks = [c for c in unique_checks if c not in approx_unique]
-
-        # Content-uniqueness shares the ONE decode pass whenever another audio
-        # scan will run anyway (decode-conformance, or loudness-drift with a
-        # resolvable snapshot) — a second full decode of the payload corpus is
-        # the dominant avoidable cost at scale. Only fp checks on the default
-        # payload column can ride the shared scan (it decodes BYTES_COL);
-        # a custom bytes_col keeps its standalone pass. The checkpoint-manifest
-        # path also keeps the standalone pass: near-dup pairs are global
-        # across partitions and don't fit the per-partition resume model.
-        part_col_ok = bool(
-            self.config.partition_col and self.config.partition_col in df.columns)
-        audio_scan_will_run = bool(audio_checks) or bool(audio_quality_checks) or any(
-            self.config.ref_stats.get(model_name, {}).get(f"audio:{c.params['feature']}")
-            for c in audio_drift_checks)
-        # (predicate shared with `test --dry-run`: plan_fused_audio_fp)
-        fused_fp_checks = plan_fused_audio_fp(
-            audio_fp_checks,
-            default_bytes_col=audio_mod.BYTES_COL,
-            audio_scan_will_run=audio_scan_will_run,
-            partition_resume_active=bool(part_col_ok and self.config.checkpoint_dir),
-        )
-        audio_fp_checks = [c for c in audio_fp_checks if c not in fused_fp_checks]
+        groups = [(fam, [c for c in cs if not fam.needs_columns or runnable(c)])
+                  for fam, cs in groups if fam.jobs != DRIVER]
+        # The plan (shared with `test --dry-run`): approx uniqueness joins the
+        # shared scan as an HLL sketch; content-uniqueness shares the ONE
+        # audio decode pass whenever another audio scan runs anyway — a
+        # second full decode of the payload corpus is the dominant avoidable
+        # cost at scale (plan_approx_unique / plan_fused_audio_fp).
+        snapshots = self.config.ref_stats.get(model_name, {})
+        plan = plan_model(
+            groups, unique_mode=self.config.unique_mode,
+            reference_mode=self.config.reference_mode,
+            audio_scan=plan_audio_scan(checks, lambda c: bool(
+                snapshots.get(f"audio:{c.params['feature']}"))),
+            resume_active=bool(self.config.checkpoint_dir and self.config.partition_col
+                               and self.config.partition_col in df.columns))
 
         # Compute phase: independent Spark jobs submitted CONCURRENTLY from
         # driver threads (the scheduler overlaps them across free task slots),
         # collapsing ~10 sequential small-job walls into a few waves — the
         # dominant fixed cost at high core counts. Only the shared scan
         # records during this phase; every other job returns a result dict
-        # that the main thread records afterwards in a fixed order, so check
+        # that the main thread records afterwards in plan order, so check
         # ordering stays deterministic.
-        audio_label = ("shared_scan+fused_decode"
-                       if (audio_scan_will_run or fused_fp_checks)
-                       else "shared_scan")
-        thunks: List[Any] = [
-            self._timed(model_name, audio_label, lambda: self._run_shared_scan(
-                model_name, df, agg_checks, drift_checks, audio_checks, approx_unique,
-                audio_fp_checks=fused_fp_checks, audio_drift_checks=audio_drift_checks,
-                audio_quality_checks=audio_quality_checks))
-        ]
-        thunks += [
-            self._timed(model_name, f"unique:{chk.key}",
-                        (lambda c=chk: ("unique", c, self._unique_compute(df, c))))
-            for chk in unique_checks
-        ]
-        thunks += [
-            self._timed(model_name, f"reference:{chk.key}",
-                        (lambda c=chk: ("reference", c, self._reference_compute(df, c))))
-            for chk in reference_checks
-        ]
-        thunks += [
-            self._timed(model_name, f"join_eq:{chk.key}",
-                        (lambda c=chk: ("join_eq", c, self._join_equality_compute(df, c))))
-            for chk in join_eq_checks
-        ]
-        thunks += [
-            self._timed(model_name, f"group:{chk.key}",
-                        (lambda c=chk: ("group", c, self._group_compute(df, c))))
-            for chk in group_checks
-        ]
-        thunks += [
-            self._timed(model_name, f"audio_fp:{chk.key}",
-                        (lambda c=chk: ("audio_fp", c, self._audio_fp_compute(model_name, df, c))))
-            for chk in audio_fp_checks
-        ]
-        image_groups: Dict[str, List[CompiledCheck]] = {}
-        for chk in image_family:
-            image_groups.setdefault(chk.params["bytes_col"], []).append(chk)
-        thunks += [
-            self._timed(model_name, f"image_decode:{bc}",
-                        (lambda g=grp, bc=bc: (
-                            "image_family", g,
-                            self._image_family_compute(model_name, df, g, bc))))
-            for bc, grp in sorted(image_groups.items())
-        ]
-        thunks += [
-            self._timed(model_name, f"video:{chk.key}",
-                        (lambda c=chk: ("video", c, self._video_compute(model_name, df, c))))
-            for chk in video_checks
-        ]
-        thunks += [
-            self._timed(model_name, f"sql:{chk.key}",
-                        (lambda c=chk: ("sql", c, self._sql_compute(c))))
-            for chk in sql_checks
-        ]
+        thunks: List[Any] = [self._timed(
+            model_name, plan.scan_label,
+            lambda: self._run_shared_scan(model_name, df, plan.scan))]
+        thunks += [self._timed(model_name, label, lambda f=fam, u=unit: getattr(
+            self, f.compute)(model_name, df, u)) for fam, label, unit in plan.jobs]
         import time as _time
         t_phase = _time.perf_counter()
         results = self._parallel(thunks)
@@ -594,63 +698,41 @@ class Validator:
             f"{model_name} phase walls (s, concurrent jobs overlap): "
             + ", ".join(f"{k}={v}" for k, v in
                         sorted(ph.items(), key=lambda kv: -kv[1])))
-        for item in results[1:]:
-            kind, chk, res = item
-            if kind == "unique":
-                self._record_unique(chk, res)
-            elif kind == "reference":
-                self._record_reference(chk, res)
-            elif kind == "join_eq":
-                self._record_join_equality(chk, res)
-            elif kind == "group":
-                self._record_group(chk, res)
-            elif kind == "audio_fp":
-                self._record_audio_fp(chk, res)
-            elif kind == "video":
-                self._record_video(chk, res)
-            elif kind == "image_family":
-                # chk is the group list, res maps check key -> result dict;
-                # record in compile order so check ordering stays stable
-                for c in chk:
-                    r = res[c.key]
-                    if c.kind == "image":
-                        self._record_image(c, r)
-                    elif c.kind == "image_quality":
-                        self._record_image_quality(c, r)
-                    elif c.kind == "image_drift":
-                        self._record_image_drift(c, r)
-                    else:
-                        self._record_image_fp(c, r)
+        for (fam, _, unit), res in zip(plan.jobs, results[1:]):
+            if fam.jobs == PER_BYTES_COL:
+                # res maps check key -> result dict; record in compile order
+                for c in unit:
+                    self._record_result(c, res[c.key])
             else:
-                self._record_sql(chk, res)
+                self._record_result(unit, res)
 
-        # History checks judge the CURRENT run's metrics against the trailing
-        # window in the results table, so they must run after every other
-        # check of this model has recorded (their watched metrics are filled
-        # by the loop above). They append at the end of the model's check
-        # order; watched keys must be produced by this model's own checks
-        # (cross-model watches would race the parallel per-model recorders).
-        if history_checks and self.config.sample_fraction is not None:
-            # a sampled run's metrics are raw sample counts — judging them
-            # against a full-run series (or letting them join it) would make
-            # every change/anomaly rule fire on the sampling itself
-            for chk in history_checks:
-                self._record(chk, None, ResultEnum.passed,
-                             "skipped: sampled run (history judges and "
-                             "feeds full-run metrics only)", None)
-        elif history_checks:
-            self._run_history_checks(model_name, history_checks)
+        # after-model families (history) judge the metrics recorded above
+        for fam, cs in plan.after:
+            getattr(self, fam.compute)(model_name, df, cs)
 
     def _run_history_checks(
-        self, model_name: str, checks: List[CompiledCheck]
+        self, model_name: str, df: DataFrame, checks: List[CompiledCheck]
     ) -> None:
         """Evaluate ``type: history`` checks: one distributed window-pruned
         read of the results table for ALL watched keys of this model, then a
         driver-side judgment per check on <= window floats. An absent history
         table (first-ever run) is an empty series, which the compiled
-        evaluator reports as an insufficient-history pass, not an error."""
+        evaluator reports as an insufficient-history pass, not an error.
+        They run after every other check of the model recorded (the watched
+        metrics must exist) and append at the end of its check order;
+        watched keys must be this model's own (cross-model watches would
+        race the parallel per-model recorders)."""
         from . import history as hist_mod
 
+        if self.config.sample_fraction is not None:
+            # a sampled run's metrics are raw sample counts — judging them
+            # against a full-run series (or letting them join it) would make
+            # every change/anomaly rule fire on the sampling itself
+            for chk in checks:
+                self._record(chk, None, ResultEnum.passed,
+                             "skipped: sampled run (history judges and "
+                             "feeds full-run metrics only)", None)
+            return
         path = self.config.history_path
         series: Dict[str, List[float]] = {}
         load_err: Optional[str] = None
@@ -731,7 +813,8 @@ class Validator:
 
     # -- schema checks (driver-side, no scan) --------------------------------
 
-    def _run_schema_checks(self, checks: List[CompiledCheck], df: DataFrame) -> None:
+    def _run_schema_checks(self, model_name: str, df: DataFrame,
+                           checks: List[CompiledCheck]) -> None:
         for chk in checks:
             resolved = resolve_schema_field(df.schema, chk.field)
             if chk.kind == "schema_present":
@@ -843,48 +926,35 @@ class Validator:
 
     def _audio_compact_collect(
         self, compact: DataFrame, partition_col: Optional[str],
-        own_cache: bool = True,
     ) -> Tuple[List[Dict[str, Any]], List[Tuple[Optional[str], str, str]]]:
         """(per-partition count rows, capped violation tuples) from ONE decode.
 
         The compact frame is tiny by construction (bounded by tasks x
-        (parts_per_task + cap)); persisting it means the first action runs the
-        single decode scan and the second reads the cache — never a second
-        decode (VERDICT.md defect #1). MEMORY_AND_DISK so cache pressure spills
-        instead of recomputing. ``own_cache=False`` when the caller already
-        persisted the frame and has more consumers (fused fingerprint path) —
-        unpersisting here would silently evict the caller's cache and re-run
-        the decode.
+        (parts_per_task + cap)); the caller persists it, so the first action
+        runs the single decode scan and every later one reads the cache —
+        never a second decode (VERDICT.md defect #1).
         """
-        from pyspark import StorageLevel
-
-        if own_cache:
-            compact = compact.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            sums = [F.sum(c).alias(f"__audio__{c}") for c in audio_mod.COMPACT_COUNT_COLS]
-            aggd = compact.filter(F.col("row_type") == "agg")
-            if partition_col:
-                rows = [r.asDict() for r in aggd.groupBy("__part").agg(*sums).collect()]
-            else:
-                rows = [aggd.agg(*sums).first().asDict()]
-                rows[0]["__part"] = None
-            total_vio = sum(r.get("__audio__violations") or 0 for r in rows)
-            vio: List[Tuple[Optional[str], str, str]] = []
-            if total_vio:
-                vio = [
-                    (r["__part"], r["clip_id"], r["observed"])
-                    for r in (
-                        compact.filter(F.col("row_type") == "vio")
-                        .orderBy("clip_id")
-                        .limit(self.config.violation_cap)
-                        .select("__part", "clip_id", "observed")
-                        .collect()
-                    )
-                ]
-            return rows, vio
-        finally:
-            if own_cache:
-                compact.unpersist()
+        sums = [F.sum(c).alias(f"__audio__{c}") for c in audio_mod.COMPACT_COUNT_COLS]
+        aggd = compact.filter(F.col("row_type") == "agg")
+        if partition_col:
+            rows = [r.asDict() for r in aggd.groupBy("__part").agg(*sums).collect()]
+        else:
+            rows = [aggd.agg(*sums).first().asDict()]
+            rows[0]["__part"] = None
+        total_vio = sum(r.get("__audio__violations") or 0 for r in rows)
+        vio: List[Tuple[Optional[str], str, str]] = []
+        if total_vio:
+            vio = [
+                (r["__part"], r["clip_id"], r["observed"])
+                for r in (
+                    compact.filter(F.col("row_type") == "vio")
+                    .orderBy("clip_id")
+                    .limit(self.config.violation_cap)
+                    .select("__part", "clip_id", "observed")
+                    .collect()
+                )
+            ]
+        return rows, vio
 
     @staticmethod
     def _fq_count_frame(compact: DataFrame) -> DataFrame:
@@ -980,19 +1050,23 @@ class Validator:
         return f"{chk.field}__nonnull_count", f"{chk.field}__hll_sketch"
 
     def _run_shared_scan(
-        self,
-        model_name: str,
-        df: DataFrame,
-        agg_checks: List[CompiledCheck],
-        drift_checks: List[CompiledCheck],
-        audio_checks: List[CompiledCheck],
-        approx_unique: Optional[List[CompiledCheck]] = None,
-        audio_fp_checks: Optional[List[CompiledCheck]] = None,
-        audio_drift_checks: Optional[List[CompiledCheck]] = None,
-        audio_quality_checks: Optional[List[CompiledCheck]] = None,
+        self, model_name: str, df: DataFrame, checks: List[CompiledCheck],
     ) -> None:
+        """Every check the plan puts on the shared scan (``ModelPlan.scan``):
+        the agg, drift and audio families plus approx uniqueness and fused
+        fingerprints. Records them all, agg checks first."""
+        def of(*kinds: str) -> List[CompiledCheck]:
+            return [c for c in checks if c.kind in kinds]
+
+        agg_checks = of("agg", "freshness", "retention")
+        drift_checks = of("drift")
+        audio_checks = of("audio")
+        approx_unique = of("unique")
+        audio_fp_checks = of("audio_fp")
+        audio_drift_checks = of("audio_drift")
+        audio_quality_checks = of("audio_quality")
         exprs, ops, drift_jobs = self._shared_agg_specs(model_name, agg_checks, drift_checks)
-        for chk in approx_unique or []:
+        for chk in approx_unique:
             nn_alias, sk_alias = self._hll_aliases(chk)
             col = chk.field
             exprs[nn_alias] = F.coalesce(
@@ -1016,7 +1090,7 @@ class Validator:
         # without a reference snapshot errors here and never costs a scan
         feat_bins: Dict[str, List[float]] = {}
         audio_drift_eval: List[Tuple[CompiledCheck, dict]] = []
-        for chk in audio_drift_checks or []:
+        for chk in audio_drift_checks:
             feature = chk.params["feature"]
             stats = self.config.ref_stats.get(model_name, {}).get(f"audio:{feature}")
             if not stats:
@@ -1033,12 +1107,12 @@ class Validator:
         # inside the one decode pass ('fq' count + capped 'fv' violation rows)
         feat_limits: List[Tuple[str, Optional[float], Optional[float]]] = [
             (c.params["feature"], c.params["minimum"], c.params["maximum"])
-            for c in audio_quality_checks or []
+            for c in audio_quality_checks
         ]
         # speaking-rate rules carry the transcript column the decode scan
         # must add as a JVM length; one text column per model
         rate_cols = {c.params["text_column"]
-                     for c in audio_quality_checks or []
+                     for c in audio_quality_checks
                      if c.params.get("text_column")}
         if len(rate_cols) > 1:
             raise ValueError(
@@ -1111,16 +1185,10 @@ class Validator:
                 return drift_mod.drift_bucket_rows(df, drift_jobs, partition_col)
 
             def audio_job() -> Tuple[Any, Any, Any, Any, Any, Any]:
-                if not audio_fp_checks and not feat_bins and not feat_limits:
-                    compact = self._audio_compact(df, audio_chk, partition_col)
-                    rows, vio = self._audio_compact_collect(compact, partition_col)
-                    return rows, vio, [], {}, [], []
-                # fused: fingerprints and/or feature histograms ride along in
-                # the same decode pass; the compact frame (counts + capped
-                # vios + fp/fh rows, far smaller than the payload) is
-                # persisted once and feeds every consumer
-                from pyspark import StorageLevel
-
+                # fingerprints, feature histograms and feature bounds ride
+                # along in the one decode pass; the compact frame (counts +
+                # capped vios + fp/fh/fq rows, far smaller than the payload)
+                # is persisted once and feeds every consumer
                 from . import audiofp as afp
 
                 compact = self._audio_compact(
@@ -1132,24 +1200,13 @@ class Validator:
                 ).persist(StorageLevel.MEMORY_AND_DISK)
                 try:
                     rows, vio = (
-                        self._audio_compact_collect(compact, partition_col, own_cache=False)
+                        self._audio_compact_collect(compact, partition_col)
                         if audio_chk is not None else ([], []))
-                    fp_results = []
-                    if audio_fp_checks:
-                        from .pipeline_ckpt import release_caches
-
-                        fp = compact.filter(F.col("row_type") == "fp").select("clip_id", "hash")
-                        for chk in audio_fp_checks:
-                            nd = afp.audio_fingerprint_near_dup(
-                                fp, threshold=float(chk.params["score_threshold"]))
-                            try:
-                                fp_results.append(
-                                    (chk, self._audio_fp_result(nd, chk)))
-                            finally:
-                                # the operator persists its internal hash
-                                # frame; release per check or repeated runs
-                                # on one session leak cached blocks
-                                release_caches(nd)
+                    fp = compact.filter(F.col("row_type") == "fp").select("clip_id", "hash")
+                    fp_results = [
+                        (chk, self._audio_fp_result(afp.audio_fingerprint_near_dup(
+                            fp, threshold=float(chk.params["score_threshold"])), chk))
+                        for chk in audio_fp_checks]
                     fhists = self._audio_hist_collect(compact) if feat_bins else {}
                     fq_rows, fv_rows = (
                         self._audio_quality_collect(compact)
@@ -1256,7 +1313,7 @@ class Validator:
             if result == ResultEnum.failed and chk.violation_predicate is not None:
                 failed_agg.append(chk)
 
-        for chk in approx_unique or []:
+        for chk in approx_unique:
             self._record_approx_unique(chk, part_rows, global_row, partition_col)
 
         for chk in drift_checks:
@@ -1304,7 +1361,7 @@ class Validator:
                 self._add_violations(vio_rows)
 
         for chk, res in fused_fp_results:
-            self._record_audio_fp(chk, res)
+            self._record_result(chk, res)
 
         for chk, stats in audio_drift_eval:
             got = audio_fhists.get(chk.params["feature"], {})
@@ -1432,18 +1489,10 @@ class Validator:
              ).alias("partition_id"),
             arr.alias("__v"),
         ).filter(F.size("__v") > 0)
-        exploded = base.select(
-            F.lit(self.run.runId).alias("run_id"),
-            "partition_id",
-            F.explode("__v").alias("v"),
-            "clip_id",
-        ).select(
-            "run_id", "partition_id",
-            F.col("v.check_key").alias("check_key"),
-            "clip_id",
-            F.col("v.observed").alias("observed"),
-            F.col("v.expected").alias("expected"),
-        )
+        exploded = self._violation_frame(
+            base.select("partition_id", F.explode("__v").alias("v"), "clip_id"),
+            F.col("v.check_key"), F.col("clip_id"), F.col("v.observed"),
+            F.col("v.expected"), partition_id=F.col("partition_id"))
         # Two-phase cap: a naive window over check_key alone would shuffle
         # EVERY violating row to one reducer per check (billions of rows on a
         # 10^12-row table with a hot failing rule). Phase 1 caps per
@@ -1466,6 +1515,53 @@ class Validator:
             .drop("__rn")
         )
         self._add_violations(capped.collect())
+
+    def _violation_frame(self, frame: DataFrame, check_key: Any, clip_id: Any,
+                         observed: Any, expected: Any,
+                         partition_id: Any = None) -> DataFrame:
+        """``frame`` projected to the VIOLATIONS_DDL columns; arguments are
+        Columns or plain values (which become string literals)."""
+        def col(v: Any) -> Column:
+            return v if isinstance(v, Column) else F.lit(v).cast("string")
+
+        return frame.select(
+            F.lit(self.run.runId).alias("run_id"),
+            col(partition_id).alias("partition_id"),
+            col(check_key).alias("check_key"),
+            col(clip_id).alias("clip_id"),
+            col(observed).alias("observed"),
+            col(expected).alias("expected"),
+        )
+
+    def _count_and_sample(self, frame: DataFrame, chk: CompiledCheck,
+                          order: Tuple[str, ...] = ("id_a",),
+                          clip_id: Optional[Column] = None,
+                          observed: Optional[Column] = None) -> dict:
+        """Count of the violating rows in ``frame`` and their capped sample
+        in ``order``, from one persisted evaluation (the sample never
+        recomputes the frame); the internal caches of the operator that
+        built ``frame`` are released with it. The defaults fit a
+        violating-payload frame (id_a, __observed) whose NULL ids report as
+        <null-id>."""
+        from .pipeline_ckpt import release_caches
+
+        if clip_id is None:
+            clip_id = F.coalesce(F.col("id_a"), F.lit("<null-id>"))
+            observed = F.col("__observed")
+
+        frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            metric = float(frame.count())
+            vio_rows = None
+            if metric > 0:
+                vio = self._violation_frame(
+                    frame.orderBy(*order).limit(self.config.violation_cap),
+                    chk.key, clip_id, observed, chk.expected)
+                vio_rows = vio.collect()
+            return {"metric": metric, "vio_rows": vio_rows}
+        finally:
+            frame.unpersist()
+            release_caches(frame)
 
     # -- approx uniqueness (HLL sketch in the shared scan; zero extra shuffle) --
 
@@ -1535,7 +1631,7 @@ class Validator:
 
     # -- uniqueness (dedicated shuffle; AQE-skew-safe) ------------------------
 
-    def _unique_compute(self, df: DataFrame, chk: CompiledCheck) -> dict:
+    def _unique_compute(self, model_name: str, df: DataFrame, chk: CompiledCheck) -> dict:
         """Exact duplicate count via two-phase salted aggregation.
 
         ``groupBy(col).count()`` compiles to partial-agg -> exchange -> final-agg:
@@ -1572,8 +1668,6 @@ class Validator:
                 "__cnt",
             )
         )
-        from pyspark import StorageLevel
-
         # dup holds only keys with count > 1 — tiny relative to the input.
         # Persist it across the stats action and the violation sample so a
         # FAILING unique check does not re-run the key shuffle (the single
@@ -1588,31 +1682,20 @@ class Validator:
             metric = float(stats["dup_values"] or 0)
             vio_rows = None
             if metric > 0:
-                vio = dup.orderBy(F.col("__cnt").desc(), F.col("__key")).limit(self.config.violation_cap).select(
-                    F.lit(self.run.runId).alias("run_id"),
-                    F.lit(None).cast("string").alias("partition_id"),
-                    F.lit(chk.key).alias("check_key"),
-                    F.col("__key").cast("string").alias("clip_id"),
-                    F.concat(F.lit("count="), F.col("__cnt").cast("string")).alias("observed"),
-                    F.lit("unique").alias("expected"),
-                )
+                vio = self._violation_frame(
+                    dup.orderBy(F.col("__cnt").desc(), F.col("__key")).limit(
+                        self.config.violation_cap),
+                    chk.key, F.col("__key").cast("string"),
+                    F.concat(F.lit("count="), F.col("__cnt").cast("string")), "unique")
                 vio_rows = vio.collect()
         finally:
             dup.unpersist()
-        return {"metric": metric, "dup_values": stats["dup_values"],
-                "dup_rows": stats["dup_rows"], "vio_rows": vio_rows}
-
-    def _record_unique(self, chk: CompiledCheck, res: dict) -> None:
-        metric = res["metric"]
-        result, reason = chk.eval_metric(metric, {})
-        self._record(chk, metric, result, reason, None,
-                     diagnostics={"dup_values": res["dup_values"], "dup_rows": res["dup_rows"]})
-        if res["vio_rows"]:
-            self._add_violations(res["vio_rows"])
+        return {"metric": metric, "vio_rows": vio_rows, "diagnostics": {
+            "dup_values": stats["dup_values"], "dup_rows": stats["dup_rows"]}}
 
     # -- per-group aggregate thresholds (group quality checks) ----------------
 
-    def _group_compute(self, df: DataFrame, chk: CompiledCheck) -> dict:
+    def _group_compute(self, model_name: str, df: DataFrame, chk: CompiledCheck) -> dict:
         """groupBy(key) + decomposable aggregate + threshold filter.
 
         Same shuffle shape as `_unique_compute`: map-side partial aggregation
@@ -1634,43 +1717,15 @@ class Validator:
             # scoped group thresholds: out-of-scope rows never reach the
             # groupBy (groups entirely out of scope simply don't exist)
             df = df.filter(F.expr(p["filter"]))
-        from pyspark import StorageLevel
-
         grouped = df.groupBy(F.col(gcol).alias("__gkey")).agg(agg_thunk().alias("__gval"))
         pass_pred = p["pass_pred"](F.col("__gval"))
         # violating groups only (post-aggregate, bounded by group count, not
-        # row count) — persist across the count and the capped example sample
-        # so a failing group check pays the groupBy shuffle exactly once
-        viol = grouped.filter(~F.coalesce(pass_pred, F.lit(False))).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        try:
-            metric = float(viol.count())
-            vio_rows = None
-            if metric > 0:
-                vio_rows = viol.orderBy("__gkey").limit(self.config.violation_cap).select(
-                    F.lit(self.run.runId).alias("run_id"),
-                    F.lit(None).cast("string").alias("partition_id"),
-                    F.lit(chk.key).alias("check_key"),
-                    F.col("__gkey").cast("string").alias("clip_id"),
-                    F.concat(F.lit(f"{p['metric']}="), F.col("__gval").cast("string")).alias("observed"),
-                    F.lit(chk.expected).alias("expected"),
-                ).collect()
-        finally:
-            viol.unpersist()
-        return {"metric": metric, "vio_rows": vio_rows}
-
-    def _record_group(self, chk: CompiledCheck, res: dict) -> None:
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        metric = res["metric"]
-        result = ResultEnum.passed if metric == 0 else ResultEnum.failed
-        reason = None if metric == 0 else (
-            f"{chk.name}: {int(metric)} group(s) violate {chk.params['threshold']}"
-        )
-        self._record(chk, metric, result, reason, None)
-        if res["vio_rows"]:
-            self._add_violations(res["vio_rows"])
+        # row count), counted and sampled from one persisted evaluation so a
+        # failing group check pays the groupBy shuffle exactly once
+        return self._count_and_sample(
+            grouped.filter(~F.coalesce(pass_pred, F.lit(False))), chk, ("__gkey",),
+            F.col("__gkey").cast("string"),
+            F.concat(F.lit(f"{p['metric']}="), F.col("__gval").cast("string")))
 
     # -- audio content uniqueness (fingerprint near-dup) ----------------------
 
@@ -1698,31 +1753,12 @@ class Validator:
             return self._audio_fp_result(pairs, chk)
 
     def _audio_fp_result(self, pairs: DataFrame, chk: CompiledCheck) -> dict:
-        """Count + capped example pairs from a near-dup pair frame (one
-        persisted evaluation shared by the count and the violation sample)."""
-        from pyspark import StorageLevel
-
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            metric = float(pairs.count())
-            vio_rows = None
-            if metric > 0:
-                vio_rows = pairs.orderBy("id_a", "id_b").limit(
-                    self.config.violation_cap
-                ).select(
-                    F.lit(self.run.runId).alias("run_id"),
-                    F.lit(None).cast("string").alias("partition_id"),
-                    F.lit(chk.key).alias("check_key"),
-                    F.concat(F.col("id_a"), F.lit("|"), F.col("id_b")).alias("clip_id"),
-                    F.concat(
-                        F.lit("matches="), F.col("matches").cast("string"),
-                        F.lit(" score="), F.col("score").cast("string"),
-                    ).alias("observed"),
-                    F.lit(chk.expected).alias("expected"),
-                ).collect()
-        finally:
-            pairs.unpersist()
-        return {"metric": metric, "vio_rows": vio_rows}
+        """Pair count + capped example pairs of a near-dup pair frame."""
+        return self._count_and_sample(
+            pairs, chk, ("id_a", "id_b"),
+            F.concat(F.col("id_a"), F.lit("|"), F.col("id_b")),
+            F.concat(F.lit("matches="), F.col("matches").cast("string"),
+                     F.lit(" score="), F.col("score").cast("string")))
 
     def _image_compact(self, df: DataFrame, id_col: str, bytes_col: str,
                        with_dhash: bool, features: tuple) -> DataFrame:
@@ -1735,8 +1771,7 @@ class Validator:
             with_dhash=with_dhash, features=features)
 
     def _image_family_compute(
-        self, model_name: str, df: DataFrame,
-        group: List[CompiledCheck], bytes_col: str,
+        self, model_name: str, df: DataFrame, group: List[CompiledCheck],
     ) -> Dict[str, dict]:
         """All image contract rules on one payload column from ONE decode.
 
@@ -1748,8 +1783,7 @@ class Validator:
         evaluates from it: at 100 TB the payload scan IS the job, so the
         family must never decode twice (mirrors the audio family's
         exactly-one-decode invariant). Runs concurrently in the thunk pool."""
-        from pyspark import StorageLevel
-
+        bytes_col = group[0].params["bytes_col"]
         if bytes_col not in df.columns:
             return {c.key: {"error": f"bytes column {bytes_col} missing"}
                     for c in group}
@@ -1802,63 +1836,43 @@ class Validator:
         for dim_col in (p["width_col"], p["height_col"]):
             if dim_col and dim_col not in df.columns:
                 return {"error": f"declared dimension column {dim_col} missing"}
-        meta = compact.withColumnRenamed("id", "__img_id")
+        return self._count_and_sample(self._declared_mismatch(
+            compact, df, id_col,
+            [(label, dim, p[f"{dim}_col"], None)
+             for label, dim in (("w", "width"), ("h", "height"))
+             if p[f"{dim}_col"]]), chk)
+
+    def _declared_mismatch(self, meta: DataFrame, df: DataFrame, id_col: str,
+                           decl: List[Tuple[str, str, str, Optional[float]]]
+                           ) -> DataFrame:
+        """Violating payloads (id_a, __observed) of a decoded-metadata frame
+        ``meta`` (id, decode_error, decoded columns): a decode error, or a
+        decoded column that differs from its declared column in ``df``.
+        ``decl`` holds (label, decoded column, declared column, tolerance)
+        per comparison. The declared side is DEDUPLICATED on the primary key
+        (duplicate pks would fan out and overcount) and LEFT-joined (null-pk
+        rows stay visible); comparisons are null-SAFE, so a NULL on either
+        side is a violation (the row is unverifiable) instead of slipping
+        through '!=' three-valued logic — with a tolerance, both sides must
+        be present and within it."""
         bad_cond = F.col("decode_error").isNotNull()
         observed = [F.coalesce(F.col("decode_error"), F.lit(""))]
-        if p["width_col"] or p["height_col"]:
-            # LEFT join (null-pk rows must stay visible) against DEDUPLICATED
-            # declared dims (duplicate pks would fan out and overcount); the
-            # comparisons are null-SAFE so a NULL declared dimension counts as
-            # a violation (the row is unverifiable) instead of slipping
-            # through '!=' three-valued logic
+        if decl:
             declared = df.select(
-                F.col(id_col).cast("string").alias("__img_id"),
-                *( [F.col(p["width_col"]).alias("__decl_w")] if p["width_col"] else [] ),
-                *( [F.col(p["height_col"]).alias("__decl_h")] if p["height_col"] else [] ),
-            ).dropDuplicates(["__img_id"])
-            meta = meta.join(declared, "__img_id", "left")
-            if p["width_col"]:
-                bad_cond = bad_cond | ~F.col("width").eqNullSafe(F.col("__decl_w"))
+                F.col(id_col).cast("string").alias("id"),
+                *[F.col(c).alias(f"__decl{i}") for i, (_, _, c, _) in enumerate(decl)],
+            ).dropDuplicates(["id"])
+            meta = meta.join(declared, "id", "left")
+            for i, (label, decoded, _, tol) in enumerate(decl):
+                dv, cv = F.col(decoded), F.col(f"__decl{i}")
+                ok = (dv.eqNullSafe(cv) if tol is None else
+                      dv.isNotNull() & cv.isNotNull() & (F.abs(dv - cv) <= F.lit(tol)))
+                bad_cond = bad_cond | ~ok
                 observed.append(F.concat(
-                    F.lit(" w="), F.coalesce(F.col("width").cast("string"), F.lit("?")),
-                    F.lit("/"), F.coalesce(F.col("__decl_w").cast("string"), F.lit("?"))))
-            if p["height_col"]:
-                bad_cond = bad_cond | ~F.col("height").eqNullSafe(F.col("__decl_h"))
-                observed.append(F.concat(
-                    F.lit(" h="), F.coalesce(F.col("height").cast("string"), F.lit("?")),
-                    F.lit("/"), F.coalesce(F.col("__decl_h").cast("string"), F.lit("?"))))
-        bad = meta.filter(bad_cond).select(
-            F.col("__img_id").alias("id_a"),
-            F.concat_ws("", *observed).alias("__observed"))
-        return self._count_and_sample(
-            bad, chk, id_expr=F.coalesce(F.col("id_a"), F.lit("<null-id>")),
-            observed_expr=F.col("__observed"))
-
-    def _count_and_sample(self, frame: DataFrame, chk: CompiledCheck,
-                          id_expr, observed_expr) -> dict:
-        """Shared count + capped violation sampling over one persisted
-        evaluation of a violating-row frame (used by the image check; the
-        audio_fp pair path keeps its pair-specific shape)."""
-        from pyspark import StorageLevel
-
-        frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            metric = float(frame.count())
-            vio_rows = None
-            if metric > 0:
-                vio_rows = frame.orderBy("id_a").limit(
-                    self.config.violation_cap
-                ).select(
-                    F.lit(self.run.runId).alias("run_id"),
-                    F.lit(None).cast("string").alias("partition_id"),
-                    F.lit(chk.key).alias("check_key"),
-                    id_expr.alias("clip_id"),
-                    observed_expr.alias("observed"),
-                    F.lit(chk.expected).alias("expected"),
-                ).collect()
-            return {"metric": metric, "vio_rows": vio_rows}
-        finally:
-            frame.unpersist()
+                    F.lit(f" {label}="), F.coalesce(dv.cast("string"), F.lit("?")),
+                    F.lit("/"), F.coalesce(cv.cast("string"), F.lit("?"))))
+        return meta.filter(bad_cond).select(
+            F.col("id").alias("id_a"), F.concat_ws("", *observed).alias("__observed"))
 
     def _image_quality_eval(self, compact: DataFrame,
                             chk: CompiledCheck) -> dict:
@@ -1878,9 +1892,7 @@ class Validator:
             F.col("id").alias("id_a"),
             F.concat(F.lit(p["feature"] + "="),
                      F.round(feat, 4).cast("string")).alias("__observed"))
-        return self._count_and_sample(
-            bad, chk, id_expr=F.coalesce(F.col("id_a"), F.lit("<null-id>")),
-            observed_expr=F.col("__observed"))
+        return self._count_and_sample(bad, chk)
 
     def _image_drift_eval(self, compact: DataFrame, chk: CompiledCheck,
                           stats: dict) -> dict:
@@ -1901,59 +1913,29 @@ class Validator:
             counts[to_bucket[int(r["__gb0"])]] += int(r["count"])
         stat = drift_mod.drift_statistic_from_counts(
             counts, stats, chk.params["method"])
-        return {"stat": stat, "rows": sum(counts)}
-
-    def _record_image_drift(self, chk: CompiledCheck, res: dict) -> None:
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        result, reason = chk.eval_metric(res["stat"], {})
-        self._record(chk, res["stat"], result, reason, res["rows"])
+        return {"metric": stat, "rows": sum(counts)}
 
     def _image_fp_eval(self, compact: DataFrame, chk: CompiledCheck) -> dict:
         """Content uniqueness: blocked Hamming pairs over the compact
         frame's dhash column (imagefp.near_dup_pairs_from_fp — only 8-byte
         hashes shuffle); metric = pair count, violations = capped pairs."""
-        from pyspark import StorageLevel
-
         from . import imagefp
 
         p = chk.params
         pairs = imagefp.near_dup_pairs_from_fp(
             compact.select("id", "dhash"),
-            max_hamming=p["max_hamming"], max_bucket=p["max_bucket"],
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            metric = float(pairs.count())
-            vio_rows = None
-            if metric > 0:
-                vio_rows = pairs.orderBy("id_a", "id_b").limit(
-                    self.config.violation_cap
-                ).select(
-                    F.lit(self.run.runId).alias("run_id"),
-                    F.lit(None).cast("string").alias("partition_id"),
-                    F.lit(chk.key).alias("check_key"),
-                    F.concat(F.col("id_a"), F.lit("|"),
-                             F.col("id_b")).alias("clip_id"),
-                    F.concat(F.lit("hamming="),
-                             F.col("hamming").cast("string")).alias("observed"),
-                    F.lit(chk.expected).alias("expected"),
-                ).collect()
-            return {"metric": metric, "vio_rows": vio_rows}
-        finally:
-            pairs.unpersist()
-            from .pipeline_ckpt import release_caches
-
-            release_caches(pairs)
+            max_hamming=p["max_hamming"], max_bucket=p["max_bucket"])
+        return self._count_and_sample(
+            pairs, chk, ("id_a", "id_b"),
+            F.concat(F.col("id_a"), F.lit("|"), F.col("id_b")),
+            F.concat(F.lit("hamming="), F.col("hamming").cast("string")))
 
     def _video_compute(self, model_name: str, df: DataFrame,
                        chk: CompiledCheck) -> dict:
         """Video decode conformance: one mapInPandas decode pass
-        (multimodal.video_metadata) emitting scalars; declared fps /
-        frame-count / dims join back on the primary key with the same
-        null-safe, left-join, dedup'd-declared-side semantics as the image
-        rule (a NULL declared value is unverifiable -> violation; NULL-pk
-        corrupt rows stay visible; duplicate pks never fan out)."""
+        (multimodal.video_metadata) emitting scalars; declared fps (within
+        ``fps_tolerance``) / frame-count / dims join back on the primary key
+        exactly as the image rule's dims do (``_declared_mismatch``)."""
         from . import multimodal
 
         p = chk.params
@@ -1966,87 +1948,16 @@ class Validator:
                 return {"error": f"declared column {col} missing"}
         id_col = self._pk_column(model_name, df)
         with self._arrow_batch_conf():
-            meta = multimodal.video_metadata(
-                df, id_col=id_col, bytes_col=bytes_col
-            ).withColumnRenamed("id", "__vid_id")
-        bad_cond = F.col("decode_error").isNotNull()
-        observed = [F.coalesce(F.col("decode_error"), F.lit(""))]
-        if decl:
-            declared = df.select(
-                F.col(id_col).cast("string").alias("__vid_id"),
-                *[F.col(c).alias(f"__decl_{k}") for k, c in decl.items()],
-            ).dropDuplicates(["__vid_id"])
-            meta = meta.join(declared, "__vid_id", "left")
-            decoded = {"fps": F.col("fps"), "frames": F.col("n_frames"),
-                       "width": F.col("width"), "height": F.col("height")}
-            for k in decl:
-                dv, cv = decoded[k], F.col(f"__decl_{k}")
-                if k == "fps":
-                    # tolerance compare, but NULL on either side (corrupt
-                    # payload / undeclared rate) must count as a violation,
-                    # not slip through three-valued logic
-                    ok = (dv.isNotNull() & cv.isNotNull()
-                          & (F.abs(dv - cv) <= F.lit(p["fps_tolerance"])))
-                    bad_cond = bad_cond | ~ok
-                else:
-                    bad_cond = bad_cond | ~dv.eqNullSafe(cv)
-                observed.append(F.concat(
-                    F.lit(f" {k}="),
-                    F.coalesce(dv.cast("string"), F.lit("?")), F.lit("/"),
-                    F.coalesce(cv.cast("string"), F.lit("?"))))
-        bad = meta.filter(bad_cond).select(
-            F.col("__vid_id").alias("id_a"),
-            F.concat_ws("", *observed).alias("__observed"))
-        return self._count_and_sample(
-            bad, chk, id_expr=F.coalesce(F.col("id_a"), F.lit("<null-id>")),
-            observed_expr=F.col("__observed"))
-
-    def _record_video(self, chk: CompiledCheck, res: dict) -> None:
-        self._record_zero_default(
-            chk, res, lambda m: (f"{chk.name}: {int(m)} video payload(s) "
-                                 "failed decode or stream-header conformance"))
-
-    def _record_image(self, chk: CompiledCheck, res: dict) -> None:
-        self._record_zero_default(
-            chk, res, lambda m: (f"{chk.name}: {int(m)} image payload(s) "
-                                 "failed decode or dimension conformance"))
-
-    def _record_image_quality(self, chk: CompiledCheck, res: dict) -> None:
-        self._record_zero_default(
-            chk, res, lambda m: (f"{chk.name}: {int(m)} image(s) outside "
-                                 "decoded-feature bounds"))
-
-    def _record_image_fp(self, chk: CompiledCheck, res: dict) -> None:
-        self._record_zero_default(
-            chk, res, lambda m: (f"{chk.name}: {int(m)} near-duplicate "
-                                 "image pair(s)"))
-
-    def _record_zero_default(self, chk: CompiledCheck, res: dict,
-                             fail_reason) -> None:
-        """Shared recorder for metric-counts-violations checks: evaluator if
-        configured, else zero-is-pass; violation rows appended when present."""
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        metric = res["metric"]
-        evaluator = chk.params.get("evaluator")
-        if evaluator is not None:
-            result, reason = evaluator(metric, {})
-        else:
-            result = ResultEnum.passed if metric == 0 else ResultEnum.failed
-            reason = None if metric == 0 else fail_reason(metric)
-        self._record(chk, metric, result, reason, None)
-        if res["vio_rows"]:
-            self._add_violations(res["vio_rows"])
-
-    def _record_audio_fp(self, chk: CompiledCheck, res: dict) -> None:
-        self._record_zero_default(
-            chk, res,
-            lambda m: f"{chk.name}: {int(m)} near-duplicate clip pair(s)")
+            meta = multimodal.video_metadata(df, id_col=id_col, bytes_col=bytes_col)
+        decoded = {"fps": "fps", "frames": "n_frames", "width": "width", "height": "height"}
+        return self._count_and_sample(self._declared_mismatch(
+            meta, df, id_col,
+            [(k, decoded[k], c, p["fps_tolerance"] if k == "fps" else None)
+             for k, c in decl.items()]), chk)
 
     # -- referential integrity (anti-join) ------------------------------------
 
-    def _reference_compute(self, df: DataFrame, chk: CompiledCheck) -> dict:
+    def _reference_compute(self, model_name: str, df: DataFrame, chk: CompiledCheck) -> dict:
         parent_name = chk.params["parent_model"]
         parent_field = chk.params["parent_field"]
         parent = self.tables.get(parent_name)
@@ -2089,8 +2000,6 @@ class Validator:
                 F.col("__child").isNotNull()
             ).join(keys, on=F.col("__child") == F.col("__parent_key"),
                    how="left_anti")
-        from pyspark import StorageLevel
-
         # Reduce to (orphan value[, partition], row count) before any action:
         # the grouped frame is bounded by DISTINCT orphan values (map-side
         # partial agg), so persisting it is cheap even when billions of rows
@@ -2118,7 +2027,7 @@ class Validator:
                 cap = self.config.violation_cap
                 # per-row violation semantics preserved: a value orphaned k
                 # times contributes min(k, cap) example rows, capped overall
-                vio = grouped.select(
+                examples = grouped.select(
                     (F.col(part_col).cast("string") if part_col
                      else F.lit(None).cast("string")).alias("__part"),
                     F.explode(
@@ -2127,14 +2036,10 @@ class Validator:
                             F.least(F.col("__cnt"), F.lit(cap)).cast("int"),
                         )
                     ).alias("__child"),
-                ).limit(cap).select(
-                    F.lit(self.run.runId).alias("run_id"),
-                    F.col("__part").alias("partition_id"),
-                    F.lit(chk.key).alias("check_key"),
-                    F.col("__child").cast("string").alias("clip_id"),
-                    F.col("__child").cast("string").alias("observed"),
-                    F.lit(chk.expected).alias("expected"),
-                )
+                ).limit(cap)
+                child = F.col("__child").cast("string")
+                vio = self._violation_frame(examples, chk.key, child, child,
+                                            chk.expected, F.col("__part"))
                 vio_rows = vio.collect()
         finally:
             grouped.unpersist()
@@ -2224,28 +2129,9 @@ class Validator:
                        "bloom_fpp": fpp, "parent_keys_est": n_b}
         return orphans, diagnostics
 
-    def _record_reference(self, chk: CompiledCheck, res: dict) -> None:
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        metric = res["metric"]
-        result, reason = chk.eval_metric(metric, {})
-        self._record(chk, metric, result, reason, None,
-                     diagnostics=res.get("diagnostics"))
-        # per-partition orphan attribution (partition_col runs): partitions
-        # WITH orphans get their own failed row — the "which ingest
-        # partition went bad" answer; clean partitions are covered by the
-        # global row (enumerating them would need another child scan)
-        for pid, pm in sorted((res.get("part_metrics") or {}).items()):
-            if pm > 0:
-                pres, preason = chk.eval_metric(pm, {})
-                self._record(chk, pm, pres, preason, None, partition_id=pid)
-        if res["vio_rows"]:
-            self._add_violations(res["vio_rows"])
-
     # -- transcript equality vs oracle reference (join check) ------------------
 
-    def _join_equality_compute(self, df: DataFrame, chk: CompiledCheck) -> dict:
+    def _join_equality_compute(self, model_name: str, df: DataFrame, chk: CompiledCheck) -> dict:
         p = chk.params
         ref = self.tables.get(p["ref_model"])
         if ref is None:
@@ -2267,8 +2153,6 @@ class Validator:
             ref.select(F.col(key).alias("__k"), F.col(ref_col).alias("__ref")),
             on="__k", how="inner",
         )
-        from pyspark import StorageLevel
-
         # mismatching rows only — persist across the count and the capped
         # sample so a FAILING equality check doesn't re-run the key join of
         # two corpus-sized tables (the same single-scan-on-fail guarantee as
@@ -2287,40 +2171,20 @@ class Validator:
                 }
             vio_rows = None
             if metric > 0:
-                vio = mismatch.limit(self.config.violation_cap).select(
-                    F.lit(self.run.runId).alias("run_id"),
-                    (F.col(part_col).cast("string") if part_col
-                     else F.lit(None).cast("string")).alias("partition_id"),
-                    F.lit(chk.key).alias("check_key"),
-                    F.col("__k").cast("string").alias("clip_id"),
-                    F.col("__child").cast("string").alias("observed"),
-                    F.concat(F.lit("ref: "), F.col("__ref").cast("string")).alias("expected"),
-                )
+                vio = self._violation_frame(
+                    mismatch.limit(self.config.violation_cap), chk.key,
+                    F.col("__k").cast("string"), F.col("__child").cast("string"),
+                    F.concat(F.lit("ref: "), F.col("__ref").cast("string")),
+                    F.col(part_col).cast("string") if part_col else None)
                 vio_rows = vio.collect()
         finally:
             mismatch.unpersist()
         return {"metric": metric, "vio_rows": vio_rows,
                 "part_metrics": part_metrics}
 
-    def _record_join_equality(self, chk: CompiledCheck, res: dict) -> None:
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        metric = res["metric"]
-        result, reason = chk.eval_metric(metric, {})
-        self._record(chk, metric, result, reason, None)
-        # per-partition attribution, same contract as _record_reference:
-        # partitions WITH mismatches get their own failed row
-        for pid, pm in sorted((res.get("part_metrics") or {}).items()):
-            if pm > 0:
-                pres, preason = chk.eval_metric(pm, {})
-                self._record(chk, pm, pres, preason, None, partition_id=pid)
-        if res["vio_rows"]:
-            self._add_violations(res["vio_rows"])
-
     # -- SQL quality ----------------------------------------------------------
 
-    def _sql_compute(self, chk: CompiledCheck) -> dict:
+    def _sql_compute(self, model_name: str, df: DataFrame, chk: CompiledCheck) -> dict:
         query = chk.params.get("query")
         if not query:
             return {"error": "no query"}
@@ -2330,13 +2194,6 @@ class Validator:
         except Exception as e:  # surfaced as error check, not crash (soda parity)
             return {"error": f"query failed: {e}"}
         return {"metric": metric}
-
-    def _record_sql(self, chk: CompiledCheck, res: dict) -> None:
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        result, reason = chk.eval_metric(res["metric"], {})
-        self._record(chk, res["metric"], result, reason, None)
 
     # -- checkpoint / resume ---------------------------------------------------
 
@@ -2355,9 +2212,7 @@ class Validator:
         files) yield a single empty name, which is stable across runs."""
         import hashlib
 
-        sub = df
-        if parts is not None:
-            sub = df.filter(F.col(partition_col).cast("string").isin(list(parts)))
+        sub = df if parts is None else df.filter(_in_partitions(partition_col, parts))
         rows = (
             sub.select(
                 F.col(partition_col).cast("string").alias("p"),
@@ -2366,7 +2221,7 @@ class Validator:
         )
         by_part: Dict[str, List[str]] = {}
         for r in rows:
-            by_part.setdefault(r["p"], []).append(r["f"])
+            by_part.setdefault(_part_key(r["p"]), []).append(r["f"])
         return {
             p: {
                 "files": len([f for f in fs if f]),
@@ -2489,7 +2344,7 @@ class Validator:
                 for p in stale:
                     del done[p]
         parts = sorted(
-            str(r[0]) for r in df.select(partition_col).distinct().collect()
+            _part_key(r[0]) for r in df.select(partition_col).distinct().collect()
         )
         if done and self.config.checkpoint_verify_lineage:
             # stale-checkpoint detection: a completed partition whose input
@@ -2528,7 +2383,7 @@ class Validator:
                 for b, c in bins.items():
                     dst[int(b)] = dst.get(int(b), 0) + int(c)
 
-        def merge_fq(pid: str, aq: Optional[Dict[str, Any]]) -> None:
+        def merge_fq(pid: Optional[str], aq: Optional[Dict[str, Any]]) -> None:
             for li, c in ((aq or {}).get("counts") or {}).items():
                 audio_fq_rows.append({"__part": pid, "t": int(li), "c": int(c)})
             for li, vs in ((aq or {}).get("violations") or {}).items():
@@ -2537,22 +2392,21 @@ class Validator:
                         {"__part": pid, "t": int(li),
                          "clip_id": clip_id, "observed": obs})
 
-        for rec in done.values():
+        for pid, rec in done.items():
+            value = _part_value(pid)
             row = _json_to_metrics(rec["metrics_json"])
-            row[partition_col] = rec["partition_id"]
+            row[partition_col] = value
             part_rows.append(row)
             if rec.get("audio_metrics_json"):
                 arow = _json_to_metrics(rec["audio_metrics_json"])
-                arow["__part"] = rec["partition_id"]
+                arow["__part"] = value
                 audio_part_rows.append(arow)
             for v in rec.get("audio_violations") or []:
-                audio_vio_by_part.setdefault(str(rec["partition_id"]), []).append(
-                    (rec["partition_id"], v[0], v[1]))
+                audio_vio_by_part.setdefault(pid, []).append((value, v[0], v[1]))
             merge_fh(rec.get("audio_feature_hists"))
-            merge_fq(str(rec["partition_id"]), rec.get("audio_quality"))
+            merge_fq(value, rec.get("audio_quality"))
             for col, b64 in (rec.get("pctl_digests") or {}).items():
-                pctl_digests[(str(rec["partition_id"]), col)] = (
-                    td_mod.TDigest.from_b64(b64))
+                pctl_digests[(value, col)] = td_mod.TDigest.from_b64(b64)
 
         self.run.log_info(
             f"checkpoint: {len(done)}/{len(parts)} partitions already complete; "
@@ -2560,7 +2414,7 @@ class Validator:
         )
 
         for chunk in chunks:
-            sub = df.filter(F.col(partition_col).cast("string").isin(chunk))
+            sub = df.filter(_in_partitions(partition_col, chunk))
             rows = [r.asDict() for r in sub.groupBy(partition_col).agg(*agg_list).collect()]
             if drift_jobs:
                 self._merge_drift_rows(
@@ -2581,8 +2435,6 @@ class Validator:
                     sub, pctl_cols, partition_col,
                     self.config.pctl_tdigest_delta)
             if audio_chk is not None or feat_bins or feat_limits:
-                from pyspark import StorageLevel
-
                 compact = self._audio_compact(
                     sub, audio_chk, partition_col, feat_bins=feat_bins or None,
                     feat_limits=feat_limits or None, text_col=rate_text_col)
@@ -2595,24 +2447,24 @@ class Validator:
                                 .groupBy("__part", "clip_id", "t")
                                 .agg(F.sum("hash").alias("c")).collect()
                             ):
-                                chunk_fh_by_part.setdefault(str(r["__part"]), {}) \
+                                chunk_fh_by_part.setdefault(_part_key(r["__part"]), {}) \
                                     .setdefault(r["clip_id"], {})[str(r["t"])] = int(r["c"])
                         if feat_limits:
                             for r in self._fq_count_frame(compact).collect():
                                 d = chunk_aq_by_part.setdefault(
-                                    str(r["__part"]), {"counts": {}, "violations": {}})
+                                    _part_key(r["__part"]), {"counts": {}, "violations": {}})
                                 d["counts"][str(r["t"])] = int(r["c"])
                             if chunk_aq_by_part:
                                 for r in self._fv_capped_frame(
                                     compact, per_partition=True
                                 ).collect():
                                     d = chunk_aq_by_part.setdefault(
-                                        str(r["__part"]), {"counts": {}, "violations": {}})
+                                        _part_key(r["__part"]), {"counts": {}, "violations": {}})
                                     d["violations"].setdefault(str(r["t"]), []).append(
                                         [r["clip_id"], r["observed"]])
                         if audio_chk is not None:
                             audio_rows_by_part = {
-                                str(r["__part"]): r.asDict()
+                                _part_key(r["__part"]): r.asDict()
                                 for r in compact.filter(F.col("row_type") == "agg")
                                 .groupBy("__part").agg(*a_sums).collect()
                             }
@@ -2626,21 +2478,22 @@ class Validator:
                                 .filter(F.col("__rn") <= self.config.violation_cap)
                                 .select("__part", "clip_id", "observed").collect()
                             ):
-                                chunk_vio_by_part.setdefault(str(r["__part"]), []).append(
+                                chunk_vio_by_part.setdefault(_part_key(r["__part"]), []).append(
                                     (r["clip_id"], r["observed"]))
                 finally:
                     compact.unpersist()
             with open(manifest, "a", encoding="utf-8") as f:
                 for row in rows:
-                    pid = str(row[partition_col])
+                    pid = _part_key(row[partition_col])
+                    value = _part_value(pid)
                     arow = audio_rows_by_part.get(pid)
                     vlist = chunk_vio_by_part.get(pid, [])
                     fh = chunk_fh_by_part.get(pid)
                     aq = chunk_aq_by_part.get(pid)
                     digs = {
-                        col: chunk_digests[(pid, col)].to_b64()
+                        col: chunk_digests[(value, col)].to_b64()
                         for col in (pctl_cols or [])
-                        if (pid, col) in chunk_digests
+                        if (value, col) in chunk_digests
                     }
                     f.write(json.dumps({
                         "run_id": self.run.runId,
@@ -2660,12 +2513,12 @@ class Validator:
                     if arow:
                         audio_part_rows.append(arow)
                     if vlist:
-                        audio_vio_by_part[pid] = [(pid, c, o) for c, o in vlist]
+                        audio_vio_by_part[pid] = [(value, c, o) for c, o in vlist]
                     merge_fh(fh)
-                    merge_fq(pid, aq)
+                    merge_fq(value, aq)
                     for (dpid, col), d in chunk_digests.items():
-                        if dpid == pid:
-                            pctl_digests[(pid, col)] = d
+                        if dpid == value:
+                            pctl_digests[(value, col)] = d
         # global cap across partitions, deterministic by clip_id
         audio_vio = sorted(
             (v for vs in audio_vio_by_part.values() for v in vs), key=lambda t: t[1]
@@ -2682,6 +2535,38 @@ class Validator:
                 audio_fq_rows, audio_fv_rows, pctl_digests)
 
     # -- result recording -------------------------------------------------------
+
+    def _record_result(self, chk: CompiledCheck, res: dict) -> None:
+        """Record one compute result dict: ``error`` -> an error row; else
+        ``metric`` judged by ``chk.eval_metric`` or, for kinds with a family
+        reason text, by the check's ``evaluator`` or zero-is-pass, with
+        ``rows`` as row count and ``diagnostics`` passed on. Partitions in
+        ``part_metrics`` WITH violations get their own row — the "which
+        ingest partition went bad" answer; clean ones are covered by the
+        global row (enumerating them would need another scan).
+        ``vio_rows`` go to the violations."""
+        if "error" in res:
+            self._record(chk, None, ResultEnum.error, res["error"], None)
+            return
+        metric = res["metric"]
+        fail = _FAMILY_OF[chk.kind].fail.get(chk.kind)
+        if fail is None:
+            result, reason = chk.eval_metric(metric, {})
+        elif chk.params.get("evaluator") is not None:
+            result, reason = chk.params["evaluator"](metric, {})
+        elif metric == 0:
+            result, reason = ResultEnum.passed, None
+        else:
+            result = ResultEnum.failed
+            reason = f"{chk.name}: " + fail.format(n=int(metric), p=chk.params)
+        self._record(chk, metric, result, reason, res.get("rows"),
+                     diagnostics=res.get("diagnostics"))
+        for pid, pm in sorted((res.get("part_metrics") or {}).items()):
+            if pm > 0:
+                pres, preason = chk.eval_metric(pm, {})
+                self._record(chk, pm, pres, preason, None, partition_id=pid)
+        if res.get("vio_rows"):
+            self._add_violations(res["vio_rows"])
 
     def _record(
         self,
@@ -2797,6 +2682,24 @@ def _json_to_metrics(blob: str) -> Dict[str, Any]:
         else:
             out[k] = v
     return out
+
+
+def _part_key(value: Any) -> str:
+    """A partition's key in the checkpoint listing and manifest: NULL keys
+    under drift.NULL_PARTITION, so a literal "None" partition keeps its own."""
+    return drift_mod.NULL_PARTITION if value is None else str(value)
+
+
+def _part_value(key: str) -> Optional[str]:
+    """The partition value (as a string, None for NULL) a key stands for."""
+    return None if key == drift_mod.NULL_PARTITION else key
+
+
+def _in_partitions(partition_col: str, keys: List[str]) -> Column:
+    """Row filter selecting the partitions with these ``_part_key`` keys."""
+    col = F.col(partition_col)
+    cond = col.cast("string").isin([k for k in keys if k != drift_mod.NULL_PARTITION])
+    return cond | col.isNull() if drift_mod.NULL_PARTITION in keys else cond
 
 
 def validate(

@@ -20,7 +20,6 @@ pruned out of every non-media pass (select only what the UDF needs).
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from typing import Callable, Iterator, Optional, Tuple
 
@@ -357,34 +356,6 @@ def real_video_decoder(raw: bytes):
             "the decoder= argument"
         )
     raise ValueError("unrecognized video container")
-
-
-def fake_image_decoder(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
-    """Deterministic stand-in decoder: dimensions + pixels derived from the
-    payload hash. Exercises the full Spark path with knowable outputs."""
-    if raw is None or len(raw) == 0:
-        raise ValueError("empty image payload")
-    h = hashlib.md5(raw).digest()
-    height = 8 + h[0] % 56
-    width = 8 + h[1] % 56
-    channels = 3
-    rng = np.random.default_rng(int.from_bytes(h[2:10], "little"))
-    pixels = rng.integers(0, 256, size=(height, width, channels), dtype=np.uint8)
-    return height, width, channels, pixels
-
-
-def fake_video_decoder(raw: bytes) -> Tuple[float, list]:
-    """Deterministic stand-in video decoder: n_frames/fps from payload hash."""
-    if raw is None or len(raw) == 0:
-        raise ValueError("empty video payload")
-    h = hashlib.md5(raw).digest()
-    fps = 10.0 + (h[0] % 21)
-    n_frames = 4 + h[1] % 29
-    rng = np.random.default_rng(int.from_bytes(h[2:10], "little"))
-    frames = [
-        rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8) for _ in range(n_frames)
-    ]
-    return fps, frames
 
 
 # ---------------------------------------------------------------------------

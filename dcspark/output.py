@@ -50,10 +50,9 @@ def print_console(run: Run) -> None:
 def exit_code(run: Run) -> int:
     """Reference parity (test_results_writer.py:18-45): exit 0 for a passed
     OR warning run (the reference prints warnings and returns normally),
-    exit 1 for everything else — INCLUDING unknown, which must fail CLOSED
-    (a run that produced no verdict is not a green gate)."""
-    return 0 if run.result in (ResultEnum.passed, ResultEnum.warning,
-                               ResultEnum.info) else 1
+    exit 1 for everything else — INCLUDING unknown and info, which must
+    fail CLOSED (a run that produced no verdict is not a green gate)."""
+    return 0 if run.result in (ResultEnum.passed, ResultEnum.warning) else 1
 
 
 def to_junit_xml(run: Run) -> str:

@@ -603,15 +603,6 @@ def simhash_from_hashes(hashes: Column, total: Column, bits: int = 16) -> Column
     return acc
 
 
-def simhash_expr(bits: int = 16, col: str = "text") -> Column:
-    """bits-bit SimHash of a text column (same bit derivation as
-    :func:`simhash_from_hashes`; kept for API stability). Prefer
-    :func:`simhash_table`, whose split projection guarantees md5 runs once per
-    token — inlined here, each per-bit filter re-evaluates the transform."""
-    w = words_expr(col)
-    return simhash_from_hashes(F.transform(w, lambda x: F.md5(x)), F.size(w), bits)
-
-
 def simhash_table(docs: DataFrame, bits: int = 16) -> DataFrame:
     """(doc_id, simhash) per document with ≥1 token.
 
@@ -633,53 +624,6 @@ def simhash_table(docs: DataFrame, bits: int = 16) -> DataFrame:
     return hashed.select(
         "doc_id", simhash_from_hashes(F.col("h"), F.col("n"), bits).alias("simhash")
     )
-
-
-def simhash_near_dups(docs: DataFrame, bits: int = 16, max_hamming: int = 3) -> DataFrame:
-    """Pairs whose SimHashes differ in ≤ max_hamming bits.
-
-    Standard simhash blocking: split the hash into 4 equal blocks; by
-    pigeonhole, any pair within hamming ≤ 3 shares at least one block exactly.
-    Candidates come from per-block equi-joins (co-partitioned shuffles, no
-    all-pairs product); exact hamming is verified on candidates only.
-    """
-    if max_hamming > 3:
-        raise ValueError("blocking with 4 blocks guarantees recall only for max_hamming <= 3")
-    t = simhash_table(docs, bits)
-    blk = bits // 4
-    # tt feeds EIGHT join sides (two per block, each shuffled on a different
-    # key, so ReuseExchange cannot merge them): persist the tiny
-    # (doc_id, simhash, b0..b3) projection or the dominant map cost —
-    # tokenize + md5 per token + 16 bit-count passes — runs 4x (the same
-    # defect class winnowing_near_dups / minhash_near_dups already fix)
-    tt = t.select(
-        "doc_id", "simhash",
-        *[
-            ((F.col("simhash") / F.lit(1 << (b * blk))).cast("long") % (1 << blk)).alias(f"b{b}")
-            for b in range(4)
-        ],
-    ).persist()
-    cands = None
-    for b in range(4):
-        a_ = tt.alias("a")
-        b_ = tt.alias("b")
-        c = (
-            a_.join(b_, on=f"b{b}")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-                F.col("a.simhash").alias("sh_a"), F.col("b.simhash").alias("sh_b"),
-            )
-        )
-        cands = c if cands is None else cands.unionByName(c)
-    cands = cands.distinct()
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    out = cands.select("doc_a", "doc_b", ham.cast("int").alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
-    # cache handle: dcspark.pipeline_ckpt.release_caches(out) after consuming
-    out._dcspark_cached = [tt]
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -69,6 +69,8 @@ def main():
 
     q = em.queries()
     o = em.oracle_sql()
+    # the counts come from the registry itself, never from a remembered figure
+    print(f"registry: {len(q)} queries, {sum(k in o for k in q)} with an oracle")
     if args.keys:
         keys = args.keys.split(",")
     elif args.all:

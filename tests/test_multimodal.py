@@ -1,11 +1,49 @@
 """Multimodal binary-column plumbing: image/video (stub decoders) + audio (real)."""
 
+import hashlib
+import sys
+from typing import Tuple
+
 import numpy as np
 import pytest
+from pyspark import cloudpickle
 from pyspark.sql import functions as F
 
 from dcspark import multimodal, synth
 from dcspark.audio import parse_wav
+
+
+def fake_image_decoder(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
+    """Deterministic stand-in decoder: dimensions + pixels derived from the
+    payload hash. Exercises the full Spark path with knowable outputs."""
+    if raw is None or len(raw) == 0:
+        raise ValueError("empty image payload")
+    h = hashlib.md5(raw).digest()
+    height = 8 + h[0] % 56
+    width = 8 + h[1] % 56
+    channels = 3
+    rng = np.random.default_rng(int.from_bytes(h[2:10], "little"))
+    pixels = rng.integers(0, 256, size=(height, width, channels), dtype=np.uint8)
+    return height, width, channels, pixels
+
+
+def fake_video_decoder(raw: bytes) -> Tuple[float, list]:
+    """Deterministic stand-in video decoder: n_frames/fps from payload hash."""
+    if raw is None or len(raw) == 0:
+        raise ValueError("empty video payload")
+    h = hashlib.md5(raw).digest()
+    fps = 10.0 + (h[0] % 21)
+    n_frames = 4 + h[1] % 29
+    rng = np.random.default_rng(int.from_bytes(h[2:10], "little"))
+    frames = [
+        rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8) for _ in range(n_frames)
+    ]
+    return fps, frames
+
+
+# the stand-in decoders run inside Python workers, which cannot import this
+# test module: ship its functions by value
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 @pytest.fixture(scope="module")
@@ -15,14 +53,14 @@ def image_df(spark):
 
 
 def test_image_metadata_fake_decoder(spark, image_df):
-    out = multimodal.image_metadata(image_df, decoder=multimodal.fake_image_decoder)
+    out = multimodal.image_metadata(image_df, decoder=fake_image_decoder)
     rows = {r["id"]: r for r in out.collect()}
     assert len(rows) == 20
     assert all(r["decode_error"] is None for r in rows.values())
     assert all(8 <= r["width"] <= 64 and 8 <= r["height"] <= 64 for r in rows.values())
     # deterministic: same payload -> same metadata
     again = {r["id"]: r for r in multimodal.image_metadata(
-        image_df, decoder=multimodal.fake_image_decoder).collect()}
+        image_df, decoder=fake_image_decoder).collect()}
     assert {k: (v["width"], v["height"], v["mean_luma"]) for k, v in rows.items()} == \
            {k: (v["width"], v["height"], v["mean_luma"]) for k, v in again.items()}
 
@@ -96,7 +134,7 @@ def test_real_decoder_resize_path(spark):
 
 def test_image_resize_shape(spark, image_df):
     out = multimodal.image_resize(
-        image_df, target=(16, 12), decoder=multimodal.fake_image_decoder)
+        image_df, target=(16, 12), decoder=fake_image_decoder)
     rows = out.collect()
     assert all(r["height"] == 16 and r["width"] == 12 for r in rows)
     assert all(len(r["pixels"]) == 16 * 12 * 3 for r in rows)
@@ -104,7 +142,7 @@ def test_image_resize_shape(spark, image_df):
 
 def test_video_frame_sample_bounded(spark, image_df):
     out = multimodal.video_frame_sample(
-        image_df, every_n=3, max_frames=4, decoder=multimodal.fake_video_decoder)
+        image_df, every_n=3, max_frames=4, decoder=fake_video_decoder)
     rows = out.collect()
     per_id = {}
     for r in rows:

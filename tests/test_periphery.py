@@ -1006,6 +1006,7 @@ def test_exit_code_reference_parity():
     assert exit_code(run_with(ResultEnum.failed)) == 1
     assert exit_code(run_with(ResultEnum.error)) == 1
     assert exit_code(run_with(ResultEnum.unknown)) == 1
+    assert exit_code(run_with(ResultEnum.info)) == 1
 
 
 def test_junit_xml_escapes_double_quotes():
