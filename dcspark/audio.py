@@ -34,6 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rowmap import DECODE_ERRORS, _binary_views, ddl_schemas, map_payloads
+
 AUDIO_REPORT_DDL = (
     "clip_id string, bytes_null boolean, decoded_sr int, decoded_dur_ms double, "
     "sr_ok boolean, dur_ok boolean, codec_ok boolean, snr_db double, snr_ok boolean, "
@@ -485,29 +487,6 @@ def synth_snr_oracle(seed: int, dur_lo: int = 200, dur_hi: int = 30000,
     return snr_fn
 
 
-def _binary_views(bin_col, n_rows: int):
-    """Zero-copy (offsets, value-heap, null-mask) views over an Arrow binary
-    column: validity bitmap, offsets, and the contiguous value heap — per-row
-    payloads become numpy slices of the heap, never PyBytes copies (the pandas
-    conversion would allocate a ~60 KB bytes object per clip, doubling memory
-    traffic). Handles both ``binary`` (int32 offsets) and ``large_binary``
-    (int64 offsets, e.g. under spark.sql.execution.arrow.useLargeVarTypes)."""
-    import pyarrow as pa
-
-    if pa.types.is_large_binary(bin_col.type):
-        off_dtype, off_width = np.int64, 8
-    elif pa.types.is_binary(bin_col.type):
-        off_dtype, off_width = np.int32, 4
-    else:
-        raise TypeError(f"expected a (large_)binary payload column, got {bin_col.type}")
-    bufs = bin_col.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=off_dtype,
-                            count=n_rows + 1, offset=bin_col.offset * off_width)
-    heap = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else None
-    nulls = bin_col.is_null().to_numpy(zero_copy_only=False)
-    return offsets, heap, nulls
-
-
 def _eval_batch(batch, oracle, snr_fn, snr_floor_db, fp_fn=None, feat_fns=None):
     """Evaluate the decode-conformance invariant for every row of one Arrow
     batch -> list of (clip_id, rec-dict). Shared by the per-row report and the
@@ -565,7 +544,7 @@ def _eval_batch(batch, oracle, snr_fn, snr_floor_db, fp_fn=None, feat_fns=None):
                     finite = not (math.isinf(s) or math.isnan(s))
                     rec["snr_db"] = float(s) if finite else None
                     rec["snr_ok"] = bool(s >= snr_floor_db)
-        except (ValueError, struct.error) as e:
+        except DECODE_ERRORS as e:
             rec["decode_error"] = str(e)
         out.append((clip_id, rec))
     return out
@@ -610,41 +589,24 @@ def audio_decode_report(
     ``partition_col`` is given it is threaded through the Arrow batch as
     ``__part`` (stringified) so per-partition aggregation needs no re-join.
     """
-    schema = AUDIO_REPORT_DDL + (", __part string" if partition_col else "")
+    spark_schema, arrow_schema = ddl_schemas(
+        AUDIO_REPORT_DDL + (", __part string" if partition_col else ""))
 
     def check_batches(batches: Iterator["object"]) -> Iterator["object"]:
         import pyarrow as pa
 
         for batch in batches:
-            out = {k: [] for k in (
-                "bytes_null", "decoded_sr", "decoded_dur_ms", "sr_ok",
-                "dur_ok", "codec_ok", "snr_db", "snr_ok", "decode_error")}
-            for _clip_id, rec in _eval_batch(batch, oracle, snr_fn, snr_floor_db):
-                for k in out:
-                    out[k].append(rec[k])
-            arrays = [
-                batch.column(0),
-                pa.array(out["bytes_null"], pa.bool_()),
-                pa.array(out["decoded_sr"], pa.int32()),
-                pa.array(out["decoded_dur_ms"], pa.float64()),
-                pa.array(out["sr_ok"], pa.bool_()),
-                pa.array(out["dur_ok"], pa.bool_()),
-                pa.array(out["codec_ok"], pa.bool_()),
-                pa.array(out["snr_db"], pa.float64()),
-                pa.array(out["snr_ok"], pa.bool_()),
-                pa.array(out["decode_error"], pa.string()),
-            ]
-            names = ["clip_id", "bytes_null", "decoded_sr", "decoded_dur_ms",
-                     "sr_ok", "dur_ok", "codec_ok", "snr_db", "snr_ok", "decode_error"]
+            rows = [{**rec, "clip_id": clip_id} for clip_id, rec
+                    in _eval_batch(batch, oracle, snr_fn, snr_floor_db)]
             if partition_col:
-                arrays.append(batch.column(5))
-                names.append("__part")
-            yield pa.RecordBatch.from_arrays(arrays, names)
+                for row, part in zip(rows, batch.column(5).to_pylist()):
+                    row["__part"] = part
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     cols = [F.col(id_col), F.col("bytes"), F.col("sr_hz"), F.col("dur_ms"), F.col("codec")]
     if partition_col:
         cols.append(F.col(partition_col).cast("string").alias("__part"))
-    return df.select(*cols).mapInArrow(check_batches, schema=schema)
+    return df.select(*cols).mapInArrow(check_batches, schema=spark_schema)
 
 
 def rms_dbfs(pcm, _sr) -> float:
@@ -1178,39 +1140,15 @@ def audio_feature_frame(
     bad = [f for f in features if f not in FEATURE_FNS]
     if bad:
         raise ValueError(f"unknown audio features {bad}; known: {sorted(FEATURE_FNS)}")
-    fns = [(f, FEATURE_FNS[f]) for f in features]
-    schema = "clip_id string, " + ", ".join(f"{f} double" for f in features)
+    fns = {f: FEATURE_FNS[f] for f in features}
 
-    def feat_batches(batches: Iterator["object"]) -> Iterator["object"]:
-        import pyarrow as pa
+    def feats(raw):
+        sr, _codec, pcm = parse_wav_view(raw)
+        return eval_features(pcm, sr, fns)
 
-        fns_d = dict(fns)
-        for batch in batches:
-            n_rows = batch.num_rows
-            offsets, heap, nulls = _binary_views(batch.column(1), n_rows)
-            cols: list = [[] for _ in fns]
-            for i in range(n_rows):
-                if nulls[i]:
-                    for c in cols:
-                        c.append(None)
-                    continue
-                raw = heap[offsets[i]:offsets[i + 1]]
-                try:
-                    sr, _codec, pcm = parse_wav_view(raw)
-                except (ValueError, struct.error):
-                    for c in cols:
-                        c.append(None)
-                    continue
-                feats = eval_features(pcm, sr, fns_d)
-                for c, (name, _fn) in zip(cols, fns):
-                    c.append(feats[name])
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0)] + [pa.array(c, pa.float64()) for c in cols],
-                ["clip_id"] + [f for f, _ in fns])
-
-    return df.select(
-        F.col(id_col).alias("clip_id"), F.col(bytes_col)
-    ).mapInArrow(feat_batches, schema=schema)
+    return map_payloads(
+        df, id_col, bytes_col,
+        "clip_id string, " + ", ".join(f"{f} double" for f in features), feats)
 
 
 def audio_violation_expr() -> "F.Column":

@@ -1,7 +1,7 @@
 """Acoustic fingerprinting + audio near-duplicate detection.
 
 The audio-payload analog of the text MinHash-LSH pipeline (textops.py):
-per-clip spectral fingerprints computed in Arrow-batched pandas UDFs, then a
+per-clip spectral fingerprints computed in one Arrow-batched pass, then a
 bucketed hash equi-join for candidate pairs — never an all-pairs comparison,
 never PCM bytes through a shuffle.
 
@@ -22,7 +22,7 @@ north-star requirement of payload-aware validation ops over the
 (clip_id, bytes, sr_hz, ...) table shape (BASELINE.json input_hint).
 
 Scale design (10^12 clips):
-- fingerprint pass: one mapInPandas scan of (clip_id, bytes); output rows are
+- fingerprint pass: one mapInArrow scan of (clip_id, bytes); output rows are
   (clip_id, t, hash) — 8-byte hashes, constant count per second of audio.
 - candidate join: self-equi-join on ``hash``; shuffle volume is bounded by
   fingerprint rows, and overfull buckets (silence / degenerate hashes, the
@@ -34,14 +34,12 @@ Scale design (10^12 clips):
 """
 from __future__ import annotations
 
-import struct
-from typing import Iterator
-
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .audio import parse_wav
+from .audio import parse_wav_view
+from .rowmap import map_payloads
 
 FINGERPRINT_DDL = "clip_id string, t int, hash long, decode_error string"
 NEAR_DUP_DDL = "id_a string, id_b string, matches long, score double"
@@ -109,33 +107,15 @@ def audio_fingerprints(
     hash NULL) so the fingerprint table doubles as a decode audit.
     """
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def fingerprints(raw):
+        sr, _codec, pcm = parse_wav_view(raw)
+        hashes = fingerprint_hashes(
+            pcm, sr, n_bands=n_bands, frame_s=frame_s, hop_s=hop_s,
+            fmin=fmin, fmax=fmax, rel_hi=rel_hi, rel_lo=rel_lo,
+        )
+        return [{"t": t, "hash": int(h)} for t, h in enumerate(hashes)]
 
-        for pdf in batches:
-            ids, ts, hs, errs = [], [], [], []
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    sr, _codec, pcm = parse_wav(bytes(raw) if raw is not None else None)
-                    hashes = fingerprint_hashes(
-                        pcm, sr, n_bands=n_bands, frame_s=frame_s, hop_s=hop_s,
-                        fmin=fmin, fmax=fmax, rel_hi=rel_hi, rel_lo=rel_lo,
-                    )
-                    for t, h in enumerate(hashes):
-                        ids.append(rid); ts.append(t); hs.append(int(h)); errs.append(None)
-                except (ValueError, struct.error) as e:
-                    ids.append(rid); ts.append(None); hs.append(None); errs.append(str(e))
-            # hash is a nullable int64 column: a None row (decode error) in
-            # the batch must NOT let pandas coerce it to float64 — the 62-bit
-            # hashes exceed float64's 53-bit mantissa, so that rounding
-            # silently breaks equi-join matches for every clip in the batch
-            yield pd.DataFrame({"clip_id": ids, "t": ts,
-                                "hash": pd.array(hs, dtype="Int64"),
-                                "decode_error": errs})
-
-    return df.select(
-        F.col(id_col).cast("string").alias(id_col), F.col(bytes_col)
-    ).mapInPandas(run, schema=FINGERPRINT_DDL)
+    return map_payloads(df, id_col, bytes_col, FINGERPRINT_DDL, fingerprints)
 
 
 def audio_fingerprint_near_dup(
@@ -173,7 +153,7 @@ def audio_fingerprint_near_dup(
     # uniq feeds BOTH join sides and the per-clip counts: persist the tiny
     # (clip_id, hash) frame so the fingerprint lineage — a full decode pass
     # when called on audio_fingerprints output — evaluates ONCE, not 3x
-    # (plan-gated: exactly one MapInPandas in the executed plan)
+    # (plan-gated: exactly one MapInArrow in the executed plan)
     uniq = uniq.persist()
     a = uniq.select(F.col("clip_id").alias("id_a"), "hash")
     b = uniq.select(F.col("clip_id").alias("id_b"), "hash")

@@ -17,14 +17,14 @@ the plan is a single scan-transform stage whose throughput scales with cores.
 
 from __future__ import annotations
 
-import struct
 from typing import Iterator, Optional
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .audio import BYTES_COL, _binary_views, encode_wav, parse_wav_view
+from .audio import BYTES_COL, encode_wav, parse_wav_view
+from .rowmap import DECODE_ERRORS, _binary_views, map_payloads
 
 TRANSCODE_DDL = "clip_id string, bytes binary, sr_hz int, codec string, decode_error string"
 SEGMENTS_DDL = ("clip_id string, seg_idx int, start_ms double, end_ms double, "
@@ -138,41 +138,18 @@ def audio_transcode(
         raise ValueError("resampler must be 'sinc' or 'linear'")
     resample = resample_sinc if resampler == "sinc" else resample_linear
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pyarrow as pa
+    def transcode(raw):
+        if raw is None:
+            raise ValueError("null payload")
+        sr, _codec, pcm = parse_wav_view(raw)
+        out_sr = target_sr or sr
+        pcm = resample(pcm, sr, out_sr)
+        if target_dbfs is not None:
+            pcm = normalize_loudness(pcm, target_dbfs)
+        return {"bytes": encode_wav(pcm, out_sr, codec=target_codec),
+                "sr_hz": out_sr, "codec": target_codec}
 
-        for batch in batches:
-            n_rows = batch.num_rows
-            offsets, heap, nulls = _binary_views(batch.column(1), n_rows)
-            b_out, sr_out, err_out = [], [], []
-            for i in range(n_rows):
-                if nulls[i]:
-                    b_out.append(None), sr_out.append(None)
-                    err_out.append("null payload")
-                    continue
-                raw = heap[offsets[i]:offsets[i + 1]]
-                try:
-                    sr, _codec, pcm = parse_wav_view(raw)
-                    out_sr = target_sr or sr
-                    pcm = resample(pcm, sr, out_sr)
-                    if target_dbfs is not None:
-                        pcm = normalize_loudness(pcm, target_dbfs)
-                    b_out.append(encode_wav(pcm, out_sr, codec=target_codec))
-                    sr_out.append(out_sr)
-                    err_out.append(None)
-                except (ValueError, struct.error) as e:
-                    b_out.append(None), sr_out.append(None)
-                    err_out.append(str(e))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(b_out, pa.binary()),
-                 pa.array(sr_out, pa.int32()),
-                 pa.array([target_codec if e is None else None for e in err_out],
-                          pa.string()),
-                 pa.array(err_out, pa.string())],
-                ["clip_id", "bytes", "sr_hz", "codec", "decode_error"])
-
-    return df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col)
-                     ).mapInArrow(run, schema=TRANSCODE_DDL)
+    return map_payloads(df, id_col, bytes_col, TRANSCODE_DDL, transcode)
 
 
 TRIM_DDL = ("clip_id string, bytes binary, sr_hz int, dur_ms int, "
@@ -207,60 +184,28 @@ def audio_trim(
     scan.
     """
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pyarrow as pa
+    def trim(raw):
+        if raw is None:
+            raise ValueError("null payload")
+        sr, codec, pcm = parse_wav_view(raw)
+        n_f = max(1, int(round(sr * frame_ms / 1000.0)))
+        db = _frame_rms_db(pcm, sr, frame_ms)
+        runs = _speech_runs(
+            db > energy_floor_dbfs,
+            max(1, int(round(min_silence_ms / frame_ms))),
+            max(1, int(round(min_speech_ms / frame_ms))))
+        if not runs:
+            return {"decode_error": "no speech detected"}
+        pad = int(round(sr * pad_ms / 1000.0))
+        s = max(0, runs[0][0] * n_f - pad)
+        e = min(len(pcm), runs[-1][1] * n_f + pad)
+        cut = pcm[s:e]
+        return {"bytes": encode_wav(cut, sr, codec=codec), "sr_hz": sr,
+                "dur_ms": int(round(len(cut) / sr * 1000.0)), "codec": codec,
+                "trimmed_lead_ms": s / sr * 1000.0,
+                "trimmed_tail_ms": (len(pcm) - e) / sr * 1000.0}
 
-        for batch in batches:
-            n_rows = batch.num_rows
-            offsets, heap, nulls = _binary_views(batch.column(1), n_rows)
-            b_out, sr_out, dur_out = [], [], []
-            codec_out, lead_out, tail_out, err_out = [], [], [], []
-
-            def emit(b, sr, dur, codec, lead, tail, err):
-                b_out.append(b), sr_out.append(sr), dur_out.append(dur)
-                codec_out.append(codec), lead_out.append(lead)
-                tail_out.append(tail), err_out.append(err)
-
-            for i in range(n_rows):
-                if nulls[i]:
-                    emit(None, None, None, None, None, None, "null payload")
-                    continue
-                raw = heap[offsets[i]:offsets[i + 1]]
-                try:
-                    sr, codec, pcm = parse_wav_view(raw)
-                except (ValueError, struct.error) as e:
-                    emit(None, None, None, None, None, None, str(e))
-                    continue
-                n_f = max(1, int(round(sr * frame_ms / 1000.0)))
-                db = _frame_rms_db(pcm, sr, frame_ms)
-                runs = _speech_runs(
-                    db > energy_floor_dbfs,
-                    max(1, int(round(min_silence_ms / frame_ms))),
-                    max(1, int(round(min_speech_ms / frame_ms))))
-                if not runs:
-                    emit(None, None, None, None, None, None,
-                         "no speech detected")
-                    continue
-                pad = int(round(sr * pad_ms / 1000.0))
-                s = max(0, runs[0][0] * n_f - pad)
-                e = min(len(pcm), runs[-1][1] * n_f + pad)
-                cut = pcm[s:e]
-                emit(encode_wav(cut, sr, codec=codec), sr,
-                     int(round(len(cut) / sr * 1000.0)), codec,
-                     s / sr * 1000.0, (len(pcm) - e) / sr * 1000.0, None)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(b_out, pa.binary()),
-                 pa.array(sr_out, pa.int32()),
-                 pa.array(dur_out, pa.int32()),
-                 pa.array(codec_out, pa.string()),
-                 pa.array(lead_out, pa.float64()),
-                 pa.array(tail_out, pa.float64()),
-                 pa.array(err_out, pa.string())],
-                ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                 "trimmed_lead_ms", "trimmed_tail_ms", "decode_error"])
-
-    return df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col)
-                     ).mapInArrow(run, schema=TRIM_DDL)
+    return map_payloads(df, id_col, bytes_col, TRIM_DDL, trim)
 
 
 def _frame_rms_db(pcm: np.ndarray, sr: int, frame_ms: float) -> np.ndarray:
@@ -321,58 +266,25 @@ def audio_segments(
     undecodable clips emit one row with null bounds and the error string.
     """
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pyarrow as pa
+    def segments(raw):
+        sr, _codec, pcm = parse_wav_view(raw)
+        db = _frame_rms_db(pcm, sr, frame_ms)
+        runs = _speech_runs(
+            db > energy_floor_dbfs,
+            max(1, int(round(min_silence_ms / frame_ms))),
+            max(1, int(round(min_speech_ms / frame_ms))))
+        n_f = max(1, int(round(sr * frame_ms / 1000.0)))
+        clip_ms = len(pcm) / sr * 1000.0
+        for idx, (s, e) in enumerate(runs):
+            s_ms = s * n_f / sr * 1000.0
+            e_ms = min(e * n_f / sr * 1000.0, clip_ms)
+            seg = pcm[s * n_f:e * n_f].astype(np.float64) / 32768.0
+            r = float(np.sqrt(np.mean(seg * seg))) if len(seg) else 0.0
+            yield {"seg_idx": idx, "start_ms": s_ms, "end_ms": e_ms,
+                   "seg_dur_ms": e_ms - s_ms,
+                   "rms_dbfs": 20.0 * np.log10(max(r, 1e-6))}
 
-        for batch in batches:
-            n_rows = batch.num_rows
-            offsets, heap, nulls = _binary_views(batch.column(1), n_rows)
-            ids = batch.column(0).to_pylist()
-            out = {k: [] for k in ("clip_id", "seg_idx", "start_ms", "end_ms",
-                                   "seg_dur_ms", "rms_dbfs", "decode_error")}
-
-            def emit(cid, idx, s_ms, e_ms, rms, err):
-                out["clip_id"].append(cid)
-                out["seg_idx"].append(idx)
-                out["start_ms"].append(s_ms)
-                out["end_ms"].append(e_ms)
-                out["seg_dur_ms"].append(None if s_ms is None else e_ms - s_ms)
-                out["rms_dbfs"].append(rms)
-                out["decode_error"].append(err)
-
-            for i in range(n_rows):
-                raw = None if nulls[i] else heap[offsets[i]:offsets[i + 1]]
-                try:
-                    sr, _codec, pcm = parse_wav_view(raw)
-                except (ValueError, struct.error) as e:
-                    emit(ids[i], None, None, None, None, str(e))
-                    continue
-                db = _frame_rms_db(pcm, sr, frame_ms)
-                runs = _speech_runs(
-                    db > energy_floor_dbfs,
-                    max(1, int(round(min_silence_ms / frame_ms))),
-                    max(1, int(round(min_speech_ms / frame_ms))))
-                n_f = max(1, int(round(sr * frame_ms / 1000.0)))
-                clip_ms = len(pcm) / sr * 1000.0
-                for idx, (s, e) in enumerate(runs):
-                    s_ms = s * n_f / sr * 1000.0
-                    e_ms = min(e * n_f / sr * 1000.0, clip_ms)
-                    seg = pcm[s * n_f:e * n_f].astype(np.float64) / 32768.0
-                    r = float(np.sqrt(np.mean(seg * seg))) if len(seg) else 0.0
-                    emit(ids[i], idx, s_ms, e_ms,
-                         20.0 * np.log10(max(r, 1e-6)), None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["clip_id"], pa.string()),
-                 pa.array(out["seg_idx"], pa.int32()),
-                 pa.array(out["start_ms"], pa.float64()),
-                 pa.array(out["end_ms"], pa.float64()),
-                 pa.array(out["seg_dur_ms"], pa.float64()),
-                 pa.array(out["rms_dbfs"], pa.float64()),
-                 pa.array(out["decode_error"], pa.string())],
-                list(out))
-
-    return df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col)
-                     ).mapInArrow(run, schema=SEGMENTS_DDL)
+    return map_payloads(df, id_col, bytes_col, SEGMENTS_DDL, segments)
 
 
 def chunk_count(length: int, win: int, hop: int) -> int:
@@ -405,55 +317,22 @@ def audio_chunks(
     DECODED duration), which the tests pin against the emitted rows.
     """
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pyarrow as pa
+    def chunks(raw):
+        sr, _codec, pcm = parse_wav_view(raw)
+        win_n = int(sr * win_ms // 1000)
+        hop_n = max(1, int(sr * hop_ms // 1000))
+        # count in SAMPLES: a floored-ms count drops the final partial
+        # window whenever the sample count isn't millisecond-exact
+        for c in range(chunk_count(len(pcm), win_n, hop_n)):
+            s = c * hop_n
+            e = min(s + win_n, len(pcm))
+            piece = pcm[s:e]
+            yield {"chunk_idx": c, "start_ms": int(s * 1000 // sr),
+                   "end_ms": int(e * 1000 // sr), "n_samples": len(piece),
+                   "bytes": (encode_wav(piece, sr, codec=codec)
+                             if emit_bytes else None)}
 
-        for batch in batches:
-            n_rows = batch.num_rows
-            offsets, heap, nulls = _binary_views(batch.column(1), n_rows)
-            ids = batch.column(0).to_pylist()
-            out = {k: [] for k in ("clip_id", "chunk_idx", "start_ms", "end_ms",
-                                   "n_samples", "bytes", "decode_error")}
-            for i in range(n_rows):
-                raw = None if nulls[i] else heap[offsets[i]:offsets[i + 1]]
-                try:
-                    sr, _codec, pcm = parse_wav_view(raw)
-                except (ValueError, struct.error) as e:
-                    for k, v in (("clip_id", ids[i]), ("chunk_idx", None),
-                                 ("start_ms", None), ("end_ms", None),
-                                 ("n_samples", None), ("bytes", None),
-                                 ("decode_error", str(e))):
-                        out[k].append(v)
-                    continue
-                win_n = int(sr * win_ms // 1000)
-                hop_n = max(1, int(sr * hop_ms // 1000))
-                # count in SAMPLES: a floored-ms count drops the final partial
-                # window whenever the sample count isn't millisecond-exact
-                n_chunks = chunk_count(len(pcm), win_n, hop_n)
-                for c in range(n_chunks):
-                    s = c * hop_n
-                    e = min(s + win_n, len(pcm))
-                    piece = pcm[s:e]
-                    out["clip_id"].append(ids[i])
-                    out["chunk_idx"].append(c)
-                    out["start_ms"].append(int(s * 1000 // sr))
-                    out["end_ms"].append(int(e * 1000 // sr))
-                    out["n_samples"].append(len(piece))
-                    out["bytes"].append(
-                        encode_wav(piece, sr, codec=codec) if emit_bytes else None)
-                    out["decode_error"].append(None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["clip_id"], pa.string()),
-                 pa.array(out["chunk_idx"], pa.int32()),
-                 pa.array(out["start_ms"], pa.int32()),
-                 pa.array(out["end_ms"], pa.int32()),
-                 pa.array(out["n_samples"], pa.int32()),
-                 pa.array(out["bytes"], pa.binary()),
-                 pa.array(out["decode_error"], pa.string())],
-                list(out))
-
-    return df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col)
-                     ).mapInArrow(run, schema=CHUNKS_DDL)
+    return map_payloads(df, id_col, bytes_col, CHUNKS_DDL, chunks)
 
 
 LOGMEL_DDL = ("clip_id string, n_frames int, n_feats int, feats array<float>, "
@@ -539,42 +418,22 @@ def audio_logmel(
     """
     n_feats = n_mfcc or n_mels
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pyarrow as pa
+    fb_cache: dict = {}
+    dct = dct2_matrix(n_mfcc, n_mels) if n_mfcc else None
 
-        fb_cache: dict = {}
-        dct = dct2_matrix(n_mfcc, n_mels) if n_mfcc else None
-        for batch in batches:
-            n_rows = batch.num_rows
-            offsets, heap, nulls = _binary_views(batch.column(1), n_rows)
-            nf_out, feats_out, err_out = [], [], []
-            for i in range(n_rows):
-                raw = None if nulls[i] else heap[offsets[i]:offsets[i + 1]]
-                try:
-                    sr, _codec, pcm = parse_wav_view(raw)
-                except (ValueError, struct.error) as e:
-                    nf_out.append(None), feats_out.append(None), err_out.append(str(e))
-                    continue
-                frame_n = max(16, int(round(sr * frame_ms / 1000.0)))
-                fb = fb_cache.get((sr, frame_n))
-                if fb is None:
-                    fb = fb_cache[(sr, frame_n)] = mel_filterbank(sr, frame_n, n_mels)
-                lm = logmel_frames(pcm, sr, n_mels, frame_ms, hop_ms, fb=fb)
-                if dct is not None:
-                    lm = lm @ dct.T
-                nf_out.append(lm.shape[0])
-                feats_out.append(lm.astype(np.float32).ravel())
-                err_out.append(None)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0),
-                 pa.array(nf_out, pa.int32()),
-                 pa.array([n_feats] * n_rows, pa.int32()),
-                 pa.array(feats_out, pa.list_(pa.float32())),
-                 pa.array(err_out, pa.string())],
-                ["clip_id", "n_frames", "n_feats", "feats", "decode_error"])
+    def logmel(raw):
+        sr, _codec, pcm = parse_wav_view(raw)
+        frame_n = max(16, int(round(sr * frame_ms / 1000.0)))
+        fb = fb_cache.get((sr, frame_n))
+        if fb is None:
+            fb = fb_cache[(sr, frame_n)] = mel_filterbank(sr, frame_n, n_mels)
+        lm = logmel_frames(pcm, sr, n_mels, frame_ms, hop_ms, fb=fb)
+        if dct is not None:
+            lm = lm @ dct.T
+        return {"n_frames": lm.shape[0], "n_feats": n_feats,
+                "feats": lm.astype(np.float32).ravel()}
 
-    return df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col)
-                     ).mapInArrow(run, schema=LOGMEL_DDL)
+    return map_payloads(df, id_col, bytes_col, LOGMEL_DDL, logmel)
 
 
 AUGMENT_DDL = ("clip_id string, variant string, bytes binary, sr_hz int, "
@@ -631,59 +490,27 @@ def audio_augment(
     """
     import zlib
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pyarrow as pa
+    def augment(raw, clip_id):
+        sr, _codec, pcm = parse_wav_view(raw)
+        for sp in speeds:
+            var = f"sp{sp:g}"
+            x = augment_speed(pcm, sr, sp)
+            # null ids key on "" (row kept); round() the speed key —
+            # int() truncation collides 0.285*1000 == 284.999...
+            rng = np.random.default_rng(
+                [seed, zlib.crc32((clip_id or "").encode()), round(sp * 1000)])
+            if noise_snr_db is not None:
+                x = augment_noise(x, noise_snr_db, rng)
+                var += f"-n{noise_snr_db:g}"
+            if gain_jitter_db:
+                g = float(rng.uniform(-gain_jitter_db, gain_jitter_db))
+                x = augment_gain(x, g)
+                var += "-g"
+            yield {"variant": var, "bytes": encode_wav(x, sr), "sr_hz": sr,
+                   "dur_ms": int(round(len(x) / sr * 1000.0))}
 
-        for batch in batches:
-            n_rows = batch.num_rows
-            offsets, heap, nulls = _binary_views(batch.column(1), n_rows)
-            ids = batch.column(0).to_pylist()
-            out = {k: [] for k in ("clip_id", "variant", "bytes", "sr_hz",
-                                   "dur_ms", "decode_error")}
-
-            def emit(cid, var, b, sr, dur, err):
-                out["clip_id"].append(cid)
-                out["variant"].append(var)
-                out["bytes"].append(b)
-                out["sr_hz"].append(sr)
-                out["dur_ms"].append(dur)
-                out["decode_error"].append(err)
-
-            for i in range(n_rows):
-                raw = None if nulls[i] else heap[offsets[i]:offsets[i + 1]]
-                try:
-                    sr, _codec, pcm = parse_wav_view(raw)
-                except (ValueError, struct.error) as e:
-                    emit(ids[i], None, None, None, None, str(e))
-                    continue
-                for sp in speeds:
-                    var = f"sp{sp:g}"
-                    x = augment_speed(pcm, sr, sp)
-                    # null ids key on "" (row kept); round() the speed key —
-                    # int() truncation collides 0.285*1000 == 284.999...
-                    rng = np.random.default_rng(
-                        [seed, zlib.crc32((ids[i] or "").encode()),
-                         round(sp * 1000)])
-                    if noise_snr_db is not None:
-                        x = augment_noise(x, noise_snr_db, rng)
-                        var += f"-n{noise_snr_db:g}"
-                    if gain_jitter_db:
-                        g = float(rng.uniform(-gain_jitter_db, gain_jitter_db))
-                        x = augment_gain(x, g)
-                        var += "-g"
-                    emit(ids[i], var, encode_wav(x, sr), sr,
-                         int(round(len(x) / sr * 1000.0)), None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["clip_id"], pa.string()),
-                 pa.array(out["variant"], pa.string()),
-                 pa.array(out["bytes"], pa.binary()),
-                 pa.array(out["sr_hz"], pa.int32()),
-                 pa.array(out["dur_ms"], pa.int32()),
-                 pa.array(out["decode_error"], pa.string())],
-                list(out))
-
-    return df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col)
-                     ).mapInArrow(run, schema=AUGMENT_DDL)
+    return map_payloads(df, id_col, bytes_col, AUGMENT_DDL, augment,
+                        with_id=True)
 
 
 CENSUS_DDL = ("codec string, sr_hz int, clips bigint, hours double, "
@@ -716,7 +543,7 @@ def audio_census(
                 try:
                     sr, codec, n_samples = parse_wav_meta(raw)
                     key, dur_s, err = (codec, int(sr)), n_samples / sr, 0
-                except (ValueError, struct.error):
+                except DECODE_ERRORS:
                     key, dur_s, err = (None, None), 0.0, 1
                 c = agg.setdefault(key, [0, 0.0, 0, 0])
                 c[0] += 1

@@ -39,15 +39,15 @@ Scale design (10^12 clips):
 """
 from __future__ import annotations
 
-import struct
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .audio import BYTES_COL, _binary_views, parse_wav_view
+from .audio import BYTES_COL, parse_wav_view
 from .audioops import logmel_frames, mel_filterbank
+from .rowmap import map_payloads
 
 EMBED_DDL = "clip_id string, emb array<double>, decode_error string"
 
@@ -112,38 +112,20 @@ def audio_embeddings(
     embedding table doubles as a decode audit.
     """
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pyarrow as pa
+    fb_cache: dict = {}
 
-        fb_cache: dict = {}
-        for batch in batches:
-            n_rows = batch.num_rows
-            offsets, heap, nulls = _binary_views(batch.column(1), n_rows)
-            embs, errs = [], []
-            for i in range(n_rows):
-                raw = None if nulls[i] else heap[offsets[i]:offsets[i + 1]]
-                try:
-                    sr, _codec, pcm = parse_wav_view(raw)
-                except (ValueError, struct.error) as e:
-                    embs.append(None), errs.append(str(e))
-                    continue
-                frame_n = max(16, int(round(sr * frame_ms / 1000.0)))
-                fb = fb_cache.get((sr, frame_n))
-                if fb is None:
-                    fb = fb_cache[(sr, frame_n)] = mel_filterbank(sr, frame_n, n_mels)
-                emb = clip_embedding(pcm, sr, n_mels, frame_ms, hop_ms, fb=fb)
-                if emb is None:
-                    embs.append(None), errs.append("clip shorter than one frame")
-                else:
-                    embs.append(emb), errs.append(None)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0),
-                 pa.array(embs, pa.list_(pa.float64())),
-                 pa.array(errs, pa.string())],
-                ["clip_id", "emb", "decode_error"])
+    def embed(raw):
+        sr, _codec, pcm = parse_wav_view(raw)
+        frame_n = max(16, int(round(sr * frame_ms / 1000.0)))
+        fb = fb_cache.get((sr, frame_n))
+        if fb is None:
+            fb = fb_cache[(sr, frame_n)] = mel_filterbank(sr, frame_n, n_mels)
+        emb = clip_embedding(pcm, sr, n_mels, frame_ms, hop_ms, fb=fb)
+        if emb is None:
+            return {"decode_error": "clip shorter than one frame"}
+        return {"emb": emb}
 
-    return df.select(F.col(id_col).cast("string").alias("clip_id"),
-                     F.col(bytes_col)).mapInArrow(run, schema=EMBED_DDL)
+    return map_payloads(df, id_col, bytes_col, EMBED_DDL, embed)
 
 
 def _train_cells(frame: DataFrame, n_cells: Optional[int], vec_col: str,

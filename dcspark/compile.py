@@ -1066,7 +1066,7 @@ def check_audio(model: str, q: Quality, idx: int) -> CompiledCheck:
         params={"snr_db": snr, "invariant": q.invariant or "decode-conformance"},
         expected=f"decoded header matches declared sr_hz/dur_ms/codec; PCM SNR >= {snr} dB",
         implementation=(
-            "mapInPandas Arrow-batch WAV/RIFF decode (numpy, no per-row Python): "
+            "mapInArrow Arrow-batch WAV/RIFF decode (numpy, no per-row Python): "
             "header sr/duration/codec vs columns + PCM allclose at SNR floor"
         ),
     )
@@ -1109,7 +1109,7 @@ def check_audio_near_dup(model: str, q: Quality, idx: int) -> CompiledCheck:
             f"{q.threshold if q.threshold is not None else 0.35}"
         ),
         implementation=(
-            "mapInPandas decode+FFT -> (clip_id, hash) -> bucketed hash "
+            "mapInArrow decode+FFT -> (clip_id, hash) -> bucketed hash "
             "equi-join (max_bucket skew guard) -> pair count"
         ),
     )
@@ -1126,7 +1126,7 @@ def check_image_decode(model: str, q: Quality, idx: int) -> CompiledCheck:
     eight mustBe* forms apply when given, else must be zero.
 
     Engine extension (the reference has no image path — SURVEY.md §2.5).
-    Execution: one mapInPandas decode pass emitting (id, dims, error); the
+    Execution: one mapInArrow decode pass emitting (id, dims, error); the
     declared-dims comparison joins back on the primary key (small rows only —
     payload bytes never shuffle)."""
     if (q.invariant or "decode-conformance") != "decode-conformance":
@@ -1158,7 +1158,7 @@ def check_image_decode(model: str, q: Quality, idx: int) -> CompiledCheck:
         },
         expected=f"all image payloads decode{dims}",
         implementation=(
-            "mapInPandas sniffing decode -> (id, width, height, decode_error) "
+            "mapInArrow sniffing decode -> (id, width, height, decode_error) "
             "-> join declared dims on pk -> violating-row count"
         ),
     )
@@ -1221,7 +1221,7 @@ def check_image_quality(model: str, q: Quality, idx: int) -> CompiledCheck:
         expected=f"decoded {bounds} for every image",
         implementation=(
             "per-image feature bound evaluated from the single fused "
-            "mapInPandas decode pass (imagefp.image_compact f_" + feature +
+            "mapInArrow decode pass (imagefp.image_compact f_" + feature +
             " column)"
         ),
     )
@@ -1266,7 +1266,7 @@ def check_image_near_dup(model: str, q: Quality, idx: int) -> CompiledCheck:
         expected=(f"no image pairs within Hamming {max_hamming} "
                   "of each other's dHash"),
         implementation=(
-            "fused mapInPandas decode -> (id, dhash) -> 4x16-bit block "
+            "fused mapInArrow decode -> (id, dhash) -> 4x16-bit block "
             "equi-join (max_bucket skew guard) -> exact-Hamming pair count"
         ),
     )
@@ -1342,7 +1342,7 @@ def check_video_decode(model: str, q: Quality, idx: int) -> CompiledCheck:
     checks). Metric = violating rows; mustBe* forms apply when given.
 
     Engine extension (the reference has no video path — SURVEY.md §2.5).
-    Execution: one mapInPandas decode pass emitting scalars; declared-value
+    Execution: one mapInArrow decode pass emitting scalars; declared-value
     comparison joins back on the primary key — pixels never shuffle."""
     if (q.invariant or "decode-conformance") != "decode-conformance":
         raise ValueError(
@@ -1370,7 +1370,7 @@ def check_video_decode(model: str, q: Quality, idx: int) -> CompiledCheck:
         expected=("all video payloads decode"
                   + (f" with {decl_desc}" if decl_desc else "")),
         implementation=(
-            "mapInPandas sniffing decode -> (id, fps, n_frames, dims, "
+            "mapInArrow sniffing decode -> (id, fps, n_frames, dims, "
             "decode_error) -> join declared columns on pk -> violating rows"
         ),
     )

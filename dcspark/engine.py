@@ -426,7 +426,7 @@ FAMILIES: Tuple[Family, ...] = (
                else "")),
     Family(("image", "image_quality", "image_fp", "image_drift"), PER_BYTES_COL,
            "_image_family_compute", "image_decode",
-           {"image": (_IMAGE_JOB, "one mapInPandas payload scan"),
+           {"image": (_IMAGE_JOB, "one mapInArrow payload scan"),
             "image_quality": (_IMAGE_JOB, "feature bounds ride it"),
             "image_fp": (_IMAGE_JOB, "content-uniqueness rides it"),
             "image_drift": (_IMAGE_JOB, "feature histograms ride it")},
@@ -434,7 +434,7 @@ FAMILIES: Tuple[Family, ...] = (
                  "image_quality": "{n} image(s) outside decoded-feature bounds",
                  "image_fp": "{n} near-duplicate image pair(s)"}),
     Family(("video",), PER_CHECK, "_video_compute", "video",
-           {"": ("fused video decode pass (one mapInPandas payload scan)", None)},
+           {"": ("fused video decode pass (one mapInArrow payload scan)", None)},
            fail={"video": "{n} video payload(s) failed decode or "
                           "stream-header conformance"}),
     Family(("sql",), PER_CHECK, "_sql_compute", "sql", {"": ("user SQL job", None)}),
@@ -1732,7 +1732,7 @@ class Validator:
     def _audio_fp_compute(self, model_name: str, df: DataFrame, chk: CompiledCheck) -> dict:
         """Acoustic near-dup pair count via dcspark/audiofp.py.
 
-        One mapInPandas decode+FFT pass emits (clip_id, hash); candidates come
+        One mapInArrow decode+FFT pass emits (clip_id, hash); candidates come
         from the bucketed hash equi-join (never all-pairs), the pair count is
         aggregated distributed, and only violation_cap example pairs reach the
         driver. Runs concurrently with the shared scan's decode pass in the
@@ -1775,7 +1775,7 @@ class Validator:
     ) -> Dict[str, dict]:
         """All image contract rules on one payload column from ONE decode.
 
-        A single mapInPandas pass (imagefp.image_compact) emits the compact
+        A single mapInArrow pass (imagefp.image_compact) emits the compact
         per-image frame — dims + decode_error always, dHash when a
         content-uniqueness rule is present, decoded-raster features when
         signal-quality rules are present. The frame persists (scalar rows
@@ -1932,7 +1932,7 @@ class Validator:
 
     def _video_compute(self, model_name: str, df: DataFrame,
                        chk: CompiledCheck) -> dict:
-        """Video decode conformance: one mapInPandas decode pass
+        """Video decode conformance: one mapInArrow decode pass
         (multimodal.video_metadata) emitting scalars; declared fps (within
         ``fps_tolerance``) / frame-count / dims join back on the primary key
         exactly as the image rule's dims do (``_declared_mismatch``)."""

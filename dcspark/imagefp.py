@@ -16,9 +16,7 @@ Hamming verifies candidates only.
 
 from __future__ import annotations
 
-import struct
-import zlib
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -30,6 +28,7 @@ from .multimodal import (
     image_luma,
     real_image_decoder,
 )
+from .rowmap import map_payloads
 
 FP_DDL = "id string, dhash long, width int, height int, decode_error string"
 
@@ -72,46 +71,24 @@ def dhash(px: np.ndarray, grid: int = 8) -> int:
     return val
 
 
+def _signed64(v: int) -> int:
+    """An unsigned 64-bit hash in the int64 (Spark long) container: the top
+    bit flips into the sign range."""
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
 def image_fingerprints(
     df: DataFrame,
     id_col: str = "id",
     bytes_col: str = "bytes",
     decoder: ImageDecoder = real_image_decoder,
 ) -> DataFrame:
-    """Per-image dHash frame (id, dhash, width, height, decode_error): one
-    decode pass; only the 8-byte hash + dims leave the task."""
-
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in ("id", "dhash", "width", "height",
-                                   "decode_error")}
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                rec = dict(id=rid, dhash=None, width=None, height=None,
-                           decode_error=None)
-                try:
-                    h, w, _c, px = decoder(bytes(raw) if raw is not None else None)
-                    # int64 container: flip the top bit into the sign range
-                    v = dhash(px)
-                    rec.update(dhash=v - (1 << 64) if v >= (1 << 63) else v,
-                               width=w, height=h)
-                except (NotImplementedError, ValueError, TypeError,
-                        struct.error, zlib.error) as e:
-                    # zlib.error: corrupt PNG IDAT streams raise it directly
-                    rec["decode_error"] = str(e)
-                for k, v in rec.items():
-                    out[k].append(v)
-            pdf_out = pd.DataFrame(out)
-            # a None dhash in the batch (decode error) must NOT let pandas
-            # coerce the int64 column to float64 — that silently rounds the
-            # hash's low bits and near-dup pairs vanish; nullable Int64
-            # keeps every bit exact
-            pdf_out["dhash"] = pd.array(out["dhash"], dtype="Int64")
-            yield pdf_out
-
-    return df.select(F.col(id_col).cast("string").alias(id_col),
-                     F.col(bytes_col)).mapInPandas(run, schema=FP_DDL)
+    """Per-image dHash frame (id, dhash, width, height, decode_error): the
+    fused decode pass with the hash on; only the 8-byte hash + dims leave
+    the task."""
+    return image_compact(df, id_col=id_col, bytes_col=bytes_col,
+                         decoder=decoder, with_dhash=True
+                         ).select(*(c.split()[0] for c in FP_DDL.split(", ")))
 
 
 def image_compact(
@@ -122,7 +99,7 @@ def image_compact(
     with_dhash: bool = False,
     features: tuple = (),
 ) -> DataFrame:
-    """The fused image decode pass: ONE mapInPandas scan of the payload
+    """The fused image decode pass: ONE mapInArrow scan of the payload
     column emitting everything any image contract rule needs — (id, width,
     height, channels, decode_error) always, the 64-bit dHash when a
     content-uniqueness rule is present, and the requested decoded-raster
@@ -142,42 +119,18 @@ def image_compact(
         ddl += ", dhash long"
     ddl += "".join(f", f_{f} double" for f in feats)
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
-
-        cols = ["id", "width", "height", "channels", "decode_error"]
+    def compact(raw):
+        h, w, c, px = decoder(None if raw is None else bytes(raw))
+        rec = dict(width=int(w), height=int(h), channels=int(c))
         if with_dhash:
-            cols.append("dhash")
-        cols += [f"f_{f}" for f in feats]
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                rec = dict.fromkeys(cols)
-                rec["id"] = rid
-                try:
-                    h, w, c, px = decoder(bytes(raw) if raw is not None else None)
-                    rec.update(width=int(w), height=int(h), channels=int(c))
-                    if with_dhash:
-                        v = dhash(px)
-                        rec["dhash"] = v - (1 << 64) if v >= (1 << 63) else v
-                    if feats:
-                        luma = image_luma(px)
-                        for f in feats:
-                            rec[f"f_{f}"] = IMAGE_FEATURE_FNS[f](luma)
-                except (NotImplementedError, ValueError, TypeError,
-                        struct.error, zlib.error) as e:
-                    rec["decode_error"] = str(e)
-                for k, v in rec.items():
-                    out[k].append(v)
-            pdf_out = pd.DataFrame(out)
-            if with_dhash:
-                # None dhash rows (decode errors) must not coerce the int64
-                # column to float64 — that rounds the hash's low bits
-                pdf_out["dhash"] = pd.array(out["dhash"], dtype="Int64")
-            yield pdf_out
+            rec["dhash"] = _signed64(dhash(px))
+        if feats:
+            luma = image_luma(px)
+            for f in feats:
+                rec[f"f_{f}"] = IMAGE_FEATURE_FNS[f](luma)
+        return rec
 
-    return df.select(F.col(id_col).cast("string").alias(id_col),
-                     F.col(bytes_col)).mapInPandas(run, schema=ddl)
+    return map_payloads(df, id_col, bytes_col, ddl, compact)
 
 
 def _block_keys(col: str) -> F.Column:
@@ -349,33 +302,13 @@ def video_fingerprints(
 
     dec = decoder or real_video_decoder
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def fingerprints(raw):
+        _fps, frames = dec(None if raw is None else bytes(raw))
+        return [{"t": t, "hash": _signed64(dhash(fr))}
+                for t, fr in enumerate(frames[: max_frames * every_n])
+                if t % every_n == 0]
 
-        for pdf in batches:
-            ids, ts, hs, errs = [], [], [], []
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    _fps, frames = dec(bytes(raw) if raw is not None else None)
-                    for t, fr in enumerate(frames[: max_frames * every_n]):
-                        if t % every_n:
-                            continue
-                        v = dhash(fr)
-                        ids.append(rid); ts.append(t)
-                        hs.append(v - (1 << 64) if v >= (1 << 63) else v)
-                        errs.append(None)
-                except (NotImplementedError, ValueError, TypeError,
-                        struct.error) as e:
-                    ids.append(rid); ts.append(None); hs.append(None)
-                    errs.append(str(e))
-            # Int64, not float64: a decode error in the batch must not round
-            # the other rows' 64-bit hashes (same class as the dHash bug)
-            yield pd.DataFrame({"clip_id": ids, "t": ts,
-                                "hash": pd.array(hs, dtype="Int64"),
-                                "decode_error": errs})
-
-    return df.select(F.col(id_col).cast("string").alias(id_col),
-                     F.col(bytes_col)).mapInPandas(run, schema=VIDEO_FP_DDL)
+    return map_payloads(df, id_col, bytes_col, VIDEO_FP_DDL, fingerprints)
 
 
 def video_fp_near_dup(

@@ -187,16 +187,17 @@ def perplexity_buckets(scored: DataFrame, n_buckets: int = 3,
     approx-quantile cutoffs from `tdigest` and a map-side CASE — this exact
     form is for corpus-sized score frames and oracle checks.
     """
-    part = [F.col(by)] if by else []
+    unscored = F.col("perplexity").isNull()
     # NULLs must be EXCLUDED from the ntile frame, not just masked in the
     # output: asc ordering sorts them first, so masked-but-present null rows
     # would consume head-bucket slots and shift every scored doc's bucket
-    # (a CCNet "keep bucket 1" filter could then keep nothing)
-    scorable = scored.filter(F.col("perplexity").isNotNull())
-    w = (Window.partitionBy(*part)
+    # (a CCNet "keep bucket 1" filter could then keep nothing) — so they get
+    # a window partition of their own. Bucketing in place, not by a rejoin
+    # on doc_id, keeps one row per input row when doc_ids repeat.
+    w = (Window.partitionBy(*([F.col(by)] if by else []), unscored)
          .orderBy(F.col("perplexity").asc(), F.col("doc_id").asc()))
-    bucketed = scorable.select(
-        "doc_id", F.ntile(n_buckets).over(w).alias("bucket"))
-    out = scored.join(bucketed, "doc_id", "left")
+    out = scored.select(
+        "doc_id", *[c for c in scored.columns if c != "doc_id"],
+        F.when(~unscored, F.ntile(n_buckets).over(w)).alias("bucket"))
     out._dcspark_cached = list(getattr(scored, "_dcspark_cached", ()))
     return out

@@ -1,12 +1,11 @@
-"""Multimodal binary columns: image / audio / video plumbing for Spark tables.
+"""Multimodal binary columns: image / video plumbing for Spark tables.
 
 Engine extension (no reference counterpart — the large-scale training-data
 companion to the audio validation pass). Media payloads are opaque ``binary``
-columns with a typed metadata struct; all per-row work runs as Arrow-batched
-``mapInPandas`` (numpy inside the batch, never per-sample Python):
+columns with a typed metadata struct; all per-row work runs as one
+``mapInArrow`` pass per operator (dcspark/rowmap.py; numpy inside the batch,
+never per-sample Python):
 
-- audio: FULLY REAL for WAV/PCM (stdlib RIFF parse + numpy) — decode,
-  resample (linear), frame-sample (fixed-stride windows), loudness features.
 - image / video: the container DECODE step needs codec libraries (Pillow,
   ffmpeg) that do not ship in this sandbox, so the decoder is pluggable: the
   default raises NotImplementedError per row (surfaced as decode_error, never
@@ -21,13 +20,12 @@ pruned out of every non-media pass (select only what the UDF needs).
 from __future__ import annotations
 
 import struct
-from typing import Callable, Iterator, Optional, Tuple
+from typing import Callable, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .audio import parse_wav
+from .rowmap import DECODE_ERRORS, map_payloads
 
 IMAGE_META_DDL = (
     "id string, width int, height int, channels int, mode string, "
@@ -40,11 +38,6 @@ IMAGE_RESIZE_DDL = (
 
 FRAME_SAMPLE_DDL = (
     "id string, frame_idx int, ts_ms double, frame binary, decode_error string"
-)
-
-AUDIO_FEATURES_DDL = (
-    "id string, sr int, n_samples bigint, rms double, peak double, "
-    "zero_crossings bigint, decode_error string"
 )
 
 # decoder: bytes -> (height, width, channels, uint8 array); raises on failure
@@ -370,28 +363,13 @@ def image_metadata(
 ) -> DataFrame:
     """Decode + typed metadata struct per image (width/height/channels/luma)."""
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def meta(raw):
+        h, w, c, px = decoder(None if raw is None else bytes(raw))
+        return dict(width=int(w), height=int(h), channels=int(c),
+                    mode="RGB" if c == 3 else f"C{c}",
+                    mean_luma=float(np.mean(px.astype(np.float64))))
 
-        for pdf in batches:
-            out = {k: [] for k in ("id", "width", "height", "channels", "mode",
-                                   "mean_luma", "decode_error")}
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                rec = dict(id=rid, width=None, height=None, channels=None,
-                           mode=None, mean_luma=None, decode_error=None)
-                try:
-                    h, w, c, px = decoder(bytes(raw) if raw is not None else None)
-                    luma = float(np.mean(px.astype(np.float64)))
-                    rec.update(width=int(w), height=int(h), channels=int(c),
-                               mode="RGB" if c == 3 else f"C{c}", mean_luma=luma)
-                except (NotImplementedError, ValueError, TypeError) as e:
-                    rec["decode_error"] = str(e)
-                for k, v in rec.items():
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).cast("string").alias(id_col),
-                     F.col(bytes_col)).mapInPandas(run, schema=IMAGE_META_DDL)
+    return map_payloads(df, id_col, bytes_col, IMAGE_META_DDL, meta)
 
 
 def image_resize(
@@ -409,27 +387,13 @@ def image_resize(
     """
     th, tw = target
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def resize(raw):
+        h, w, _c, px = decoder(None if raw is None else bytes(raw))
+        yi = (np.arange(th) * h // th).astype(np.int64)
+        xi = (np.arange(tw) * w // tw).astype(np.int64)
+        return dict(width=tw, height=th, pixels=px[yi][:, xi].tobytes())
 
-        for pdf in batches:
-            out = {k: [] for k in ("id", "width", "height", "pixels", "decode_error")}
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                rec = dict(id=rid, width=None, height=None, pixels=None, decode_error=None)
-                try:
-                    h, w, c, px = decoder(bytes(raw) if raw is not None else None)
-                    yi = (np.arange(th) * h // th).astype(np.int64)
-                    xi = (np.arange(tw) * w // tw).astype(np.int64)
-                    resized = px[yi][:, xi]
-                    rec.update(width=tw, height=th, pixels=resized.tobytes())
-                except (NotImplementedError, ValueError, TypeError) as e:
-                    rec["decode_error"] = str(e)
-                for k, v in rec.items():
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).cast("string").alias(id_col),
-                     F.col(bytes_col)).mapInPandas(run, schema=IMAGE_RESIZE_DDL)
+    return map_payloads(df, id_col, bytes_col, IMAGE_RESIZE_DDL, resize)
 
 
 IMAGE_TRANSCODE_DDL = ("id string, bytes binary, width int, height int, "
@@ -451,46 +415,30 @@ def image_transcode(
     undecodable rows quarantined per row via decode_error."""
     if target_format not in ("jpeg", "png", "bmp", "ppm"):
         raise ValueError("target_format must be jpeg|png|bmp|ppm")
+    from .jpeg import jpeg_bytes
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def transcode(raw):
+        h, w, _c, px = decoder(None if raw is None else bytes(raw))
+        if px.ndim == 3 and px.shape[2] == 1:
+            px = px[:, :, 0]
+        if target_format == "jpeg":
+            # jpeg has no alpha: RGBA -> RGB, gray+alpha -> gray
+            if px.ndim == 3 and px.shape[2] == 4:
+                px = px[:, :, :3]
+            elif px.ndim == 3 and px.shape[2] == 2:
+                px = px[:, :, 0]
+            b = jpeg_bytes(px, quality=quality)
+        elif target_format == "png":
+            b = png_bytes(px if px.ndim == 3 else px[:, :, None])
+        elif target_format == "bmp":
+            b = bmp_bytes(_to_rgb(px))
+        else:
+            b = ppm_bytes(_to_rgb(px))
+        return dict(bytes=b, width=w, height=h,
+                    channels=(1 if px.ndim == 2 else px.shape[2]),
+                    format=target_format)
 
-        from .jpeg import jpeg_bytes
-
-        for pdf in batches:
-            out = {k: [] for k in ("id", "bytes", "width", "height",
-                                   "channels", "format", "decode_error")}
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                rec = dict(id=rid, bytes=None, width=None, height=None,
-                           channels=None, format=None, decode_error=None)
-                try:
-                    h, w, c, px = decoder(bytes(raw) if raw is not None else None)
-                    if px.ndim == 3 and px.shape[2] == 1:
-                        px = px[:, :, 0]
-                    if target_format == "jpeg":
-                        # jpeg has no alpha: RGBA -> RGB, gray+alpha -> gray
-                        if px.ndim == 3 and px.shape[2] == 4:
-                            px = px[:, :, :3]
-                        elif px.ndim == 3 and px.shape[2] == 2:
-                            px = px[:, :, 0]
-                        b = jpeg_bytes(px, quality=quality)
-                    elif target_format == "png":
-                        b = png_bytes(px if px.ndim == 3 else px[:, :, None])
-                    elif target_format == "bmp":
-                        b = bmp_bytes(_to_rgb(px))
-                    else:
-                        b = ppm_bytes(_to_rgb(px))
-                    rec.update(bytes=b, width=w, height=h,
-                               channels=(1 if px.ndim == 2 else px.shape[2]),
-                               format=target_format)
-                except (NotImplementedError, ValueError, TypeError) as e:
-                    rec["decode_error"] = str(e)
-                for k, v in rec.items():
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).cast("string").alias(id_col),
-                     F.col(bytes_col)).mapInPandas(run, schema=IMAGE_TRANSCODE_DDL)
+    return map_payloads(df, id_col, bytes_col, IMAGE_TRANSCODE_DDL, transcode)
 
 
 def _to_rgb(px: np.ndarray) -> np.ndarray:
@@ -579,7 +527,7 @@ def video_metadata(
     decoder: VideoDecoder = real_video_decoder,
 ) -> DataFrame:
     """Decode + typed metadata per video payload (fps, frame count, first
-    frame dims): one mapInPandas pass; only scalars leave the task. Feeds
+    frame dims): one mapInArrow pass; only scalars leave the task. Feeds
     the ``type: video, invariant: decode-conformance`` contract rule.
 
     Foreign-codec container payloads — H.264/H.265-in-MP4 (dcspark/mp4.py
@@ -589,57 +537,36 @@ def video_metadata(
     still verifies what the header can prove even though the frames
     themselves stay undecodable in-repo. Corrupt structures record a
     per-row decode_error, never crash."""
+    from .ebml import is_webm, parse_webm
+    from .mp4 import is_mp4, parse_mp4
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def meta(raw):
+        b = None if raw is None else bytes(raw)
+        try:
+            fps, frames = decoder(b)
+        except DECODE_ERRORS:
+            # undecodable CODEC, maybe readable CONTAINER: the ISO-BMFF
+            # sniff covers ftyp files AND headerless raw-moov/styp segments
+            # (fMP4 init / DASH media segments), which the frame decoder
+            # rejects with ValueError rather than NotImplementedError; the
+            # EBML sniff covers WebM/Matroska. A header that fails to parse
+            # becomes the row's decode_error.
+            if b is not None and is_mp4(b):
+                m = parse_mp4(b)
+            elif b is not None and is_webm(b):
+                m = parse_webm(b)
+            else:
+                raise
+            return dict(fps=None if m["fps"] is None else float(m["fps"]),
+                        n_frames=m["n_frames"], width=m["width"],
+                        height=m["height"])
+        rec = dict(fps=float(fps), n_frames=len(frames))
+        if frames:
+            rec.update(height=int(frames[0].shape[0]),
+                       width=int(frames[0].shape[1]))
+        return rec
 
-        from .ebml import is_webm, parse_webm
-        from .mp4 import is_mp4, parse_mp4
-
-        for pdf in batches:
-            out = {k: [] for k in ("id", "fps", "n_frames", "width",
-                                   "height", "decode_error")}
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                rec = dict(id=rid, fps=None, n_frames=None, width=None,
-                           height=None, decode_error=None)
-                b = bytes(raw) if raw is not None else None
-                try:
-                    fps, frames = decoder(b)
-                    rec.update(fps=float(fps), n_frames=len(frames))
-                    if frames:
-                        rec.update(height=int(frames[0].shape[0]),
-                                   width=int(frames[0].shape[1]))
-                except (NotImplementedError, ValueError, TypeError,
-                        struct.error) as e:
-                    # undecodable CODEC, maybe readable CONTAINER: the
-                    # ISO-BMFF sniff covers ftyp files AND headerless
-                    # raw-moov/styp segments (fMP4 init / DASH media
-                    # segments), which the frame decoder rejects with
-                    # ValueError rather than NotImplementedError; the EBML
-                    # sniff covers WebM/Matroska
-                    header_parse = None
-                    if b is not None and is_mp4(b):
-                        header_parse = parse_mp4
-                    elif b is not None and is_webm(b):
-                        header_parse = parse_webm
-                    if header_parse is not None:
-                        try:
-                            m = header_parse(b)
-                            rec.update(
-                                fps=(float(m["fps"])
-                                     if m["fps"] is not None else None),
-                                n_frames=m["n_frames"],
-                                width=m["width"], height=m["height"])
-                        except (ValueError, struct.error) as e2:
-                            rec["decode_error"] = str(e2)
-                    else:
-                        rec["decode_error"] = str(e)
-                for k, v in rec.items():
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).cast("string").alias(id_col),
-                     F.col(bytes_col)).mapInPandas(run, schema=VIDEO_META_DDL)
+    return map_payloads(df, id_col, bytes_col, VIDEO_META_DDL, meta)
 
 
 def video_frame_sample(
@@ -656,110 +583,10 @@ def video_frame_sample(
     multiple of input rows regardless of clip length.
     """
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def sample(raw):
+        fps, frames = decoder(None if raw is None else bytes(raw))
+        return [dict(frame_idx=i, ts_ms=i / fps * 1000.0,
+                     frame=frames[i].tobytes())
+                for i in range(0, len(frames), every_n)[:max_frames]]
 
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    fps, frames = decoder(bytes(raw) if raw is not None else None)
-                    idxs = list(range(0, len(frames), every_n))[:max_frames]
-                    for i in idxs:
-                        rows.append(dict(
-                            id=rid, frame_idx=i, ts_ms=i / fps * 1000.0,
-                            frame=frames[i].tobytes(), decode_error=None,
-                        ))
-                except (NotImplementedError, ValueError, TypeError) as e:
-                    rows.append(dict(id=rid, frame_idx=None, ts_ms=None,
-                                     frame=None, decode_error=str(e)))
-            yield pd.DataFrame(
-                rows, columns=["id", "frame_idx", "ts_ms", "frame", "decode_error"])
-
-    return df.select(F.col(id_col).cast("string").alias(id_col),
-                     F.col(bytes_col)).mapInPandas(run, schema=FRAME_SAMPLE_DDL)
-
-
-# ---------------------------------------------------------------------------
-# audio ops (fully real: WAV/PCM, numpy only)
-# ---------------------------------------------------------------------------
-
-def audio_features(
-    df: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Loudness/shape features per clip: rms, peak, zero-crossing count."""
-
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in ("id", "sr", "n_samples", "rms", "peak",
-                                   "zero_crossings", "decode_error")}
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                rec = dict(id=rid, sr=None, n_samples=None, rms=None, peak=None,
-                           zero_crossings=None, decode_error=None)
-                try:
-                    sr, _codec, pcm = parse_wav(bytes(raw) if raw is not None else None)
-                    x = pcm.astype(np.float64) / 32768.0
-                    rec.update(
-                        sr=int(sr), n_samples=int(len(pcm)),
-                        rms=float(np.sqrt(np.mean(x * x))) if len(x) else 0.0,
-                        peak=float(np.max(np.abs(x))) if len(x) else 0.0,
-                        zero_crossings=int(np.count_nonzero(np.diff(np.signbit(pcm)))),
-                    )
-                except (ValueError, struct.error) as e:
-                    rec["decode_error"] = str(e)
-                for k, v in rec.items():
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).cast("string").alias(id_col),
-                     F.col(bytes_col)).mapInPandas(run, schema=AUDIO_FEATURES_DDL)
-
-
-def audio_resample(
-    df: DataFrame,
-    target_sr: int = 16000,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Linear-interpolation resample to a uniform rate; re-wrapped as WAV.
-
-    The training-data normalization step: downstream models want one sample
-    rate. Output schema mirrors the input (id, bytes, sr_hz) so the result can
-    feed the same validation pass.
-    """
-    from .synth import wav_bytes
-
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"clip_id": [], "bytes": [], "sr_hz": [], "decode_error": []}
-            for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    sr, _codec, pcm = parse_wav(bytes(raw) if raw is not None else None)
-                    if sr == target_sr:
-                        resampled = pcm
-                    else:
-                        n_out = int(round(len(pcm) * target_sr / sr))
-                        xs = np.linspace(0.0, len(pcm) - 1, num=n_out)
-                        resampled = np.interp(
-                            xs, np.arange(len(pcm)), pcm.astype(np.float64)
-                        ).astype(np.int16)
-                    out["clip_id"].append(rid)
-                    out["bytes"].append(wav_bytes(resampled, target_sr))
-                    out["sr_hz"].append(target_sr)
-                    out["decode_error"].append(None)
-                except (ValueError, struct.error) as e:
-                    out["clip_id"].append(rid)
-                    out["bytes"].append(None)
-                    out["sr_hz"].append(None)
-                    out["decode_error"].append(str(e))
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).cast("string").alias(id_col),
-                     F.col(bytes_col)).mapInPandas(
-        run, schema="clip_id string, bytes binary, sr_hz int, decode_error string")
+    return map_payloads(df, id_col, bytes_col, FRAME_SAMPLE_DDL, sample)

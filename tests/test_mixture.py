@@ -150,3 +150,22 @@ def test_cli_lmscore_mixture_split(tmp_path, capsys, spark):
     sp = {r["doc_id"]: r["split"]
           for r in spark.read.parquet(split_out).collect()}
     assert len(sp) == 60 and len({sp[0], sp[2], sp[4]}) == 1
+
+
+def test_perplexity_buckets_duplicate_ids_keep_one_row_each(spark):
+    """One output row per input row: a duplicated doc_id and a doc_id that
+    sits in two ``by`` groups each keep their own group's bucket (a rejoin
+    on doc_id alone fanned them out N x N across groups)."""
+    from dcspark import lmscore
+
+    scored = spark.createDataFrame(
+        [("a", "en", 1.0), ("a", "en", 2.0), ("b", "en", 3.0),
+         ("d", "en", None), ("b", "de", 10.0), ("c", "de", 20.0)],
+        "doc_id string, lang string, perplexity double")
+    out = sorted(
+        (tuple(r) for r in lmscore.perplexity_buckets(
+            scored, n_buckets=2, by="lang").collect()),
+        key=lambda r: (r[1], r[2] is None, r[2] or 0.0))
+    assert out == [("b", "de", 10.0, 1), ("c", "de", 20.0, 2),
+                   ("a", "en", 1.0, 1), ("a", "en", 2.0, 1),
+                   ("b", "en", 3.0, 2), ("d", "en", None, None)]

@@ -1,6 +1,7 @@
-"""Multimodal binary-column plumbing: image/video (stub decoders) + audio (real)."""
+"""Multimodal binary-column plumbing: image/video (stub and real decoders)."""
 
 import hashlib
+import struct
 import sys
 from typing import Tuple
 
@@ -9,8 +10,7 @@ import pytest
 from pyspark import cloudpickle
 from pyspark.sql import functions as F
 
-from dcspark import multimodal, synth
-from dcspark.audio import parse_wav
+from dcspark import multimodal
 
 
 def fake_image_decoder(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
@@ -155,34 +155,42 @@ def test_video_frame_sample_bounded(spark, image_df):
         assert all(len(f["frame"]) == 16 * 16 * 3 for f in frames)
 
 
-def test_audio_features_real(spark):
-    df = synth.generate_audio_table(spark, 12, seed=7, dur_lo=200, dur_hi=500)
-    out = multimodal.audio_features(df).collect()
-    assert len(out) == 12
-    for r in out:
-        assert r["decode_error"] is None
-        assert r["sr"] in synth.SR_ENUM
-        assert 0.0 < r["rms"] < 1.0
-        assert r["peak"] <= 1.0
-        assert r["zero_crossings"] > 0
+def _png_frame_decoder(raw: bytes) -> Tuple[float, list]:
+    """A PNG payload as a one-frame video, so the frame sampler meets the
+    PNG decoder's errors."""
+    _h, _w, _c, px = multimodal.decode_png(raw)
+    return 25.0, [px]
 
 
-def test_audio_resample_roundtrip(spark):
-    df = synth.generate_audio_table(spark, 6, seed=9, dur_lo=300, dur_hi=600)
-    out = multimodal.audio_resample(df, target_sr=16000).collect()
-    assert len(out) == 6
-    for r in out:
-        assert r["decode_error"] is None
-        sr, codec, pcm = parse_wav(bytes(r["bytes"]))
-        assert sr == 16000
-        assert codec == "pcm_s16le"
-        assert len(pcm) > 0
-    # duration preserved within 1 ms
-    src = {r["clip_id"]: r for r in df.select("clip_id", "bytes").collect()}
-    for r in out:
-        sr0, _, pcm0 = parse_wav(bytes(src[r["clip_id"]]["bytes"]))
-        _, _, pcm1 = parse_wav(bytes(r["bytes"]))
-        assert abs(len(pcm0) / sr0 - len(pcm1) / 16000) < 0.001
+def _corrupt_pngs():
+    """(corrupt IDAT stream -> zlib.error, IHDR length 5 -> struct.error)."""
+    raw = multimodal.png_bytes(np.zeros((4, 4, 3), dtype=np.uint8))
+    idat = raw.index(b"IDAT") + 4
+    bad_idat = raw[:idat] + b"\x00" * 12 + raw[idat + 12:]
+    bad_ihdr = raw[:8] + struct.pack(">I", 5) + raw[12:]
+    return [("idat", bad_idat), ("ihdr", bad_ihdr)]
+
+
+@pytest.mark.parametrize("op", [
+    multimodal.image_metadata,
+    multimodal.image_resize,
+    multimodal.image_transcode,
+    lambda df: multimodal.video_frame_sample(df, decoder=_png_frame_decoder),
+], ids=["metadata", "resize", "transcode", "frame_sample"])
+def test_corrupt_png_is_one_decode_error_row(spark, op):
+    """A corrupt IDAT stream (zlib.error) and a short IHDR (struct.error)
+    each become one decode_error row instead of failing the task."""
+    import zlib
+
+    for (_id, raw), exc in zip(_corrupt_pngs(), (zlib.error, struct.error)):
+        with pytest.raises(exc):
+            multimodal.decode_png(raw)
+    df = spark.createDataFrame(_corrupt_pngs(), "id string, bytes binary")
+    rows = op(df).collect()
+    assert sorted(r["id"] for r in rows) == ["idat", "ihdr"]
+    errors = {r["id"]: r["decode_error"] for r in rows}
+    assert "decompressing" in errors["idat"]
+    assert "unpack requires a buffer of 13 bytes" in errors["ihdr"]
 
 
 # ---------------------------------------------------------------------------

@@ -419,9 +419,10 @@ def test_audioops_prune_to_id_and_bytes(spark, tmp_path):
 
 
 def test_image_and_video_passes_prune_scan(spark, tmp_path):
-    """image_compact / image_fingerprints / image_metadata / video_metadata
-    read ONLY (id, bytes) from the file reader — a media table's other
-    columns (declared dims, captions) must never reach the decode pass."""
+    """image_compact / image_fingerprints / image_metadata / image_transcode
+    / video_metadata / video_fingerprints read ONLY (id, bytes) from the
+    file reader — a media table's other columns (declared dims, captions)
+    must never reach the decode pass."""
     import numpy as np
 
     from dcspark import imagefp, multimodal
@@ -439,7 +440,9 @@ def test_image_and_video_passes_prune_scan(spark, tmp_path):
             d, with_dhash=True, features=("brightness", "entropy")),
         imagefp.image_fingerprints,
         multimodal.image_metadata,
+        multimodal.image_transcode,
         multimodal.video_metadata,
+        imagefp.video_fingerprints,
     )
     for op in ops:
         plan = _plan(op(table))
