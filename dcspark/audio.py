@@ -34,6 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .drift import partition_key
 from .rowmap import DECODE_ERRORS, _binary_views, ddl_schemas, map_payloads
 
 AUDIO_REPORT_DDL = (
@@ -579,18 +580,14 @@ def audio_decode_report(
     oracle: Optional[OraclePcm] = None,
     snr_fn: Optional[SnrFn] = None,
     id_col: str = "clip_id",
-    partition_col: Optional[str] = None,
 ) -> DataFrame:
     """Per-row decode-conformance report (one output row per input row).
 
     Reads ONLY the columns it needs (clip_id, bytes, sr_hz, dur_ms, codec) so the
     parquet scan prunes everything else. When ``oracle`` is None the SNR invariant
-    is skipped (snr_ok = null) and header conformance alone decides. When
-    ``partition_col`` is given it is threaded through the Arrow batch as
-    ``__part`` (stringified) so per-partition aggregation needs no re-join.
+    is skipped (snr_ok = null) and header conformance alone decides.
     """
-    spark_schema, arrow_schema = ddl_schemas(
-        AUDIO_REPORT_DDL + (", __part string" if partition_col else ""))
+    spark_schema, arrow_schema = ddl_schemas(AUDIO_REPORT_DDL)
 
     def check_batches(batches: Iterator["object"]) -> Iterator["object"]:
         import pyarrow as pa
@@ -598,14 +595,9 @@ def audio_decode_report(
         for batch in batches:
             rows = [{**rec, "clip_id": clip_id} for clip_id, rec
                     in _eval_batch(batch, oracle, snr_fn, snr_floor_db)]
-            if partition_col:
-                for row, part in zip(rows, batch.column(5).to_pylist()):
-                    row["__part"] = part
             yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     cols = [F.col(id_col), F.col("bytes"), F.col("sr_hz"), F.col("dur_ms"), F.col("codec")]
-    if partition_col:
-        cols.append(F.col(partition_col).cast("string").alias("__part"))
     return df.select(*cols).mapInArrow(check_batches, schema=spark_schema)
 
 
@@ -1117,7 +1109,7 @@ def audio_decode_compact(
                     .otherwise(F.length(F.col(text_col)))
                     .cast("int").alias("__chars"))
     if partition_col:
-        cols.append(F.col(partition_col).cast("string").alias("__part"))
+        cols.append(partition_key(partition_col).alias("__part"))
     return df.select(*cols).mapInArrow(compact_batches, schema=AUDIO_COMPACT_DDL)
 
 

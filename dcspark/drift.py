@@ -32,13 +32,21 @@ from pyspark.sql import functions as F
 DEFAULT_QUANTILES = 199
 DEFAULT_BINS = 20
 EPS = 1e-6
-# drift rows' key for a NULL partition value: no str() of a real value has it
-NULL_PARTITION = "\x00null"
+# a NULL partition value's key: Hive's name for it, which Spark itself reads
+# back as NULL from a partition directory, so no stored value spells it
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 REF_STATS_DDL = (
     "column string, bin_edges array<double>, bin_probs array<double>, "
     "quantiles array<double>, categories array<string>, n bigint"
 )
+
+
+def partition_key(col: str) -> Column:
+    """A partition's key: its value as a string, NULL as ``NULL_PARTITION``.
+    The one spelling of a partition in scans, results, violations and the
+    checkpoint manifest; applying it to a key column returns that key."""
+    return F.coalesce(F.col(col).cast("string"), F.lit(NULL_PARTITION))
 
 
 def build_ref_stats(
@@ -290,12 +298,9 @@ def drift_bucket_rows(
     """
     carry: List[Column] = []
     if partition_col:
-        # NULL partition values key under NULL_PARTITION: a Python-None key
-        # would collide with the no-partition sentinel (those rows' counts
-        # would drop out of the global statistic), and str(None) with a real
-        # "None" partition
-        carry.append(F.coalesce(F.col(partition_col).cast("string"),
-                                F.lit(NULL_PARTITION)).alias("__part"))
+        # a Python-None key would collide with the no-partition sentinel
+        # (those rows' counts would drop out of the global statistic)
+        carry.append(partition_key(partition_col).alias("__part"))
     grids: List[Tuple[str, List[float]]] = []
     bucket_cols: List[Column] = []
     for k, chk in enumerate(checks):

@@ -12,15 +12,16 @@ printed plan is the executed one. Per model (scale rationale in SURVEY.md §4):
 2. The shared scan: ONE multi-aggregate scan computes every agg-kind metric
    at once: null-counts, invalid-counts (length/range/enum/regex/format/
    not-equal), row_count, freshness max / retention min timestamps. Catalyst
-   fuses these into a single Exchange + partial (map-side) aggregate; with a
-   partition column we run ``groupBy(partition_col)`` instead and merge
-   partition rows into the global metrics on the driver (all metrics are
-   decomposable: sum/min/max), which also powers checkpoint/resume. The
+   fuses these into a single Exchange + partial (map-side) aggregate. The
    KS/PSI drift checks run beside it as one narrow bucket job
-   (drift.drift_bucket_rows) whose per-bucket counts merge into the same
-   partition rows. The audio decode pass (one Arrow ``mapInArrow`` scan)
-   runs beside it too and aggregates its per-row flags through the same
-   partitioned/mergeable path.
+   (drift.drift_bucket_rows), and so do the audio decode pass (one Arrow
+   ``mapInArrow`` scan) and the t-digest pass. With a partition column every
+   job groups by one partition key (drift.partition_key, the ``PART_KEY``
+   column), and ``_scan_partitions`` turns their output into one
+   decomposable state per partition; ``_fold`` merges the states into the
+   global results on the driver (sum/min/max, sketch and digest merges). A
+   checkpointed run gets the same states from its resume manifest and
+   from one ``_scan_partitions`` call per chunk of partitions.
 3. One job per check, or per image payload column, for the families that
    genuinely need their own shuffle or decode: uniqueness (groupBy-key
    duplicate count — map-side partial aggregation bounds shuffle volume by
@@ -118,7 +119,6 @@ class ValidationConfig:
     checkpoint_dir: Optional[str] = None
     resume: bool = False
     checkpoint_chunks: int = 4  # partition-groups per checkpointed scan
-    broadcast_references: bool = True  # hint broadcast for reference parents
     server_format: Optional[str] = None
     arrow_batch_rows: int = 512  # audio bytes are large; keep Arrow batches bounded
     parallel_jobs: int = 8  # concurrent driver-side Spark job submissions
@@ -149,7 +149,6 @@ class ValidationConfig:
     # global quantile with NO extra scan and persist through the checkpoint
     # manifest as base64, so resumed runs never re-read completed partitions.
     pctl_mode: str = "exact"
-    pctl_tdigest_delta: int = 500  # compression: ~0.1-1% rank error, ~16 KB/digest
     # metric-history source for ``type: history`` checks: a results table this
     # engine wrote (RESULTS_DDL schema). The per-key window prune runs
     # distributed; only checks x window floats reach the driver.
@@ -174,12 +173,6 @@ class ValidationConfig:
     # ad-hoc dataset filters per model (CLI --where): ANDed with the model's
     # contract-declared `filter:` when both are present
     model_where: Dict[str, str] = dc_field(default_factory=dict)
-    # resume-time lineage verification: each manifest record stores the
-    # partition's input-file lineage (file count + md5 of the sorted file
-    # list); on resume, a completed partition whose file set changed is
-    # invalidated and rescanned instead of silently serving stale metrics.
-    # The probe reads only the partition column (column-pruned scan).
-    checkpoint_verify_lineage: bool = True
 
 
 @dataclass
@@ -241,6 +234,87 @@ def _merge_rows(rows: List[Dict[str, Any]], ops: Dict[str, str]) -> Dict[str, An
             if op == "global":
                 merged[alias] = None
     return merged
+
+
+# ---------------------------------------------------------------------------
+# per-partition shared-scan state (fresh and checkpointed runs alike)
+# ---------------------------------------------------------------------------
+
+#: the column a partitioned model's frame carries: drift.partition_key of
+#: the partition column, read by every per-partition consumer
+PART_KEY = "__part_key"
+
+
+@dataclass
+class _ScanSpec:
+    """What the shared scan computes (built by ``_run_shared_scan``)."""
+    exprs: Dict[str, Column]  # main aggregate column per metric alias
+    ops: Dict[str, str]       # merge op per metric alias (drift buckets too)
+    drift_jobs: List[dict]
+    audio_chk: Optional["CompiledCheck"]
+    fp_checks: List["CompiledCheck"]  # fingerprints fused into the decode pass
+    feat_bins: Dict[str, List[float]]
+    feat_limits: List[Tuple[str, Optional[float], Optional[float]]]
+    rate_text_col: Optional[str]
+    pctl_cols: List[str]      # columns of the t-digest pass
+
+
+@dataclass
+class _PartState:
+    """One partition's decomposable shared-scan state: what a checkpoint
+    manifest record holds and what ``Validator._fold`` merges. Samples are
+    (partition key, clip_id, observed), at most violation_cap each."""
+    metrics: Dict[str, Any] = dc_field(default_factory=dict)  # aggregate row + drift buckets
+    audio: Optional[Dict[str, Any]] = None  # decode-conformance sums
+    audio_vio: List[Tuple[Optional[str], str, str]] = dc_field(default_factory=list)
+    hists: Dict[str, Dict[int, int]] = dc_field(default_factory=dict)  # feature -> bin -> n
+    quality: Dict[int, int] = dc_field(default_factory=dict)  # signal-quality rule -> n
+    quality_vio: Dict[int, List[Tuple[Optional[str], str, str]]] = dc_field(
+        default_factory=dict)
+    digests: Dict[str, td_mod.TDigest] = dc_field(default_factory=dict)  # column -> digest
+    audio_rank: int = 0  # position in the audio job's output, the record order
+
+    def record(self) -> Dict[str, Any]:
+        """The manifest record fields holding this state."""
+        quality = {
+            "counts": {str(li): c for li, c in self.quality.items()},
+            "violations": {str(li): [[c, o] for _, c, o in vs]
+                           for li, vs in self.quality_vio.items()},
+        }
+        return {
+            "metrics_json": _metrics_to_json(self.metrics),
+            "audio_metrics_json": (_metrics_to_json(self.audio)
+                                   if self.audio is not None else None),
+            "audio_violations": [[c, o] for _, c, o in self.audio_vio] or None,
+            "audio_feature_hists": {
+                f: {str(b): c for b, c in bins.items()}
+                for f, bins in self.hists.items()} or None,
+            "audio_quality": quality if self.quality or self.quality_vio else None,
+            "pctl_digests": {c: d.to_b64() for c, d in self.digests.items()} or None,
+        }
+
+    @classmethod
+    def from_record(cls, pid: str, rec: Dict[str, Any]) -> "_PartState":
+        aq = rec.get("audio_quality") or {}
+        return cls(
+            metrics=_json_to_metrics(rec["metrics_json"]),
+            audio=(_json_to_metrics(rec["audio_metrics_json"])
+                   if rec.get("audio_metrics_json") else None),
+            audio_vio=[(pid, c, o) for c, o in rec.get("audio_violations") or []],
+            hists={f: {int(b): int(c) for b, c in bins.items()}
+                   for f, bins in (rec.get("audio_feature_hists") or {}).items()},
+            quality={int(li): int(c) for li, c in (aq.get("counts") or {}).items()},
+            quality_vio={int(li): [(pid, c, o) for c, o in vs]
+                         for li, vs in (aq.get("violations") or {}).items()},
+            digests={c: td_mod.TDigest.from_b64(b)
+                     for c, b in (rec.get("pctl_digests") or {}).items()},
+        )
+
+
+def _by_clip_id(sample: Tuple[Optional[str], Optional[str], str]) -> Tuple[bool, str]:
+    """Sort key of a (partition, clip_id, observed) sample: clip_id
+    ascending, NULL first (Spark's ascending order)."""
+    return sample[1] is not None, sample[1] or ""
 
 
 def _default_fs_is_local() -> bool:
@@ -630,6 +704,9 @@ class Validator:
 
         if self.config.sample_fraction is not None:
             df = self._sample_frame(model_name, df)
+        part_col = self._partition_col(df)
+        if part_col:
+            df = df.withColumn(PART_KEY, drift_mod.partition_key(part_col))
 
         groups = family_groups(checks)
         for fam, cs in groups:
@@ -674,8 +751,7 @@ class Validator:
             reference_mode=self.config.reference_mode,
             audio_scan=plan_audio_scan(checks, lambda c: bool(
                 snapshots.get(f"audio:{c.params['feature']}"))),
-            resume_active=bool(self.config.checkpoint_dir and self.config.partition_col
-                               and self.config.partition_col in df.columns))
+            resume_active=bool(self.config.checkpoint_dir and part_col))
 
         # Compute phase: independent Spark jobs submitted CONCURRENTLY from
         # driver threads (the scheduler overlaps them across free task slots),
@@ -840,6 +916,11 @@ class Validator:
 
     # -- shared multi-aggregate scan (+ audio; + checkpoint/resume) ----------
 
+    def _partition_col(self, df: DataFrame) -> Optional[str]:
+        """The configured partition column when ``df`` has it, else None."""
+        col = self.config.partition_col
+        return col if col and col in df.columns else None
+
     def _shared_agg_specs(
         self, model_name: str, agg_checks: List[CompiledCheck], drift_checks: List[CompiledCheck]
     ) -> Tuple[Dict[str, Column], Dict[str, str], List[dict]]:
@@ -849,8 +930,8 @@ class Validator:
         per-grid-point sums would push the aggregate past the
         whole-stage-codegen field limit. Each spec is one drift check of the
         table's bucket job (drift_mod.drift_bucket_rows), which runs beside
-        the shared scan; _merge_drift_rows folds its counts into the
-        per-partition metric rows, and ``ops`` sums them like the scan's own.
+        the shared scan; its counts join each partition's metric row, and
+        ``ops`` sums them like the scan's own.
         """
         exprs: Dict[str, Column] = {"__total_count": F.count(F.lit(1))}
         ops: Dict[str, str] = {"__total_count": "sum"}
@@ -885,25 +966,6 @@ class Validator:
                 ops[alias] = "sum"
         return exprs, ops, drift_jobs
 
-    @staticmethod
-    def _merge_drift_rows(
-        part_rows: List[Dict[str, Any]],
-        drift_rows: Dict[Optional[str], Dict[str, int]],
-        drift_jobs: List[dict],
-        partition_col: Optional[str],
-    ) -> None:
-        zero: Dict[str, int] = {}
-        for job in drift_jobs:
-            for alias in drift_mod.drift_aliases(job["prefix"], job["stats"], job["method"]):
-                zero[alias] = 0
-        if partition_col:
-            for prow in part_rows:
-                pid = prow.get(partition_col)
-                key = drift_mod.NULL_PARTITION if pid is None else str(pid)
-                prow.update(drift_rows.get(key, zero))
-        elif part_rows:
-            part_rows[0].update(drift_rows.get(None, zero))
-
     def _audio_compact(
         self, df: DataFrame, chk: Optional[CompiledCheck], partition_col: Optional[str],
         fp_fn=None, feat_bins=None, feat_limits=None, text_col=None,
@@ -916,7 +978,7 @@ class Validator:
             snr_floor_db=chk.params.get("snr_db", 30.0) if chk is not None else 30.0,
             oracle=self.config.audio_oracle if chk is not None else None,
             snr_fn=self.config.audio_snr_fn if chk is not None else None,
-            partition_col=partition_col if (partition_col and partition_col in df.columns) else None,
+            partition_col=partition_col,
             violation_cap=self.config.violation_cap if (chk is not None or feat_limits) else 0,
             fp_fn=fp_fn,
             feat_bins=feat_bins,
@@ -924,10 +986,20 @@ class Validator:
             text_col=text_col,
         )
 
+    def _capped(self, rows: DataFrame, keys: List[str]) -> DataFrame:
+        """The first ``violation_cap`` of ``rows`` by clip_id in each group
+        of ``keys`` (overall when there are none): per-task caps in the
+        compact frame can sum past the cap."""
+        cap = self.config.violation_cap
+        if not keys:
+            return rows.orderBy("clip_id").limit(cap)
+        w = Window.partitionBy(*keys).orderBy("clip_id")
+        return rows.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= cap)
+
     def _audio_compact_collect(
-        self, compact: DataFrame, partition_col: Optional[str],
+        self, compact: DataFrame, keyed: bool,
     ) -> Tuple[List[Dict[str, Any]], List[Tuple[Optional[str], str, str]]]:
-        """(per-partition count rows, capped violation tuples) from ONE decode.
+        """(per-partition count rows, capped violation triples) from ONE decode.
 
         The compact frame is tiny by construction (bounded by tasks x
         (parts_per_task + cap)); the caller persists it, so the first action
@@ -936,80 +1008,59 @@ class Validator:
         """
         sums = [F.sum(c).alias(f"__audio__{c}") for c in audio_mod.COMPACT_COUNT_COLS]
         aggd = compact.filter(F.col("row_type") == "agg")
-        if partition_col:
+        if keyed:
             rows = [r.asDict() for r in aggd.groupBy("__part").agg(*sums).collect()]
         else:
             rows = [aggd.agg(*sums).first().asDict()]
             rows[0]["__part"] = None
-        total_vio = sum(r.get("__audio__violations") or 0 for r in rows)
         vio: List[Tuple[Optional[str], str, str]] = []
-        if total_vio:
+        if any(r.get("__audio__violations") for r in rows):
             vio = [
                 (r["__part"], r["clip_id"], r["observed"])
-                for r in (
-                    compact.filter(F.col("row_type") == "vio")
-                    .orderBy("clip_id")
-                    .limit(self.config.violation_cap)
-                    .select("__part", "clip_id", "observed")
-                    .collect()
-                )
+                for r in self._capped(compact.filter(F.col("row_type") == "vio"),
+                                      ["__part"] if keyed else [])
+                .select("__part", "clip_id", "observed").collect()
             ]
         return rows, vio
 
-    @staticmethod
-    def _fq_count_frame(compact: DataFrame) -> DataFrame:
-        """Per-(partition, rule) out-of-range counts from 'fq' compact rows."""
-        return (compact.filter(F.col("row_type") == "fq")
-                .groupBy("__part", "t").agg(F.sum("hash").alias("c")))
-
-    def _fv_capped_frame(self, compact: DataFrame, per_partition: bool) -> DataFrame:
-        """Capped 'fv' violation samples, deterministic by clip_id; the cap
-        applies per rule (globally) or per (partition, rule) for the
-        checkpoint manifest. Shared by the flat and checkpointed paths so the
-        compact 'fq'/'fv' row shape has one decoder."""
-        keys = ["__part", "t"] if per_partition else ["t"]
-        w = Window.partitionBy(*keys).orderBy("clip_id")
-        return (compact.filter(F.col("row_type") == "fv")
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= self.config.violation_cap)
-                .select("__part", "t", "clip_id", "observed"))
-
     def _audio_quality_collect(
-        self, compact: DataFrame,
-    ) -> Tuple[List[Dict[str, Any]], List[Dict[str, Any]]]:
-        """(per-partition out-of-range count rows, capped violation rows) from
-        the compact frame's 'fq'/'fv' rows — signal-quality bounds evaluated in
-        the same single decode pass as everything else. ``t`` is the rule index
-        (position in the audio_quality_checks list), so several bounds on the
-        same or different features stay separable. Violations are re-capped
-        per rule (per-task caps can sum past violation_cap)."""
-        fq_rows = [
-            {"__part": r["__part"], "t": r["t"], "c": int(r["c"])}
-            for r in self._fq_count_frame(compact).collect()
+        self, compact: DataFrame, keyed: bool,
+    ) -> Tuple[List[Tuple[Optional[str], int, int]],
+               List[Tuple[Optional[str], int, str, str]]]:
+        """((partition, rule, out-of-range count), capped (partition, rule,
+        clip_id, observed)) from the compact frame's 'fq'/'fv' rows —
+        signal-quality bounds evaluated in the same single decode pass as
+        everything else. ``t`` is the rule index (position in the
+        audio_quality_checks list), so several bounds on the same or
+        different features stay separable. Samples are capped per rule (and
+        partition)."""
+        counts = [
+            (r["__part"], int(r["t"]), int(r["c"]))
+            for r in compact.filter(F.col("row_type") == "fq")
+            .groupBy("__part", "t").agg(F.sum("hash").alias("c")).collect()
         ]
-        fv_rows: List[Dict[str, Any]] = []
-        if any(r["c"] > 0 for r in fq_rows):
-            fv_rows = [
-                r.asDict()
-                for r in self._fv_capped_frame(compact, per_partition=False)
-                .collect()
+        samples: List[Tuple[Optional[str], int, str, str]] = []
+        if any(c > 0 for _, _, c in counts):
+            samples = [
+                (r["__part"], int(r["t"]), r["clip_id"], r["observed"])
+                for r in self._capped(compact.filter(F.col("row_type") == "fv"),
+                                      ["__part", "t"] if keyed else ["t"])
+                .select("__part", "t", "clip_id", "observed").collect()
             ]
-        return fq_rows, fv_rows
+        return counts, samples
 
-    def _audio_hist_collect(self, compact: DataFrame) -> Dict[str, Dict[int, int]]:
-        """{feature: {bin: count}} from the compact frame's 'fh' rows — a
-        groupBy over a frame bounded by tasks x features x bins, never the
-        corpus. Loudness drift is evaluated globally (like the column drift
-        checks), so __part sums away here."""
-        rows = (
-            compact.filter(F.col("row_type") == "fh")
-            .groupBy("clip_id", "t").agg(F.sum("hash").alias("c"))
-            .collect()
-        )
-        out: Dict[str, Dict[int, int]] = {}
-        for r in rows:
-            out.setdefault(r["clip_id"], {})[r["t"]] = r["c"]
-        return out
+    def _audio_hist_collect(
+        self, compact: DataFrame, keyed: bool,
+    ) -> List[Tuple[Optional[str], str, int, int]]:
+        """(partition, feature, bin, count) from the compact frame's 'fh'
+        rows — a groupBy over a frame bounded by tasks x features x bins,
+        never the corpus."""
+        keys = ["__part"] if keyed else []
+        return [
+            (r["__part"] if keyed else None, r["clip_id"], int(r["t"]), int(r["c"]))
+            for r in compact.filter(F.col("row_type") == "fh")
+            .groupBy(*keys, "clip_id", "t").agg(F.sum("hash").alias("c")).collect()
+        ]
 
     _AUDIO_OPS = {f"__audio__{c}": "sum" for c in audio_mod.COMPACT_COUNT_COLS}
 
@@ -1062,7 +1113,6 @@ class Validator:
         drift_checks = of("drift")
         audio_checks = of("audio")
         approx_unique = of("unique")
-        audio_fp_checks = of("audio_fp")
         audio_drift_checks = of("audio_drift")
         audio_quality_checks = of("audio_quality")
         exprs, ops, drift_jobs = self._shared_agg_specs(model_name, agg_checks, drift_checks)
@@ -1075,12 +1125,9 @@ class Validator:
             # the sketch merges by HLL union, not sum/min/max — evaluated by
             # _record_approx_unique after the scan, never by _merge_rows
             exprs[sk_alias] = F.hll_sketch_agg(F.col(col), F.lit(self.config.unique_hll_lgk))
-        partition_col = self.config.partition_col if (
-            self.config.partition_col and self.config.partition_col in df.columns
-        ) else None
+        part_col = self._partition_col(df)
 
         audio_chk = audio_checks[0] if audio_checks else None
-        audio_ops: Dict[str, str] = dict(self._AUDIO_OPS) if audio_chk is not None else {}
         rerouted_aliases: List[str] = []
         if audio_chk is not None:
             rerouted_aliases = self._reroute_bytes_aliases(agg_checks, exprs, ops)
@@ -1118,18 +1165,12 @@ class Validator:
             raise ValueError(
                 f"speaking-rate rules on one model must share a text "
                 f"column, got {sorted(rate_cols)}")
-        rate_text_col = next(iter(rate_cols), None)
 
-        part_rows: List[Dict[str, Any]] = []
-        audio_part_rows: List[Dict[str, Any]] = []
-        audio_vio: List[Tuple[Optional[str], str, str]] = []
-        fused_fp_results: List[Tuple[CompiledCheck, dict]] = []
         # quantile-sketch aliases (merge op "global"): per-partition values are
         # exact per partition, but the global value cannot be merged on the
         # driver — recompute it in ONE dedicated pass pruned to just the
-        # percentile columns (overlapped with the main scan when parallel)
+        # percentile columns (overlapped with the scan when parallel)
         pctl_aliases = [a for a, op in ops.items() if op == "global"]
-        pctl_row: Optional[Dict[str, Any]] = None
 
         def pctl_job() -> Dict[str, Any]:
             return df.agg(
@@ -1140,7 +1181,6 @@ class Validator:
         # aliases leave the shared agg entirely and their values are injected
         # into the metric rows from driver-merged digests after the scan
         pctl_specs: Dict[str, Tuple[str, float]] = {}
-        pctl_digests: Dict[Tuple[str, str], td_mod.TDigest] = {}
         if pctl_aliases and self.config.pctl_mode == "sketch":
             for chk in agg_checks:
                 if chk.agg_alias in pctl_aliases and chk.agg_alias not in pctl_specs:
@@ -1156,145 +1196,47 @@ class Validator:
                 exprs.pop(alias, None)
                 ops.pop(alias, None)
             pctl_aliases = [a for a in pctl_aliases if a not in pctl_specs]
-        pctl_cols = sorted({c for c, _ in pctl_specs.values()})
 
-        audio_fhists: Dict[str, Dict[int, int]] = {}
-        audio_fq_rows: List[Dict[str, Any]] = []
-        audio_fv_rows: List[Dict[str, Any]] = []
+        spec = _ScanSpec(
+            exprs=exprs, ops=ops, drift_jobs=drift_jobs, audio_chk=audio_chk,
+            fp_checks=of("audio_fp"), feat_bins=feat_bins, feat_limits=feat_limits,
+            rate_text_col=next(iter(rate_cols), None),
+            pctl_cols=sorted({c for c, _ in pctl_specs.values()}))
 
-        if partition_col and self.config.checkpoint_dir:
-            (part_rows, audio_part_rows, audio_vio, audio_fhists,
-             audio_fq_rows, audio_fv_rows, pctl_digests) = self._checkpointed_scan(
-                model_name, df, exprs, ops, audio_chk, partition_col,
-                drift_jobs, feat_bins=feat_bins or None,
-                feat_limits=feat_limits or None,
-                pctl_cols=pctl_cols or None,
-                rate_text_col=rate_text_col,
-            )
-            if pctl_aliases and len(part_rows) > 1:
-                pctl_row = pctl_job()
-        else:
-            agg_list = [v.alias(k) for k, v in exprs.items()]
+        def scan():
+            if part_col and self.config.checkpoint_dir:
+                return self._checkpointed_states(model_name, df, spec, part_col), []
+            return self._scan_partitions(df, spec, part_col)
 
-            def main_job() -> List[Dict[str, Any]]:
-                if partition_col:
-                    return [r.asDict() for r in df.groupBy(partition_col).agg(*agg_list).collect()]
-                return [df.agg(*agg_list).first().asDict()]
-
-            def drift_job():
-                return drift_mod.drift_bucket_rows(df, drift_jobs, partition_col)
-
-            def audio_job() -> Tuple[Any, Any, Any, Any, Any, Any]:
-                # fingerprints, feature histograms and feature bounds ride
-                # along in the one decode pass; the compact frame (counts +
-                # capped vios + fp/fh/fq rows, far smaller than the payload)
-                # is persisted once and feeds every consumer
-                from . import audiofp as afp
-
-                compact = self._audio_compact(
-                    df, audio_chk, partition_col,
-                    fp_fn=afp.fingerprint_hashes if audio_fp_checks else None,
-                    feat_bins=feat_bins or None,
-                    feat_limits=feat_limits or None,
-                    text_col=rate_text_col,
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                try:
-                    rows, vio = (
-                        self._audio_compact_collect(compact, partition_col)
-                        if audio_chk is not None else ([], []))
-                    fp = compact.filter(F.col("row_type") == "fp").select("clip_id", "hash")
-                    fp_results = [
-                        (chk, self._audio_fp_result(afp.audio_fingerprint_near_dup(
-                            fp, threshold=float(chk.params["score_threshold"])), chk))
-                        for chk in audio_fp_checks]
-                    fhists = self._audio_hist_collect(compact) if feat_bins else {}
-                    fq_rows, fv_rows = (
-                        self._audio_quality_collect(compact)
-                        if feat_limits else ([], []))
-                finally:
-                    compact.unpersist()
-                # recorded after the merge section (fixed order, main thread)
-                return rows, vio, fp_results, fhists, fq_rows, fv_rows
-
-            # the scan's three independent jobs (metric agg / drift buckets /
-            # audio decode) overlap on the cluster — decode dominates, the
-            # small aggs ride along on spare slots
-            thunks: List[Any] = [main_job]
-            if drift_jobs:
-                thunks.append(drift_job)
-            run_audio = (
-                audio_chk is not None or bool(feat_bins)
-                or bool(audio_fp_checks) or bool(feat_limits))
-            if run_audio:
-                thunks.append(audio_job)
-            run_pctl = bool(pctl_aliases) and partition_col is not None
-            if run_pctl:
-                thunks.append(pctl_job)
-
-            def sketch_job() -> Dict[Tuple[str, str], td_mod.TDigest]:
-                return td_mod.collect_digests(
-                    df, pctl_cols, partition_col, self.config.pctl_tdigest_delta)
-
-            if pctl_specs:
-                thunks.append(sketch_job)
-            with self._arrow_batch_conf():
-                outs = self._parallel(thunks)
-            part_rows = outs[0]
-            idx = 1
-            if drift_jobs:
-                self._merge_drift_rows(part_rows, outs[idx], drift_jobs, partition_col)
-                idx += 1
-            if run_audio:
-                (audio_part_rows, audio_vio, fused_fp_results, audio_fhists,
-                 audio_fq_rows, audio_fv_rows) = outs[idx]
-                idx += 1
-            if run_pctl:
-                pctl_row = outs[idx]
-                idx += 1
-            if pctl_specs:
-                pctl_digests = outs[idx]
-
-        global_row = _merge_rows(part_rows, ops)
-        if pctl_row is not None:
+        # a partitioned run merges percentile sketches only through the
+        # dedicated global pass, which overlaps the scan
+        thunks: List[Any] = [scan]
+        if pctl_aliases and part_col:
+            thunks.append(pctl_job)
+        with self._arrow_batch_conf():
+            outs = self._parallel(thunks)
+        states, fused_fp_results = outs[0]
+        part_states = states if part_col else {}
+        glob = self._fold(states, spec)
+        global_row = glob.metrics
+        if len(outs) > 1:
             for alias in pctl_aliases:
-                global_row[alias] = pctl_row.get(alias)
-        if pctl_specs:
-            # driver-side digest merge (sorted key order -> deterministic,
-            # resume-identical); values injected into the metric rows so
-            # recording is byte-for-byte the exact-mode code path
-            for alias, (col, frac) in pctl_specs.items():
-                col_keys = sorted(k for k in pctl_digests if k[1] == col)
-                merged = td_mod.TDigest.merge(
-                    [pctl_digests[k] for k in col_keys],
-                    self.config.pctl_tdigest_delta)
-                global_row[alias] = (
-                    merged.quantile(frac) if merged.total_weight else None)
-                if partition_col:
-                    for prow in part_rows:
-                        d = pctl_digests.get((str(prow.get(partition_col)), col))
-                        prow[alias] = (
-                            d.quantile(frac)
-                            if d is not None and d.total_weight else None)
+                global_row[alias] = outs[1].get(alias)
+        # digest values are injected into the metric rows so recording is
+        # byte-for-byte the exact-mode code path
+        for alias, (col, frac) in pctl_specs.items():
+            for st in (glob, *part_states.values()):
+                d = st.digests.get(col)
+                st.metrics[alias] = (
+                    d.quantile(frac) if d is not None and d.total_weight else None)
         global_row["__total_count"] = global_row.get("__total_count") or 0
-        audio_global = _merge_rows(audio_part_rows, audio_ops) if audio_part_rows else {}
-        if audio_chk is not None:
-            # empty input (or an empty partition) -> zero counts, exactly as the
-            # JVM aggregate's coalesce(sum(..), 0) would report
-            for alias in audio_ops:
-                if audio_global.get(alias) is None:
-                    audio_global[alias] = 0
+        audio_global = glob.audio or {}
 
-        if rerouted_aliases:
-            # fold the audio pass's bytes-null count back into the metric rows
-            # so the required-check evaluates exactly as if it had run JVM-side
-            bytes_null = audio_global.get("__audio__bytes_null") or 0
-            by_part = {str(r.get("__part")): r for r in audio_part_rows}
-            for alias in rerouted_aliases:
-                global_row[alias] = bytes_null
-                if partition_col:
-                    for prow in part_rows:
-                        arow = by_part.get(str(prow.get(partition_col)))
-                        prow[alias] = 0 if arow is None else (arow.get("__audio__bytes_null") or 0)
+        # fold the audio pass's bytes-null count back into the metric rows
+        # so the required-check evaluates exactly as if it had run JVM-side
+        for alias in rerouted_aliases:
+            for st in (glob, *part_states.values()):
+                st.metrics[alias] = (st.audio or {}).get("__audio__bytes_null") or 0
 
         # evaluate + record each agg check (global + per-partition rows)
         failed_agg: List[CompiledCheck] = []
@@ -1302,19 +1244,16 @@ class Validator:
             metric = self._agg_metric(chk, global_row)
             result, reason = chk.eval_metric(metric, global_row)
             self._record(chk, metric, result, reason, global_row.get("__total_count"))
-            if partition_col:
-                for prow in part_rows:
-                    pm = self._agg_metric(chk, prow)
-                    pres, preason = chk.eval_metric(pm, prow)
-                    self._record(
-                        chk, pm, pres, preason, prow.get("__total_count"),
-                        partition_id=str(prow.get(partition_col)),
-                    )
+            for pid, st in part_states.items():
+                pm = self._agg_metric(chk, st.metrics)
+                pres, preason = chk.eval_metric(pm, st.metrics)
+                self._record(chk, pm, pres, preason, st.metrics.get("__total_count"),
+                             partition_id=pid)
             if result == ResultEnum.failed and chk.violation_predicate is not None:
                 failed_agg.append(chk)
 
         for chk in approx_unique:
-            self._record_approx_unique(chk, part_rows, global_row, partition_col)
+            self._record_approx_unique(chk, states, global_row, bool(part_col))
 
         for chk in drift_checks:
             if "_invalid" in chk.params:
@@ -1342,68 +1281,192 @@ class Validator:
             )
             self._record(audio_chk, metric, result, reason,
                          audio_global.get("__audio__rows"), diagnostics=diag)
-            if partition_col:
-                for prow in audio_part_rows:
-                    pm = float(prow.get("__audio__violations") or 0)
-                    self._record(
-                        audio_chk, pm,
-                        ResultEnum.passed if pm == 0 else ResultEnum.failed,
-                        None if pm == 0 else f"{int(pm)} decode-conformance violations",
-                        prow.get("__audio__rows"), partition_id=str(prow.get("__part")),
-                    )
-            if audio_vio:
-                # capped violation rows came out of the SAME decode pass as the
-                # metrics (compact frame) — never a second scan of the payload
-                vio_rows = [
-                    (self.run.runId, part, audio_chk.key, clip_id, observed, audio_chk.expected)
-                    for part, clip_id, observed in audio_vio[: self.config.violation_cap]
-                ]
-                self._add_violations(vio_rows)
+            # per-partition rows follow the audio job's output order
+            for pid, st in sorted(((k, s) for k, s in part_states.items()
+                                   if s.audio is not None),
+                                  key=lambda kv: kv[1].audio_rank):
+                pm = float(st.audio.get("__audio__violations") or 0)
+                self._record(
+                    audio_chk, pm,
+                    ResultEnum.passed if pm == 0 else ResultEnum.failed,
+                    None if pm == 0 else f"{int(pm)} decode-conformance violations",
+                    st.audio.get("__audio__rows"), partition_id=pid,
+                )
+            if glob.audio_vio:
+                # capped violation rows came out of the SAME decode pass as
+                # the metrics (compact frame) — never a second payload scan
+                self._add_violations([
+                    (self.run.runId, part, audio_chk.key, clip_id, observed,
+                     audio_chk.expected)
+                    for part, clip_id, observed in glob.audio_vio])
 
         for chk, res in fused_fp_results:
             self._record_result(chk, res)
 
         for chk, stats in audio_drift_eval:
-            got = audio_fhists.get(chk.params["feature"], {})
+            got = glob.hists.get(chk.params["feature"], {})
             counts = [got.get(k, 0) for k in range(len(stats["bin_edges"]) + 1)]
             stat = drift_mod.drift_statistic_from_counts(
                 counts, stats, chk.params["method"])
             result, reason = chk.eval_metric(stat, {})
             self._record(chk, stat, result, reason, sum(counts))
 
-        if audio_quality_checks:
-            # out-of-range clip counts from the same decode pass ('fq' rows);
-            # per-rule index rides in 't'. Absent rows mean zero violations.
-            fq_global: Dict[int, int] = {}
-            fq_by_part: Dict[Tuple[int, str], int] = {}
-            for r in audio_fq_rows:
-                li = int(r["t"])
-                fq_global[li] = fq_global.get(li, 0) + int(r["c"])
-                fq_by_part[(li, str(r["__part"]))] = (
-                    fq_by_part.get((li, str(r["__part"])), 0) + int(r["c"]))
-            total = (audio_global.get("__audio__rows")
-                     if audio_chk is not None else global_row.get("__total_count"))
-            for li, chk in enumerate(audio_quality_checks):
-                metric = float(fq_global.get(li, 0))
-                result, reason = chk.eval_metric(metric, {})
-                self._record(chk, metric, result, reason, total)
-                if partition_col:
-                    for prow in part_rows:
-                        pid = str(prow.get(partition_col))
-                        pm = float(fq_by_part.get((li, pid), 0))
-                        pres, preason = chk.eval_metric(pm, {})
-                        self._record(chk, pm, pres, preason,
-                                     prow.get("__total_count"), partition_id=pid)
-                vio_rows = [
-                    (self.run.runId, r["__part"], chk.key, r["clip_id"],
-                     r["observed"], chk.expected)
-                    for r in audio_fv_rows if int(r["t"]) == li
-                ][: self.config.violation_cap]
-                if vio_rows:
-                    self._add_violations(vio_rows)
+        # out-of-range clip counts from the same decode pass ('fq' rows);
+        # absent counts mean zero violations
+        total = (audio_global.get("__audio__rows")
+                 if audio_chk is not None else global_row.get("__total_count"))
+        for li, chk in enumerate(audio_quality_checks):
+            metric = float(glob.quality.get(li, 0))
+            result, reason = chk.eval_metric(metric, {})
+            self._record(chk, metric, result, reason, total)
+            for pid, st in part_states.items():
+                pm = float(st.quality.get(li, 0))
+                pres, preason = chk.eval_metric(pm, {})
+                self._record(chk, pm, pres, preason,
+                             st.metrics.get("__total_count"), partition_id=pid)
+            vio_rows = [(self.run.runId, part, chk.key, clip_id, observed, chk.expected)
+                        for part, clip_id, observed in glob.quality_vio.get(li, [])]
+            if vio_rows:
+                self._add_violations(vio_rows)
 
         if failed_agg:
-            self._collect_agg_violations(model_name, df, failed_agg, partition_col)
+            self._collect_agg_violations(model_name, df, failed_agg)
+
+    def _scan_partitions(
+        self, frame: DataFrame, spec: "_ScanSpec", part_col: Optional[str],
+    ) -> Tuple[Dict[Optional[str], "_PartState"], List[Tuple[CompiledCheck, dict]]]:
+        """The shared scan of ``frame`` as one decomposable state per
+        partition key, plus the results of the fingerprint checks fused into
+        its decode pass (global, so kept out of the states).
+
+        Its jobs run concurrently: the main aggregate, the drift buckets, the
+        audio decode pass and the t-digest pass — decode dominates, the small
+        aggregates ride along on spare slots. With ``part_col`` every job
+        keys its rows by the frame's ``PART_KEY``; without it there is one
+        state, keyed None, and no job groups by a partition."""
+        key = PART_KEY if part_col else None
+        agg_list = [v.alias(k) for k, v in spec.exprs.items()]
+
+        def main_job() -> List[Dict[str, Any]]:
+            if key:
+                # grouped by the column itself, which orders the partitions'
+                # results rows; each group has the one key
+                return [r.asDict() for r in frame.groupBy(part_col).agg(*agg_list)
+                        .withColumn(key, drift_mod.partition_key(part_col))
+                        .drop(part_col).collect()]
+            return [frame.agg(*agg_list).first().asDict()]
+
+        def drift_job():
+            return drift_mod.drift_bucket_rows(frame, spec.drift_jobs, key)
+
+        def audio_job():
+            # fingerprints, feature histograms and feature bounds ride
+            # along in the one decode pass; the compact frame (counts +
+            # capped vios + fp/fh/fq rows, far smaller than the payload)
+            # is persisted once and feeds every consumer
+            from . import audiofp as afp
+
+            compact = self._audio_compact(
+                frame, spec.audio_chk, key,
+                fp_fn=afp.fingerprint_hashes if spec.fp_checks else None,
+                feat_bins=spec.feat_bins or None,
+                feat_limits=spec.feat_limits or None,
+                text_col=spec.rate_text_col,
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                sums, vio = (self._audio_compact_collect(compact, bool(key))
+                             if spec.audio_chk is not None else ([], []))
+                fp = compact.filter(F.col("row_type") == "fp").select("clip_id", "hash")
+                fp_results = [
+                    (chk, self._audio_fp_result(afp.audio_fingerprint_near_dup(
+                        fp, threshold=float(chk.params["score_threshold"])), chk))
+                    for chk in spec.fp_checks]
+                hists = (self._audio_hist_collect(compact, bool(key))
+                         if spec.feat_bins else [])
+                counts, samples = (self._audio_quality_collect(compact, bool(key))
+                                   if spec.feat_limits else ([], []))
+            finally:
+                compact.unpersist()
+            return sums, vio, fp_results, hists, counts, samples
+
+        def sketch_job():
+            return td_mod.collect_digests(frame, spec.pctl_cols, key)
+
+        jobs: Dict[str, Any] = {"main": main_job}
+        if spec.drift_jobs:
+            jobs["drift"] = drift_job
+        if (spec.audio_chk is not None or spec.fp_checks or spec.feat_bins
+                or spec.feat_limits):
+            jobs["audio"] = audio_job
+        if spec.pctl_cols:
+            jobs["sketch"] = sketch_job
+        out = dict(zip(jobs, self._parallel(list(jobs.values()))))
+
+        states: Dict[Optional[str], _PartState] = {}
+
+        def at(pid: Optional[str]) -> _PartState:
+            return states.setdefault(pid, _PartState())
+
+        for row in out["main"]:
+            at(row.pop(key) if key else None).metrics = row
+        if spec.drift_jobs:
+            zero = {alias: 0 for job in spec.drift_jobs for alias in
+                    drift_mod.drift_aliases(job["prefix"], job["stats"], job["method"])}
+            for pid, st in states.items():
+                st.metrics.update(out["drift"].get(pid, zero))
+        fp_results: List[Tuple[CompiledCheck, dict]] = []
+        if "audio" in out:
+            sums, vio, fp_results, hists, counts, samples = out["audio"]
+            for rank, row in enumerate(sums):
+                st = at(row.pop("__part"))
+                st.audio, st.audio_rank = row, rank
+            for v in vio:
+                at(v[0]).audio_vio.append(v)
+            for pid, feature, b, c in hists:
+                bins = at(pid).hists.setdefault(feature, {})
+                bins[b] = bins.get(b, 0) + c
+            for pid, li, c in counts:
+                q = at(pid).quality
+                q[li] = q.get(li, 0) + c
+            for pid, li, clip_id, observed in samples:
+                at(pid).quality_vio.setdefault(li, []).append((pid, clip_id, observed))
+        for (pid, col), d in out.get("sketch", {}).items():
+            at(pid if key else None).digests[col] = d
+        return states, fp_results
+
+    def _fold(self, states: Dict[Optional[str], "_PartState"],
+              spec: "_ScanSpec") -> "_PartState":
+        """The global state of a run: metric rows merged by ``spec.ops``,
+        audio sums and histogram and quality counts summed, samples re-capped
+        by clip_id (per rule for quality; the global first ``cap`` are among
+        each partition's first ``cap``), digests merged in key order."""
+        cap = self.config.violation_cap
+        parts = list(states.values())
+        out = _PartState(metrics=_merge_rows([s.metrics for s in parts], spec.ops))
+        if spec.audio_chk is not None:
+            # empty input (or an empty partition) -> zero counts, exactly as
+            # the JVM aggregate's coalesce(sum(..), 0) would report
+            audio = _merge_rows([s.audio for s in parts if s.audio is not None],
+                                self._AUDIO_OPS)
+            out.audio = {a: audio.get(a) or 0 for a in self._AUDIO_OPS}
+        out.audio_vio = sorted((v for s in parts for v in s.audio_vio),
+                               key=_by_clip_id)[:cap]
+        for s in parts:
+            for feature, bins in s.hists.items():
+                dst = out.hists.setdefault(feature, {})
+                for b, c in bins.items():
+                    dst[b] = dst.get(b, 0) + c
+            for li, c in s.quality.items():
+                out.quality[li] = out.quality.get(li, 0) + c
+            for li, vs in s.quality_vio.items():
+                out.quality_vio.setdefault(li, []).extend(vs)
+        for li, vs in out.quality_vio.items():
+            out.quality_vio[li] = sorted(vs, key=_by_clip_id)[:cap]
+        for col in spec.pctl_cols:
+            out.digests[col] = td_mod.TDigest.merge(
+                [states[k].digests[col] for k in sorted(states)
+                 if col in states[k].digests], td_mod.DEFAULT_DELTA)
+        return out
 
     def _arrow_batch_conf(self):
         return _ConfScope(
@@ -1467,7 +1530,6 @@ class Validator:
         model_name: str,
         df: DataFrame,
         failed: List[CompiledCheck],
-        partition_col: Optional[str],
     ) -> None:
         pk = self._pk_column(model_name, df)
         structs = [
@@ -1485,7 +1547,7 @@ class Validator:
         arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
         base = df.select(
             F.col(pk).cast("string").alias("clip_id"),
-            (F.col(partition_col).cast("string") if partition_col else F.lit(None).cast("string")
+            (F.col(PART_KEY) if PART_KEY in df.columns else F.lit(None).cast("string")
              ).alias("partition_id"),
             arr.alias("__v"),
         ).filter(F.size("__v") > 0)
@@ -1568,9 +1630,9 @@ class Validator:
     def _record_approx_unique(
         self,
         chk: CompiledCheck,
-        part_rows: List[Dict[str, Any]],
+        states: Dict[Optional[str], _PartState],
         global_row: Dict[str, Any],
-        partition_col: Optional[str],
+        per_partition: bool,
     ) -> None:
         """Evaluate a unique check from the shared scan's HLL sketch.
 
@@ -1583,11 +1645,8 @@ class Validator:
         """
         nn_alias, sk_alias = self._hll_aliases(chk)
         rsd = 1.04 / math.sqrt(2 ** self.config.unique_hll_lgk)
-        sketches = [
-            (str(r.get(partition_col)) if partition_col else None, r.get(sk_alias))
-            for r in part_rows
-            if r.get(sk_alias) is not None
-        ]
+        sketches = [(pid, st.metrics[sk_alias]) for pid, st in states.items()
+                    if st.metrics.get(sk_alias) is not None]
         if not sketches:
             nn = global_row.get(nn_alias) or 0
             self._record(chk, 0.0, ResultEnum.passed, None, None,
@@ -1620,13 +1679,12 @@ class Validator:
             "approx": True, "approx_distinct": global_est,
             "nonnull": nn_global, "rsd": rsd,
         })
-        if partition_col:
-            for prow in part_rows:
-                pid = str(prow.get(partition_col))
+        if per_partition:
+            for pid, st in states.items():
                 est = per_part.get(pid)
                 if est is None:
                     continue
-                pm, pres, preason = judge(float(prow.get(nn_alias) or 0), est)
+                pm, pres, preason = judge(float(st.metrics.get(nn_alias) or 0), est)
                 self._record(chk, pm, pres, preason, None, partition_id=pid)
 
     # -- uniqueness (dedicated shuffle; AQE-skew-safe) ------------------------
@@ -1972,10 +2030,9 @@ class Validator:
             # resolve (filter applied before the anti-join, so pushdown
             # shrinks the probe side)
             df = df.filter(F.expr(flt))
-        part_col = self.config.partition_col if (
-            self.config.partition_col
-            and self.config.partition_col in df.columns
-            and self.config.partition_col != child_col) else None
+        part_col = self._partition_col(df)
+        if part_col == child_col:
+            part_col = None
         diagnostics = None
         orphans = None
         if self.config.reference_mode == "approx":
@@ -1986,10 +2043,8 @@ class Validator:
                 orphans, diagnostics = built
             # else: bloom over budget — fall through to the exact anti-join
         if orphans is None:
-            keys = parent.select(
-                F.col(parent_field).alias("__parent_key")).distinct()
-            if self.config.broadcast_references:
-                keys = F.broadcast(keys)
+            keys = F.broadcast(parent.select(
+                F.col(parent_field).alias("__parent_key")).distinct())
             # alias so dotted (nested-struct) paths keep a stable key column
             # name; the partition column rides along for per-partition
             # orphan attribution
@@ -2008,9 +2063,12 @@ class Validator:
         # without re-running the anti-join (the full child-table shuffle) a
         # second time.
         gcols = ["__child"] + ([part_col] if part_col else [])
-        grouped = orphans.groupBy(*gcols).agg(
-            F.count(F.lit(1)).alias("__cnt")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        grouped = orphans.groupBy(*gcols).agg(F.count(F.lit(1)).alias("__cnt"))
+        if part_col:
+            # keyed after grouping by the column itself, which orders the
+            # violation sample
+            grouped = grouped.withColumn(PART_KEY, drift_mod.partition_key(part_col))
+        grouped = grouped.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             metric = float(
                 grouped.agg(F.coalesce(F.sum("__cnt"), F.lit(0)).alias("n")).first()["n"]
@@ -2018,8 +2076,8 @@ class Validator:
             part_metrics = None
             if part_col:
                 part_metrics = {
-                    str(r[part_col]): float(r["n"])
-                    for r in grouped.groupBy(part_col)
+                    r[PART_KEY]: float(r["n"])
+                    for r in grouped.groupBy(PART_KEY)
                     .agg(F.sum("__cnt").alias("n")).collect()
                 }
             vio_rows = None
@@ -2028,7 +2086,7 @@ class Validator:
                 # per-row violation semantics preserved: a value orphaned k
                 # times contributes min(k, cap) example rows, capped overall
                 examples = grouped.select(
-                    (F.col(part_col).cast("string") if part_col
+                    (F.col(PART_KEY) if part_col
                      else F.lit(None).cast("string")).alias("__part"),
                     F.explode(
                         F.array_repeat(
@@ -2139,10 +2197,8 @@ class Validator:
         key, child_col, ref_col = p["key"], p["child_col"], p["ref_col"]
         if key not in df.columns or child_col not in df.columns or key not in ref.columns or ref_col not in ref.columns:
             return {"error": "join/compare column missing"}
-        part_col = self.config.partition_col if (
-            self.config.partition_col
-            and self.config.partition_col in df.columns
-            and self.config.partition_col not in (key, child_col)) else None
+        part_col = PART_KEY if (self._partition_col(df)
+                                and self.config.partition_col not in (key, child_col)) else None
         # inner equi-join on the key (rows absent from the reference are the
         # referential check's concern, not equality's); null-safe inequality;
         # the partition column rides along for per-partition attribution
@@ -2165,7 +2221,7 @@ class Validator:
             part_metrics = None
             if part_col:
                 part_metrics = {
-                    str(r[part_col]): float(r["n"])
+                    r[part_col]: float(r["n"])
                     for r in mismatch.groupBy(part_col)
                     .agg(F.count(F.lit(1)).alias("n")).collect()
                 }
@@ -2175,7 +2231,7 @@ class Validator:
                     mismatch.limit(self.config.violation_cap), chk.key,
                     F.col("__k").cast("string"), F.col("__child").cast("string"),
                     F.concat(F.lit("ref: "), F.col("__ref").cast("string")),
-                    F.col(part_col).cast("string") if part_col else None)
+                    F.col(part_col) if part_col else None)
                 vio_rows = vio.collect()
         finally:
             mismatch.unpersist()
@@ -2203,25 +2259,22 @@ class Validator:
 
     def _partition_lineage(
         self, df: DataFrame, partition_col: str,
-        parts: Optional[List[str]] = None,
     ) -> Dict[str, Dict[str, Any]]:
-        """{partition_id: {"files": n, "sig": md5-of-sorted-file-list}} via a
-        column-pruned scan of (partition_col, input_file_name()) distinct
+        """{partition key: {"files": n, "sig": md5-of-sorted-file-list}} via a
+        column-pruned scan of (partition key, input_file_name()) distinct
         pairs — per-partition provenance for the checkpoint manifest (north
         rule: "per-partition lineage + metrics"). In-memory frames (no
         files) yield a single empty name, which is stable across runs."""
         import hashlib
 
-        sub = df if parts is None else df.filter(_in_partitions(partition_col, parts))
         rows = (
-            sub.select(
-                F.col(partition_col).cast("string").alias("p"),
-                F.input_file_name().alias("f"))
+            df.select(drift_mod.partition_key(partition_col).alias("p"),
+                      F.input_file_name().alias("f"))
             .distinct().collect()
         )
         by_part: Dict[str, List[str]] = {}
         for r in rows:
-            by_part.setdefault(_part_key(r["p"]), []).append(r["f"])
+            by_part.setdefault(r["p"], []).append(r["f"])
         return {
             p: {
                 "files": len([f for f in fs if f]),
@@ -2230,87 +2283,40 @@ class Validator:
             for p, fs in by_part.items()
         }
 
-    def _checkpointed_scan(
-        self,
-        model_name: str,
-        df: DataFrame,
-        exprs: Dict[str, Column],
-        ops: Dict[str, str],
-        audio_chk: Optional[CompiledCheck],
-        partition_col: str,
-        drift_jobs: Optional[List[dict]] = None,
-        feat_bins: Optional[Dict[str, List[float]]] = None,
-        feat_limits: Optional[List[Tuple[str, Optional[float], Optional[float]]]] = None,
-        pctl_cols: Optional[List[str]] = None,
-        rate_text_col: Optional[str] = None,
-    ) -> Tuple[
-        List[Dict[str, Any]], List[Dict[str, Any]],
-        List[Tuple[Optional[str], str, str]], Dict[str, Dict[int, int]],
-        List[Dict[str, Any]], List[Dict[str, Any]],
-        Dict[Tuple[str, str], "td_mod.TDigest"],
-    ]:
-        """Chunked partitioned scan with a resume manifest.
-
-        Partition values are grouped into ``checkpoint_chunks`` groups; each group's
-        per-partition metric rows are appended to the manifest as they complete. On
-        resume, completed partitions are loaded from the manifest and their groups
-        skipped — only remaining partitions are scanned. All shared-scan metrics are
-        decomposable (sum/min/max), so merged results are identical to a full run.
-        Each partition's capped audio-violation sample (<= violation_cap rows,
-        from the same single decode pass as its metrics) is stored in its manifest
-        record, so resume reproduces violations without rescanning done partitions.
-        Loudness-drift feature histograms (``feat_bins``) are likewise per-partition
-        decomposable bin counts: they ride the SAME per-chunk decode pass, persist
-        in the manifest, and merge by summation on resume — never a second decode.
-        Signal-quality bounds (``feat_limits``) follow the same model: per-partition
-        out-of-range counts + capped violation samples persist in each manifest
-        record ("audio_quality") and merge by summation / concatenation on resume.
-        Each record also carries the partition's input-file LINEAGE (file count
-        + md5 signature of the sorted file list); on resume that signature is
-        re-probed (column-pruned scan, no payload) and any completed partition
-        whose files changed is invalidated and rescanned — a checkpoint can
-        never silently serve metrics for data that moved underneath it.
-        Percentile t-digests (``pctl_cols``, pctl_mode="sketch") are the mergeable
-        quantile state: one column-pruned digest pass per chunk, per-partition
-        digests persist as base64 ("pctl_digests") and merge associatively on
-        resume — the global quantile never needs a rescan of completed partitions
-        (unlike exact GK mode, whose global pass re-reads everything).
-        """
-        os.makedirs(self.config.checkpoint_dir, exist_ok=True)
-        manifest = self._manifest_path(model_name)
-        # signature of the check configuration whose per-partition state the
-        # manifest records: a record written under a DIFFERENT configuration
-        # (metric set, audio rules, percentile mode/columns, drift features)
-        # cannot be merged — its missing sidecar state would silently read as
-        # zero — so such partitions are invalidated and rescanned on resume
+    def _state_sig(self, model_name: str, spec: "_ScanSpec") -> str:
+        """Signature of the check configuration whose per-partition state a
+        manifest record holds: a record written under a DIFFERENT
+        configuration (metric set, audio rules, percentile mode/columns,
+        drift features) cannot be merged — its missing state would silently
+        read as zero — so such partitions are rescanned on resume."""
         import hashlib
 
-        state_sig = hashlib.md5(json.dumps({
+        return hashlib.md5(json.dumps({
             # ops covers every merged alias INCLUDING the drift bucket
             # aliases (which join ops but not exprs); the drift/feat entries
             # additionally hash the snapshot CONTENT — a rebuilt snapshot
             # with the same grid size but shifted edges (or reordered
             # categories) must also invalidate, not merge misaligned bins
-            "aliases": sorted(ops),
+            "aliases": sorted(spec.ops),
             # the alias alone can't see a SEMANTIC change that keeps the name
             # — e.g. a per-check `filter:` added to a field constraint, or an
             # edited bound — so the expression trees themselves join the
             # signature (their reprs are deterministic unresolved-plan text)
-            "exprs": sorted((k, str(v)) for k, v in exprs.items()),
-            "audio": audio_chk.key if audio_chk is not None else None,
-            "feat_bins": feat_bins or {},
-            "feat_limits": feat_limits or [],
+            "exprs": sorted((k, str(v)) for k, v in spec.exprs.items()),
+            "audio": spec.audio_chk.key if spec.audio_chk is not None else None,
+            "feat_bins": spec.feat_bins,
+            "feat_limits": spec.feat_limits,
             # a changed transcript column changes every rate metric; the
             # manifest's per-partition counts cannot be merged across it
-            "rate_text_col": rate_text_col,
-            "pctl_cols": pctl_cols or [],
+            "rate_text_col": spec.rate_text_col,
+            "pctl_cols": spec.pctl_cols,
             # sketch configs: manifest HLL sketches of a different lgConfigK
             # would make hll_union_agg throw on resume, and t-digests of a
             # different delta would merge at the wrong compression — both are
             # state-compatibility parameters, so a change invalidates and
             # rescans instead of failing the merged run
             "hll_lgk": self.config.unique_hll_lgk,
-            "tdigest_delta": self.config.pctl_tdigest_delta,
+            "tdigest_delta": td_mod.DEFAULT_DELTA,
             # sampled partitions can never merge with full ones (or with a
             # different fraction/seed's panel); same for a changed dataset
             # filter — a different slice is a different table
@@ -2323,216 +2329,85 @@ class Validator:
                 {"p": j["prefix"], "m": j["method"],
                  "s": {k: j["stats"].get(k) for k in
                        ("bin_edges", "quantiles", "categories", "bin_probs")}}
-                for j in (drift_jobs or [])
+                for j in spec.drift_jobs
             ],
         }, sort_keys=True, default=str).encode()).hexdigest()
+
+    def _checkpointed_states(
+        self, model_name: str, frame: DataFrame, spec: "_ScanSpec", part_col: str,
+    ) -> Dict[str, "_PartState"]:
+        """Per-partition states of a checkpointed run, through a resume
+        manifest (one JSONL record per completed partition, FIXTURES.md §4).
+
+        On resume, a partition whose latest record was written under this
+        check configuration (``state_sig``) and whose input files are
+        unchanged (``lineage``, re-probed by a column-pruned scan) loads its
+        state from the record; every other partition is scanned by
+        ``_scan_partitions``, in ``checkpoint_chunks`` chunks of partitions,
+        and each chunk's states are appended to the manifest as it completes.
+        All states are decomposable, so the fold of a resumed run equals a
+        fresh run's. Percentile t-digests are part of the state, so sketch
+        mode never rereads completed partitions (exact GK mode's global pass
+        does)."""
+        os.makedirs(self.config.checkpoint_dir, exist_ok=True)
+        manifest = self._manifest_path(model_name)
+        state_sig = self._state_sig(model_name, spec)
+        parts = sorted(r[0] for r in frame.select(PART_KEY).distinct().collect())
         done: Dict[str, dict] = {}
         if self.config.resume and os.path.exists(manifest):
             with open(manifest, "r", encoding="utf-8") as f:
                 for line in f:
                     rec = json.loads(line)
                     if rec.get("status") == "done":
-                        done[str(rec["partition_id"])] = rec
+                        done[rec["partition_id"]] = rec
             stale = sorted(
                 p for p, rec in done.items()
-                if rec.get("state_sig") != state_sig)
+                if p in parts and rec.get("state_sig") != state_sig)
             if stale:
                 self.run.log_warn(
                     f"checkpoint: {len(stale)} completed partition(s) were "
                     "recorded under a different check configuration — "
                     f"rescanning {stale[:5]}{'...' if len(stale) > 5 else ''}")
-                for p in stale:
-                    del done[p]
-        parts = sorted(
-            _part_key(r[0]) for r in df.select(partition_col).distinct().collect()
-        )
-        if done and self.config.checkpoint_verify_lineage:
+            # records of partitions the table no longer has are not merged
+            done = {p: done[p] for p in parts
+                    if p in done and p not in stale}
+        if done:
             # stale-checkpoint detection: a completed partition whose input
             # file set changed since the manifest was written must NOT serve
-            # cached metrics — invalidate it and rescan. The lineage probe
-            # reads only the partition column (column-pruned scan, no payload).
-            current = self._partition_lineage(df, partition_col, sorted(done))
-            for pid in sorted(done):
+            # its recorded state
+            current = self._partition_lineage(
+                frame.filter(F.col(PART_KEY).isin(list(done))), PART_KEY)
+            for pid in list(done):
                 rec_lin = done[pid].get("lineage")
                 if rec_lin is not None and rec_lin != current.get(pid):
                     self.run.log_warn(
                         f"checkpoint: partition {pid} input files changed since "
                         f"manifest (was {rec_lin}, now {current.get(pid)}) — rescanning")
                     del done[pid]
+        states = {pid: _PartState.from_record(pid, rec) for pid, rec in done.items()}
         todo = [p for p in parts if p not in done]
-        chunks: List[List[str]] = []
-        k = max(1, self.config.checkpoint_chunks)
-        size = max(1, math.ceil(len(todo) / k)) if todo else 1
-        for i in range(0, len(todo), size):
-            chunks.append(todo[i:i + size])
-
-        agg_list = [v.alias(a) for a, v in exprs.items()]
-        a_sums = [F.sum(c).alias(f"__audio__{c}") for c in audio_mod.COMPACT_COUNT_COLS]
-
-        part_rows: List[Dict[str, Any]] = []
-        audio_part_rows: List[Dict[str, Any]] = []
-        audio_vio_by_part: Dict[str, List[Tuple[Optional[str], str, str]]] = {}
-        audio_fhists: Dict[str, Dict[int, int]] = {}
-        audio_fq_rows: List[Dict[str, Any]] = []
-        audio_fv_rows: List[Dict[str, Any]] = []
-        pctl_digests: Dict[Tuple[str, str], td_mod.TDigest] = {}
-
-        def merge_fh(by_feature: Optional[Dict[str, Dict[str, int]]]) -> None:
-            for feature, bins in (by_feature or {}).items():
-                dst = audio_fhists.setdefault(feature, {})
-                for b, c in bins.items():
-                    dst[int(b)] = dst.get(int(b), 0) + int(c)
-
-        def merge_fq(pid: Optional[str], aq: Optional[Dict[str, Any]]) -> None:
-            for li, c in ((aq or {}).get("counts") or {}).items():
-                audio_fq_rows.append({"__part": pid, "t": int(li), "c": int(c)})
-            for li, vs in ((aq or {}).get("violations") or {}).items():
-                for clip_id, obs in vs:
-                    audio_fv_rows.append(
-                        {"__part": pid, "t": int(li),
-                         "clip_id": clip_id, "observed": obs})
-
-        for pid, rec in done.items():
-            value = _part_value(pid)
-            row = _json_to_metrics(rec["metrics_json"])
-            row[partition_col] = value
-            part_rows.append(row)
-            if rec.get("audio_metrics_json"):
-                arow = _json_to_metrics(rec["audio_metrics_json"])
-                arow["__part"] = value
-                audio_part_rows.append(arow)
-            for v in rec.get("audio_violations") or []:
-                audio_vio_by_part.setdefault(pid, []).append((value, v[0], v[1]))
-            merge_fh(rec.get("audio_feature_hists"))
-            merge_fq(value, rec.get("audio_quality"))
-            for col, b64 in (rec.get("pctl_digests") or {}).items():
-                pctl_digests[(value, col)] = td_mod.TDigest.from_b64(b64)
-
+        size = max(1, math.ceil(len(todo) / max(1, self.config.checkpoint_chunks)))
         self.run.log_info(
             f"checkpoint: {len(done)}/{len(parts)} partitions already complete; "
-            f"{len(todo)} to scan in {len(chunks)} chunk(s)"
+            f"{len(todo)} to scan in {math.ceil(len(todo) / size)} chunk(s)"
         )
-
-        for chunk in chunks:
-            sub = df.filter(_in_partitions(partition_col, chunk))
-            rows = [r.asDict() for r in sub.groupBy(partition_col).agg(*agg_list).collect()]
-            if drift_jobs:
-                self._merge_drift_rows(
-                    rows,
-                    drift_mod.drift_bucket_rows(sub, drift_jobs, partition_col),
-                    drift_jobs, partition_col,
-                )
-            audio_rows_by_part: Dict[str, dict] = {}
-            chunk_vio_by_part: Dict[str, List[Tuple[str, str]]] = {}
-            chunk_fh_by_part: Dict[str, Dict[str, Dict[str, int]]] = {}
-            chunk_aq_by_part: Dict[str, Dict[str, Any]] = {}
-            chunk_lineage = self._partition_lineage(sub, partition_col)
-            chunk_digests: Dict[Tuple[str, str], td_mod.TDigest] = {}
-            if pctl_cols:
-                # mergeable quantile state for this chunk's partitions: one
-                # column-pruned digest pass (payload never read)
-                chunk_digests = td_mod.collect_digests(
-                    sub, pctl_cols, partition_col,
-                    self.config.pctl_tdigest_delta)
-            if audio_chk is not None or feat_bins or feat_limits:
-                compact = self._audio_compact(
-                    sub, audio_chk, partition_col, feat_bins=feat_bins or None,
-                    feat_limits=feat_limits or None, text_col=rate_text_col)
-                compact = compact.persist(StorageLevel.MEMORY_AND_DISK)
-                try:
-                    with self._arrow_batch_conf():
-                        if feat_bins:
-                            for r in (
-                                compact.filter(F.col("row_type") == "fh")
-                                .groupBy("__part", "clip_id", "t")
-                                .agg(F.sum("hash").alias("c")).collect()
-                            ):
-                                chunk_fh_by_part.setdefault(_part_key(r["__part"]), {}) \
-                                    .setdefault(r["clip_id"], {})[str(r["t"])] = int(r["c"])
-                        if feat_limits:
-                            for r in self._fq_count_frame(compact).collect():
-                                d = chunk_aq_by_part.setdefault(
-                                    _part_key(r["__part"]), {"counts": {}, "violations": {}})
-                                d["counts"][str(r["t"])] = int(r["c"])
-                            if chunk_aq_by_part:
-                                for r in self._fv_capped_frame(
-                                    compact, per_partition=True
-                                ).collect():
-                                    d = chunk_aq_by_part.setdefault(
-                                        _part_key(r["__part"]), {"counts": {}, "violations": {}})
-                                    d["violations"].setdefault(str(r["t"]), []).append(
-                                        [r["clip_id"], r["observed"]])
-                        if audio_chk is not None:
-                            audio_rows_by_part = {
-                                _part_key(r["__part"]): r.asDict()
-                                for r in compact.filter(F.col("row_type") == "agg")
-                                .groupBy("__part").agg(*a_sums).collect()
-                            }
-                        if any((r.get("__audio__violations") or 0) > 0
-                               for r in audio_rows_by_part.values()):
-                            # re-cap per partition (per-task caps can sum past it)
-                            w = Window.partitionBy("__part").orderBy("clip_id")
-                            for r in (
-                                compact.filter(F.col("row_type") == "vio")
-                                .withColumn("__rn", F.row_number().over(w))
-                                .filter(F.col("__rn") <= self.config.violation_cap)
-                                .select("__part", "clip_id", "observed").collect()
-                            ):
-                                chunk_vio_by_part.setdefault(_part_key(r["__part"]), []).append(
-                                    (r["clip_id"], r["observed"]))
-                finally:
-                    compact.unpersist()
+        for i in range(0, len(todo), size):
+            chunk = frame.filter(F.col(PART_KEY).isin(todo[i:i + size]))
+            scanned, _ = self._scan_partitions(chunk, spec, part_col)
+            lineage = self._partition_lineage(chunk, PART_KEY)
             with open(manifest, "a", encoding="utf-8") as f:
-                for row in rows:
-                    pid = _part_key(row[partition_col])
-                    value = _part_value(pid)
-                    arow = audio_rows_by_part.get(pid)
-                    vlist = chunk_vio_by_part.get(pid, [])
-                    fh = chunk_fh_by_part.get(pid)
-                    aq = chunk_aq_by_part.get(pid)
-                    digs = {
-                        col: chunk_digests[(value, col)].to_b64()
-                        for col in (pctl_cols or [])
-                        if (value, col) in chunk_digests
-                    }
+                for pid, st in scanned.items():
                     f.write(json.dumps({
                         "run_id": self.run.runId,
                         "partition_id": pid,
                         "status": "done",
-                        "metrics_json": _metrics_to_json(row, partition_col),
-                        "audio_metrics_json": _metrics_to_json(arow, "__part") if arow else None,
-                        "audio_violations": vlist or None,
-                        "audio_feature_hists": fh or None,
-                        "audio_quality": aq or None,
-                        "pctl_digests": digs or None,
-                        "lineage": chunk_lineage.get(pid),
+                        **st.record(),
+                        "lineage": lineage.get(pid),
                         "state_sig": state_sig,
                         "ts": dt.datetime.now(dt.timezone.utc).isoformat(),
                     }) + "\n")
-                    part_rows.append(row)
-                    if arow:
-                        audio_part_rows.append(arow)
-                    if vlist:
-                        audio_vio_by_part[pid] = [(value, c, o) for c, o in vlist]
-                    merge_fh(fh)
-                    merge_fq(value, aq)
-                    for (dpid, col), d in chunk_digests.items():
-                        if dpid == value:
-                            pctl_digests[(value, col)] = d
-        # global cap across partitions, deterministic by clip_id
-        audio_vio = sorted(
-            (v for vs in audio_vio_by_part.values() for v in vs), key=lambda t: t[1]
-        )[: self.config.violation_cap]
-        # signal-quality violation samples: re-cap globally per rule index,
-        # deterministic by clip_id (per-partition caps can sum past the cap)
-        fv_by_li: Dict[int, List[Dict[str, Any]]] = {}
-        for r in sorted(audio_fv_rows, key=lambda r: (r["t"], r["clip_id"])):
-            lst = fv_by_li.setdefault(int(r["t"]), [])
-            if len(lst) < self.config.violation_cap:
-                lst.append(r)
-        audio_fv_rows = [r for li in sorted(fv_by_li) for r in fv_by_li[li]]
-        return (part_rows, audio_part_rows, audio_vio, audio_fhists,
-                audio_fq_rows, audio_fv_rows, pctl_digests)
+            states.update(scanned)
+        return states
 
     # -- result recording -------------------------------------------------------
 
@@ -2649,13 +2524,11 @@ class _ConfScope:
         return False
 
 
-def _metrics_to_json(row: Optional[Dict[str, Any]], partition_col: str) -> str:
+def _metrics_to_json(row: Dict[str, Any]) -> str:
     import base64
 
     out = {}
-    for k, v in (row or {}).items():
-        if k == partition_col:
-            continue
+    for k, v in row.items():
         if isinstance(v, (dt.datetime, dt.date)):
             out[k] = {"__ts__": v.isoformat()}
         elif isinstance(v, (bytes, bytearray)):
@@ -2682,24 +2555,6 @@ def _json_to_metrics(blob: str) -> Dict[str, Any]:
         else:
             out[k] = v
     return out
-
-
-def _part_key(value: Any) -> str:
-    """A partition's key in the checkpoint listing and manifest: NULL keys
-    under drift.NULL_PARTITION, so a literal "None" partition keeps its own."""
-    return drift_mod.NULL_PARTITION if value is None else str(value)
-
-
-def _part_value(key: str) -> Optional[str]:
-    """The partition value (as a string, None for NULL) a key stands for."""
-    return None if key == drift_mod.NULL_PARTITION else key
-
-
-def _in_partitions(partition_col: str, keys: List[str]) -> Column:
-    """Row filter selecting the partitions with these ``_part_key`` keys."""
-    col = F.col(partition_col)
-    cond = col.cast("string").isin([k for k in keys if k != drift_mod.NULL_PARTITION])
-    return cond | col.isNull() if drift_mod.NULL_PARTITION in keys else cond
 
 
 def validate(

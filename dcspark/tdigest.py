@@ -203,10 +203,13 @@ def digest_frame(df, columns: List[str], partition_col: Optional[str],
     digests: (part string, col string, digest string). Each task folds all
     its Arrow batches into one digest per (partition value, column), so the
     collected frame has at most tasks x partitions-per-task x columns rows.
-    Catalyst prunes the scan to exactly ``columns`` (+ partition_col):
-    the payload corpus is never touched."""
-    sel = ([partition_col] if partition_col else []) + list(columns)
-    pruned = df.select(*dict.fromkeys(sel))
+    Partitions are keyed by ``drift.partition_key``. Catalyst prunes the
+    scan to exactly ``columns`` (+ partition_col): the payload corpus is
+    never touched."""
+    from .drift import partition_key
+
+    key = [partition_key(partition_col).alias("__part")] if partition_col else []
+    pruned = df.select(*key, *dict.fromkeys(columns))
 
     def build(batches: Iterator["object"]) -> Iterator["object"]:
         import pyarrow as pa
@@ -219,7 +222,7 @@ def digest_frame(df, columns: List[str], partition_col: Optional[str],
             if partition_col:
                 parts = np.asarray(batch.column(0).to_pylist(), dtype=object)
                 for p in dict.fromkeys(parts.tolist()):
-                    masks[str(p)] = parts == p
+                    masks[p] = parts == p
             for col in columns:
                 vals = batch.column(names.index(col)).to_numpy(zero_copy_only=False)
                 vals = np.asarray(vals, dtype=np.float64)
@@ -243,7 +246,7 @@ def digest_frame(df, columns: List[str], partition_col: Optional[str],
 
 def collect_digests(df, columns: List[str], partition_col: Optional[str],
                     delta: int = DEFAULT_DELTA) -> Dict[Tuple[str, str], TDigest]:
-    """{(partition_value, column): digest} merged across tasks in
+    """{(partition key, column): digest} merged across tasks in
     deterministic (task-frame sort) order. Flat runs use key ("", col)."""
     rows = digest_frame(df, columns, partition_col, delta).collect()
     grouped: Dict[Tuple[str, str], List[str]] = {}

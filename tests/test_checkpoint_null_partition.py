@@ -90,3 +90,20 @@ def test_manifest_keeps_null_and_none_partitions_apart(spark, clips, tmp_path):
     with open(manifest, encoding="utf-8") as f:
         pids = sorted(json.loads(line)["partition_id"] for line in f)
     assert pids == sorted([NULL_PARTITION, "None", "a"])
+
+
+def test_null_and_none_partitions_report_apart(spark, clips):
+    """A fresh run reports the NULL partition under drift.NULL_PARTITION, not
+    as "None": the literal "None" partition keeps results rows of its own,
+    and no per-partition row takes the NULL that marks the global rollup."""
+    from dcspark.drift import NULL_PARTITION
+
+    res = _run(spark, clips)
+    by_check = {}
+    for r in res.results:
+        if r["partition_id"] is not None:
+            by_check.setdefault(r["check_key"], []).append(r["partition_id"])
+    assert "clips__audio_decode_conformance" in by_check
+    for key, pids in by_check.items():
+        assert sorted(pids) == sorted([NULL_PARTITION, "None", "a"]), key
+    assert None not in {r["partition_id"] for r in res.violations.collect()}

@@ -8,7 +8,10 @@ row in order — so that a change to the dispatch cannot change what is
 computed, recorded or sampled. The pinned values live in
 ``tests/golden/family_run.json``: the same contract runs with
 ``parallel_jobs`` 1 and 8 (both must match one flat snapshot) and
-partitioned.
+partitioned. A checkpointed run and its resume must report what the fresh
+partitioned run reports; their checks and results rows are compared as
+multisets, because a checkpointed plan runs content-uniqueness as its own
+job, which records later.
 
 Fixture sources: synthesized clips (as in test_audiodrift), PNG photos and
 cards (test_imagerule), Motion-JPEG AVI payloads (test_videorule), a stored
@@ -120,12 +123,25 @@ servicelevels:
 CORRUPT = {"bad_sr": 0.1, "wrong_transcript": 0.15, "dup_clip_id": 0.1,
            "lying_header": 0.1, "bad_pattern": 0.1, "muted_pcm": 0.1}
 
-#: (parallel_jobs, partition_col) per pinned configuration
-CONFIGS = {"serial": (1, None), "parallel": (8, None),
-           "partitioned": (8, "sr_hz")}
+#: ValidationConfig fields per pinned configuration, run in this order;
+#: CHECKPOINT stands for one checkpoint directory they share
+CHECKPOINT = object()
+PARTITIONED = {"parallel_jobs": 8, "partition_col": "sr_hz"}
+CONFIGS = {
+    "serial": {"parallel_jobs": 1},
+    "parallel": {"parallel_jobs": 8},
+    "partitioned": PARTITIONED,
+    "checkpointed": {**PARTITIONED, "checkpoint_dir": CHECKPOINT,
+                     "checkpoint_chunks": 3},
+    "resumed": {**PARTITIONED, "checkpoint_dir": CHECKPOINT,
+                "checkpoint_chunks": 3, "resume": True},
+}
 #: the golden snapshot each configuration must reproduce: the number of
-#: concurrent jobs changes nothing a run reports
-GOLDEN_OF = {"serial": "flat", "parallel": "flat", "partitioned": "partitioned"}
+#: concurrent jobs and checkpointing change nothing a run reports
+GOLDEN_OF = {"serial": "flat", "parallel": "flat", "partitioned": "partitioned",
+             "checkpointed": "partitioned", "resumed": "partitioned"}
+#: configurations whose checks and results rows may record in another order
+UNORDERED = {"checkpointed", "resumed"}
 
 
 def _photo(seed, h=48, w=64):
@@ -260,13 +276,18 @@ def golden_runs(spark, tmp_dir):
     tables = _tables(spark)
     ref_stats = _ref_stats(spark)
     spec = DataContractSpecification.from_string(CONTRACT)
+    ck = os.path.join(str(tmp_dir), "ck")
     out = {}
-    for name, (jobs, part_col) in CONFIGS.items():
+    for name, fields in CONFIGS.items():
         cfg = ValidationConfig(
-            parallel_jobs=jobs, partition_col=part_col, ref_stats=ref_stats,
-            now=NOW, history_path=hist)
+            **{k: ck if v is CHECKPOINT else v for k, v in fields.items()},
+            ref_stats=ref_stats, now=NOW, history_path=hist)
         out[name] = _snapshot(validate(spark, spec, tables, cfg))
     return out
+
+
+def _multiset(rows):
+    return sorted(json.dumps(r, sort_keys=True) for r in rows)
 
 
 @pytest.fixture(scope="module")
@@ -284,6 +305,9 @@ def golden():
 def test_run_checks_match_golden(runs, golden, config):
     got, want = runs[config], golden[GOLDEN_OF[config]]
     assert got["result"] == want["result"]
+    if config in UNORDERED:
+        assert _multiset(got["checks"]) == _multiset(want["checks"])
+        return
     assert [c["key"] for c in got["checks"]] == [c["key"] for c in want["checks"]]
     for g, w in zip(got["checks"], want["checks"]):
         assert g == w, g["key"]
@@ -291,7 +315,11 @@ def test_run_checks_match_golden(runs, golden, config):
 
 @pytest.mark.parametrize("config", sorted(CONFIGS))
 def test_results_rows_match_golden(runs, golden, config):
-    assert runs[config]["results"] == golden[GOLDEN_OF[config]]["results"]
+    got, want = runs[config]["results"], golden[GOLDEN_OF[config]]["results"]
+    if config in UNORDERED:
+        assert _multiset(got) == _multiset(want)
+    else:
+        assert got == want
 
 
 @pytest.mark.parametrize("config", sorted(CONFIGS))

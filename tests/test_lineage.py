@@ -82,16 +82,6 @@ def test_resume_invalidates_changed_partition(spark, tmp_path):
     assert _run(spark, base, ck, resume=True).metrics[METRIC] == 1150.0
 
 
-def test_lineage_verification_can_be_disabled(spark, tmp_path):
-    base, ck = str(tmp_path / "data"), str(tmp_path / "ck")
-    _write_part(spark, base, "a", [("c1", 100)])
-    _write_part(spark, base, "b", [("c2", 50)])
-    _run(spark, base, ck)
-    _write_part(spark, base, "b", [("c2", 50), ("c9", 1000)])
-    stale = _run(spark, base, ck, resume=True, checkpoint_verify_lineage=False)
-    assert stale.metrics[METRIC] == 150.0  # documented: stale cache served
-
-
 def test_resume_invalidates_config_change(spark, tmp_path):
     """A manifest written under a different check configuration must not be
     merged on resume (its records lack the new rules' sidecar state): the
