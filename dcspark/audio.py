@@ -34,6 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .binread import Reader
 from .drift import partition_key
 from .rowmap import DECODE_ERRORS, _binary_views, ddl_schemas, map_payloads
 
@@ -189,38 +190,27 @@ def _walk_wav_header(b):
     containers, zero sample rates, or truncated extensible headers."""
     if b is None or len(b) < 44:
         raise ValueError("not a RIFF/WAVE container")
-    mv = memoryview(b)
-    if bytes(mv[0:4]) != b"RIFF" or bytes(mv[8:12]) != b"WAVE":
+    r = Reader(memoryview(b), "wav")
+    riff, _size, wave = r.unpack("<4sI4s")
+    if riff != b"RIFF" or wave != b"WAVE":
         raise ValueError("not a RIFF/WAVE container")
-    pos = 12
-    fmt = None
-    ext_tag = None
-    fact_samples = None
-    data_off = data_len = None
-    n = len(b)
-    while pos + 8 <= n:
-        chunk_id = bytes(mv[pos:pos + 4])
-        (size,) = struct.unpack_from("<I", mv, pos + 4)
-        if chunk_id == b"fmt ":
-            if size < 16 or pos + 8 + 16 > n:
-                # an undersized fmt chunk would silently unpack the NEXT
-                # chunk's bytes as format fields (every other chunk here
-                # guards its size; fmt was the one exception)
-                raise ValueError("fmt chunk too short")
-            fmt = struct.unpack_from("<HHIIHH", mv, pos + 8)
+    fmt = ext_tag = fact_samples = data = None
+    for fourcc, body in r.riff_chunks():
+        if fourcc == b"fmt ":
+            # bounded by the chunk: an undersized fmt chunk raises instead
+            # of unpacking the NEXT chunk's bytes as format fields
+            fmt = body.unpack("<HHIIHH")
             # WAVE_FORMAT_EXTENSIBLE: cbSize(2) validBits(2) channelMask(4)
             # SubFormat GUID (real format tag = first 2 bytes, little-endian)
-            if fmt[0] == _FMT_EXTENSIBLE and size >= 40:
-                (ext_tag,) = struct.unpack_from("<H", mv, pos + 8 + 24)
-        elif chunk_id == b"fact" and size >= 4:
+            if fmt[0] == _FMT_EXTENSIBLE and body.left() >= 24:
+                (ext_tag,) = body.unpack("<8xH")
+        elif fourcc == b"fact" and body.left() >= 4:
             # total sample count — authoritative for block codecs whose final
             # block is padded (IMA ADPCM)
-            (fact_samples,) = struct.unpack_from("<I", mv, pos + 8)
-        elif chunk_id == b"data":
-            data_off = pos + 8
-            data_len = min(size, n - data_off)
-        pos += 8 + size + (size & 1)
-    if fmt is None or data_off is None:
+            fact_samples = body.le32()
+        elif fourcc == b"data":
+            data = body
+    if fmt is None or data is None:
         raise ValueError("missing fmt/data chunk")
     audio_format, channels, sr, _byte_rate, block_align, bits = fmt
     if sr <= 0:
@@ -233,7 +223,7 @@ def _walk_wav_header(b):
             raise ValueError("extensible fmt chunk too short for SubFormat")
         audio_format = ext_tag
     return (audio_format, channels, sr, bits, block_align,
-            data_off, data_len, fact_samples)
+            data.pos, data.left(), fact_samples)
 
 
 def parse_wav_view(b) -> tuple:

@@ -28,6 +28,7 @@ from typing import List, Tuple
 
 import numpy as np
 
+from .binread import Reader
 from .jpeg import decode_jpeg, jpeg_bytes
 
 
@@ -243,28 +244,24 @@ def decode_avi(raw: bytes) -> Tuple[float, List[np.ndarray]]:
     malformed containers or foreign codecs."""
     if raw is None or len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
         raise ValueError("not an AVI container")
+    r = Reader(bytes(raw), "avi", 12)
     fps = 25.0
     codec = "mjpg"
     pal = GRAY_PALETTE
     canvas = None  # RLE8: persistent bottom-up index canvas
     frames: List[np.ndarray] = []
 
-    def walk(pos: int, end: int, depth: int) -> None:
+    def walk(scope: Reader, depth: int) -> None:
         nonlocal fps, codec, pal, canvas
         if depth > 8:  # real AVIs nest 2-3 deep; a crafted bomb raises, not
             raise ValueError("AVI LIST nesting too deep")  # RecursionError
-        while pos + 8 <= end:
-            fourcc = raw[pos:pos + 4]
-            (size,) = struct.unpack_from("<I", raw, pos + 4)
-            body_start = pos + 8
-            body_end = min(body_start + size, end)
+        for fourcc, body in scope.riff_chunks():
             if fourcc == b"LIST":
-                walk(body_start + 4, body_end, depth + 1)
-            elif fourcc == b"strh" and body_end - body_start >= 28:
-                # bound by bytes actually PRESENT, not the declared size — a
-                # truncated strh must surface as ValueError, not struct.error
-                if raw[body_start:body_start + 4] == b"vids":
-                    handler = raw[body_start + 4:body_start + 8]
+                body.skip(4, "list type")
+                walk(body, depth + 1)
+            elif fourcc == b"strh" and body.left() >= 28:
+                kind, handler, scale, rate = body.unpack("<4s4s12xII")
+                if kind == b"vids":
                     if handler in (b"MRLE", b"mrle", b"RLE8",
                                    b"\x01\x00\x00\x00"):
                         codec = "rle8"
@@ -274,13 +271,10 @@ def decode_avi(raw: bytes) -> Tuple[float, List[np.ndarray]]:
                             f"unsupported video codec {handler!r}; only "
                             "MJPG and MS-RLE8 decode here — inject a native "
                             "decoder for modern inter-frame codecs")
-                    scale, rate = struct.unpack_from("<II", raw, body_start + 20)
                     if scale and rate:
                         fps = rate / scale
-            elif fourcc == b"strf" and body_end - body_start >= 40:
-                bi_w, bi_h = struct.unpack_from("<2i", raw, body_start + 4)
-                bits, comp = struct.unpack_from(
-                    "<HI", raw, body_start + 14)
+            elif fourcc == b"strf" and body.left() >= 40:
+                _, bi_w, bi_h, _planes, bits, comp = body.unpack("<I2iHHI")
                 if comp == 1 or (codec == "rle8" and bits == 8):
                     if bits != 8:
                         raise ValueError("RLE AVI: only 8bpp (BI_RLE8)")
@@ -288,29 +282,30 @@ def decode_avi(raw: bytes) -> Tuple[float, List[np.ndarray]]:
                         raise ValueError("RLE AVI: need positive bottom-up "
                                          "dimensions")
                     codec = "rle8"
+                    body.claim(bi_w * bi_h, "RLE8 canvas")
                     canvas = np.zeros((bi_h, bi_w), np.uint8)
-                    ptab = raw[body_start + 40:
-                               body_start + 40 + 256 * 4]
-                    if len(ptab) == 256 * 4:
-                        bgrx = np.frombuffer(ptab, np.uint8).reshape(256, 4)
-                        pal = bgrx[:, [2, 1, 0]].copy()
-            elif fourcc[2:4] in (b"dc", b"db") and size > 0:
+                    body.skip(20)  # rest of the BITMAPINFOHEADER
+                    if body.left() >= 256 * 4:
+                        bgrx = np.frombuffer(body.take(256 * 4), np.uint8)
+                        pal = bgrx.reshape(256, 4)[:, [2, 1, 0]]
+            elif fourcc[2:4] in (b"dc", b"db") and body.left():
+                data = body.take(body.left())
                 if codec == "rle8":
                     if canvas is None:
                         raise ValueError("RLE AVI: frame before strf header")
-                    _rle8_apply(raw[body_start:body_end], canvas)
+                    body.claim(canvas.size * 3, "RLE8 frame")
+                    _rle8_apply(data, canvas)
                     frames.append(pal[canvas[::-1]])
                 else:
-                    h, w, c, px = decode_jpeg(raw[body_start:body_end])
+                    # not charged here: each JPEG charges its own decode, and
+                    # its blocks are bounded by its entropy bytes, so this
+                    # list grows with the input, not with a declared size
+                    h, w, c, px = decode_jpeg(data)
                     if c == 1:
                         px = np.repeat(px[:, :, None], 3, axis=2)
                     frames.append(px)
-            pos = body_start + size + (size & 1)
 
-    try:
-        walk(12, len(raw), 0)
-    except struct.error as e:  # truncated chunk headers
-        raise ValueError(f"truncated AVI container: {e}") from e
+    walk(r, 0)
     if not frames:
         raise ValueError("no video frames found")
     return fps, frames

@@ -37,12 +37,13 @@ type (documented; timestamp columns round-trip as long micros/millis).
 
 from __future__ import annotations
 
-import io
 import json
 import struct
 import zlib
 from hashlib import md5
 from typing import Any, Callable, Dict, Iterator, List, Optional, Tuple
+
+from .binread import Reader
 
 MAGIC = b"Obj\x01"
 _SYNC_LEN = 16
@@ -52,20 +53,17 @@ _SYNC_LEN = 16
 # ---------------------------------------------------------------------------
 
 
-def _read_long(buf: bytes, pos: int) -> Tuple[int, int]:
+def _read_long(c: Reader) -> int:
     """Zigzag-varint decode; raises on truncation or >10-byte runaways."""
     shift = 0
     acc = 0
     for _ in range(10):
-        if pos >= len(buf):
-            raise ValueError("avro: truncated varint")
-        b = buf[pos]
-        pos += 1
+        b = c.u8("varint")
         acc |= (b & 0x7F) << shift
         if not (b & 0x80):
-            return (acc >> 1) ^ -(acc & 1), pos
+            return (acc >> 1) ^ -(acc & 1)
         shift += 7
-    raise ValueError("avro: varint longer than 10 bytes")
+    c.fail("varint longer than 10 bytes")
 
 
 def _write_long(out: bytearray, n: int) -> None:
@@ -85,7 +83,7 @@ def _write_long(out: bytearray, n: int) -> None:
 # schema-compiled readers / writers
 # ---------------------------------------------------------------------------
 
-Reader = Callable[[bytes, int], Tuple[Any, int]]
+ReadFn = Callable[[bytes, int], Tuple[Any, int]]
 Writer = Callable[[bytearray, Any], None]
 
 #: non-string key holding the per-schema compiled-closure cache inside the
@@ -145,149 +143,128 @@ def _min_item_bytes(schema: Any, names: Dict[str, Any],
     return _min_item_bytes(t, names, seen)  # logical type on a base type
 
 
-def compile_reader(schema: Any, names: Optional[Dict[str, Any]] = None) -> Reader:
+def compile_reader(schema: Any, names: Optional[Dict[str, Any]] = None) -> ReadFn:
     """Schema node -> closure (buf, pos) -> (value, new_pos). Compiled once
     per schema so the per-row hot path never re-inspects JSON."""
+    read = _compile_read(schema, names)
+
+    def run(buf, pos):
+        c = Reader(buf, "avro", pos)
+        return read(c), c.pos
+    return run
+
+
+def _compile_read(schema: Any, names: Optional[Dict[str, Any]] = None
+                  ) -> Callable[[Reader], Any]:
+    """Schema node -> closure reading one value at a cursor."""
     names = {} if names is None else names
     if isinstance(schema, str):
         t = schema
         if t in names:  # named-type reference — LAZY, see _COMPILED
             cache = names.setdefault(_COMPILED, {})
 
-            def rref(b, p, _t=t, _cache=cache, _names=names):
+            def rref(c, _t=t, _cache=cache, _names=names):
                 r = _cache.get(("r", _t))
                 if r is None:
-                    r = _cache[("r", _t)] = compile_reader(_names[_t], _names)
-                return r(b, p)
+                    r = _cache[("r", _t)] = _compile_read(_names[_t], _names)
+                return r(c)
             return rref
         if t == "null":
-            return lambda b, p: (None, p)
+            return lambda c: None
         if t == "boolean":
-            def rb(b, p):
-                if p >= len(b):
-                    raise ValueError("avro: truncated boolean")
-                return b[p] != 0, p + 1
-            return rb
+            return lambda c: c.u8("boolean") != 0
         if t in ("int", "long"):
             return _read_long
         if t == "float":
-            def rf(b, p):
-                if p + 4 > len(b):
-                    raise ValueError("avro: truncated float")
-                return struct.unpack_from("<f", b, p)[0], p + 4
-            return rf
+            return lambda c: c.unpack("<f", "float")[0]
         if t == "double":
-            def rd(b, p):
-                if p + 8 > len(b):
-                    raise ValueError("avro: truncated double")
-                return struct.unpack_from("<d", b, p)[0], p + 8
-            return rd
+            return lambda c: c.unpack("<d", "double")[0]
         if t == "bytes":
-            def rby(b, p):
-                n, p = _read_long(b, p)
-                if n < 0 or p + n > len(b):
-                    raise ValueError("avro: bad bytes length")
-                return bytes(b[p:p + n]), p + n
-            return rby
+            return lambda c: bytes(c.take(_read_long(c), "bytes"))
         if t == "string":
-            def rs(b, p):
-                n, p = _read_long(b, p)
-                if n < 0 or p + n > len(b):
-                    raise ValueError("avro: bad string length")
-                return b[p:p + n].decode("utf-8"), p + n
-            return rs
+            return lambda c: str(c.take(_read_long(c), "string"), "utf-8")
         raise ValueError(f"avro: unknown type {t!r}")
     if isinstance(schema, list):  # union
-        branches = [compile_reader(s, names) for s in schema]
-        def ru(b, p):
-            i, p = _read_long(b, p)
+        branches = [_compile_read(s, names) for s in schema]
+        def ru(c):
+            i = _read_long(c)
             if not (0 <= i < len(branches)):
-                raise ValueError(f"avro: union index {i} out of range")
-            return branches[i](b, p)
+                c.fail(f"union index {i} out of range")
+            return branches[i](c)
         return ru
     t = schema["type"]
     if t == "record":
         names[schema["name"]] = schema
-        fields = [(f["name"], compile_reader(f["type"], names))
+        fields = [(f["name"], _compile_read(f["type"], names))
                   for f in schema["fields"]]
-        def rr(b, p):
-            row = {}
-            for name, rdr in fields:
-                row[name], p = rdr(b, p)
-            return row, p
+        def rr(c):
+            return {name: rdr(c) for name, rdr in fields}
         return rr
     if t == "enum":
         names[schema["name"]] = schema
         symbols = list(schema["symbols"])
-        def re_(b, p):
-            i, p = _read_long(b, p)
+        def re_(c):
+            i = _read_long(c)
             if not (0 <= i < len(symbols)):
-                raise ValueError(f"avro: enum index {i} out of range")
-            return symbols[i], p
+                c.fail(f"enum index {i} out of range")
+            return symbols[i]
         return re_
     if t == "fixed":
         names[schema["name"]] = schema
         size = int(schema["size"])
-        def rx(b, p):
-            if p + size > len(b):
-                raise ValueError("avro: truncated fixed")
-            return bytes(b[p:p + size]), p + size
-        return rx
+        return lambda c: bytes(c.take(size, "fixed"))
     if t == "array":
-        item = compile_reader(schema["items"], names)
+        item = _compile_read(schema["items"], names)
         # item-count bound per block: when every item consumes >= 1 byte, a
         # block cannot hold more items than remaining bytes; zero-byte item
         # types (null, empty record) legally pack any count into no bytes, so
         # they get the absolute cap instead (ADVICE r04: the unconditional
         # bytes bound rejected valid arrays of 100 nulls)
         zero_byte_items = _min_item_bytes(schema["items"], names) == 0
-        def ra(b, p):
+        def ra(c):
             out: List[Any] = []
             while True:
-                n, p = _read_long(b, p)
+                n = _read_long(c)
                 if n == 0:
-                    return out, p
+                    return out
                 if n < 0:  # block with byte-size prefix
                     n = -n
-                    _, p = _read_long(b, p)
-                if (len(out) + n > _zero_byte_item_budget(len(b))
-                        if zero_byte_items else n > len(b) - p):
+                    _read_long(c)
+                if not zero_byte_items:
+                    c.count(n, 1, "array block")
+                elif len(out) + n > _zero_byte_item_budget(len(c.buf)):
                     # without a bound a corrupt count hangs/OOMs the parse;
                     # zero-byte items are bounded on the TOTAL across blocks
-                    raise ValueError("avro: array block count exceeds buffer")
+                    c.fail(f"array block count {n} exceeds the zero-byte "
+                           "item budget")
                 for _ in range(n):
-                    v, p = item(b, p)
-                    out.append(v)
+                    out.append(item(c))
         return ra
     if t == "map":
-        val = compile_reader(schema["values"], names)
-        def rm(b, p):
+        val = _compile_read(schema["values"], names)
+        def rm(c):
             out: Dict[str, Any] = {}
             while True:
-                n, p = _read_long(b, p)
+                n = _read_long(c)
                 if n == 0:
-                    return out, p
+                    return out
                 if n < 0:
                     n = -n
-                    _, p = _read_long(b, p)
-                if n > len(b) - p + 1:
-                    raise ValueError("avro: map block count exceeds buffer")
-                for _ in range(n):
-                    if p >= len(b):
-                        raise ValueError("avro: truncated map key")
-                    klen, p = _read_long(b, p)
-                    if klen < 0 or p + klen > len(b):
+                    _read_long(c)
+                for _ in range(c.count(n, 1, "map block")):
+                    klen = _read_long(c)
+                    if klen < 0:
                         # same guard the bytes/string readers have: a corrupt
-                        # negative length would REWIND the cursor (p += klen)
-                        # and misparse silently instead of raising
-                        raise ValueError("avro: bad map key length")
-                    k = b[p:p + klen].decode("utf-8"); p += klen
-                    out[k], p = val(b, p)
+                        # negative length would REWIND the cursor and misparse
+                        # silently instead of raising
+                        c.fail("bad map key length")
+                    k = str(c.take(klen, "map key"), "utf-8")
+                    out[k] = val(c)
         return rm
     # logical types ride their base type ({"type": "long", "logicalType": ...})
     if t in ("null", "boolean", "int", "long", "float", "double",
              "bytes", "string"):
-        return compile_reader(t, names)
+        return _compile_read(t, names)
     raise ValueError(f"avro: unsupported complex type {t!r}")
 
 
@@ -408,6 +385,9 @@ def compile_writer(schema: Any, names: Optional[Dict[str, Any]] = None) -> Write
 # ---------------------------------------------------------------------------
 
 
+_META = _compile_read({"type": "map", "values": "bytes"})
+
+
 def read_container_meta(data: bytes) -> Dict[str, bytes]:
     """OCF bytes -> the header metadata map only (no block decode).
 
@@ -417,23 +397,17 @@ def read_container_meta(data: bytes) -> Dict[str, bytes]:
     """
     if data[:4] != MAGIC:
         raise ValueError("avro: bad magic (not an Object Container File)")
-    meta_reader = compile_reader({"type": "map", "values": "bytes"})
-    meta, _pos = meta_reader(data, 4)
-    return meta
+    return _META(Reader(data, "avro", 4))
 
 
 def parse_container(data: bytes) -> Tuple[Any, Iterator[dict]]:
     """OCF bytes -> (schema, iterator of record dicts). Validates magic,
-    codec, per-block sync markers, and block boundary alignment."""
+    codec, schema, per-block sync markers, and block boundary alignment."""
     if data[:4] != MAGIC:
         raise ValueError("avro: bad magic (not an Object Container File)")
-    pos = 4
-    meta_reader = compile_reader({"type": "map", "values": "bytes"})
-    meta, pos = meta_reader(data, pos)
-    sync = data[pos:pos + _SYNC_LEN]
-    if len(sync) != _SYNC_LEN:
-        raise ValueError("avro: truncated header sync")
-    pos += _SYNC_LEN
+    r = Reader(data, "avro", 4)
+    meta = _META(r)
+    sync = r.take(_SYNC_LEN, "header sync")
     codec = meta.get("avro.codec", b"null").decode()
     if codec not in ("null", "deflate"):
         raise ValueError(f"avro: unsupported codec {codec!r}")
@@ -441,31 +415,31 @@ def parse_container(data: bytes) -> Tuple[Any, Iterator[dict]]:
         schema = json.loads(meta["avro.schema"])
     except KeyError:
         raise ValueError("avro: header missing avro.schema") from None
-    reader = compile_reader(schema)
+    try:
+        reader = _compile_read(schema)
+    except KeyError as e:  # a corrupt header: a schema node without a key
+        raise ValueError(f"avro: schema node missing key {e}") from None
+    except TypeError as e:  # ... or a node of the wrong JSON type
+        raise ValueError(f"avro: malformed schema: {e}") from None
 
     def records() -> Iterator[dict]:
-        p = pos
-        while p < len(data):
-            n_rows, p = _read_long(data, p)
-            n_bytes, p = _read_long(data, p)
-            if n_rows < 0 or n_bytes < 0 or p + n_bytes > len(data):
-                raise ValueError("avro: bad block header")
-            block = data[p:p + n_bytes]
-            p += n_bytes
-            if data[p:p + _SYNC_LEN] != sync:
+        while r.left():
+            n_rows = _read_long(r)
+            if n_rows < 0:
+                r.fail("bad block row count")
+            block = r.take(_read_long(r), "block")
+            if r.take(_SYNC_LEN, "sync marker") != sync:
                 raise ValueError("avro: sync marker mismatch (corrupt block)")
-            p += _SYNC_LEN
             if codec == "deflate":
                 try:
                     block = zlib.decompress(block, wbits=-15)
                 except zlib.error as e:
                     # the module contract is corrupt-input -> ValueError
                     raise ValueError(f"avro: corrupt deflate block: {e}")
-            bp = 0
+            rows = Reader(block, "avro")
             for _ in range(n_rows):
-                row, bp = reader(block, bp)
-                yield row
-            if bp != len(block):
+                yield reader(rows)
+            if rows.left():
                 raise ValueError("avro: block not fully consumed")
 
     return schema, records()

@@ -1,4 +1,4 @@
-"""WebM / Matroska (EBML) container metadata: stdlib-struct walk, no decode.
+"""WebM / Matroska (EBML) container metadata: bounded element walk, no decode.
 
 The second big real-world video container after MP4 (dcspark/mp4.py): VP8/
 VP9/AV1-in-WebM frames need external codec libraries (the pluggable decode
@@ -29,7 +29,9 @@ No reference counterpart: the reference repo decodes no media at all.
 from __future__ import annotations
 
 import struct
-from typing import Any, Dict, Iterator, Optional, Tuple
+from typing import Any, Dict, Iterator, Tuple
+
+from .binread import Reader
 
 __all__ = ["parse_webm", "webm_bytes", "is_webm"]
 
@@ -63,51 +65,48 @@ def is_webm(raw: bytes) -> bool:
     return len(raw) >= 4 and bytes(raw[:4]) == EBML_MAGIC
 
 
-def _read_vint(buf: bytes, p: int, end: int, keep_marker: bool,
-               allow_unknown: bool = True) -> Tuple[int, int]:
-    """One EBML variable-length integer at ``p`` -> (value, new_pos).
+def _vint(r: Reader, keep_marker: bool, allow_unknown: bool = True) -> int:
+    """One EBML variable-length integer at the cursor.
 
     ``allow_unknown`` applies only to marker-stripped reads: the all-ones
     data-bits sentinel means "unknown size" for ELEMENT SIZES, but a block's
     track number has no unknown value — 0xFF there is the legal minimal
     encoding of track 127 (review finding: treating it as the sentinel
     silently dropped that track's frames)."""
-    if p >= end:
-        raise ValueError("ebml: truncated vint")
-    first = buf[p]
+    first = r.u8("vint")
     if first == 0:
-        raise ValueError("ebml: invalid vint (no length marker)")
-    length = 1
-    mask = 0x80
-    while not (first & mask):
-        mask >>= 1
-        length += 1
-    if p + length > end:
-        raise ValueError("ebml: truncated vint body")
-    val = first if keep_marker else (first & (mask - 1))
-    for i in range(1, length):
-        val = (val << 8) | buf[p + i]
-    if not keep_marker and allow_unknown:
-        if val == (1 << (7 * length)) - 1:
-            return _UNKNOWN_SIZE, p + length
-    return val, p + length
+        r.fail("invalid vint (no length marker)")
+    length = 9 - first.bit_length()
+    val = first if keep_marker else first & ((0x80 >> (length - 1)) - 1)
+    val = (val << 8 * (length - 1)) | r.uint(length - 1, what="vint body")
+    if not keep_marker and allow_unknown and val == (1 << (7 * length)) - 1:
+        return _UNKNOWN_SIZE
+    return val
 
 
-def _iter_elements(buf: bytes, start: int, end: int) -> Iterator[Tuple[int, int, int]]:
-    """Yield (element_id, payload_start, payload_end) within [start, end)."""
-    p = start
-    while p < end:
-        eid, p = _read_vint(buf, p, end, keep_marker=True)
-        size, p = _read_vint(buf, p, end, keep_marker=False)
+def _header(r: Reader) -> Tuple[int, int]:
+    """(element id, declared size) at the cursor."""
+    return _vint(r, keep_marker=True), _vint(r, keep_marker=False)
+
+
+def _elements(scope: Reader) -> Iterator[Tuple[int, Reader]]:
+    """(element_id, payload scope) for each element in ``scope``, walked
+    on a fork so the scope can be walked again."""
+    r = scope.fork()
+    while r.left():
+        eid, size = _header(r)
         if size == _UNKNOWN_SIZE:
             # unknown-size element (live-streamed Segment/Cluster): it runs
             # to the end of the enclosing scope
-            yield eid, p, end
+            yield eid, r.sub(r.left(), f"element 0x{eid:x}")
             return
-        if p + size > end:
-            raise ValueError(f"ebml: element 0x{eid:x} size {size} exceeds scope")
-        yield eid, p, p + size
-        p += size
+        yield eid, r.sub(size, f"element 0x{eid:x}")
+
+
+def _iter_elements(buf: bytes, start: int, end: int) -> Iterator[Tuple[int, int, int]]:
+    """(element_id, payload_start, payload_end) within ``buf[start:end]``."""
+    for eid, el in _elements(Reader(buf, "ebml", start, end)):
+        yield eid, el.pos, el.end
 
 
 #: ids legal as direct Cluster children (Matroska spec): Timestamp,
@@ -116,77 +115,61 @@ _CLUSTER_CHILDREN = {0xE7, 0x5854, 0xA7, 0xAB, _SIMPLE_BLOCK, _BLOCK_GROUP,
                      0xAF}
 
 
-def _segment_children(buf: bytes, start: int, end: int) -> Iterator[Tuple[int, int, int]]:
+def _segment_children(segment: Reader) -> Iterator[Tuple[int, Reader]]:
     """Segment-level walk that bounds UNKNOWN-SIZE Clusters correctly.
 
     A live-streamed/muxer-truncated WebM writes Clusters with the all-ones
     size sentinel; per the Matroska rule such an element ends where the
     first id that is not a valid child appears at its level. Treating it as
-    running to segment end (the generic _iter_elements behavior) silently
+    running to segment end (the generic _elements behavior) silently
     swallows every following cluster (review finding: frames after the
     first streamed cluster went uncounted). Non-Cluster unknown-size
     elements keep the to-scope-end reading."""
-    p = start
-    while p < end:
-        eid, q = _read_vint(buf, p, end, keep_marker=True)
-        size, q = _read_vint(buf, q, end, keep_marker=False)
+    r = segment.fork()
+    while r.left():
+        eid, size = _header(r)
         if size != _UNKNOWN_SIZE:
-            if q + size > end:
-                raise ValueError(
-                    f"ebml: element 0x{eid:x} size {size} exceeds scope")
-            yield eid, q, q + size
-            p = q + size
-            continue
-        if eid != _CLUSTER:
-            yield eid, q, end
+            yield eid, r.sub(size, f"element 0x{eid:x}")
+        elif eid != _CLUSTER:
+            yield eid, r.sub(r.left(), f"element 0x{eid:x}")
             return
-        c = q
-        while c < end:
-            probe = c
-            cid, r = _read_vint(buf, probe, end, keep_marker=True)
-            if cid not in _CLUSTER_CHILDREN:
-                break
-            csz, r = _read_vint(buf, r, end, keep_marker=False)
-            if csz == _UNKNOWN_SIZE or r + csz > end:
-                raise ValueError("ebml: bad child size in unknown-size cluster")
-            c = r + csz
-        yield eid, q, c
-        p = c
+        else:
+            c = r.fork()
+            while c.left() and _vint(c.fork(), True) in _CLUSTER_CHILDREN:
+                _cid, csz = _header(c)
+                if csz == _UNKNOWN_SIZE:
+                    c.fail("bad child size in unknown-size cluster")
+                c.skip(csz, "unknown-size cluster child")
+            yield eid, r.sub(c.pos - r.pos, "unknown-size cluster")
 
 
-def _uint(buf: bytes, s: int, e: int) -> int:
-    v = 0
-    for i in range(s, e):
-        v = (v << 8) | buf[i]
-    return v
+def _uint(el: Reader) -> int:
+    return el.uint(el.left())
 
 
-def _float(buf: bytes, s: int, e: int) -> float:
-    n = e - s
-    if n == 4:
-        return struct.unpack_from(">f", buf, s)[0]
-    if n == 8:
-        return struct.unpack_from(">d", buf, s)[0]
+def _text(el: Reader) -> str:
+    return el.take(el.left()).decode("latin-1").rstrip("\x00")
+
+
+def _float(el: Reader) -> float:
+    n = el.left()
+    if n in (4, 8):
+        return el.unpack(">f" if n == 4 else ">d")[0]
     if n == 0:
         return 0.0
-    raise ValueError("ebml: bad float width")
+    el.fail("bad float width")
 
 
-def _count_block_frames(buf: bytes, s: int, e: int, video_track: int) -> int:
+def _count_block_frames(block: Reader, video_track: int) -> int:
     """Frames in one (Simple)Block payload for ``video_track`` — the block
     header is a track-number VINT, a 2-byte timestamp, a flags byte; lacing
     (flags & 0x06) packs several frames into one block (lace count byte
     + 1), which an honest frame count must include."""
-    track, p = _read_vint(buf, s, e, keep_marker=False, allow_unknown=False)
-    if track != video_track:
+    if _vint(block, keep_marker=False, allow_unknown=False) != video_track:
         return 0
-    if p + 3 > e:
-        raise ValueError("ebml: truncated block header")
-    flags = buf[p + 2]
+    _timestamp, flags = block.unpack(">hB", "block header")
     if flags & 0x06:
-        if p + 4 > e:
-            raise ValueError("ebml: truncated lace count")
-        return buf[p + 3] + 1
+        return block.u8("lace count") + 1
     return 1
 
 
@@ -201,16 +184,15 @@ def parse_webm(raw: bytes) -> Dict[str, Any]:
     lacing-aware. Raises ``ValueError`` on corrupt structures."""
     if raw is None or len(raw) < 8 or not is_webm(raw):
         raise ValueError("ebml: not an EBML/Matroska payload")
-    buf = bytes(raw)
     brand = None
     segment = None
-    for eid, s, e in _iter_elements(buf, 0, len(buf)):
+    for eid, el in _elements(Reader(bytes(raw), "ebml")):
         if eid == 0x1A45DFA3:  # EBML header
-            for hid, hs, he in _iter_elements(buf, s, e):
+            for hid, h in _elements(el):
                 if hid == _DOCTYPE:
-                    brand = buf[hs:he].decode("latin-1").rstrip("\x00")
+                    brand = _text(h)
         elif eid == _SEGMENT:
-            segment = (s, e)
+            segment = el
     if segment is None:
         raise ValueError("ebml: no Segment element")
     out: Dict[str, Any] = {
@@ -223,15 +205,15 @@ def parse_webm(raw: bytes) -> Dict[str, Any]:
     video_track = None
     default_dur_ns = None
     clusters = []
-    for eid, s, e in _segment_children(buf, *segment):
+    for eid, el in _segment_children(segment):
         if eid == _INFO:
-            for iid, is_, ie in _iter_elements(buf, s, e):
+            for iid, field in _elements(el):
                 if iid == _TIMESTAMP_SCALE:
-                    timescale = _uint(buf, is_, ie)
+                    timescale = _uint(field)
                 elif iid == _DURATION:
-                    duration_ticks = _float(buf, is_, ie)
+                    duration_ticks = _float(field)
         elif eid == _TRACKS:
-            for tid, ts, te in _iter_elements(buf, s, e):
+            for tid, entry in _elements(el):
                 if tid != _TRACK_ENTRY:
                     continue
                 out["n_tracks"] += 1
@@ -239,22 +221,22 @@ def parse_webm(raw: bytes) -> Dict[str, Any]:
                 codec = None
                 ddur = None
                 dims = (None, None)
-                for fid, fs, fe in _iter_elements(buf, ts, te):
+                for fid, field in _elements(entry):
                     if fid == _TRACK_NUMBER:
-                        tnum = _uint(buf, fs, fe)
+                        tnum = _uint(field)
                     elif fid == _TRACK_TYPE:
-                        ttype = _uint(buf, fs, fe)
+                        ttype = _uint(field)
                     elif fid == _CODEC_ID:
-                        codec = buf[fs:fe].decode("latin-1").rstrip("\x00")
+                        codec = _text(field)
                     elif fid == _DEFAULT_DURATION:
-                        ddur = _uint(buf, fs, fe)
+                        ddur = _uint(field)
                     elif fid == _VIDEO:
                         w = h = None
-                        for vid_, vs, ve in _iter_elements(buf, fs, fe):
+                        for vid_, v in _elements(field):
                             if vid_ == _PIXEL_WIDTH:
-                                w = _uint(buf, vs, ve)
+                                w = _uint(v)
                             elif vid_ == _PIXEL_HEIGHT:
-                                h = _uint(buf, vs, ve)
+                                h = _uint(v)
                         dims = (w, h)
                 if ttype == 2:
                     out["has_audio"] = True
@@ -264,18 +246,18 @@ def parse_webm(raw: bytes) -> Dict[str, Any]:
                     video_track = tnum
                     default_dur_ns = ddur
         elif eid == _CLUSTER:
-            clusters.append((s, e))
+            clusters.append(el)
     if out["codec"] is None:
         raise ValueError("ebml: no video track")
     n = 0
-    for cs, ce in clusters:
-        for bid, bs, be in _iter_elements(buf, cs, ce):
+    for cluster in clusters:
+        for bid, block in _elements(cluster):
             if bid == _SIMPLE_BLOCK:
-                n += _count_block_frames(buf, bs, be, video_track)
+                n += _count_block_frames(block, video_track)
             elif bid == _BLOCK_GROUP:
-                for gid, gs, ge in _iter_elements(buf, bs, be):
+                for gid, g in _elements(block):
                     if gid == _BLOCK:
-                        n += _count_block_frames(buf, gs, ge, video_track)
+                        n += _count_block_frames(g, video_track)
     out["n_frames"] = n
     if duration_ticks is not None and timescale > 0:
         out["duration_ms"] = duration_ticks * timescale / 1e6

@@ -42,6 +42,8 @@ from typing import Optional, Tuple
 
 import numpy as np
 
+from .binread import Reader
+
 # ---------------------------------------------------------------------------
 # CRCs (poly 0x07 for the frame-header CRC-8, 0x8005 for the frame CRC-16)
 # ---------------------------------------------------------------------------
@@ -200,46 +202,37 @@ _SS_CODES = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 def parse_flac_meta(b) -> Tuple[int, str, int]:
     """Header-only (sample_rate, "flac", total_samples) from STREAMINFO —
     the census path, no PCM decode."""
-    info = _parse_streaminfo(np.frombuffer(bytes(b), np.uint8))[0]
+    info = _parse_streaminfo(bytes(b))[0]
     return info["sr"], "flac", info["total_samples"]
 
 
-def _parse_streaminfo(data: np.ndarray):
-    raw = data.tobytes()
-    if raw[:4] != b"fLaC":
+def _parse_streaminfo(raw: bytes):
+    """Metadata-block walk -> (STREAMINFO fields, byte offset of frame 0)."""
+    r = Reader(raw, "flac")
+    if r.peek(4) != b"fLaC":
         raise ValueError("flac: bad magic")
-    pos = 4
+    r.skip(4)
     info = None
-    while True:
-        if pos + 4 > len(raw):
-            raise ValueError("flac: truncated metadata")
-        hdr = raw[pos]
+    last = False
+    while not last:
+        hdr = r.u8("metadata block header")
         last = bool(hdr & 0x80)
-        btype = hdr & 0x7F
-        length = int.from_bytes(raw[pos + 1:pos + 4], "big")
-        body = raw[pos + 4:pos + 4 + length]
-        if len(body) < length:
-            raise ValueError("flac: truncated metadata block")
-        if btype == 0:
-            if length < 34:
+        block = r.sub(r.uint(3, what="metadata block size"), "metadata block")
+        if hdr & 0x7F == 0:
+            if block.left() < 34:
                 raise ValueError("flac: STREAMINFO too short")
-            (min_bs, max_bs) = struct.unpack(">HH", body[:4])
-            packed = int.from_bytes(body[10:18], "big")
-            sr = (packed >> 44) & 0xFFFFF
-            channels = ((packed >> 41) & 0x7) + 1
-            bps = ((packed >> 36) & 0x1F) + 1
-            total = packed & 0xFFFFFFFFF
-            info = {"min_bs": min_bs, "max_bs": max_bs, "sr": sr,
-                    "channels": channels, "bps": bps, "total_samples": total,
-                    "md5": body[18:34]}
-        pos += 4 + length
-        if last:
-            break
+            min_bs, max_bs, _frame_sizes, packed = block.unpack(">HH6sQ")
+            info = {"min_bs": min_bs, "max_bs": max_bs,
+                    "sr": (packed >> 44) & 0xFFFFF,
+                    "channels": ((packed >> 41) & 0x7) + 1,
+                    "bps": ((packed >> 36) & 0x1F) + 1,
+                    "total_samples": packed & 0xFFFFFFFFF,
+                    "md5": block.take(16)}
     if info is None:
         raise ValueError("flac: missing STREAMINFO")
     if info["sr"] == 0:
         raise ValueError("flac: invalid sample rate 0")
-    return info, pos
+    return info, r.pos
 
 
 def _decode_subframe(br: _Bits, n: int, bps: int) -> np.ndarray:
@@ -356,8 +349,9 @@ def decode_flac(b, verify_md5: bool = False) -> Tuple[int, str, np.ndarray]:
     `verify_md5=True` additionally checks the STREAMINFO MD5 over the raw
     decoded stream (pre-downmix), the codec's own lossless oracle.
     """
-    data = np.frombuffer(bytes(b), np.uint8)
-    info, pos = _parse_streaminfo(data)
+    raw = bytes(b)
+    data = np.frombuffer(raw, np.uint8)
+    info, pos = _parse_streaminfo(raw)
     br = _Bits(data)
     br.pos = pos * 8
     sr = info["sr"]

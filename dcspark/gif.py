@@ -29,6 +29,8 @@ from typing import List, Optional, Tuple
 
 import numpy as np
 
+from .binread import Reader
+
 _GIF87 = b"GIF87a"
 _GIF89 = b"GIF89a"
 
@@ -36,34 +38,13 @@ _GIF89 = b"GIF89a"
 _INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-class _Reader:
-    __slots__ = ("raw", "pos")
-
-    def __init__(self, raw: bytes, pos: int):
-        self.raw = raw
-        self.pos = pos
-
-    def take(self, n: int) -> bytes:
-        b = self.raw[self.pos:self.pos + n]
-        if len(b) != n:
-            raise ValueError("truncated GIF")
-        self.pos += n
-        return b
-
-    def u8(self) -> int:
-        return self.take(1)[0]
-
-    def u16(self) -> int:
-        b = self.take(2)
-        return b[0] | (b[1] << 8)
-
-    def sub_blocks(self) -> bytes:
-        out = bytearray()
-        while True:
-            n = self.u8()
-            if n == 0:
-                return bytes(out)
-            out += self.take(n)
+def _sub_blocks(r: Reader) -> bytes:
+    out = bytearray()
+    while True:
+        n = r.u8("sub-block size")
+        if n == 0:
+            return bytes(out)
+        out += r.take(n, "sub-block")
 
 
 def _lzw_decode(min_code_size: int, data: bytes, n_pixels: int) -> np.ndarray:
@@ -139,18 +120,18 @@ def decode_gif(raw: bytes) -> Tuple[float, List[np.ndarray]]:
     underlying canvas (first frame: the GIF background color)."""
     if raw is None or len(raw) < 13 or bytes(raw[:6]) not in (_GIF87, _GIF89):
         raise ValueError("not a GIF payload")
-    r = _Reader(bytes(raw), 6)
-    width, height = r.u16(), r.u16()
+    r = Reader(bytes(raw), "gif", 6)
+    width, height, flags, bg_index, _aspect = r.unpack("<HHBBB",
+                                                       "logical screen")
     if width == 0 or height == 0:
         raise ValueError("empty GIF logical screen")
-    flags = r.u8()
-    bg_index = r.u8()
-    r.u8()  # pixel aspect ratio
     gct = None
     if flags & 0x80:
         n = 2 << (flags & 0x07)
-        gct = np.frombuffer(r.take(3 * n), dtype=np.uint8).reshape(n, 3)
+        gct = np.frombuffer(r.take(3 * n, "global color table"),
+                            dtype=np.uint8).reshape(n, 3)
 
+    r.claim(width * height * 3, "logical screen")
     canvas = np.zeros((height, width, 3), dtype=np.uint8)
     if gct is not None and bg_index < len(gct):
         canvas[:] = gct[bg_index]
@@ -165,33 +146,32 @@ def decode_gif(raw: bytes) -> Tuple[float, List[np.ndarray]]:
             break
         if block == 0x21:  # extension
             label = r.u8()
-            data = r.sub_blocks()
+            data = _sub_blocks(r)
             if label == 0xF9 and len(data) >= 4:  # graphic control
                 delay = data[1] | (data[2] << 8)
                 transparent = data[3] if data[0] & 0x01 else None
             continue
         if block != 0x2C:
             raise ValueError(f"unexpected GIF block 0x{block:02x}")
-        left, top = r.u16(), r.u16()
-        fw, fh = r.u16(), r.u16()
-        iflags = r.u8()
+        left, top, fw, fh, iflags = r.unpack("<HHHHB", "image descriptor")
+        if left + fw > width or top + fh > height:
+            raise ValueError("GIF frame exceeds logical screen")
         lct = None
         if iflags & 0x80:
             n = 2 << (iflags & 0x07)
-            lct = np.frombuffer(r.take(3 * n), dtype=np.uint8).reshape(n, 3)
+            lct = np.frombuffer(r.take(3 * n, "local color table"),
+                                dtype=np.uint8).reshape(n, 3)
         palette = lct if lct is not None else gct
         if palette is None:
             raise ValueError("GIF image without a color table")
         min_code = r.u8()
         if not 2 <= min_code <= 11:
             raise ValueError("invalid GIF LZW minimum code size")
-        idx = _lzw_decode(min_code, r.sub_blocks(), fw * fh)
+        idx = _lzw_decode(min_code, _sub_blocks(r), fw * fh)
         if iflags & 0x40:
             idx = _deinterlace(idx, fh, fw)
         if idx.max(initial=0) >= len(palette):
             raise ValueError("GIF index outside color table")
-        if left + fw > width or top + fh > height:
-            raise ValueError("GIF frame exceeds logical screen")
         rect = palette[idx].reshape(fh, fw, 3)
         region = canvas[top:top + fh, left:left + fw]
         if transparent is not None:
@@ -199,6 +179,7 @@ def decode_gif(raw: bytes) -> Tuple[float, List[np.ndarray]]:
             region[:] = np.where(mask, rect, region)
         else:
             region[:] = rect
+        r.claim(canvas.nbytes, "frame")
         frames.append(canvas.copy())
         delays.append(delay)
         transparent, delay = None, 0

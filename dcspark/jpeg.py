@@ -25,6 +25,8 @@ from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 
+from .binread import Reader
+
 # ---------------------------------------------------------------------------
 # shared tables
 # ---------------------------------------------------------------------------
@@ -254,104 +256,89 @@ def decode_jpeg(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
     """
     if raw is None or len(raw) < 4 or raw[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG stream (missing SOI)")
-    try:
-        return _decode_markers(raw)
-    except ValueError:
-        raise
-    except (IndexError, struct.error, ZeroDivisionError, StopIteration) as e:
-        # truncated segment bodies / degenerate header fields — must surface
-        # as ValueError so the Spark passes record a per-row decode_error
-        # (StopIteration inside mapInArrow would kill the task via PEP 479)
-        raise ValueError(f"truncated or malformed JPEG: {e}") from e
+    return _decode_markers(Reader(bytes(raw), "jpeg", 2))
 
 
-def _decode_markers(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
+def _decode_markers(r: Reader) -> Tuple[int, int, int, np.ndarray]:
     qtables: Dict[int, np.ndarray] = {}
     htables: Dict[Tuple[int, int], Dict[Tuple[int, int], int]] = {}
     comps: List[_Component] = []
     height = width = 0
     restart_interval = 0
-    pos = 2
-    n = len(raw)
-    while pos + 4 <= n:
-        if raw[pos] != 0xFF:
+    while r.left() >= 4:
+        if r.u8() != 0xFF:
             raise ValueError("marker expected")
-        marker = raw[pos + 1]
+        marker = r.u8()
         if marker == 0xD8:
-            pos += 2
             continue
-        (seglen,) = struct.unpack_from(">H", raw, pos + 2)
-        seg = raw[pos + 4:pos + 2 + seglen]
+        seg = r.sub(r.be16("segment length") - 2, f"marker 0x{marker:02X}")
         if marker == 0xDB:  # DQT
-            off = 0
-            while off < len(seg):
-                pq, tq = seg[off] >> 4, seg[off] & 0xF
-                if pq != 0:
+            while seg.left():
+                pq_tq = seg.u8()
+                if pq_tq >> 4:
                     raise ValueError("16-bit quant tables unsupported (baseline)")
-                tbl = np.frombuffer(seg, np.uint8, 64, off + 1).astype(np.float64)
                 q = np.zeros(64)
-                q[ZIGZAG] = tbl  # stored in zigzag order
-                qtables[tq] = q.reshape(8, 8)
-                off += 65
+                q[ZIGZAG] = np.frombuffer(seg.take(64, "quant table"),
+                                          np.uint8)  # stored in zigzag order
+                qtables[pq_tq & 0xF] = q.reshape(8, 8)
         elif marker == 0xC4:  # DHT
-            off = 0
-            while off < len(seg):
-                tc, th = seg[off] >> 4, seg[off] & 0xF
-                bits = list(seg[off + 1:off + 17])
-                nv = sum(bits)
-                vals = list(seg[off + 17:off + 17 + nv])
-                htables[(tc, th)] = _huff_decode_map(bits, vals)
-                off += 17 + nv
+            while seg.left():
+                tc_th = seg.u8()
+                bits = list(seg.take(16, "huffman code counts"))
+                vals = list(seg.take(sum(bits), "huffman symbols"))
+                htables[(tc_th >> 4, tc_th & 0xF)] = _huff_decode_map(bits, vals)
         elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 baseline
-            precision = seg[0]
+            precision, height, width, nc = seg.unpack(">BHHB", "frame header")
             if precision != 8:
                 raise ValueError(f"{precision}-bit precision unsupported")
-            height, width = struct.unpack_from(">HH", seg, 1)
-            nc = seg[5]
             comps = []
-            for ci in range(nc):
-                cid, hv, tq = seg[6 + 3 * ci], seg[7 + 3 * ci], seg[8 + 3 * ci]
+            for _ in range(nc):
+                cid, hv, tq = seg.unpack("3B", "frame component")
                 comps.append(_Component(cid, hv >> 4, hv & 0xF, tq))
         elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
                         0xCD, 0xCE, 0xCF):
             raise ValueError("only baseline sequential JPEG is supported")
         elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack_from(">H", seg, 0)
+            restart_interval = seg.be16()
         elif marker == 0xDA:  # SOS — entropy data follows
             if any(c.h < 1 or c.v < 1 for c in comps):
                 raise ValueError("SOF sampling factor of zero")
-            ns = seg[0]
             order = []
-            for si in range(ns):
-                cs, tt = seg[1 + 2 * si], seg[2 + 2 * si]
+            for _ in range(seg.u8("scan component count")):
+                cs, tt = seg.unpack("2B", "scan component")
                 comp = next((c for c in comps if c.cid == cs), None)
                 if comp is None:
                     raise ValueError(f"SOS references unknown component {cs}")
                 comp.td, comp.ta = tt >> 4, tt & 0xF
                 order.append(comp)
-            pixels = _decode_scan(raw, pos + 2 + seglen, order, comps,
-                                  qtables, htables, height, width,
-                                  restart_interval)
+            pixels = _decode_scan(r, order, comps, qtables, htables, height,
+                                  width, restart_interval)
             if len(comps) == 1:
                 return height, width, 1, pixels[..., 0]
             return height, width, 3, pixels
         elif marker == 0xD9:
             break
-        pos += 2 + seglen
     raise ValueError("no SOS scan found")
 
 
-def _decode_scan(raw, pos, order, comps, qtables, htables, height, width,
+def _decode_scan(r: Reader, order, comps, qtables, htables, height, width,
                  restart_interval) -> np.ndarray:
+    """Decode the scan whose entropy-coded data starts at ``r``'s cursor."""
     hmax = max(c.h for c in comps)
     vmax = max(c.v for c in comps)
     mcus_x = -(-width // (8 * hmax))
     mcus_y = -(-height // (8 * vmax))
+    # every block codes at least a DC and an EOB symbol (2 bits), so the
+    # declared raster must fit the bytes left before anything is allocated
+    r.count(mcus_x * mcus_y * sum(c.h * c.v for c in order), 1 / 4,
+            "scan block")
+    r.claim(mcus_x * mcus_y * sum(c.h * c.v for c in comps) * 64 * 8,
+            "coefficient blocks")
     for c in comps:
         c.bw = mcus_x * c.h
         c.bh = mcus_y * c.v
         c.blocks = np.zeros((c.bh * c.bw, 64))
-    br = _BitReader(raw, pos)
+    br = _BitReader(r.buf, r.pos)
     mcu_i = 0
     for my in range(mcus_y):
         for mx in range(mcus_x):

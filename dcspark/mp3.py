@@ -1,4 +1,4 @@
-"""MPEG audio (MP3) frame-header metadata: stdlib walk, no decode.
+"""MPEG audio (MP3) frame-header metadata: bounded frame walk, no decode.
 
 The audio analog of the video container parsers (dcspark/mp4.py,
 dcspark/ebml.py): real-world audio archives are full of MP3/MPEG-audio
@@ -28,6 +28,8 @@ frame payloads, NOT decodable audio) for fixtures.
 from __future__ import annotations
 
 from typing import Any, Dict, Tuple
+
+from .binread import Reader
 
 __all__ = ["parse_mp3_meta", "mp3_meta_triple", "mp3_bytes", "is_mp3"]
 
@@ -96,27 +98,16 @@ def _frame_info(h0: int, h1: int, h2: int) -> Tuple[int, int, int, int, int, int
     return version, layer, bitrate, sr, frame_len, samples
 
 
-def _skip_id3v2(buf: bytes, p: int) -> int:
-    if buf[p:p + 3] != b"ID3":
-        return p
-    if p + 10 > len(buf):
-        raise ValueError("mp3: truncated ID3v2 header")
-    flags = buf[p + 5]
-    size = 0
-    for i in range(6, 10):  # syncsafe 28-bit size
-        b = buf[p + i]
-        if b & 0x80:
-            raise ValueError("mp3: invalid ID3v2 syncsafe size")
-        size = (size << 7) | b
-    end = p + 10 + size
-    if flags & 0x10:
-        # ID3v2.4 footer flag: a 10-byte "3DI" footer follows the body
-        # (review finding: landing on it raised 'lost frame sync' on a
-        # structurally valid tagged stream)
-        end += 10
-    if end > len(buf):
-        raise ValueError("mp3: ID3v2 size exceeds buffer")
-    return end
+def _skip_id3v2(r: Reader) -> None:
+    """Move the cursor past an ID3v2 tag (syncsafe 28-bit size)."""
+    _id3, _version, flags, *size = r.unpack(">3sHB4B", "ID3v2 header")
+    if any(b & 0x80 for b in size):
+        r.fail("invalid ID3v2 syncsafe size")
+    # ID3v2.4 footer flag: a 10-byte "3DI" footer follows the body (review
+    # finding: landing on it raised 'lost frame sync' on a structurally
+    # valid tagged stream)
+    r.skip((size[0] << 21 | size[1] << 14 | size[2] << 7 | size[3])
+           + (10 if flags & 0x10 else 0), "ID3v2 tag")
 
 
 def parse_mp3_meta(raw: bytes) -> Dict[str, Any]:
@@ -131,34 +122,31 @@ def parse_mp3_meta(raw: bytes) -> Dict[str, Any]:
     are the only tolerated non-frame bytes."""
     if raw is None or len(raw) < 4:
         raise ValueError("mp3: empty or truncated payload")
-    buf = bytes(raw)
-    p = 0
-    has_id3v2 = buf[:3] == b"ID3"
-    p = _skip_id3v2(buf, p)
+    r = Reader(bytes(raw), "mp3")
+    has_id3v2 = r.peek(3) == b"ID3"
+    if has_id3v2:
+        _skip_id3v2(r)
     sr = version = layer = mode = None
     n_frames = n_samples = 0
     bitrate_sum = 0
     has_id3v1 = False
-    while p < len(buf):
-        if buf[p:p + 3] == b"TAG" and len(buf) - p == 128:
+    while r.left():
+        if r.left() == 128 and r.peek(3) == b"TAG":
             has_id3v1 = True
             break
-        if len(buf) - p < 4:
-            if n_frames and all(b == 0 for b in buf[p:]):
-                break  # <4 trailing zero pad bytes
-            raise ValueError("mp3: truncated frame header")
-        v, l, br, fsr, flen, fsamples = _frame_info(buf[p], buf[p + 1], buf[p + 2])
+        if r.left() < 4 and n_frames and not any(r.peek(4)):
+            break  # <4 trailing zero pad bytes
+        h0, h1, h2, h3 = r.unpack("4B", "frame header")
+        v, l, br, fsr, flen, fsamples = _frame_info(h0, h1, h2)
         if sr is None:
             sr, version, layer = fsr, v, l
-            mode = _CHANNEL_MODES[(buf[p + 3] >> 6) & 0x03]
+            mode = _CHANNEL_MODES[(h3 >> 6) & 0x03]
         elif (fsr, v, l) != (sr, version, layer):
             raise ValueError("mp3: samplerate/version/layer changed mid-stream")
-        if p + flen > len(buf):
-            raise ValueError("mp3: truncated final frame")
+        r.skip(flen - 4, "final frame")
         n_frames += 1
         n_samples += fsamples
         bitrate_sum += br
-        p += flen
     if n_frames == 0:
         raise ValueError("mp3: no MPEG audio frames")
     return {

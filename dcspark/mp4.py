@@ -1,11 +1,11 @@
-"""MP4 / ISO-BMFF container metadata: stdlib-struct box walk, no decode.
+"""MP4 / ISO-BMFF container metadata: bounded box walk, no decode.
 
 Most real-world video is H.264/H.265-in-MP4 — codecs whose inter-frame
 decode needs external libraries (the documented pluggable seam in
 ``multimodal.real_video_decoder``). But the CONTAINER metadata a
 ``type: video`` contract rule checks (dims / fps / frame count / duration)
 lives entirely in the ``moov`` box tree, readable with nothing but
-``struct``:
+a bounded byte cursor (``dcspark.binread``):
 
     moov
       mvhd                  movie timescale + duration
@@ -36,15 +36,12 @@ reference repo (datacontract-cli) decodes no media at all.
 from __future__ import annotations
 
 import struct
-from typing import Any, Dict, Iterator, Optional, Tuple
+from typing import Any, Dict, Iterator, List, Optional, Tuple
+
+from .binread import Reader
 
 __all__ = ["parse_mp4", "parse_mp4_audio", "mp4_audio_meta_triple",
            "mp4_bytes", "m4a_bytes", "mp4_fragmented_bytes", "is_mp4"]
-
-# boxes that are pure containers: children start at the payload's first byte
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts",
-               b"mvex", b"udta"}
-
 
 def is_mp4(raw: bytes) -> bool:
     """Cheap sniff: an ISO-BMFF file starts with a box whose type is ftyp
@@ -56,231 +53,134 @@ def is_mp4(raw: bytes) -> bool:
                                     b"wide"))
 
 
-def _iter_boxes(buf: bytes, start: int, end: int) -> Iterator[Tuple[bytes, int, int]]:
-    """Yield (type, payload_start, payload_end) for each box in [start, end).
+def _boxes(scope: Reader) -> Iterator[Tuple[bytes, Reader]]:
+    """(type, payload scope) for each box in ``scope``, walked on a fork so
+    the scope can be walked again.
 
-    Validates sizes strictly: a box shorter than its own header, or running
-    past its parent, is corrupt — raise rather than mis-walk (a forged size
+    Sizes are strict: a box shorter than its own header, or running past
+    its parent, is corrupt — raise rather than mis-walk (a forged size
     would otherwise alias unrelated bytes into box payloads)."""
-    p = start
-    while p < end:
-        if p + 8 > end:
-            raise ValueError("mp4: truncated box header")
-        size = struct.unpack_from(">I", buf, p)[0]
-        btype = bytes(buf[p + 4:p + 8])
-        hdr = 8
+    r = scope.fork()
+    while r.left():
+        start = r.pos
+        size, btype = r.unpack(">I4s", "box header")
         if size == 1:  # 64-bit largesize
-            if p + 16 > end:
-                raise ValueError("mp4: truncated largesize box")
-            size = struct.unpack_from(">Q", buf, p + 8)[0]
-            hdr = 16
+            size = r.be64("largesize")
         elif size == 0:  # box extends to end of enclosing scope
-            size = end - p
-        if size < hdr or p + size > end:
-            raise ValueError(f"mp4: box {btype!r} size {size} exceeds scope")
-        yield btype, p + hdr, p + size
-        p += size
+            size = r.end - start
+        yield btype, r.sub(size - (r.pos - start), btype.decode("latin-1"))
 
 
-def _find(buf: bytes, start: int, end: int, btype: bytes) -> Optional[Tuple[int, int]]:
-    for t, s, e in _iter_boxes(buf, start, end):
+def _iter_boxes(buf: bytes, start: int, end: int) -> Iterator[Tuple[bytes, int, int]]:
+    """(type, payload_start, payload_end) per box of ``buf[start:end]``."""
+    for t, box in _boxes(Reader(buf, "mp4", start, end)):
+        yield t, box.pos, box.end
+
+
+def _find(scope: Reader, btype: bytes) -> Optional[Reader]:
+    for t, box in _boxes(scope):
         if t == btype:
-            return s, e
+            return box
     return None
 
 
-def _fullbox(buf: bytes, s: int, e: int) -> Tuple[int, int]:
-    """(version, payload offset past the version/flags word)."""
-    if s + 4 > e:
-        raise ValueError("mp4: truncated full box")
-    return buf[s], s + 4
+def _need(scope: Reader, btype: bytes, missing: str) -> Reader:
+    box = _find(scope, btype)
+    if box is None:
+        raise ValueError(f"mp4: {missing}")
+    return box
+
+
+def _version_flags(box: Reader) -> Tuple[int, int]:
+    """(version, flags) of a full box; the cursor moves past them."""
+    vf = box.be32("full box header")
+    return vf >> 24, vf & 0xFFFFFF
+
+
+def _timing(box: Reader) -> Tuple[int, int]:
+    """(timescale, duration) of an mvhd or mdhd box (one layout)."""
+    version, _ = _version_flags(box)
+    timescale, duration = box.unpack(">16xIQ" if version == 1 else ">8xII")
+    if timescale == 0:
+        box.fail("timescale is zero")
+    return timescale, duration
 
 
 def _parse_mvhd(buf: bytes, s: int, e: int) -> Tuple[int, int]:
-    v, p = _fullbox(buf, s, e)
-    if v == 1:
-        if p + 28 > e:
-            raise ValueError("mp4: truncated mvhd v1")
-        timescale = struct.unpack_from(">I", buf, p + 16)[0]
-        duration = struct.unpack_from(">Q", buf, p + 20)[0]
-    else:
-        if p + 16 > e:
-            raise ValueError("mp4: truncated mvhd")
-        timescale = struct.unpack_from(">I", buf, p + 8)[0]
-        duration = struct.unpack_from(">I", buf, p + 12)[0]
-    if timescale == 0:
-        raise ValueError("mp4: mvhd timescale is zero")
-    return timescale, duration
+    return _timing(Reader(buf, "mp4", s, e, "mvhd"))
 
 
-def _parse_mdhd(buf: bytes, s: int, e: int) -> Tuple[int, int]:
-    v, p = _fullbox(buf, s, e)
-    if v == 1:
-        if p + 28 > e:
-            raise ValueError("mp4: truncated mdhd v1")
-        timescale = struct.unpack_from(">I", buf, p + 16)[0]
-        duration = struct.unpack_from(">Q", buf, p + 20)[0]
-    else:
-        if p + 16 > e:
-            raise ValueError("mp4: truncated mdhd")
-        timescale = struct.unpack_from(">I", buf, p + 8)[0]
-        duration = struct.unpack_from(">I", buf, p + 12)[0]
-    if timescale == 0:
-        raise ValueError("mp4: mdhd timescale is zero")
-    return timescale, duration
-
-
-def _parse_tkhd(buf: bytes, s: int, e: int) -> Tuple[float, float]:
-    v, p = _fullbox(buf, s, e)
-    # width/height are the LAST two 16.16 fixed-point words of the box
-    if e - 8 < p:
-        raise ValueError("mp4: truncated tkhd")
-    w = struct.unpack_from(">I", buf, e - 8)[0] / 65536.0
-    h = struct.unpack_from(">I", buf, e - 4)[0] / 65536.0
-    return w, h
-
-
-def _parse_hdlr(buf: bytes, s: int, e: int) -> bytes:
-    _, p = _fullbox(buf, s, e)
-    if p + 8 > e:
-        raise ValueError("mp4: truncated hdlr")
-    return bytes(buf[p + 4:p + 8])
-
-
-def _parse_stsd(buf: bytes, s: int, e: int) -> Tuple[str, Optional[int], Optional[int]]:
-    """First sample entry: (codec fourcc, coded width, coded height).
-
-    A VisualSampleEntry carries integer coded dims at fixed offsets
-    (6 reserved + 2 data_ref_index + 16 predefined = byte 24/26 of the
-    entry payload); audio entries return (fourcc, None, None)."""
-    _, p = _fullbox(buf, s, e)
-    if p + 8 > e:
-        raise ValueError("mp4: truncated stsd")
-    n = struct.unpack_from(">I", buf, p)[0]
-    if n == 0:
-        raise ValueError("mp4: stsd has no sample entries")
-    entry_s = p + 4
-    if entry_s + 8 > e:
-        raise ValueError("mp4: truncated stsd entry")
-    esize = struct.unpack_from(">I", buf, entry_s)[0]
-    fourcc = bytes(buf[entry_s + 4:entry_s + 8]).decode("latin-1").strip()
-    if esize < 8 or entry_s + esize > e:
-        raise ValueError("mp4: stsd entry size exceeds box")
-    body = entry_s + 8
-    # VisualSampleEntry is >= 78 bytes; width/height at body+24 / body+26
-    if esize >= 78 and body + 28 <= e:
-        w = struct.unpack_from(">H", buf, body + 24)[0]
-        h = struct.unpack_from(">H", buf, body + 26)[0]
-        if w and h:
-            return fourcc, w, h
-    return fourcc, None, None
-
-
-def _parse_stts(buf: bytes, s: int, e: int) -> Tuple[int, int]:
+def _stts(box: Reader) -> Tuple[int, int]:
     """(total sample count, total duration in media-timescale units)."""
-    _, p = _fullbox(buf, s, e)
-    if p + 4 > e:
-        raise ValueError("mp4: truncated stts")
-    n = struct.unpack_from(">I", buf, p)[0]
-    if p + 4 + 8 * n > e:
-        raise ValueError("mp4: stts entry count exceeds box")
-    total_samples = total_time = 0
-    for i in range(n):
-        cnt, delta = struct.unpack_from(">II", buf, p + 4 + 8 * i)
-        total_samples += cnt
-        total_time += cnt * delta
-    return total_samples, total_time
+    _version_flags(box)
+    samples = time = 0
+    for _ in range(box.count(box.be32(), 8, "stts entry")):
+        cnt, delta = box.unpack(">II")
+        samples += cnt
+        time += cnt * delta
+    return samples, time
 
 
-def _parse_stsz(buf: bytes, s: int, e: int) -> int:
-    _, p = _fullbox(buf, s, e)
-    if p + 8 > e:
-        raise ValueError("mp4: truncated stsz")
-    return struct.unpack_from(">I", buf, p + 4)[0]
-
-
-def _parse_trex_defaults(buf: bytes, moov_s: int, moov_e: int) -> Dict[int, int]:
+def _trex_defaults(moov: Reader) -> Dict[int, int]:
     """mvex/trex per-track default_sample_duration (fragmented MP4)."""
     out: Dict[int, int] = {}
-    mvex = _find(buf, moov_s, moov_e, b"mvex")
-    if mvex is None:
-        return out
-    for t, s, e in _iter_boxes(buf, *mvex):
+    mvex = _find(moov, b"mvex")
+    for t, box in _boxes(mvex) if mvex is not None else ():
         if t == b"trex":
-            _, p = _fullbox(buf, s, e)
-            if p + 16 > e:
-                raise ValueError("mp4: truncated trex")
-            track_id = struct.unpack_from(">I", buf, p)[0]
-            out[track_id] = struct.unpack_from(">I", buf, p + 8)[0]
+            _version_flags(box)
+            track_id, _index, out[track_id], _size = box.unpack(">IIII")
     return out
 
 
-def _parse_tkhd_track_id(buf: bytes, s: int, e: int) -> int:
-    v, p = _fullbox(buf, s, e)
-    off = p + (16 if v == 1 else 8)
-    if off + 4 > e:
-        raise ValueError("mp4: truncated tkhd")
-    return struct.unpack_from(">I", buf, off)[0]
-
-
-def _parse_traf(buf: bytes, s: int, e: int,
-                trex_dur: Dict[int, int]) -> Tuple[int, int, int]:
+def _traf(traf: Reader, trex_dur: Dict[int, int]) -> Tuple[int, int, int]:
     """One traf -> (track_id, sample_count, total_duration).
 
     tfhd's optional fields are flag-gated at fixed widths; trun carries
     per-sample durations only when flag 0x100 is set, else the tfhd default
     (flag 0x08), else the trex default applies (ISO 14496-12 §8.8)."""
-    tfhd = _find(buf, s, e, b"tfhd")
-    if tfhd is None:
-        raise ValueError("mp4: traf without tfhd")
-    ts, te = tfhd
-    if ts + 8 > te:
-        raise ValueError("mp4: truncated tfhd")
-    v_flags = struct.unpack_from(">I", buf, ts)[0]
-    flags = v_flags & 0xFFFFFF
-    p = ts + 4
-    track_id = struct.unpack_from(">I", buf, p)[0]
-    p += 4
-    if flags & 0x01:
-        p += 8   # base-data-offset
-    if flags & 0x02:
-        p += 4   # sample-description-index
-    default_dur = None
-    if flags & 0x08:
-        if p + 4 > te:
-            raise ValueError("mp4: truncated tfhd default duration")
-        default_dur = struct.unpack_from(">I", buf, p)[0]
-    if default_dur is None:
-        default_dur = trex_dur.get(track_id, 0)
+    tfhd = _need(traf, b"tfhd", "traf without tfhd")
+    _, flags = _version_flags(tfhd)
+    track_id = tfhd.be32()
+    # base-data-offset, sample-description-index
+    tfhd.skip((8 if flags & 0x01 else 0) + (4 if flags & 0x02 else 0))
+    default_dur = tfhd.be32() if flags & 0x08 else trex_dur.get(track_id, 0)
     n = time = 0
-    for t2, s2, e2 in _iter_boxes(buf, s, e):
-        if t2 != b"trun":
+    for t, trun in _boxes(traf):
+        if t != b"trun":
             continue
-        if s2 + 8 > e2:
-            raise ValueError("mp4: truncated trun")
-        tv = struct.unpack_from(">I", buf, s2)[0]
-        tflags = tv & 0xFFFFFF
-        q = s2 + 4
-        cnt = struct.unpack_from(">I", buf, q)[0]
-        q += 4
-        if tflags & 0x01:
-            q += 4   # data-offset
-        if tflags & 0x04:
-            q += 4   # first-sample-flags
-        per = 0
-        per += 4 if tflags & 0x100 else 0   # sample-duration
-        per += 4 if tflags & 0x200 else 0   # sample-size
-        per += 4 if tflags & 0x400 else 0   # sample-flags
-        per += 4 if tflags & 0x800 else 0   # composition-time-offset
-        if q + cnt * per > e2:
-            raise ValueError("mp4: trun sample table exceeds box")
+        _, tflags = _version_flags(trun)
+        cnt = trun.be32()
+        # data-offset, first-sample-flags
+        trun.skip((4 if tflags & 0x01 else 0) + (4 if tflags & 0x04 else 0))
+        # per-sample duration / size / flags / composition-time-offset
+        per = 4 * sum(1 for bit in (0x100, 0x200, 0x400, 0x800)
+                      if tflags & bit)
+        trun.count(cnt, per, "trun sample")
         if tflags & 0x100:
-            for i in range(cnt):
-                time += struct.unpack_from(">I", buf, q + i * per)[0]
+            for _ in range(cnt):
+                time += trun.be32()
+                trun.skip(per - 4)
         else:
             time += cnt * default_dur
         n += cnt
     return track_id, n, time
+
+
+def _top(raw: bytes) -> Tuple[Optional[str], Reader, List[Reader]]:
+    """(ftyp brand, moov, moof boxes) of a payload's top level."""
+    if raw is None or len(raw) < 12:
+        raise ValueError("mp4: empty or truncated payload")
+    brand, moov, moofs = None, None, []
+    for t, box in _boxes(Reader(bytes(raw), "mp4")):
+        if t == b"ftyp" and box.left() >= 4:
+            brand = box.take(4).decode("latin-1")
+        elif t == b"moov":
+            moov = box
+        elif t == b"moof":
+            moofs.append(box)
+    if moov is None:
+        raise ValueError("mp4: no moov box")
+    return brand, moov, moofs
 
 
 def parse_mp4(raw: bytes) -> Dict[str, Any]:
@@ -292,25 +192,8 @@ def parse_mp4(raw: bytes) -> Dict[str, Any]:
     stsd VisualSampleEntry's integer coded dims over tkhd's display
     fixed-point. Raises ``ValueError`` on any corrupt box (forged size,
     truncated header, missing mandatory boxes)."""
-    if raw is None or len(raw) < 12:
-        raise ValueError("mp4: empty or truncated payload")
-    buf = bytes(raw)
-    brand = None
-    moov = None
-    moofs = []
-    for t, s, e in _iter_boxes(buf, 0, len(buf)):
-        if t == b"ftyp" and s + 4 <= e:
-            brand = buf[s:s + 4].decode("latin-1")
-        elif t == b"moov":
-            moov = (s, e)
-        elif t == b"moof":
-            moofs.append((s, e))
-    if moov is None:
-        raise ValueError("mp4: no moov box")
-    mvhd = _find(buf, *moov, b"mvhd")
-    if mvhd is None:
-        raise ValueError("mp4: no mvhd box")
-    mv_timescale, mv_duration = _parse_mvhd(buf, *mvhd)
+    brand, moov, moofs = _top(raw)
+    mv_timescale, mv_duration = _timing(_need(moov, b"mvhd", "no mvhd box"))
     out: Dict[str, Any] = {
         "brand": brand,
         "codec": None, "width": None, "height": None,
@@ -320,39 +203,38 @@ def parse_mp4(raw: bytes) -> Dict[str, Any]:
     }
     vid_track_id = None
     vid_timescale = None
-    for t, s, e in _iter_boxes(buf, *moov):
+    for t, trak in _boxes(moov):
         if t != b"trak":
             continue
         out["n_tracks"] += 1
-        tm = _trak_media(buf, s, e)
+        tm = _trak_media(trak)
         if tm is None:
             raise ValueError("mp4: trak without mdia")
         if tm["handler"] == b"soun":
             out["has_audio"] = True
         if tm["handler"] != b"vide" or out["codec"] is not None:
             continue
-        md_timescale = tm["timescale"]
-        stbl = tm["stbl"]
-        stsd = _find(buf, *stbl, b"stsd")
-        codec, w, h = _parse_stsd(buf, *stsd)
-        out["codec"] = codec
-        if (w is None or h is None) and tm["tkhd"] is not None:
-            fw, fh = _parse_tkhd(buf, *tm["tkhd"])
-            w, h = int(round(fw)) or None, int(round(fh)) or None
-        out["width"], out["height"] = w, h
-        stts = _find(buf, *stbl, b"stts")
-        stsz = _find(buf, *stbl, b"stsz")
+        # VisualSampleEntry (>= 78 bytes): integer coded dims at payload
+        # bytes 24/26; else tkhd's display dims
+        entry = tm["entry"]
+        w, h = entry.unpack(">24xHH") if entry.left() >= 70 else (0, 0)
+        if not (w and h):
+            w, h = tm["dims"]
+        out["codec"], out["width"], out["height"] = tm["fourcc"], w, h
+        stsz = _find(tm["stbl"], b"stsz")
         n_frames = None
         if stsz is not None:
-            n_frames = _parse_stsz(buf, *stsz)
+            _version_flags(stsz)
+            n_frames = stsz.unpack(">II")[1]
+        stts = _find(tm["stbl"], b"stts")
         if stts is not None:
-            n_samples, total_time = _parse_stts(buf, *stts)
+            n_samples, total_time = _stts(stts)
             if n_frames is None:
                 n_frames = n_samples
             if total_time > 0:
-                out["fps"] = md_timescale * n_samples / total_time
+                out["fps"] = tm["timescale"] * n_samples / total_time
         out["n_frames"] = n_frames
-        vid_timescale = md_timescale
+        vid_timescale = tm["timescale"]
         vid_track_id = tm["track_id"]
     if out["codec"] is None:
         raise ValueError("mp4: no video track")
@@ -360,7 +242,7 @@ def parse_mp4(raw: bytes) -> Dict[str, Any]:
     # samples live in moof/traf/trun fragments — accumulate the video
     # track's fragment sample counts + durations instead
     if moofs and not out["n_frames"]:
-        n, time = _fragment_totals(buf, moov, moofs, vid_track_id)
+        n, time = _fragment_totals(moov, moofs, vid_track_id)
         out["n_frames"] = n
         if time > 0 and vid_timescale:
             out["fps"] = vid_timescale * n / time
@@ -374,63 +256,62 @@ _AUDIO_CODEC_NAMES = {"mp4a": "aac", "alac": "alac", "ac-3": "ac3",
                       "ec-3": "eac3", "Opus": "opus", "fLaC": "flac"}
 
 
-def _trak_media(buf: bytes, s: int, e: int) -> Optional[Dict[str, Any]]:
+def _trak_media(trak: Reader) -> Optional[Dict[str, Any]]:
     """Shared trak walk for the audio AND video parsers: handler, mdhd
-    timescale/duration, stbl box bounds, the VALIDATED first stsd entry
-    (fourcc + entry payload bounds per the entry's own declared size — a
+    timescale/duration, stbl scope, the VALIDATED first stsd entry
+    (fourcc + entry payload scope per the entry's own declared size — a
     forged short entry must not alias the next entry's bytes into field
-    reads), and the tkhd track id. Returns None for a trak without mdia."""
-    mdia = _find(buf, s, e, b"mdia")
+    reads), and the tkhd track id and display dims. Returns None for a trak
+    without mdia."""
+    mdia = _find(trak, b"mdia")
     if mdia is None:
         return None
-    hdlr = _find(buf, *mdia, b"hdlr")
-    handler = _parse_hdlr(buf, *hdlr) if hdlr else b"????"
-    mdhd = _find(buf, *mdia, b"mdhd")
-    if mdhd is None:
-        raise ValueError("mp4: trak without mdhd")
-    timescale, md_duration = _parse_mdhd(buf, *mdhd)
-    minf = _find(buf, *mdia, b"minf")
-    stbl = _find(buf, *minf, b"stbl") if minf else None
+    hdlr = _find(mdia, b"hdlr")
+    handler = b"????"
+    if hdlr is not None:
+        _version_flags(hdlr)
+        (handler,) = hdlr.unpack(">4x4s")
+    timescale, md_duration = _timing(
+        _need(mdia, b"mdhd", "trak without mdhd"))
+    minf = _find(mdia, b"minf")
+    stbl = _find(minf, b"stbl") if minf is not None else None
     if stbl is None:
         raise ValueError("mp4: trak without stbl")
-    stsd = _find(buf, *stbl, b"stsd")
-    if stsd is None:
-        raise ValueError("mp4: trak without stsd")
-    _, p = _fullbox(buf, *stsd)
-    if p + 4 > stsd[1]:
-        raise ValueError("mp4: truncated stsd")
-    if struct.unpack_from(">I", buf, p)[0] == 0:
-        raise ValueError("mp4: stsd has no sample entries")
-    entry_s = p + 4
-    if entry_s + 8 > stsd[1]:
-        raise ValueError("mp4: truncated stsd entry")
-    esize = struct.unpack_from(">I", buf, entry_s)[0]
-    if esize < 8 or entry_s + esize > stsd[1]:
-        raise ValueError("mp4: stsd entry size exceeds box")
-    fourcc = bytes(buf[entry_s + 4:entry_s + 8]).decode("latin-1").strip()
-    track_id = None
-    tkhd = _find(buf, s, e, b"tkhd")
+    stsd = _need(stbl, b"stsd", "trak without stsd")
+    _version_flags(stsd)
+    if stsd.be32() == 0:
+        stsd.fail("no sample entries")
+    esize, fourcc = stsd.unpack(">I4s", "stsd entry header")
+    entry = stsd.sub(esize - 8, "stsd entry")
+    track_id, dims = None, (None, None)
+    tkhd = _find(trak, b"tkhd")
     if tkhd is not None:
-        track_id = _parse_tkhd_track_id(buf, *tkhd)
+        version, _ = _version_flags(tkhd)
+        tkhd.skip(16 if version == 1 else 8)
+        track_id = tkhd.be32()
+        # display dims: the LAST two 16.16 fixed-point words of the box
+        tkhd.skip(max(0, tkhd.left() - 8))
+        dims = tuple(int(round(v / 65536.0)) or None
+                     for v in tkhd.unpack(">II", "tkhd dims"))
     return {
         "handler": handler, "timescale": timescale,
         "md_duration": md_duration, "stbl": stbl,
-        "fourcc": fourcc, "entry_body": (entry_s + 8, entry_s + esize),
-        "track_id": track_id, "tkhd": tkhd,
+        "fourcc": fourcc.decode("latin-1").strip(), "entry": entry,
+        "track_id": track_id, "dims": dims,
     }
 
 
-def _fragment_totals(buf: bytes, moov: Tuple[int, int], moofs,
+def _fragment_totals(moov: Reader, moofs: List[Reader],
                      track_id: Optional[int]) -> Tuple[int, int]:
     """(sample count, total duration in media ticks) accumulated over every
     moof fragment for ``track_id`` (None matches any track)."""
-    trex_dur = _parse_trex_defaults(buf, *moov)
+    trex_dur = _trex_defaults(moov)
     n = time = 0
-    for ms, me in moofs:
-        for t2, s2, e2 in _iter_boxes(buf, ms, me):
-            if t2 != b"traf":
+    for moof in moofs:
+        for t, traf in _boxes(moof):
+            if t != b"traf":
                 continue
-            tid, cnt, dur = _parse_traf(buf, s2, e2, trex_dur)
+            tid, cnt, dur = _traf(traf, trex_dur)
             if track_id is None or tid == track_id:
                 n += cnt
                 time += dur
@@ -449,43 +330,30 @@ def parse_mp4_audio(raw: bytes) -> Dict[str, Any]:
     Fragmented (fMP4/DASH/CMAF) audio accumulates moof/traf/trun durations
     like the video path. Raises ``ValueError`` when no audio track exists
     or boxes are corrupt."""
-    if raw is None or len(raw) < 12:
-        raise ValueError("mp4: empty or truncated payload")
-    buf = bytes(raw)
-    moov = None
-    moofs = []
-    for t, s, e in _iter_boxes(buf, 0, len(buf)):
-        if t == b"moov":
-            moov = (s, e)
-        elif t == b"moof":
-            moofs.append((s, e))
-    if moov is None:
-        raise ValueError("mp4: no moov box")
-    for t, s, e in _iter_boxes(buf, *moov):
+    _brand, moov, moofs = _top(raw)
+    for t, trak in _boxes(moov):
         if t != b"trak":
             continue
-        tm = _trak_media(buf, s, e)
+        tm = _trak_media(trak)
         if tm is None or tm["handler"] != b"soun":
             continue
         timescale = tm["timescale"]
         # AudioSampleEntry: 6 reserved + data_ref_index(2), 8 reserved,
         # channelcount(2), samplesize(2), predefined(2), reserved(2),
         # samplerate(4, 16.16) — reads bounded by the entry's declared size
-        body, body_e = tm["entry_body"]
+        entry = tm["entry"]
         channels = sr_fixed = None
-        if body + 28 <= body_e:
-            channels = struct.unpack_from(">H", buf, body + 16)[0]
-            sr_fixed = struct.unpack_from(">I", buf, body + 24)[0] >> 16
+        if entry.left() >= 28:
+            channels, sr_fixed = entry.unpack(">16xH6xI")
+            sr_fixed >>= 16
         sr = sr_fixed or timescale
         if sr == 0:
             raise ValueError("mp4: zero audio sample rate")
-        stts = _find(buf, *tm["stbl"], b"stts")
-        total_time = 0
-        if stts is not None:
-            _n, total_time = _parse_stts(buf, *stts)
+        stts = _find(tm["stbl"], b"stts")
+        total_time = _stts(stts)[1] if stts is not None else 0
         n_ticks = total_time or tm["md_duration"]
         if n_ticks == 0 and moofs:
-            _fn, n_ticks = _fragment_totals(buf, moov, moofs, tm["track_id"])
+            _fn, n_ticks = _fragment_totals(moov, moofs, tm["track_id"])
         # rescale when the sample entry's rate disagrees with the timescale
         n_samples = (n_ticks if sr == timescale
                      else round(n_ticks * sr / timescale))

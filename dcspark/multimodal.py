@@ -20,11 +20,13 @@ pruned out of every non-media pass (select only what the UDF needs).
 from __future__ import annotations
 
 import struct
+import zlib
 from typing import Callable, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame
 
+from .binread import Reader
 from .rowmap import DECODE_ERRORS, map_payloads
 
 IMAGE_META_DDL = (
@@ -85,10 +87,8 @@ def decode_bmp(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
     """
     if raw is None or len(raw) < 54 or raw[:2] != b"BM":
         raise ValueError("not a BMP payload")
-    (data_off,) = struct.unpack_from("<I", raw, 10)
-    width, height = struct.unpack_from("<ii", raw, 18)
-    (bpp,) = struct.unpack_from("<H", raw, 28)
-    (compression,) = struct.unpack_from("<I", raw, 30)
+    data_off, _dib_size, width, height, _planes, bpp, compression = Reader(
+        raw, "bmp", 10).unpack("<IIiiHHI", "BMP header")
     if compression != 0 or bpp not in (24, 32):
         raise ValueError(f"unsupported BMP: bpp={bpp} compression={compression}")
     top_down = height < 0
@@ -174,24 +174,23 @@ def decode_png(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
     scanline filter types. Palette, 16-bit, and interlaced images raise
     ValueError (surfaced per-row as decode_error by the Arrow-batch UDFs).
     Returns (height, width, channels, uint8 HWC array)."""
-    import zlib
-
     if raw is None or raw[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload")
-    pos, ihdr, idat = 8, None, []
-    while pos + 8 <= len(raw):
-        (length,) = struct.unpack_from(">I", raw, pos)
-        ctype = raw[pos + 4:pos + 8]
-        body = raw[pos + 8:pos + 8 + length]
-        if len(body) != length:
-            raise ValueError("truncated PNG chunk")
+    r = Reader(bytes(raw), "png", 8)
+    ihdr, idat = None, []
+    while r.left() >= 8:
+        length, ctype = r.unpack(">I4s", "chunk header")
+        body = r.sub(length, f"{ctype.decode('latin-1')} chunk")
         if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", body)
+            # exactly 13 bytes: struct's own error for any other length is
+            # the decode_error text callers see (a decode error like
+            # ValueError, as is zlib.error below)
+            ihdr = struct.unpack(">IIBBBBB", body.take(length))
         elif ctype == b"IDAT":
-            idat.append(body)
+            idat.append(body.take(length))
         elif ctype == b"IEND":
             break
-        pos += 12 + length  # length + type + body + crc
+        r.skip(4, "chunk CRC")
     if ihdr is None or not idat:
         raise ValueError("PNG missing IHDR/IDAT")
     width, height, bit_depth, color_type, comp, filt, interlace = ihdr
@@ -202,7 +201,14 @@ def decode_png(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
     if comp != 0 or filt != 0 or interlace != 0:
         raise ValueError("unsupported PNG: non-zero compression/filter/interlace")
     channels = _PNG_CHANNELS[color_type]
-    data = np.frombuffer(zlib.decompress(b"".join(idat)), dtype=np.uint8)
+    size = r.claim(height * (1 + width * channels), "scanlines")
+    # inflate at most one byte past the declared scanlines: a zlib bomb
+    # stops there and fails the length check in _png_unfilter
+    inflater = zlib.decompressobj()
+    data = np.frombuffer(inflater.decompress(b"".join(idat), size + 1),
+                         np.uint8)
+    if data.size == size and not inflater.eof:
+        raise ValueError("PNG zlib stream truncated")
     px = _png_unfilter(data, height, width, channels)
     return height, width, channels, px
 
@@ -213,8 +219,6 @@ def png_bytes(pixels: np.ndarray, row_filters=0) -> bytes:
     ``row_filters``: scanline filter type(s) to APPLY — an int for all rows
     or a per-row sequence; exists so tests can exercise every filter type's
     decode path. CRCs are real (zlib.crc32)."""
-    import zlib
-
     px = np.asarray(pixels, dtype=np.uint8)
     if px.ndim == 2:
         px = px[:, :, None]

@@ -1,4 +1,4 @@
-"""Ogg container (Opus / Vorbis) metadata: stdlib page walk, no decode.
+"""Ogg container (Opus / Vorbis) metadata: bounded page walk, no decode.
 
 Opus-in-Ogg is the dominant codec for speech/ASR corpora and Vorbis its
 older sibling; both need external libraries for PCM decode (the pluggable
@@ -33,6 +33,8 @@ from __future__ import annotations
 
 import struct
 from typing import Any, Dict, List, Tuple
+
+from .binread import Reader
 
 __all__ = ["parse_ogg_meta", "ogg_meta_triple", "ogg_opus_bytes",
            "ogg_vorbis_bytes", "is_ogg"]
@@ -81,31 +83,19 @@ def _iter_pages(buf: bytes, check_crc: str = "edges"):
     and leaves the caller to verify the final page (where the duration-
     determining granule lives); ``"none"`` skips CRC. The page STRUCTURE
     (sync, version, sizes) is always validated."""
-    p = 0
-    n = len(buf)
-    while p < n:
-        if buf[p:p + 4] != b"OggS":
-            raise ValueError(f"ogg: lost page sync at byte {p}")
-        if p + 27 > n:
-            raise ValueError("ogg: truncated page header")
-        version = buf[p + 4]
+    r = Reader(buf, "ogg")
+    while r.left():
+        p = r.pos
+        if r.peek(4) != b"OggS":
+            r.fail("lost page sync")
+        _magic, version, htype, granule, serial, seq, crc, nsegs = r.unpack(
+            "<4sBBqIIIB", "page header")
         if version != 0:
-            raise ValueError(f"ogg: unsupported page version {version}")
-        htype = buf[p + 5]
-        granule = struct.unpack_from("<q", buf, p + 6)[0]
-        serial, seq, crc = struct.unpack_from("<III", buf, p + 14)
-        nsegs = buf[p + 26]
-        seg_end = p + 27 + nsegs
-        if seg_end > n:
-            raise ValueError("ogg: truncated segment table")
-        payload_len = sum(buf[p + 27:seg_end])
-        page_end = seg_end + payload_len
-        if page_end > n:
-            raise ValueError("ogg: truncated page payload")
+            r.fail(f"unsupported page version {version}", p)
+        payload = r.sub(sum(r.take(nsegs, "segment table")), "page payload")
         if check_crc == "all" or (check_crc == "edges" and seq < 2):
-            _verify_page_crc(buf, p, page_end, crc)
-        yield htype, granule, serial, seq, seg_end, page_end, p, crc
-        p = page_end
+            _verify_page_crc(buf, p, payload.end, crc)
+        yield htype, granule, serial, seq, payload.pos, payload.end, p, crc
 
 
 def parse_ogg_meta(raw: bytes, check_crc: str = "edges") -> Dict[str, Any]:
@@ -143,20 +133,14 @@ def parse_ogg_meta(raw: bytes, check_crc: str = "edges") -> Dict[str, Any]:
             if not (htype & 0x02):
                 raise ValueError("ogg: first page is not BOS")
             serial0 = serial
-            head = buf[ps:pe]
-            if head[:8] == b"OpusHead":
-                if len(head) < 19:
-                    raise ValueError("ogg: truncated OpusHead")
+            head = Reader(buf, "ogg", ps, pe, "codec id header")
+            if head.peek(8) == b"OpusHead":
                 codec = "opus"
-                channels = head[9]
-                preskip = struct.unpack_from("<H", head, 10)[0]
-                sr = struct.unpack_from("<I", head, 12)[0] or 48000
-            elif head[:7] == b"\x01vorbis":
-                if len(head) < 16:
-                    raise ValueError("ogg: truncated vorbis id header")
+                channels, preskip, sr = head.unpack("<9xBHI3x", "OpusHead")
+                sr = sr or 48000
+            elif head.peek(7) == b"\x01vorbis":
                 codec = "vorbis"
-                channels = head[11]
-                sr = struct.unpack_from("<I", head, 12)[0]
+                channels, sr = head.unpack("<11xBI", "vorbis id header")
             else:
                 raise ValueError("ogg: unknown codec id packet")
         elif serial != serial0:

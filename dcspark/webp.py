@@ -41,6 +41,8 @@ from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 
+from .binread import Reader
+
 # code-length code order (spec "Decoding of Meta Prefix Codes" section)
 K_CODE_LENGTH_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11,
                        12, 13, 14, 15]
@@ -475,12 +477,15 @@ def _sub_image(br: BitReader, w: int, h: int) -> np.ndarray:
     return _decode_pixels(br, w, h, False)
 
 
-def decode_vp8l(data: bytes, *, headerless_size: Optional[Tuple[int, int]]
+def decode_vp8l(chunk: Reader, *, headerless_size: Optional[Tuple[int, int]]
                 = None) -> Tuple[int, int, bool, np.ndarray]:
-    """Decode a VP8L stream -> (w, h, alpha_hint, argb uint32 array).
+    """Decode the VP8L stream filling ``chunk`` -> (w, h, alpha_hint, argb
+    uint32 array). The declared raster is charged to the decode's output
+    budget before any pixel is allocated.
 
     ``headerless_size=(w, h)`` decodes the header-free variant used by the
     container's VP8L-compressed ALPH chunk."""
+    data = chunk.take(chunk.left())
     br = BitReader(data)
     if headerless_size is None:
         if not data or data[0] != 0x2F:
@@ -495,6 +500,7 @@ def decode_vp8l(data: bytes, *, headerless_size: Optional[Tuple[int, int]]
     else:
         w, h = headerless_size
         alpha_hint = False
+    chunk.claim(w * h * 4, "VP8L image")
     # transforms (top level only); each records the xsize at read time
     transforms = []
     cur_w = w
@@ -561,12 +567,8 @@ def decode_webp(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
     raw = bytes(raw or b"")
     if len(raw) < 20 or raw[:4] != b"RIFF" or raw[8:12] != b"WEBP":
         raise ValueError("not a WebP container")
-    pos = 12
     vp8l = None
-    while pos + 8 <= len(raw):
-        fourcc = raw[pos:pos + 4]
-        size = struct.unpack_from("<I", raw, pos + 4)[0]
-        body = raw[pos + 8:pos + 8 + size]
+    for fourcc, body in Reader(raw, "webp", 12).riff_chunks():
         if fourcc == b"VP8L":
             vp8l = body
             break
@@ -576,7 +578,6 @@ def decode_webp(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
             raise ValueError(
                 "lossy WebP (VP8) requires a DCT video codec; only "
                 "lossless VP8L decodes here — inject a native decoder")
-        pos += 8 + size + (size & 1)
     if vp8l is None:
         raise ValueError("WebP container has no VP8L chunk")
     w, h, alpha_hint, px = decode_vp8l(vp8l)
@@ -598,24 +599,22 @@ def decode_webp_alpha(raw: bytes) -> np.ndarray:
     raw = bytes(raw)
     if raw[:4] != b"RIFF" or raw[8:12] != b"WEBP" or raw[12:16] != b"VP8X":
         raise ValueError("not an extended WebP (VP8X) container")
-    w = 1 + int.from_bytes(raw[24:27], "little")
-    h = 1 + int.from_bytes(raw[27:30], "little")
-    pos = 12
-    alph = None
-    while pos + 8 <= len(raw):
-        fourcc = raw[pos:pos + 4]
-        size = struct.unpack_from("<I", raw, pos + 4)[0]
-        if fourcc == b"ALPH":
-            alph = raw[pos + 8:pos + 8 + size]
+    w = h = alph = None
+    for fourcc, body in Reader(raw, "webp", 12).riff_chunks():
+        if fourcc == b"VP8X":
+            body.skip(4, "VP8X flags")
+            w = 1 + body.uint(3, "little", "canvas width")
+            h = 1 + body.uint(3, "little", "canvas height")
+        elif fourcc == b"ALPH":
+            alph = body
             break
-        pos += 8 + size + (size & 1)
     if alph is None:
         raise ValueError("WebP has no ALPH chunk")
-    hdr = alph[0]
+    hdr = alph.u8("ALPH header")
     if hdr & 3 != 1:
         raise ValueError("ALPH chunk is not VP8L-compressed")
     filt = (hdr >> 2) & 3
-    _, _, _, px = decode_vp8l(alph[1:], headerless_size=(w, h))
+    _, _, _, px = decode_vp8l(alph, headerless_size=(w, h))
     plane = ((px >> 8) & 0xFF).astype(np.int64).reshape(h, w)
     if filt:
         for y in range(h):
