@@ -34,6 +34,8 @@ Scale design (10^12 clips):
 """
 from __future__ import annotations
 
+from typing import Optional
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -138,6 +140,7 @@ def audio_fingerprint_near_dup(
     just to count bucket sizes — at 10^12 clips that sort is pure waste.)
     Score = shared distinct hashes / min clip fingerprint count, so a short
     clip embedded in a longer one still scores high.
+    ``threshold`` compares the reported (6-decimal) score.
     """
     uniq = (
         fingerprints.filter(F.col("hash").isNotNull())
@@ -170,9 +173,10 @@ def audio_fingerprint_near_dup(
                     .withColumnRenamed("n", "n_a"), on="id_a")
         .join(counts.withColumnRenamed("clip_id", "id_b")
                     .withColumnRenamed("n", "n_b"), on="id_b")
-        .withColumn("score", F.col("matches") / F.least("n_a", "n_b"))
+        .select("id_a", "id_b", "matches",
+                F.round(F.col("matches") / F.least("n_a", "n_b"), 6)
+                .alias("score"))
         .filter((F.col("score") >= threshold) & (F.col("matches") >= min_matches))
-        .select("id_a", "id_b", "matches", F.round("score", 6).alias("score"))
     )
     # cache handle for callers on long-lived sessions: after consuming the
     # pairs, dcspark.pipeline_ckpt.release_caches(out) frees the persisted
@@ -188,13 +192,26 @@ def audio_near_dup(
     threshold: float = 0.35,
     min_matches: int = 1,
     max_bucket: int = 500,
+    checkpoint: Optional[str] = None,
     **fp_kwargs,
 ) -> DataFrame:
-    """End-to-end: decode -> fingerprint -> bucketed near-dup pairs."""
-    fp = audio_fingerprints(df, id_col=id_col, bytes_col=bytes_col, **fp_kwargs)
-    return audio_fingerprint_near_dup(
-        fp, threshold=threshold, min_matches=min_matches, max_bucket=max_bucket
-    )
+    """End-to-end: decode -> fingerprint -> bucketed near-dup pairs.
+
+    Stages (``checkpoint``: see :mod:`dcspark.pipeline_ckpt`):
+    ``fingerprints`` (the decode+FFT pass — at 10^12 clips the dominant cost
+    by orders of magnitude) and ``pairs`` (the bucket-capped join, stored
+    unthresholded: ``threshold``/``min_matches`` filter after it). A changed
+    ``max_bucket`` invalidates only ``pairs``; the decode stays on disk."""
+    from .pipeline_ckpt import Stages
+
+    st = Stages(checkpoint, df.sparkSession, op="audio_near_dup",
+                id_col=id_col, bytes_col=bytes_col, fp=fp_kwargs, input=df)
+    fp = st("fingerprints", lambda: audio_fingerprints(
+        df, id_col=id_col, bytes_col=bytes_col, **fp_kwargs))
+    pairs = st("pairs", lambda: audio_fingerprint_near_dup(
+        fp, threshold=0.0, max_bucket=max_bucket), max_bucket=max_bucket)
+    return st.result(pairs.filter(
+        (F.col("score") >= threshold) & (F.col("matches") >= min_matches)))
 
 
 def audio_cross_contamination(
@@ -218,7 +235,8 @@ def audio_cross_contamination(
     clips are dropped first (non-discriminative silence/tone buckets — the
     fan-out and skew guard). Score = shared distinct hashes / min(clip,
     eval) fingerprint count, so a benchmark snippet embedded in a longer
-    training clip still scores high."""
+    training clip still scores high.
+    ``threshold`` compares the reported (6-decimal) score."""
     # corpus hashes feed the probe join AND n_c; eval hashes feed the probe
     # and n_e: persist both so each side's decode pass runs once (the corpus
     # side is the 10^12-clip scan — re-evaluating it is the whole job twice)
@@ -246,9 +264,10 @@ def audio_cross_contamination(
     out = (
         pairs.join(n_c, on="clip_id")
         .join(F.broadcast(n_e), on="eval_id")
-        .withColumn("score", F.col("matches") / F.least("n_c", "n_e"))
+        .select("clip_id", "eval_id", "matches",
+                F.round(F.col("matches") / F.least("n_c", "n_e"), 6)
+                .alias("score"))
         .filter((F.col("score") >= threshold) & (F.col("matches") >= min_matches))
-        .select("clip_id", "eval_id", "matches", F.round("score", 6).alias("score"))
     )
     out._dcspark_cached = [cu, eu]
     return out
@@ -260,14 +279,33 @@ def audio_contaminated_ids(
     id_col: str = "clip_id",
     bytes_col: str = "bytes",
     threshold: float = 0.35,
-    **kw,
+    min_matches: int = 1,
+    max_eval_bucket: int = 50,
+    checkpoint: Optional[str] = None,
+    **fp_kwargs,
 ) -> DataFrame:
     """Distinct corpus clip_ids acoustically contaminated by the eval set —
     decode + fingerprint both sides, probe, project. A drop list composable
-    with the near-dup cluster survivors and the filter quarantine."""
-    cfp = audio_fingerprints(corpus, id_col=id_col, bytes_col=bytes_col)
-    efp = audio_fingerprints(eval_df, id_col=id_col, bytes_col=bytes_col)
-    rep = audio_cross_contamination(cfp, efp, threshold=threshold, **kw)
-    out = rep.select("clip_id").distinct()
-    out._dcspark_cached = rep._dcspark_cached
-    return out
+    with the near-dup cluster survivors and the filter quarantine.
+
+    Stages (``checkpoint``: see :mod:`dcspark.pipeline_ckpt`): ``eval_fp``
+    (signed by the eval side only), ``corpus_fp`` (the expensive corpus
+    decode, signed by the corpus side only — swapping the benchmark never
+    re-decodes the corpus) and ``report`` (the probe, stored unthresholded:
+    ``threshold``/``min_matches`` filter after it)."""
+    from .pipeline_ckpt import Stages
+
+    st = Stages(checkpoint, corpus.sparkSession, op="audio_decontam",
+                id_col=id_col, bytes_col=bytes_col, fp=fp_kwargs)
+    efp = st("eval_fp", lambda: audio_fingerprints(
+        eval_df, id_col=id_col, bytes_col=bytes_col, **fp_kwargs),
+        eval=eval_df)
+    cfp = st("corpus_fp", lambda: audio_fingerprints(
+        corpus, id_col=id_col, bytes_col=bytes_col, **fp_kwargs),
+        input=corpus)
+    rep = st("report", lambda: audio_cross_contamination(
+        cfp, efp, threshold=0.0, max_eval_bucket=max_eval_bucket),
+        input=corpus, eval=eval_df, max_eval_bucket=max_eval_bucket)
+    hits = rep.filter(
+        (F.col("score") >= threshold) & (F.col("matches") >= min_matches))
+    return st.result(hits.select("clip_id").distinct())

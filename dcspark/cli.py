@@ -664,23 +664,17 @@ def cmd_dedup(args: argparse.Namespace) -> int:
     restarts from its last completed stage, not from zero."""
     from pyspark.sql import functions as F
 
-    from . import pipeline_ckpt, textops
+    from . import textops
 
     spark = _build_spark(args.master, args.shuffle_partitions)
     docs = spark.read.parquet(args.input).select(
         F.col(args.id_col).alias("doc_id"), F.col(args.text_col).alias("text"))
-    if args.checkpoint:
-        pairs = pipeline_ckpt.minhash_near_dups_resumable(
-            docs, args.checkpoint, threshold=args.threshold, n=args.ngram,
-            max_bucket=args.max_bucket)
-    else:
-        pairs = textops.minhash_near_dups(
-            docs, threshold=args.threshold, n=args.ngram,
-            max_bucket=args.max_bucket)
+    pairs = textops.minhash_near_dups(
+        docs, threshold=args.threshold, n=args.ngram,
+        max_bucket=args.max_bucket, checkpoint=args.checkpoint)
     pairs.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
-    print(f"dedup: {n} near-dup pairs (jaccard >= {args.threshold}) -> {args.output}"
-          + (f" [resumable: {args.checkpoint}]" if args.checkpoint else ""))
+    print(f"dedup: {n} near-dup pairs (jaccard >= {args.threshold}) -> {args.output}")
     if args.survivors:
         from . import cluster as cluster_mod
         from .textops import words_expr
@@ -805,19 +799,15 @@ def cmd_spans(args: argparse.Namespace) -> int:
     spark = _build_spark(args.master, args.shuffle_partitions)
     docs = spark.read.parquet(args.input).select(
         F.col(args.id_col).alias("doc_id"), F.col(args.text_col).alias("text"))
-    if args.checkpoint:
-        rep = pipeline_ckpt.duplicate_spans_resumable(
-            docs, args.checkpoint, n_tokens=args.window, min_count=args.min_count)
-    else:
-        rep = textops.duplicate_span_stats(
-            docs, n_tokens=args.window, min_count=args.min_count)
+    rep = textops.duplicate_span_stats(
+        docs, n_tokens=args.window, min_count=args.min_count,
+        checkpoint=args.checkpoint)
     rep.write.mode("overwrite").parquet(args.output)
     pipeline_ckpt.release_caches(rep)
     flagged = spark.read.parquet(args.output).filter(
         F.col("dup_token_frac") > args.threshold).count()
     print(f"spans: {flagged} documents over dup_token_frac {args.threshold} "
-          f"-> {args.output}"
-          + (f" [resumable: {args.checkpoint}]" if args.checkpoint else ""))
+          f"-> {args.output}")
     return 0
 
 
@@ -849,25 +839,36 @@ def cmd_decontam(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
     from . import decontam as decontam_mod
-    from . import pipeline_ckpt
 
     spark = _build_spark(args.master, args.shuffle_partitions)
     docs = spark.read.parquet(args.input).select(
         F.col(args.id_col).alias("doc_id"), F.col(args.text_col).alias("text"))
     ev = spark.read.parquet(args.eval).select(
         F.col(args.eval_col).alias("text"))
-    if args.checkpoint:
-        rep = pipeline_ckpt.contamination_resumable(
-            docs, ev, args.checkpoint, n=args.ngram)
-    else:
-        rep = decontam_mod.contamination(docs, ev, n=args.ngram)
+    rep = decontam_mod.contamination(docs, ev, n=args.ngram,
+                                     checkpoint=args.checkpoint)
     rep.write.mode("overwrite").parquet(args.output)
     flagged = spark.read.parquet(args.output).filter(
         F.col("contamination") > args.threshold).count()
     print(f"decontam: {flagged} documents over threshold {args.threshold} "
-          f"-> {args.output}"
-          + (f" [resumable: {args.checkpoint}]" if args.checkpoint else ""))
+          f"-> {args.output}")
     return 0
+
+
+#: the audio/image/video actions whose operators run in stages
+#: (dcspark/pipeline_ckpt.py) and so honour --checkpoint
+STAGED_ACTIONS = ("neardup", "decontam")
+
+
+def _refuse_unstaged_checkpoint(family: str, args: argparse.Namespace) -> bool:
+    """True (after an error message) when --checkpoint was given to an
+    action with no stages: the run would otherwise silently ignore it."""
+    if args.checkpoint is None or args.action in STAGED_ACTIONS:
+        return False
+    print(f"{family} {args.action}: --checkpoint applies only to "
+          + ", ".join(f"{family} {a}" for a in STAGED_ACTIONS),
+          file=sys.stderr)
+    return True
 
 
 def cmd_audio(args: argparse.Namespace) -> int:
@@ -877,6 +878,8 @@ def cmd_audio(args: argparse.Namespace) -> int:
 
     from . import audioops as aops
 
+    if _refuse_unstaged_checkpoint("audio", args):
+        return 2
     spark = _build_spark(args.master, args.shuffle_partitions)
     df = spark.read.parquet(args.input).select(
         F.col(args.id_col).alias("clip_id"), F.col(args.bytes_col).alias("bytes"))
@@ -920,16 +923,13 @@ def cmd_audio(args: argparse.Namespace) -> int:
         out = audiofp.audio_fingerprints(df)
         label = "band-occupancy acoustic fingerprints"
     elif args.action == "neardup":
-        from . import audiofp, pipeline_ckpt
+        from . import audiofp
 
-        if args.checkpoint:
-            out = pipeline_ckpt.audio_near_dup_resumable(
-                df, args.checkpoint, threshold=args.threshold)
-        else:
-            out = audiofp.audio_near_dup(df, threshold=args.threshold)
+        out = audiofp.audio_near_dup(df, threshold=args.threshold,
+                                     checkpoint=args.checkpoint)
         label = f"acoustic near-dup pairs (overlap >= {args.threshold})"
     elif args.action == "decontam":
-        from . import audiofp, pipeline_ckpt
+        from . import audiofp
 
         if not args.eval:
             print("audio decontam requires --eval <benchmark parquet>")
@@ -937,13 +937,8 @@ def cmd_audio(args: argparse.Namespace) -> int:
         ev = spark.read.parquet(args.eval).select(
             F.col(args.id_col).alias("clip_id"),
             F.col(args.bytes_col).alias("bytes"))
-        if args.checkpoint:
-            out = pipeline_ckpt.audio_decontam_resumable(
-                df, ev, args.checkpoint, threshold=args.threshold
-            ).select("clip_id").distinct()
-        else:
-            out = audiofp.audio_contaminated_ids(
-                df, ev, threshold=args.threshold)
+        out = audiofp.audio_contaminated_ids(
+            df, ev, threshold=args.threshold, checkpoint=args.checkpoint)
         label = f"acoustically contaminated ids (overlap >= {args.threshold})"
     elif args.action == "embed":
         from . import audiosem
@@ -1007,6 +1002,8 @@ def cmd_image(args: argparse.Namespace) -> int:
 
     from . import imagefp, multimodal
 
+    if _refuse_unstaged_checkpoint("image", args):
+        return 2
     spark = _build_spark(args.master, args.shuffle_partitions)
     df = spark.read.parquet(args.input).select(
         F.col(args.id_col).alias("id"), F.col(args.bytes_col).alias("bytes"))
@@ -1032,26 +1029,13 @@ def cmd_image(args: argparse.Namespace) -> int:
         ev = spark.read.parquet(args.eval).select(
             F.col(args.id_col).alias("id"),
             F.col(args.bytes_col).alias("bytes"))
-        if args.checkpoint:
-            from . import pipeline_ckpt
-
-            out = pipeline_ckpt.image_decontam_resumable(
-                df, ev, args.checkpoint, max_hamming=args.max_hamming
-            ).select("id").distinct()
-        else:
-            out = imagefp.image_contaminated_ids(
-                df, ev, max_hamming=args.max_hamming)
+        out = imagefp.image_contaminated_ids(
+            df, ev, max_hamming=args.max_hamming, checkpoint=args.checkpoint)
         label = f"visually contaminated ids (Hamming <= {args.max_hamming})"
     else:  # neardup
-        if args.checkpoint:
-            from . import pipeline_ckpt
-
-            out = pipeline_ckpt.image_near_dup_resumable(
-                df, args.checkpoint, max_hamming=args.max_hamming,
-                max_bucket=args.max_bucket)
-        else:
-            out = imagefp.image_near_dup(
-                df, max_hamming=args.max_hamming, max_bucket=args.max_bucket)
+        out = imagefp.image_near_dup(
+            df, max_hamming=args.max_hamming, max_bucket=args.max_bucket,
+            checkpoint=args.checkpoint)
         label = f"near-dup pairs (Hamming <= {args.max_hamming})"
     return _write_and_report(spark, out, "image", args.action, label,
                              args.output)
@@ -1064,6 +1048,8 @@ def cmd_video(args: argparse.Namespace) -> int:
 
     from . import multimodal
 
+    if _refuse_unstaged_checkpoint("video", args):
+        return 2
     spark = _build_spark(args.master, args.shuffle_partitions)
     df = spark.read.parquet(args.input).select(
         F.col(args.id_col).alias("id"), F.col(args.bytes_col).alias("bytes"))
@@ -1078,13 +1064,8 @@ def cmd_video(args: argparse.Namespace) -> int:
     elif args.action == "neardup":
         from . import imagefp
 
-        if args.checkpoint:
-            from . import pipeline_ckpt
-
-            out = pipeline_ckpt.video_near_dup_resumable(
-                df, args.checkpoint, threshold=args.threshold)
-        else:
-            out = imagefp.video_near_dup(df, threshold=args.threshold)
+        out = imagefp.video_near_dup(df, threshold=args.threshold,
+                                     checkpoint=args.checkpoint)
         label = f"near-dup pairs (frame-hash overlap >= {args.threshold})"
     elif args.action == "decontam":
         from . import imagefp
@@ -1095,16 +1076,8 @@ def cmd_video(args: argparse.Namespace) -> int:
         ev = spark.read.parquet(args.eval).select(
             F.col(args.id_col).alias("id"),
             F.col(args.bytes_col).alias("bytes"))
-        if args.checkpoint:
-            from . import pipeline_ckpt
-
-            # same output schema as the non-checkpoint path: the drop list
-            # carries 'id' so downstream anti-joins work either way
-            out = pipeline_ckpt.video_decontam_resumable(
-                df, ev, args.checkpoint, threshold=args.threshold
-            ).select(F.col("clip_id").alias("id")).distinct()
-        else:
-            out = imagefp.video_contaminated_ids(df, ev, threshold=args.threshold)
+        out = imagefp.video_contaminated_ids(
+            df, ev, threshold=args.threshold, checkpoint=args.checkpoint)
         label = f"visually contaminated ids (overlap >= {args.threshold})"
     else:  # frames
         out = multimodal.video_frame_sample(

@@ -24,6 +24,8 @@ no n-grams and are trivially clean.
 
 from __future__ import annotations
 
+from typing import Optional
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -57,7 +59,8 @@ def contamination(
     doc_id: str = "doc_id",
     doc_col: str = "text",
     eval_col: str = "text",
-    broadcast_max_grams: int = BROADCAST_MAX_EVAL_GRAMS,
+    broadcast_max_grams: Optional[int] = None,
+    checkpoint: Optional[str] = None,
 ) -> DataFrame:
     """Per-document contamination report:
     (doc_id, matched_ngrams, total_ngrams, contamination) for every document
@@ -70,41 +73,59 @@ def contamination(
 
     Scale guard (VERDICT r02 next #8): when the eval gram count (cheap
     pre-distinct upper bound — one map-side aggregation over the eval side
-    only, never a corpus action) exceeds ``broadcast_max_grams``, the eval
-    frame no longer fits a broadcast, so the probe falls back to a shuffle
-    (shuffled-hash) join — the corpus digests shuffle once, which is the
-    correct trade above the broadcast budget. Pass ``broadcast_max_grams=0``
-    to force the shuffle path, or a huge value to force broadcast."""
-    eval_grams = (
+    only, never a corpus action) exceeds ``broadcast_max_grams`` (default
+    :data:`BROADCAST_MAX_EVAL_GRAMS`), the eval frame no longer fits a
+    broadcast, so the probe falls back to a shuffle (shuffled-hash) join —
+    the corpus digests shuffle once, which is the correct trade above the
+    broadcast budget. Pass ``broadcast_max_grams=0`` to force the shuffle
+    path, or a huge value to force broadcast.
+
+    Stages (``checkpoint``: see :mod:`dcspark.pipeline_ckpt`):
+    ``eval_grams`` (the distinct benchmark digests, signed by the eval side
+    only — a resumed run provably probes the same digests) and ``report``
+    (the corpus probe + per-doc aggregation, the expensive part)."""
+    from .pipeline_ckpt import Stages
+
+    if broadcast_max_grams is None:
+        broadcast_max_grams = BROADCAST_MAX_EVAL_GRAMS
+    st = Stages(checkpoint, docs.sparkSession, op="contamination", n=n,
+                eval_col=eval_col, eval=eval_df)
+    eval_grams = st("eval_grams", lambda: (
         eval_df.select(F.explode(ngram_md5_array(F.col(eval_col), n)).alias("gram"))
         .distinct()
-        .withColumn("__hit", F.lit(True))
-    )
-    doc_grams = docs.select(
-        F.col(doc_id),
-        F.explode(ngram_md5_array(F.col(doc_col), n)).alias("gram"),
-    )
-    approx_grams = eval_df.select(
-        F.coalesce(F.sum(F.size(ngram_md5_array(F.col(eval_col), n))), F.lit(0))
-    ).first()[0]
-    if approx_grams <= broadcast_max_grams:
-        eval_side = F.broadcast(eval_grams)
-    else:
-        eval_side = eval_grams.hint("shuffle_hash")
-    probed = doc_grams.join(eval_side, "gram", "left")
-    return (
-        probed.groupBy(doc_id)
-        .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("__hit"), 1).otherwise(0)), F.lit(0)
-            ).alias("matched_ngrams"),
-            F.count(F.lit(1)).alias("total_ngrams"),
+    ))
+
+    def report() -> DataFrame:
+        hit = eval_grams.withColumn("__hit", F.lit(True))
+        approx_grams = eval_df.select(
+            F.coalesce(F.sum(F.size(ngram_md5_array(F.col(eval_col), n))),
+                       F.lit(0))
+        ).first()[0]
+        if approx_grams <= broadcast_max_grams:
+            eval_side = F.broadcast(hit)
+        else:
+            eval_side = hit.hint("shuffle_hash")
+        doc_grams = docs.select(
+            F.col(doc_id),
+            F.explode(ngram_md5_array(F.col(doc_col), n)).alias("gram"),
         )
-        .withColumn(
-            "contamination",
-            F.col("matched_ngrams") / F.col("total_ngrams"),
+        return (
+            doc_grams.join(eval_side, "gram", "left")
+            .groupBy(doc_id)
+            .agg(
+                F.coalesce(
+                    F.sum(F.when(F.col("__hit"), 1).otherwise(0)), F.lit(0)
+                ).alias("matched_ngrams"),
+                F.count(F.lit(1)).alias("total_ngrams"),
+            )
+            .withColumn(
+                "contamination",
+                F.col("matched_ngrams") / F.col("total_ngrams"),
+            )
         )
-    )
+
+    return st.result(st("report", report, doc_id=doc_id, doc_col=doc_col,
+                        input=docs))
 
 
 def contaminated_ids(

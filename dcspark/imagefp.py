@@ -194,13 +194,26 @@ def image_near_dup(
     id_col: str = "id",
     bytes_col: str = "bytes",
     decoder: ImageDecoder = real_image_decoder,
+    checkpoint: Optional[str] = None,
 ) -> DataFrame:
     """Perceptual near-duplicate pairs (id_a, id_b, hamming <= max_hamming):
-    one fingerprint decode pass + near_dup_pairs_from_fp's blocked join."""
-    fp = image_fingerprints(df, id_col=id_col, bytes_col=bytes_col,
-                            decoder=decoder)
-    return near_dup_pairs_from_fp(fp, max_hamming=max_hamming,
-                                  max_bucket=max_bucket)
+    one fingerprint decode pass + near_dup_pairs_from_fp's blocked join.
+
+    Stages (``checkpoint``: see :mod:`dcspark.pipeline_ckpt`):
+    ``fingerprints`` (the image decode pass) and ``pairs`` (the blocked
+    Hamming join; ``max_hamming`` shapes the candidate verify, so it is
+    signed rather than filtered after the stage). A custom ``decoder``
+    cannot be signed, so it runs one-shot only."""
+    from .pipeline_ckpt import Stages
+
+    st = Stages(checkpoint, df.sparkSession, op="image_near_dup",
+                id_col=id_col, bytes_col=bytes_col, input=df,
+                decoder=None if decoder is real_image_decoder else decoder)
+    fp = st("fingerprints", lambda: image_fingerprints(
+        df, id_col=id_col, bytes_col=bytes_col, decoder=decoder))
+    return st.result(st("pairs", lambda: near_dup_pairs_from_fp(
+        fp, max_hamming=max_hamming, max_bucket=max_bucket),
+        max_hamming=max_hamming, max_bucket=max_bucket))
 
 
 def image_cross_contamination(
@@ -259,17 +272,33 @@ def image_contaminated_ids(
     bytes_col: str = "bytes",
     max_hamming: int = 3,
     decoder: ImageDecoder = real_image_decoder,
-    **kw,
+    max_eval_bucket: int = 50,
+    checkpoint: Optional[str] = None,
 ) -> DataFrame:
     """Distinct corpus image ids visually contaminated by the eval set —
     fingerprint both sides, probe, project. A drop list composable with the
-    near-dup cluster survivors and the filter quarantine."""
-    cfp = image_fingerprints(corpus, id_col=id_col, bytes_col=bytes_col,
-                             decoder=decoder)
-    efp = image_fingerprints(eval_df, id_col=id_col, bytes_col=bytes_col,
-                             decoder=decoder)
-    return (image_cross_contamination(cfp, efp, max_hamming=max_hamming, **kw)
-            .select("id").distinct())
+    near-dup cluster survivors and the filter quarantine.
+
+    Stages (``checkpoint``: see :mod:`dcspark.pipeline_ckpt`): ``eval_fp``
+    and ``corpus_fp`` (the decodes, each signed by its own side only) and
+    ``report`` (the probe; ``max_hamming``/``max_eval_bucket`` are signed
+    here only, so sweeping them reuses both decodes)."""
+    from .pipeline_ckpt import Stages
+
+    st = Stages(checkpoint, corpus.sparkSession, op="image_decontam",
+                id_col=id_col, bytes_col=bytes_col,
+                decoder=None if decoder is real_image_decoder else decoder)
+    efp = st("eval_fp", lambda: image_fingerprints(
+        eval_df, id_col=id_col, bytes_col=bytes_col, decoder=decoder),
+        eval=eval_df)
+    cfp = st("corpus_fp", lambda: image_fingerprints(
+        corpus, id_col=id_col, bytes_col=bytes_col, decoder=decoder),
+        input=corpus)
+    rep = st("report", lambda: image_cross_contamination(
+        cfp, efp, max_hamming=max_hamming, max_eval_bucket=max_eval_bucket),
+        input=corpus, eval=eval_df, max_hamming=max_hamming,
+        max_eval_bucket=max_eval_bucket)
+    return st.result(rep.select("id").distinct())
 
 
 # ---------------------------------------------------------------------------
@@ -327,7 +356,8 @@ def video_fp_near_dup(
     for Hamming <= max_hamming), bucket-cap degenerate (block, key) masses,
     verify exact Hamming on candidates, then score per pair as
     matched distinct frame hashes / min(|A|, |B|) (a clip embedded in a
-    longer cut still scores high)."""
+    longer cut still scores high).
+    ``threshold`` compares the reported (6-decimal) score."""
     # uniq feeds both join sides (via t) and the per-clip counts: persist so
     # the frame-hash lineage (a video decode pass when fp is unpersisted)
     # evaluates once, not 3x (plan-gated)
@@ -356,11 +386,11 @@ def video_fp_near_dup(
                  .withColumnRenamed("n", "n_a"), on="id_a")
            .join(counts.withColumnRenamed("clip_id", "id_b")
                  .withColumnRenamed("n", "n_b"), on="id_b")
-           .withColumn("score", F.col("matches") / F.least("n_a", "n_b"))
-           .filter((F.col("score") >= threshold)
-                   & (F.col("matches") >= min_matches))
            .select("id_a", "id_b", "matches",
-                   F.round("score", 6).alias("score")))
+                   F.round(F.col("matches") / F.least("n_a", "n_b"), 6)
+                   .alias("score"))
+           .filter((F.col("score") >= threshold)
+                   & (F.col("matches") >= min_matches)))
     out._dcspark_cached = [uniq, t]
     return out
 
@@ -373,15 +403,28 @@ def video_near_dup(
     max_bucket: int = 500,
     id_col: str = "id",
     bytes_col: str = "bytes",
+    checkpoint: Optional[str] = None,
     **fp_kw,
 ) -> DataFrame:
     """Near-duplicate video pairs (id_a, id_b, matches, score): one decode
     pass to frame-hash rows, then video_fp_near_dup's Hamming-tolerant
-    block join."""
-    fp = video_fingerprints(df, id_col=id_col, bytes_col=bytes_col, **fp_kw)
-    return video_fp_near_dup(fp, threshold=threshold,
-                             max_hamming=max_hamming,
-                             min_matches=min_matches, max_bucket=max_bucket)
+    block join.
+
+    Stages (``checkpoint``: see :mod:`dcspark.pipeline_ckpt`):
+    ``fingerprints`` (MJPEG decode + per-frame dHash, the dominant cost) and
+    ``pairs`` (the block join, stored unthresholded: ``threshold``/
+    ``min_matches`` filter after it; ``max_hamming`` is signed)."""
+    from .pipeline_ckpt import Stages
+
+    st = Stages(checkpoint, df.sparkSession, op="video_near_dup",
+                id_col=id_col, bytes_col=bytes_col, fp=fp_kw, input=df)
+    fp = st("fingerprints", lambda: video_fingerprints(
+        df, id_col=id_col, bytes_col=bytes_col, **fp_kw))
+    pairs = st("pairs", lambda: video_fp_near_dup(
+        fp, threshold=0.0, max_hamming=max_hamming, max_bucket=max_bucket),
+        max_hamming=max_hamming, max_bucket=max_bucket)
+    return st.result(pairs.filter(
+        (F.col("score") >= threshold) & (F.col("matches") >= min_matches)))
 
 
 def video_cross_contamination(
@@ -398,7 +441,8 @@ def video_cross_contamination(
     benchmark-sized and **broadcast** after a per-(block, key) bucket cap
     (solid/static-frame masses): the corpus probe is map-side, zero corpus
     shuffle. Score = matched distinct corpus frame hashes / min(|clip|,
-    |eval|)."""
+    |eval|).
+    ``threshold`` compares the reported (6-decimal) score."""
     from pyspark.sql import Window
 
     # corpus hashes feed the probe and n_c, eval hashes the probe and n_e:
@@ -429,10 +473,10 @@ def video_cross_contamination(
     n_e = eu.groupBy("eval_id").agg(F.count(F.lit(1)).alias("n_e"))
     out = (matches.join(n_c, on="clip_id")
            .join(F.broadcast(n_e), on="eval_id")
-           .withColumn("score", F.col("matches") / F.least("n_c", "n_e"))
-           .filter(F.col("score") >= threshold)
            .select("clip_id", "eval_id", "matches",
-                   F.round("score", 6).alias("score")))
+                   F.round(F.col("matches") / F.least("n_c", "n_e"), 6)
+                   .alias("score"))
+           .filter(F.col("score") >= threshold))
     out._dcspark_cached = [cu, eu]
     return out
 
@@ -443,14 +487,31 @@ def video_contaminated_ids(
     threshold: float = 0.6,
     id_col: str = "id",
     bytes_col: str = "bytes",
-    **kw,
+    max_hamming: int = 3,
+    max_eval_bucket: int = 50,
+    checkpoint: Optional[str] = None,
+    **fp_kw,
 ) -> DataFrame:
     """Distinct corpus video ids visually contaminated by an eval set:
     frame-hash both sides (one decode pass each), broadcast the
-    benchmark-sized eval frame, probe map-side — zero corpus shuffle."""
-    cfp = video_fingerprints(corpus, id_col=id_col, bytes_col=bytes_col)
-    efp = video_fingerprints(eval_df, id_col=id_col, bytes_col=bytes_col)
-    rep = video_cross_contamination(cfp, efp, threshold=threshold, **kw)
-    out = rep.select(F.col("clip_id").alias("id")).distinct()
-    out._dcspark_cached = rep._dcspark_cached
-    return out
+    benchmark-sized eval frame, probe map-side — zero corpus shuffle.
+
+    Stages (``checkpoint``: see :mod:`dcspark.pipeline_ckpt`): ``eval_fp``
+    and ``corpus_fp`` (the decodes, each signed by its own side only) and
+    ``report`` (the probe, stored unthresholded: ``threshold`` filters after
+    it; ``max_hamming``/``max_eval_bucket`` are signed here only)."""
+    from .pipeline_ckpt import Stages
+
+    st = Stages(checkpoint, corpus.sparkSession, op="video_decontam",
+                id_col=id_col, bytes_col=bytes_col, fp=fp_kw)
+    efp = st("eval_fp", lambda: video_fingerprints(
+        eval_df, id_col=id_col, bytes_col=bytes_col, **fp_kw), eval=eval_df)
+    cfp = st("corpus_fp", lambda: video_fingerprints(
+        corpus, id_col=id_col, bytes_col=bytes_col, **fp_kw), input=corpus)
+    rep = st("report", lambda: video_cross_contamination(
+        cfp, efp, threshold=0.0, max_hamming=max_hamming,
+        max_eval_bucket=max_eval_bucket),
+        input=corpus, eval=eval_df, max_hamming=max_hamming,
+        max_eval_bucket=max_eval_bucket)
+    return st.result(rep.filter(F.col("score") >= threshold)
+                     .select(F.col("clip_id").alias("id")).distinct())

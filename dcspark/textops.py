@@ -554,6 +554,7 @@ def minhash_near_dups(
     rows_per_band: int = 2,
     n: int = 3,
     max_bucket: Optional[int] = 1000,
+    checkpoint: Optional[str] = None,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard ≥ threshold.
 
@@ -565,19 +566,33 @@ def minhash_near_dups(
     would re-execute per reference (measured 4x wall on the bench query).
     ``max_bucket`` bounds degenerate band buckets (see
     :func:`lsh_candidate_pairs`); run exact dedup first.
-    """
-    from pyspark import StorageLevel
 
-    sh = shingle_table(docs, n, persist=True)
-    pairs = lsh_candidate_pairs(docs, num_hashes, rows_per_band, n, sh=sh,
-                                max_bucket=max_bucket)
-    pairs_persisted = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    scored = jaccard_on_pairs(docs, pairs_persisted, n, sh=sh)
-    out = scored.filter(F.col("jaccard") >= threshold)
-    out._dcspark_cached = [sh, pairs_persisted] + list(
-        getattr(pairs, "_dcspark_cached", ())
-    )
-    return out
+    Stages (``checkpoint``: see :mod:`dcspark.pipeline_ckpt`):
+    ``candidates`` (shingle → signature → band self-join, the shuffle-heavy
+    part) and ``scored`` (exact Jaccard, stored unthresholded: ``threshold``
+    filters after it, so one checkpointed verify serves any threshold
+    sweep). A run killed after ``candidates`` resumes straight into the
+    verify; a resume that finds both stages never tokenizes.
+    """
+    from .pipeline_ckpt import Stages
+
+    st = Stages(checkpoint, docs.sparkSession, op="minhash_near_dups",
+                num_hashes=num_hashes, rows_per_band=rows_per_band, n=n,
+                max_bucket=max_bucket, input=docs)
+    sh: list = []
+
+    def shingles() -> DataFrame:
+        # built on first use, then shared by both stages
+        if not sh:
+            sh.append(shingle_table(docs, n, persist=True))
+        return sh[0]
+
+    pairs = st("candidates", lambda: st.persist(lsh_candidate_pairs(
+        docs, num_hashes, rows_per_band, n, sh=shingles(),
+        max_bucket=max_bucket)))
+    scored = st("scored", lambda: jaccard_on_pairs(docs, pairs, n,
+                                                   sh=shingles()))
+    return st.result(scored.filter(F.col("jaccard") >= threshold), *sh)
 
 
 # ---------------------------------------------------------------------------
@@ -886,7 +901,8 @@ def span_window_table(docs: DataFrame, n_tokens: int = 50) -> DataFrame:
 
 
 def duplicate_span_stats(
-    docs: DataFrame, n_tokens: int = 50, min_count: int = 2
+    docs: DataFrame, n_tokens: int = 50, min_count: int = 2,
+    checkpoint: Optional[str] = None,
 ) -> DataFrame:
     """Per-document coverage by text spans duplicated ANYWHERE in the corpus.
 
@@ -918,24 +934,29 @@ def duplicate_span_stats(
     aggregate. The interval union runs over each doc's sorted
     duplicated-window positions (bounded by tokens/doc, the same per-row
     bound as the shingle arrays).
+
+    Stages (``checkpoint``: see :mod:`dcspark.pipeline_ckpt`): ``spans``
+    (the tokenize+md5 compact frame, signed by ``n_tokens`` and the input)
+    and ``report`` (signed additionally by ``min_count``), so a
+    ``min_count`` sweep reuses the spans parquet without re-tokenizing.
+    Release the one-shot result's cache with
+    ``dcspark.pipeline_ckpt.release_caches`` after consuming it.
     """
-    spans = span_compact_table(docs, n_tokens, persist=True)
-    out = span_report(spans, n_tokens, min_count)
-    # cache handle: dcspark.pipeline_ckpt.release_caches(out) after consuming
-    out._dcspark_cached = [spans]
-    return out
+    from .pipeline_ckpt import Stages
+
+    st = Stages(checkpoint, docs.sparkSession, op="duplicate_spans",
+                n_tokens=n_tokens, input=docs)
+    spans = st("spans", lambda: st.persist(span_compact_table(docs, n_tokens)))
+    report = st("report", lambda: span_report(spans, n_tokens, min_count),
+                min_count=min_count)
+    return st.result(report)
 
 
-def span_compact_table(
-    docs: DataFrame, n_tokens: int = 50, persist: bool = True
-) -> DataFrame:
+def span_compact_table(docs: DataFrame, n_tokens: int = 50) -> DataFrame:
     """One-pass compact frame (doc_id, n_tok, n_windows, digests) — the
     tokenize+md5 projection of :func:`duplicate_span_stats`, shared by the
     totals, the global count, and the semi-join probe. The token array binds
-    once (see :func:`span_digests_expr`); ``persist=False`` for callers that
-    materialize it durably themselves (the resumable wrapper's parquet stage).
-    """
-    from pyspark import StorageLevel
+    once (see :func:`span_digests_expr`)."""
 
     def row(ws: Column) -> Column:
         return F.struct(
@@ -946,14 +967,11 @@ def span_compact_table(
         )
 
     bound = F.transform(F.array(words_expr()), row)[0]
-    spans = (
+    return (
         fan_out(docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
         .select("doc_id", bound.alias("_s"))
         .select("doc_id", "_s.*")
     )
-    if persist:
-        spans = spans.persist(StorageLevel.MEMORY_AND_DISK)
-    return spans
 
 
 def span_report(
@@ -961,8 +979,7 @@ def span_report(
 ) -> DataFrame:
     """Duplicate-span report over a prebuilt compact spans frame
     (doc_id, n_tok, n_windows, digests) — the post-tokenization half of
-    :func:`duplicate_span_stats`, split out so the resumable wrapper can
-    feed it a checkpointed parquet copy of the spans frame."""
+    :func:`duplicate_span_stats`, its ``report`` stage."""
     totals = spans.select("doc_id", "n_tok", "n_windows")
     w = spans.select("doc_id", F.posexplode("digests").alias("pos", "digest"))
     dup_digests = (

@@ -41,15 +41,15 @@ def _pairs_key(rows):
 def test_minhash_resume_matches_fresh_run(spark, docs, tmp_path):
     ck = str(tmp_path / "ck1")
     fresh = textops.minhash_near_dups(docs, threshold=0.5).collect()
-    first = pipeline_ckpt.minhash_near_dups_resumable(docs, ck, threshold=0.5).collect()
+    first = textops.minhash_near_dups(docs, threshold=0.5, checkpoint=ck).collect()
     assert _pairs_key(first) == _pairs_key(fresh)
     # resume: stages served from parquet, builders never run
     calls = []
     orig = textops.lsh_candidate_pairs
     textops.lsh_candidate_pairs = lambda *a, **k: calls.append(1) or orig(*a, **k)
     try:
-        again = pipeline_ckpt.minhash_near_dups_resumable(
-            docs, ck, threshold=0.5).collect()
+        again = textops.minhash_near_dups(
+            docs, threshold=0.5, checkpoint=ck).collect()
     finally:
         textops.lsh_candidate_pairs = orig
     assert calls == [], "candidates stage recomputed on resume"
@@ -75,7 +75,7 @@ def test_minhash_kill_after_candidates_resumes_into_verify(spark, docs, tmp_path
         f: os.path.getmtime(os.path.join(ck, "candidates", f))
         for f in os.listdir(os.path.join(ck, "candidates"))
     }
-    out = pipeline_ckpt.minhash_near_dups_resumable(docs, ck, threshold=0.5).collect()
+    out = textops.minhash_near_dups(docs, threshold=0.5, checkpoint=ck).collect()
     fresh = textops.minhash_near_dups(docs, threshold=0.5).collect()
     assert _pairs_key(out) == _pairs_key(fresh)
     after = {
@@ -87,9 +87,9 @@ def test_minhash_kill_after_candidates_resumes_into_verify(spark, docs, tmp_path
 
 def test_signature_change_invalidates(spark, docs, tmp_path):
     ck = str(tmp_path / "ck3")
-    pipeline_ckpt.minhash_near_dups_resumable(docs, ck, n=3).collect()
+    textops.minhash_near_dups(docs, n=3, checkpoint=ck).collect()
     # different shingle width -> different signature -> stages rebuild
-    out4 = pipeline_ckpt.minhash_near_dups_resumable(docs, ck, n=4).collect()
+    out4 = textops.minhash_near_dups(docs, n=4, checkpoint=ck).collect()
     fresh4 = textops.minhash_near_dups(docs, n=4).collect()
     assert _pairs_key(out4) == _pairs_key(fresh4)
     with open(os.path.join(ck, "candidates.manifest.json")) as f:
@@ -101,14 +101,14 @@ def test_input_change_invalidates(spark, docs, tmp_path):
     """New input files under the same path change the lineage signature, so a
     resumed run rescans instead of serving stale candidate pairs."""
     ck = str(tmp_path / "ck4")
-    base = pipeline_ckpt.minhash_near_dups_resumable(docs, ck).collect()
+    base = textops.minhash_near_dups(docs, checkpoint=ck).collect()
     extra = docs.sparkSession.createDataFrame(
         [(6, "the quick brown fox jumps over the lazy dog again and again yes")],
         "doc_id long, text string")
     extra.write.mode("append").parquet(docs.inputFiles()[0].rsplit("/", 1)[0])
     docs2 = docs.sparkSession.read.parquet(
         docs.inputFiles()[0].rsplit("/", 1)[0])
-    out = pipeline_ckpt.minhash_near_dups_resumable(docs2, ck).collect()
+    out = textops.minhash_near_dups(docs2, checkpoint=ck).collect()
     fresh = textops.minhash_near_dups(docs2).collect()
     assert _pairs_key(out) == _pairs_key(fresh)
     assert len(out) > len(base)  # the new near-dup doc produced new pairs
@@ -119,13 +119,13 @@ def test_contamination_resume_matches_fresh(spark, docs, eval_df, tmp_path):
     fresh = decontam.contamination(docs, eval_df, n=3).collect()
     key = lambda rs: sorted(
         (r["doc_id"], r["matched_ngrams"], r["total_ngrams"]) for r in rs)
-    first = pipeline_ckpt.contamination_resumable(docs, eval_df, ck, n=3).collect()
+    first = decontam.contamination(docs, eval_df, n=3, checkpoint=ck).collect()
     assert key(first) == key(fresh)
     # resume path: report read from parquet, no recompute of the probe
     report_dir = os.path.join(ck, "report")
     mtimes = {f: os.path.getmtime(os.path.join(report_dir, f))
               for f in os.listdir(report_dir)}
-    again = pipeline_ckpt.contamination_resumable(docs, eval_df, ck, n=3).collect()
+    again = decontam.contamination(docs, eval_df, n=3, checkpoint=ck).collect()
     assert key(again) == key(fresh)
     assert mtimes == {f: os.path.getmtime(os.path.join(report_dir, f))
                       for f in os.listdir(report_dir)}
@@ -196,8 +196,8 @@ def test_audio_near_dup_resumable_skips_decode(spark, audio_clips, tmp_path):
     from dcspark import audiofp
     ck = str(tmp_path / "cka")
     fresh = audiofp.audio_near_dup(audio_clips, threshold=0.35).collect()
-    first = pipeline_ckpt.audio_near_dup_resumable(
-        audio_clips, ck, threshold=0.35).collect()
+    first = audiofp.audio_near_dup(
+        audio_clips, threshold=0.35, checkpoint=ck).collect()
     key = lambda rows: sorted((r["id_a"], r["id_b"], r["matches"], r["score"])
                               for r in rows)
     assert key(first) == key(fresh)
@@ -207,11 +207,11 @@ def test_audio_near_dup_resumable_skips_decode(spark, audio_clips, tmp_path):
     audiofp.audio_fingerprints = (
         lambda *a, **k: calls.append(1) or orig_fn(*a, **k))
     try:
-        again = pipeline_ckpt.audio_near_dup_resumable(
-            audio_clips, ck, threshold=0.35).collect()
+        again = audiofp.audio_near_dup(
+            audio_clips, threshold=0.35, checkpoint=ck).collect()
         # threshold sweep reuses the same stages — no decode, no re-join
-        sweep = pipeline_ckpt.audio_near_dup_resumable(
-            audio_clips, ck, threshold=0.99).collect()
+        sweep = audiofp.audio_near_dup(
+            audio_clips, threshold=0.99, checkpoint=ck).collect()
     finally:
         audiofp.audio_fingerprints = orig_fn
     assert calls == [], "fingerprint decode recomputed on resume"
@@ -225,8 +225,8 @@ def test_audio_decontam_resumable(spark, audio_clips, tmp_path):
     ck = str(tmp_path / "ckd")
     fresh = audiofp.audio_contaminated_ids(
         audio_clips.filter(F.col("clip_id") != "orig"), eval_df).collect()
-    got = pipeline_ckpt.audio_decontam_resumable(
-        audio_clips.filter(F.col("clip_id") != "orig"), eval_df, ck)
+    got = audiofp.audio_contaminated_ids(
+        audio_clips.filter(F.col("clip_id") != "orig"), eval_df, checkpoint=ck)
     ids = sorted(r["clip_id"] for r in got.select("clip_id").distinct().collect())
     assert ids == sorted(r["clip_id"] for r in fresh)
     assert "gain_dup" in ids
@@ -235,8 +235,9 @@ def test_audio_decontam_resumable(spark, audio_clips, tmp_path):
     audiofp.audio_fingerprints = (
         lambda *a, **k: calls.append(1) or orig_fn(*a, **k))
     try:
-        pipeline_ckpt.audio_decontam_resumable(
-            audio_clips.filter(F.col("clip_id") != "orig"), eval_df, ck).collect()
+        audiofp.audio_contaminated_ids(
+            audio_clips.filter(F.col("clip_id") != "orig"), eval_df,
+            checkpoint=ck).collect()
     finally:
         audiofp.audio_fingerprints = orig_fn
     assert calls == []
@@ -269,7 +270,7 @@ def test_video_near_dup_resumable(spark, tmp_path):
     vids = spark.read.parquet(p)
     ck = str(tmp_path / "ckv")
     fresh = imagefp.video_near_dup(vids, threshold=0.6).collect()
-    first = pipeline_ckpt.video_near_dup_resumable(vids, ck, threshold=0.6).collect()
+    first = imagefp.video_near_dup(vids, threshold=0.6, checkpoint=ck).collect()
     key = lambda rows: sorted((r["id_a"], r["id_b"]) for r in rows)
     assert key(first) == key(fresh)
     assert any({r["id_a"], r["id_b"]} == {"v0", "v0_re"} for r in first)
@@ -278,8 +279,8 @@ def test_video_near_dup_resumable(spark, tmp_path):
     imagefp.video_fingerprints = (
         lambda *a, **k: calls.append(1) or orig_fn(*a, **k))
     try:
-        again = pipeline_ckpt.video_near_dup_resumable(
-            vids, ck, threshold=0.6).collect()
+        again = imagefp.video_near_dup(
+            vids, threshold=0.6, checkpoint=ck).collect()
     finally:
         imagefp.video_fingerprints = orig_fn
     assert calls == [] and key(again) == key(fresh)
@@ -303,7 +304,7 @@ def test_image_near_dup_resumable(spark, tmp_path):
     imgs = spark.read.parquet(p)
     ck = str(tmp_path / "cki")
     fresh = imagefp.image_near_dup(imgs).collect()
-    first = pipeline_ckpt.image_near_dup_resumable(imgs, ck).collect()
+    first = imagefp.image_near_dup(imgs, checkpoint=ck).collect()
     key = lambda rows: sorted((r["id_a"], r["id_b"], r["hamming"]) for r in rows)
     assert key(first) == key(fresh)
     assert any({r["id_a"], r["id_b"]} == {"im0", "im0_re"} for r in first)
@@ -312,7 +313,7 @@ def test_image_near_dup_resumable(spark, tmp_path):
     imagefp.image_fingerprints = (
         lambda *a, **k: calls.append(1) or orig_fn(*a, **k))
     try:
-        again = pipeline_ckpt.image_near_dup_resumable(imgs, ck).collect()
+        again = imagefp.image_near_dup(imgs, checkpoint=ck).collect()
     finally:
         imagefp.image_fingerprints = orig_fn
     assert calls == [] and key(again) == key(fresh)
@@ -346,16 +347,16 @@ def test_join_param_sweep_keeps_decode_cached(spark, audio_clips, tmp_path):
     stage — the fingerprint decode is served from disk (review finding)."""
     from dcspark import audiofp
     ck = str(tmp_path / "ck_sweep")
-    pipeline_ckpt.audio_near_dup_resumable(
-        audio_clips, ck, max_bucket=500).collect()
+    audiofp.audio_near_dup(
+        audio_clips, max_bucket=500, checkpoint=ck).collect()
     m = os.path.getmtime(os.path.join(ck, "fingerprints.manifest.json"))
     calls = []
     orig_fn = audiofp.audio_fingerprints
     audiofp.audio_fingerprints = (
         lambda *a, **k: calls.append(1) or orig_fn(*a, **k))
     try:
-        pipeline_ckpt.audio_near_dup_resumable(
-            audio_clips, ck, max_bucket=100).collect()
+        audiofp.audio_near_dup(
+            audio_clips, max_bucket=100, checkpoint=ck).collect()
     finally:
         audiofp.audio_fingerprints = orig_fn
     assert calls == [], "decode recomputed on a join-parameter sweep"
@@ -368,8 +369,8 @@ def test_join_param_sweep_keeps_decode_cached(spark, audio_clips, tmp_path):
         # same ckpt dir, different bytes_col, different schema -> the decode
         # signature differs, so the stage REBUILDS (and here fails fast on
         # the absent column rather than silently serving stale fingerprints)
-        pipeline_ckpt.audio_near_dup_resumable(
-            audio_clips, ck, bytes_col="raw").collect()
+        audiofp.audio_near_dup(
+            audio_clips, bytes_col="raw", checkpoint=ck).collect()
 
 
 def test_image_near_dup_resumable_custom_id_col(spark, tmp_path):
@@ -377,7 +378,7 @@ def test_image_near_dup_resumable_custom_id_col(spark, tmp_path):
     the pairs stage must select that, not the input column name (review
     finding: F.col(id_col) raised UNRESOLVED_COLUMN)."""
     import numpy as np
-    from dcspark import multimodal
+    from dcspark import imagefp, multimodal
 
     rows = [(f"p{i}", bytearray(multimodal.png_bytes(
         (np.arange(24 * 32 * 3).reshape(24, 32, 3) % 251).astype("uint8"))))
@@ -385,8 +386,9 @@ def test_image_near_dup_resumable_custom_id_col(spark, tmp_path):
     p = str(tmp_path / "imgs2")
     spark.createDataFrame(rows, "img_id string, payload binary").write.parquet(p)
     imgs = spark.read.parquet(p)
-    out = pipeline_ckpt.image_near_dup_resumable(
-        imgs, str(tmp_path / "cki2"), id_col="img_id", bytes_col="payload")
+    out = imagefp.image_near_dup(
+        imgs, id_col="img_id", bytes_col="payload",
+        checkpoint=str(tmp_path / "cki2"))
     # identical rasters -> one Hamming-0 pair, ids taken from img_id values
     rows_out = out.collect()
     assert [(r["id_a"], r["id_b"], r["hamming"]) for r in rows_out] == [
@@ -419,8 +421,8 @@ def test_image_and_video_decontam_resumable(spark, tmp_path):
     ck = str(tmp_path / "ck_imgd")
     fresh = sorted(r["id"] for r in imagefp.image_contaminated_ids(
         corpus, eval_df).collect())
-    got = sorted(r["id"] for r in pipeline_ckpt.image_decontam_resumable(
-        corpus, eval_df, ck).select("id").distinct().collect())
+    got = sorted(r["id"] for r in imagefp.image_contaminated_ids(
+        corpus, eval_df, checkpoint=ck).select("id").distinct().collect())
     assert got == fresh and "leak" in got
     calls = []
     orig_fn = imagefp.image_fingerprints
@@ -428,8 +430,8 @@ def test_image_and_video_decontam_resumable(spark, tmp_path):
         lambda *a, **k: calls.append(1) or orig_fn(*a, **k))
     try:
         # max_hamming sweep: report rebuilds, decodes stay cached
-        pipeline_ckpt.image_decontam_resumable(
-            corpus, eval_df, ck, max_hamming=2).collect()
+        imagefp.image_contaminated_ids(
+            corpus, eval_df, max_hamming=2, checkpoint=ck).collect()
     finally:
         imagefp.image_fingerprints = orig_fn
     assert calls == []
@@ -459,9 +461,9 @@ def test_image_and_video_decontam_resumable(spark, tmp_path):
     vck = str(tmp_path / "ck_vidd")
     vfresh = sorted(r["id"] for r in imagefp.video_contaminated_ids(
         vcorpus, veval, threshold=0.6).collect())
-    vgot = sorted(r["clip_id"] for r in pipeline_ckpt.video_decontam_resumable(
-        vcorpus, veval, vck, threshold=0.6)
-        .select("clip_id").distinct().collect())
+    vgot = sorted(r["id"] for r in imagefp.video_contaminated_ids(
+        vcorpus, veval, threshold=0.6, checkpoint=vck)
+        .select("id").distinct().collect())
     assert vgot == vfresh and "vleak" in vgot
     vcalls = []
     orig_vfn = imagefp.video_fingerprints
@@ -469,8 +471,8 @@ def test_image_and_video_decontam_resumable(spark, tmp_path):
         lambda *a, **k: vcalls.append(1) or orig_vfn(*a, **k))
     try:
         # threshold sweep hits the read-time filter: nothing recomputes
-        pipeline_ckpt.video_decontam_resumable(
-            vcorpus, veval, vck, threshold=0.9).collect()
+        imagefp.video_contaminated_ids(
+            vcorpus, veval, threshold=0.9, checkpoint=vck).collect()
     finally:
         imagefp.video_fingerprints = orig_vfn
     assert vcalls == []
@@ -482,7 +484,7 @@ def test_release_caches_and_signable_guard(spark, audio_clips, tmp_path):
     are rejected up front instead of producing an address-bearing signature
     that silently never resumes; (c) swapping the eval set must NOT
     invalidate the corpus decode (per-side lineage)."""
-    from dcspark import audiofp
+    from dcspark import audiofp, imagefp
 
     pairs = audiofp.audio_near_dup(audio_clips, threshold=0.35)
     pairs.collect()
@@ -492,12 +494,12 @@ def test_release_caches_and_signable_guard(spark, audio_clips, tmp_path):
     assert all(not c.storageLevel.useMemory for c in cached)
 
     with pytest.raises(ValueError, match="cannot sign"):
-        pipeline_ckpt.video_near_dup_resumable(
-            audio_clips, str(tmp_path / "x"), decoder=lambda b: None)
+        imagefp.video_near_dup(
+            audio_clips, decoder=lambda b: None, checkpoint=str(tmp_path / "x"))
 
     ck = str(tmp_path / "ck_swap")
     eval1 = audio_clips.filter(F.col("clip_id") == "orig")
-    pipeline_ckpt.audio_decontam_resumable(audio_clips, eval1, ck).collect()
+    audiofp.audio_contaminated_ids(audio_clips, eval1, checkpoint=ck).collect()
     m = os.path.getmtime(os.path.join(ck, "corpus_fp.manifest.json"))
     eval2_dir = str(tmp_path / "eval2")
     audio_clips.filter(F.col("clip_id") == "c0").write.parquet(eval2_dir)
@@ -507,7 +509,7 @@ def test_release_caches_and_signable_guard(spark, audio_clips, tmp_path):
     audiofp.audio_fingerprints = (
         lambda *a, **k: calls.append(1) or orig_fn(*a, **k))
     try:
-        pipeline_ckpt.audio_decontam_resumable(audio_clips, eval2, ck).collect()
+        audiofp.audio_contaminated_ids(audio_clips, eval2, checkpoint=ck).collect()
     finally:
         audiofp.audio_fingerprints = orig_fn
     # eval side re-decoded (new benchmark), corpus decode untouched
@@ -524,8 +526,8 @@ def test_duplicate_spans_resumable(spark, docs, tmp_path):
     fresh = textops.duplicate_span_stats(docs, n_tokens=3, min_count=2)
     fresh_rows = fresh.collect()
     pipeline_ckpt.release_caches(fresh)
-    first = pipeline_ckpt.duplicate_spans_resumable(
-        docs, ck, n_tokens=3, min_count=2).collect()
+    first = textops.duplicate_span_stats(
+        docs, n_tokens=3, min_count=2, checkpoint=ck).collect()
     assert _span_key(first) == _span_key(fresh_rows)
 
     # resume: the tokenize stage must be served from parquet
@@ -533,11 +535,11 @@ def test_duplicate_spans_resumable(spark, docs, tmp_path):
     orig = textops.span_compact_table
     textops.span_compact_table = lambda *a, **k: calls.append(1) or orig(*a, **k)
     try:
-        again = pipeline_ckpt.duplicate_spans_resumable(
-            docs, ck, n_tokens=3, min_count=2).collect()
+        again = textops.duplicate_span_stats(
+            docs, n_tokens=3, min_count=2, checkpoint=ck).collect()
         # a min_count sweep reuses the spans parquet (stage signed without it)
-        swept = pipeline_ckpt.duplicate_spans_resumable(
-            docs, ck, n_tokens=3, min_count=3).collect()
+        swept = textops.duplicate_span_stats(
+            docs, n_tokens=3, min_count=3, checkpoint=ck).collect()
     finally:
         textops.span_compact_table = orig
     assert calls == [], "spans stage recomputed on resume / min_count sweep"
@@ -547,8 +549,8 @@ def test_duplicate_spans_resumable(spark, docs, tmp_path):
     # a changed n_tokens invalidates the spans stage
     try:
         textops.span_compact_table = lambda *a, **k: calls.append(1) or orig(*a, **k)
-        pipeline_ckpt.duplicate_spans_resumable(
-            docs, ck, n_tokens=4, min_count=2).collect()
+        textops.duplicate_span_stats(
+            docs, n_tokens=4, min_count=2, checkpoint=ck).collect()
     finally:
         textops.span_compact_table = orig
     assert calls == [1], "changed n_tokens must re-run the spans stage"
@@ -595,20 +597,14 @@ def test_contamination_resumable_broadcast_guard(spark, tmp_path, monkeypatch):
     ev = spark.createDataFrame(
         [(1, "alpha beta gamma delta")], "eval_id long, text string")
 
-    from pyspark.sql import functions as F
-
-    eval_grams = ev.select(
-        F.explode(dmod.ngram_md5_array(F.col("text"), 3)).alias("gram")
-    ).distinct()
-
-    rep = pipeline_ckpt._contamination_probe(docs, eval_grams, "doc_id", "text", 3)
+    rep = dmod.contamination(docs, ev, n=3)
     base = {r["doc_id"]: r["contamination"] for r in rep.collect()}
     plan = rep._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]
     assert "BroadcastHashJoin" in plan
 
     monkeypatch.setattr(dmod, "BROADCAST_MAX_EVAL_GRAMS", 0)
-    rep2 = pipeline_ckpt._contamination_probe(docs, eval_grams, "doc_id", "text", 3)
+    rep2 = dmod.contamination(docs, ev, n=3)
     rows = {r["doc_id"]: r["contamination"] for r in rep2.collect()}
     plan2 = rep2._jdf.queryExecution().executedPlan().toString()
     plan2 = plan2.split("== Initial Plan ==")[0]
@@ -617,14 +613,14 @@ def test_contamination_resumable_broadcast_guard(spark, tmp_path, monkeypatch):
 
     # and the resumable end-to-end path (checkpointed digests) stays correct
     e2e = {r["doc_id"]: r["contamination"]
-           for r in pipeline_ckpt.contamination_resumable(
-               docs, ev, str(tmp_path / "c"), n=3).collect()}
+           for r in dmod.contamination(
+               docs, ev, n=3, checkpoint=str(tmp_path / "c")).collect()}
     assert e2e == base
 
     # the budget is overridable per-call (parity with the one-shot
     # decontam.contamination signature): 0 forces the shuffle path
-    rep3 = pipeline_ckpt.contamination_resumable(
-        docs, ev, str(tmp_path / "c2"), n=3, broadcast_max_grams=0)
+    rep3 = dmod.contamination(
+        docs, ev, n=3, broadcast_max_grams=0, checkpoint=str(tmp_path / "c2"))
     rows3 = {r["doc_id"]: r["contamination"] for r in rep3.collect()}
     plan3 = rep3._jdf.queryExecution().executedPlan().toString()
     plan3 = plan3.split("== Initial Plan ==")[0]
