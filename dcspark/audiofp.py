@@ -24,10 +24,11 @@ north-star requirement of payload-aware validation ops over the
 Scale design (10^12 clips):
 - fingerprint pass: one mapInArrow scan of (clip_id, bytes); output rows are
   (clip_id, t, hash) — 8-byte hashes, constant count per second of audio.
-- candidate join: self-equi-join on ``hash``; shuffle volume is bounded by
-  fingerprint rows, and overfull buckets (silence / degenerate hashes, the
-  skew risk) are dropped via a single windowed count over the same hash
-  partitioning (documented recall tradeoff, standard in fingerprint joins).
+- candidate join: self-equi-join on ``hash`` through the shared blocked
+  matcher (dcspark/hotkey.py); shuffle volume is bounded by fingerprint
+  rows, and overfull buckets (silence / degenerate hashes, the skew risk)
+  are dropped by its hot-key census + anti-join (documented recall
+  tradeoff, standard in fingerprint joins).
 - scoring: matches / min(|A|,|B|) needs per-clip distinct-hash counts — a
   groupBy(clip_id) aggregate joined back onto the pair table by key, all
   decomposable, AQE-friendly.
@@ -37,9 +38,10 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import hotkey
 from .audio import parse_wav_view
 from .rowmap import map_payloads
 
@@ -128,60 +130,24 @@ def audio_fingerprint_near_dup(
 ) -> DataFrame:
     """Near-duplicate clip pairs from a fingerprint table.
 
-    Candidate pairs come ONLY from shared-hash buckets (equi-join on ``hash``,
-    the MinHash-LSH band-join shape from textops.py): quadratic work is
-    bounded per bucket, and overfull buckets — the skew/silence pathology —
-    are dropped with the SAME hot-key anti-join as the text band join
-    (textops.lsh_candidate_pairs): a groupBy count shuffles only map-side-
-    combined (hash, count) partials — bounded by distinct hashes per
-    partition — and the surviving hot-hash frame is at most rows/max_bucket
-    keys, so AQE picks a broadcast anti-join at runtime. (A window count
-    over the hash partitioning would shuffle AND SORT every fingerprint row
-    just to count bucket sizes — at 10^12 clips that sort is pure waste.)
-    Score = shared distinct hashes / min clip fingerprint count, so a short
-    clip embedded in a longer one still scores high.
-    ``threshold`` compares the reported (6-decimal) score.
+    Candidate pairs come ONLY from shared-hash buckets: the distinct
+    (clip_id, hash) rows self-join on ``hash`` through the shared matcher
+    (:func:`dcspark.hotkey.self_join`), whose bucket guard drops hashes
+    held by more than ``max_bucket`` clips (silence, the skew pathology).
+    Score = shared distinct hashes / min clip fingerprint count, both
+    counted after the cap, so a short clip embedded in a longer one still
+    scores high. ``threshold`` compares the reported (6-decimal) score.
     """
-    uniq = (
-        fingerprints.filter(F.col("hash").isNotNull())
-        .select("clip_id", "hash").distinct()
-    )
-    hot = (
-        uniq.groupBy("hash")
-        .agg(F.count(F.lit(1)).alias("__bc"))
-        .filter(F.col("__bc") > max_bucket)
-        .select("hash")
-    )
-    uniq = uniq.join(hot, on="hash", how="left_anti")
-    # uniq feeds BOTH join sides and the per-clip counts: persist the tiny
-    # (clip_id, hash) frame so the fingerprint lineage — a full decode pass
-    # when called on audio_fingerprints output — evaluates ONCE, not 3x
-    # (plan-gated: exactly one MapInArrow in the executed plan)
-    uniq = uniq.persist()
-    a = uniq.select(F.col("clip_id").alias("id_a"), "hash")
-    b = uniq.select(F.col("clip_id").alias("id_b"), "hash")
-    pairs = (
-        a.join(b, on="hash")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("matches"))
-    )
-    counts = uniq.groupBy("clip_id").agg(F.count(F.lit(1)).alias("n"))
-    out = (
-        pairs
-        .join(counts.withColumnRenamed("clip_id", "id_a")
-                    .withColumnRenamed("n", "n_a"), on="id_a")
-        .join(counts.withColumnRenamed("clip_id", "id_b")
-                    .withColumnRenamed("n", "n_b"), on="id_b")
-        .select("id_a", "id_b", "matches",
-                F.round(F.col("matches") / F.least("n_a", "n_b"), 6)
-                .alias("score"))
-        .filter((F.col("score") >= threshold) & (F.col("matches") >= min_matches))
-    )
-    # cache handle for callers on long-lived sessions: after consuming the
-    # pairs, dcspark.pipeline_ckpt.release_caches(out) frees the persisted
-    # hash frame (Spark never GCs Dataset caches)
-    out._dcspark_cached = [uniq]
+    rows = hotkey.hash_rows(fingerprints, "clip_id", "hash")
+    joined, guarded = hotkey.self_join(rows, "clip_id", ["hash"], max_bucket)
+    matches = (joined
+               .groupBy(F.col("a.clip_id").alias("id_a"),
+                        F.col("b.clip_id").alias("id_b"))
+               .agg(F.count(F.lit(1)).alias("matches")))
+    n = hotkey.id_counts(guarded, "clip_id")
+    out = hotkey.overlap_scores(matches, n, n, threshold, min_matches)
+    # cache handle: dcspark.pipeline_ckpt.release_caches(out) after consuming
+    out._dcspark_cached = joined._dcspark_cached
     return out
 
 
@@ -237,39 +203,19 @@ def audio_cross_contamination(
     eval) fingerprint count, so a benchmark snippet embedded in a longer
     training clip still scores high.
     ``threshold`` compares the reported (6-decimal) score."""
-    # corpus hashes feed the probe join AND n_c; eval hashes feed the probe
-    # and n_e: persist both so each side's decode pass runs once (the corpus
-    # side is the 10^12-clip scan — re-evaluating it is the whole job twice)
-    cu = (
-        corpus_fp.filter(F.col("hash").isNotNull())
-        .select("clip_id", "hash").distinct()
-    ).persist()
-    eu = (
-        eval_fp.filter(F.col("hash").isNotNull())
-        .select(F.col("clip_id").alias("eval_id"), "hash").distinct()
-    )
-    we = Window.partitionBy("hash")
-    eu = (
-        eu.withColumn("__bucket", F.count(F.lit(1)).over(we))
-        .filter(F.col("__bucket") <= max_eval_bucket)
-        .drop("__bucket")
-    ).persist()
-    n_c = cu.groupBy("clip_id").agg(F.count(F.lit(1)).alias("n_c"))
-    n_e = eu.groupBy("eval_id").agg(F.count(F.lit(1)).alias("n_e"))
-    pairs = (
-        cu.join(F.broadcast(eu), on="hash")
-        .groupBy("clip_id", "eval_id")
-        .agg(F.count(F.lit(1)).alias("matches"))
-    )
-    out = (
-        pairs.join(n_c, on="clip_id")
-        .join(F.broadcast(n_e), on="eval_id")
-        .select("clip_id", "eval_id", "matches",
-                F.round(F.col("matches") / F.least("n_c", "n_e"), 6)
-                .alias("score"))
-        .filter((F.col("score") >= threshold) & (F.col("matches") >= min_matches))
-    )
-    out._dcspark_cached = [cu, eu]
+    # corpus hashes feed the probe AND n_c: persist them so the corpus
+    # decode pass runs once (it is the 10^12-clip scan — re-evaluating it
+    # is the whole job twice)
+    cu = hotkey.hash_rows(corpus_fp, "clip_id", "hash").persist()
+    eu = hotkey.hash_rows(eval_fp, "clip_id", "hash").toDF("eval_id", "hash")
+    hits, guarded = hotkey.eval_probe(cu, eu, ["hash"], max_eval_bucket)
+    matches = (hits.groupBy("clip_id", "eval_id")
+               .agg(F.count(F.lit(1)).alias("matches")))
+    out = hotkey.overlap_scores(
+        matches, hotkey.id_counts(cu, "clip_id"),
+        F.broadcast(hotkey.id_counts(guarded, "eval_id")),
+        threshold, min_matches)
+    out._dcspark_cached = hits._dcspark_cached + [cu]
     return out
 
 

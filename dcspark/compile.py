@@ -1081,12 +1081,13 @@ def check_audio_near_dup(model: str, q: Quality, idx: int) -> CompiledCheck:
     uniqueness check. Default pass condition is zero pairs; the eight
     mustBe* forms apply to the pair count when given.
 
-    Scale note: this is a SECOND decode pass over the payload when combined
-    with decode-conformance (different windows: FFT frames vs whole-clip
-    SNR). Both passes run concurrently in the engine's thunk pool; pipelines
-    that need many fingerprint consumers should materialize
-    ``audiofp.audio_fingerprints`` once and use
-    ``audio_fingerprint_near_dup`` directly."""
+    Scale design: the fingerprints ride the engine's one audio decode pass
+    (fp rows in the persisted compact frame, next to the decode-conformance
+    and signal-quality rows), so the payload is decoded once; pairs come
+    from ``audiofp.audio_fingerprint_near_dup``, the exact-hash key of the
+    shared blocked matcher (dcspark/hotkey.py): distinct (clip_id, hash)
+    rows, a hot-hash bucket cap, one self-join, score = shared hashes / the
+    smaller clip's count."""
     name = q.description or "Audio content uniqueness (fingerprint near-dup)"
     evaluator = to_threshold_evaluator(q, name)[0] if has_threshold(q) else None
     return CompiledCheck(
@@ -1237,9 +1238,11 @@ def check_image_near_dup(model: str, q: Quality, idx: int) -> CompiledCheck:
 
     Scale design: fingerprints come from the engine's ONE fused image decode
     pass; pairs from imagefp.near_dup_pairs_from_fp's 4-way 16-bit block
-    equi-join (pigeonhole-complete for Hamming <= 3, 65,536 keys per block,
-    windowed max_bucket guard against solid-color masses). Only 8-byte
-    hashes shuffle — pixels never leave their task."""
+    equi-join on the shared blocked matcher (dcspark/hotkey.py;
+    pigeonhole-complete for Hamming <= 3, 65,536 keys per block, a
+    max_bucket census of distinct (id, dhash) rows per block key against
+    solid-color masses). Only 8-byte hashes shuffle — pixels never leave
+    their task."""
     max_hamming = int(q.threshold) if q.threshold is not None else 3
     if not (0 <= max_hamming <= 3):
         raise ValueError(

@@ -28,6 +28,7 @@ from .multimodal import (
     image_luma,
     real_image_decoder,
 )
+from . import hotkey
 from .rowmap import map_payloads
 
 FP_DDL = "id string, dhash long, width int, height int, decode_error string"
@@ -133,16 +134,6 @@ def image_compact(
     return map_payloads(df, id_col, bytes_col, ddl, compact)
 
 
-def _block_keys(col: str) -> F.Column:
-    """The four 16-bit block keys of a 64-bit dHash as an array.
-
-    Mask, don't '%': Spark % keeps the dividend's sign, so a negative dhash
-    (bit 63 set) would get a block-0 key that never equi-joins its positive
-    twins — silently losing recall for ~half the corpus."""
-    return F.array(*[(F.shiftrightunsigned(F.col(col), b * 16)
-                      .bitwiseAND(F.lit(0xFFFF))) for b in range(4)])
-
-
 def near_dup_pairs_from_fp(
     fp: DataFrame,
     max_hamming: int = 3,
@@ -154,36 +145,25 @@ def near_dup_pairs_from_fp(
     without a second decode.
 
     16-bit block equi-join over the 64-bit dHash (pigeonhole-complete for
-    Hamming <= 3; 65,536 keys per block so keyspace >> corpus), with a
-    windowed per-(block, key) bucket cap against degenerate masses, exact
-    Hamming on candidates only. Only hashes shuffle. The four blocks are
-    posexploded into (block_idx, key) rows and joined ONCE — a per-block
-    join loop would union four branches that each re-evaluate the
-    fingerprint lineage (4x the decode work when fp is not persisted).
+    Hamming <= 3; 65,536 keys per block so keyspace >> corpus) through the
+    shared matcher (:func:`dcspark.hotkey.self_join`): its per-(block, key)
+    bucket cap counts distinct (id, dhash) rows and guards against
+    degenerate masses; exact Hamming runs on candidates only. Only hashes
+    shuffle.
     """
     if max_hamming > 3:
         raise ValueError("4-block pigeonhole guarantees recall only for max_hamming <= 3")
-    from .hotkey import hot_key_guard
-
-    t = (fp.filter(F.col("dhash").isNotNull())
-         .select("id", "dhash",
-                 F.posexplode(_block_keys("dhash")).alias("__bi", "__k")))
-    # shared corpus-side bucket cap + persist (dcspark/hotkey.py): the
-    # persist also makes the fingerprint lineage (a decode pass when fp is
-    # unpersisted) evaluate once, not twice (plan-gated)
-    t = hot_key_guard(t, ["__bi", "__k"], max_bucket)
-    a_, b_ = t.alias("a"), t.alias("b")
-    cands = (a_.join(b_, on=["__bi", "__k"])
-             .filter(F.col("a.id") < F.col("b.id"))
-             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                     F.col("a.dhash").alias("h_a"),
-                     F.col("b.dhash").alias("h_b")))
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    out = (cands.distinct()
-           .select("id_a", "id_b", ham.cast("int").alias("hamming"))
+    rows = hotkey.hash_rows(fp, "id", "dhash")
+    joined, _ = hotkey.self_join(rows.select("id", "dhash", hotkey.blocks("dhash")),
+                                 "id", hotkey.BLOCK, max_bucket)
+    out = (joined
+           .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                   F.col("a.dhash").alias("h_a"), F.col("b.dhash").alias("h_b"))
+           .distinct()
+           .select("id_a", "id_b", hotkey.hamming("h_a", "h_b").alias("hamming"))
            .filter(F.col("hamming") <= max_hamming))
     # cache handle: dcspark.pipeline_ckpt.release_caches(out) after consuming
-    out._dcspark_cached = [t]
+    out._dcspark_cached = joined._dcspark_cached
     return out
 
 
@@ -235,34 +215,24 @@ def image_cross_contamination(
     corpus probe is a map-side 16-bit-block hash join with zero corpus
     shuffle (pigeonhole-complete for Hamming <= 3); exact Hamming verifies
     candidates only. Eval block-keys shared by more than
-    ``max_eval_bucket`` eval images are dropped first (non-discriminative
-    solid-card masses, all hashing to dHash 0 — the fan-out guard)."""
+    ``max_eval_bucket`` distinct eval (id, dhash) rows are dropped first
+    (non-discriminative solid-card masses, all hashing to dHash 0 — the
+    fan-out guard)."""
     if max_hamming > 3:
         raise ValueError(
             "4-block pigeonhole guarantees recall only for max_hamming <= 3")
-    from pyspark.sql import Window
-
-    # ONE join over posexploded (block_idx, key) rows: a per-block join
-    # loop would union four branches that each re-evaluate the corpus
-    # fingerprint lineage — 4x the decode work on the side where the
-    # payload scan IS the job
     cu = (corpus_fp.filter(F.col("dhash").isNotNull())
-          .select("id", "dhash",
-                  F.posexplode(_block_keys("dhash")).alias("__bi", "__k")))
-    eu = (eval_fp.filter(F.col("dhash").isNotNull())
-          .select(F.col("id").alias("eval_id"),
-                  F.col("dhash").alias("eval_dhash"))
-          .select("eval_id", "eval_dhash",
-                  F.posexplode(_block_keys("eval_dhash")).alias("__bi", "__k"))
-          .withColumn("_bc", F.count(F.lit(1)).over(
-              Window.partitionBy("__bi", "__k")))
-          .filter(F.col("_bc") <= max_eval_bucket).drop("_bc"))
-    cands = (cu.join(F.broadcast(eu), on=["__bi", "__k"])
-             .select("id", "eval_id", "dhash", "eval_dhash"))
-    ham = F.bit_count(F.col("dhash").bitwiseXOR(F.col("eval_dhash")))
-    return (cands.distinct()
-            .select("id", "eval_id", ham.cast("int").alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming))
+          .select("id", "dhash", hotkey.blocks("dhash")))
+    eu = (hotkey.hash_rows(eval_fp, "id", "dhash")
+          .toDF("eval_id", "eval_dhash")
+          .select("eval_id", "eval_dhash", hotkey.blocks("eval_dhash")))
+    hits, _ = hotkey.eval_probe(cu, eu, hotkey.BLOCK, max_eval_bucket)
+    out = (hits.select("id", "eval_id", "dhash", "eval_dhash").distinct()
+           .select("id", "eval_id",
+                   hotkey.hamming("dhash", "eval_dhash").alias("hamming"))
+           .filter(F.col("hamming") <= max_hamming))
+    out._dcspark_cached = hits._dcspark_cached
+    return out
 
 
 def image_contaminated_ids(
@@ -319,11 +289,12 @@ def video_fingerprints(
     """Per-video dHash sequence (clip_id, t, hash): decode each payload once
     (Motion-JPEG AVI real), dHash every ``every_n``-th frame up to
     ``max_frames``. The column shape is deliberately identical to
-    audiofp.FINGERPRINT_DDL so the hash-overlap machinery
-    (audio_fingerprint_near_dup / audio_cross_contamination) is reused
-    verbatim for video near-dup and eval-set decontamination — a re-encoded
-    or rescaled copy of a video shares most frame hashes while byte-level
-    identity sees nothing. Undecodable payloads surface as one row with
+    audiofp.FINGERPRINT_DDL: video near-dup and eval-set decontamination
+    (:func:`video_fp_near_dup`, :func:`video_cross_contamination`) run the
+    same blocked matcher and overlap score as audio (dcspark/hotkey.py),
+    keyed on 16-bit hash blocks with a Hamming verify instead of exact
+    hashes — a re-encoded or rescaled copy of a video shares most frame
+    hashes while byte-level identity sees nothing. Undecodable payloads surface as one row with
     decode_error set (hash NULL), so the table doubles as a decode audit.
 
     Only 8-byte hashes leave the task — frames never shuffle."""
@@ -352,46 +323,32 @@ def video_fp_near_dup(
     Audio fingerprints match EXACTLY after re-encoding (band-occupancy is
     quantized), so audiofp joins on hash equality — but a JPEG re-encode
     drifts each frame dHash by 0-3 bits, so video needs the image-style
-    block join: posexplode the four 16-bit block keys (pigeonhole-complete
-    for Hamming <= max_hamming), bucket-cap degenerate (block, key) masses,
+    block join (dcspark/hotkey.py): the four 16-bit block keys
+    (pigeonhole-complete for Hamming <= 3), bucket-capped against
+    degenerate (block, key) masses,
     verify exact Hamming on candidates, then score per pair as
     matched distinct frame hashes / min(|A|, |B|) (a clip embedded in a
     longer cut still scores high).
     ``threshold`` compares the reported (6-decimal) score."""
-    # uniq feeds both join sides (via t) and the per-clip counts: persist so
-    # the frame-hash lineage (a video decode pass when fp is unpersisted)
-    # evaluates once, not 3x (plan-gated)
-    uniq = (fp.filter(F.col("hash").isNotNull())
-            .select("clip_id", "hash").distinct()).persist()
-    from .hotkey import hot_key_guard
-
-    t = uniq.select("clip_id", "hash",
-                    F.posexplode(_block_keys("hash")).alias("__bi", "__k"))
-    t = hot_key_guard(t, ["__bi", "__k"], max_bucket)
-    a_, b_ = t.alias("a"), t.alias("b")
-    cand = (a_.join(b_, on=["__bi", "__k"])
-            .filter(F.col("a.clip_id") < F.col("b.clip_id"))
+    # uniq feeds the blocked rows and the per-clip counts (taken before the
+    # bucket cap): persist it so the frame-hash lineage (a video decode
+    # pass when fp is unpersisted) evaluates once
+    uniq = hotkey.hash_rows(fp, "clip_id", "hash").persist()
+    joined, _ = hotkey.self_join(
+        uniq.select("clip_id", "hash", hotkey.blocks("hash")),
+        "clip_id", hotkey.BLOCK, max_bucket)
+    cand = (joined
             .select(F.col("a.clip_id").alias("id_a"),
                     F.col("b.clip_id").alias("id_b"),
                     F.col("a.hash").alias("h_a"),
                     F.col("b.hash").alias("h_b"))
             .distinct()
-            .filter(F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-                    <= max_hamming))
+            .filter(hotkey.hamming("h_a", "h_b") <= max_hamming))
     matches = cand.groupBy("id_a", "id_b").agg(
         F.countDistinct("h_a").alias("matches"))
-    counts = uniq.groupBy("clip_id").agg(F.count(F.lit(1)).alias("n"))
-    out = (matches
-           .join(counts.withColumnRenamed("clip_id", "id_a")
-                 .withColumnRenamed("n", "n_a"), on="id_a")
-           .join(counts.withColumnRenamed("clip_id", "id_b")
-                 .withColumnRenamed("n", "n_b"), on="id_b")
-           .select("id_a", "id_b", "matches",
-                   F.round(F.col("matches") / F.least("n_a", "n_b"), 6)
-                   .alias("score"))
-           .filter((F.col("score") >= threshold)
-                   & (F.col("matches") >= min_matches)))
-    out._dcspark_cached = [uniq, t]
+    n = hotkey.id_counts(uniq, "clip_id")
+    out = hotkey.overlap_scores(matches, n, n, threshold, min_matches)
+    out._dcspark_cached = joined._dcspark_cached + [uniq]
     return out
 
 
@@ -443,41 +400,25 @@ def video_cross_contamination(
     shuffle. Score = matched distinct corpus frame hashes / min(|clip|,
     |eval|).
     ``threshold`` compares the reported (6-decimal) score."""
-    from pyspark.sql import Window
-
-    # corpus hashes feed the probe and n_c, eval hashes the probe and n_e:
-    # persist both so each decode pass runs once (the corpus side is the
-    # full-scan job)
-    cu = (corpus_fp.filter(F.col("hash").isNotNull())
-          .select("clip_id", "hash").distinct()).persist()
-    eu = (eval_fp.filter(F.col("hash").isNotNull())
-          .select(F.col("clip_id").alias("eval_id"),
-                  F.col("hash").alias("eval_hash")).distinct()).persist()
-    ce = cu.select("clip_id", "hash",
-                   F.posexplode(_block_keys("hash")).alias("__bi", "__k"))
-    ee = (eu.select("eval_id", "eval_hash",
-                    F.posexplode(_block_keys("eval_hash"))
-                    .alias("__bi", "__k"))
-          .withColumn("_bc", F.count(F.lit(1)).over(
-              Window.partitionBy("__bi", "__k")))
-          .filter(F.col("_bc") <= max_eval_bucket).drop("_bc"))
-    cand = (ce.join(F.broadcast(ee), on=["__bi", "__k"])
-            .select("clip_id", "eval_id", "hash", "eval_hash")
+    # corpus hashes feed the probe and n_c, eval hashes the probe and n_e
+    # (both counted before the cap): persist both so each decode pass runs
+    # once (the corpus side is the full-scan job)
+    cu = hotkey.hash_rows(corpus_fp, "clip_id", "hash").persist()
+    eu = (hotkey.hash_rows(eval_fp, "clip_id", "hash")
+          .toDF("eval_id", "eval_hash").persist())
+    hits, _ = hotkey.eval_probe(
+        cu.select("clip_id", "hash", hotkey.blocks("hash")),
+        eu.select("eval_id", "eval_hash", hotkey.blocks("eval_hash")),
+        hotkey.BLOCK, max_eval_bucket)
+    cand = (hits.select("clip_id", "eval_id", "hash", "eval_hash")
             .distinct()
-            .filter(F.bit_count(
-                F.col("hash").bitwiseXOR(F.col("eval_hash")))
-                <= max_hamming))
+            .filter(hotkey.hamming("hash", "eval_hash") <= max_hamming))
     matches = cand.groupBy("clip_id", "eval_id").agg(
         F.countDistinct("hash").alias("matches"))
-    n_c = cu.groupBy("clip_id").agg(F.count(F.lit(1)).alias("n_c"))
-    n_e = eu.groupBy("eval_id").agg(F.count(F.lit(1)).alias("n_e"))
-    out = (matches.join(n_c, on="clip_id")
-           .join(F.broadcast(n_e), on="eval_id")
-           .select("clip_id", "eval_id", "matches",
-                   F.round(F.col("matches") / F.least("n_c", "n_e"), 6)
-                   .alias("score"))
-           .filter(F.col("score") >= threshold))
-    out._dcspark_cached = [cu, eu]
+    out = hotkey.overlap_scores(
+        matches, hotkey.id_counts(cu, "clip_id"),
+        F.broadcast(hotkey.id_counts(eu, "eval_id")), threshold, 1)
+    out._dcspark_cached = hits._dcspark_cached + [cu, eu]
     return out
 
 

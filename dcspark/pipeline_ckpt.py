@@ -23,7 +23,8 @@ and the two modes return identical rows.
 
 Input lineage signs the source files AND the frame's analyzed plan, so a
 resume over the same files with a different projection, rename or filter
-rebuilds its stages instead of serving the old frame's output.
+rebuilds its stages instead of serving the old frame's output; an input
+with no files (an in-memory frame) is signed by its content too.
 
 Why stage-level (not partition-level like the engine): the dedup/decontam
 shapes are shuffle pipelines — candidates, verification, report — whose
@@ -46,6 +47,8 @@ from typing import Any, Callable, Dict, List, Optional
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 #: expression ids (``text#12``, ``doc_id#3L``) differ between two reads of
 #: the same path; they are stripped before the plan is signed
@@ -59,16 +62,27 @@ def input_lineage(df: DataFrame) -> Dict[str, Any]:
     The files alone cannot tell two frames over the same files apart: a
     different projection, rename or filter would resume into the other
     frame's stages. ``semanticHash()`` is not used because it is not stable
-    across JVMs. In-memory frames (createDataFrame) have no files; their
-    data is not signed, only their plan (documented caveat)."""
+    across JVMs. A frame with no files (createDataFrame, a generated
+    source) has a plan that names no data, so its content is signed as
+    well: its row count and the order-independent sum of one xxhash64 per
+    row (one scan of the input)."""
     files = sorted(df.inputFiles())
     plan = _EXPR_ID.sub("", df._jdf.queryExecution().analyzed().toString())
-    return {
+    sig = {
         "files": len(files),
         "sig": hashlib.md5("\n".join(files).encode()).hexdigest()
         if files else "none",
         "plan": hashlib.md5(plan.encode()).hexdigest(),
     }
+    if not files:
+        # xxhash64 cannot hash a map; its JSON form carries the same data
+        cols = [F.to_json(F.col(f.name)) if isinstance(f.dataType, MapType)
+                else F.col(f.name) for f in df.schema.fields]
+        rows, total = df.select(
+            F.count(F.lit(1)),
+            F.sum(F.xxhash64(*cols).cast("decimal(20,0)"))).first()
+        sig["content"] = f"{rows}:{total}"
+    return sig
 
 
 class StageCheckpoint:

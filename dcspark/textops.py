@@ -26,8 +26,10 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from . import hotkey
 
 TOKEN_RE = "[a-z0-9]+"
 
@@ -168,28 +170,18 @@ def winnowing_near_dups(
     sparse, so posting lists stay short where raw shingle inverted indexes
     explode — the scale path for copy detection.
     """
-    fp = winnowing_table(docs, k, w).persist()
-    sizes = fp.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("sz"))
-    a = fp.select(F.col("doc_id").alias("doc_a"), "fp")
-    b = fp.select(F.col("doc_id").alias("doc_b"), "fp")
-    shared = (
-        a.join(b, "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    out = (
-        shared.join(sa, "doc_a").join(sb, "doc_b")
-        .select(
-            "doc_a", "doc_b", "shared",
-            F.round(F.col("shared") / F.least("sz_a", "sz_b"), 6).alias("containment"),
-        )
-    )
+    joined, fp = hotkey.self_join(winnowing_table(docs, k, w), "doc_id",
+                                  ["fp"], None)
+    shared = (joined
+              .groupBy(F.col("a.doc_id").alias("doc_a"),
+                       F.col("b.doc_id").alias("doc_b"))
+              .agg(F.count(F.lit(1)).alias("matches")))
+    n = hotkey.id_counts(fp, "doc_id")
+    out = hotkey.overlap_scores(shared, n, n, 0.0, min_shared).select(
+        "doc_a", "doc_b", F.col("matches").alias("shared"),
+        F.col("score").alias("containment"))
     # cache handle: dcspark.pipeline_ckpt.release_caches(out) after consuming
-    out._dcspark_cached = [fp]
+    out._dcspark_cached = joined._dcspark_cached
     return out
 
 
@@ -436,44 +428,21 @@ def lsh_candidate_pairs(
     bucket holding k mutually near-identical docs — boilerplate pages, license
     texts, the norm in web corpora — still emits k² candidate pairs. A bucket
     larger than ``max_bucket`` is non-discriminative (its members are already
-    trivially discoverable as a group) and is dropped from the join. The
-    guard is a HOT-KEY ANTI-JOIN, not a window: a groupBy count over the
-    cached band keys shuffles only map-side-combined partial counts (a window
-    would shuffle + sort EVERY band-key row — at 10^12 docs, 4x10^12 rows —
-    just to count them), and the surviving hot-key frame is at most
-    rows/max_bucket keys, so AQE picks a broadcast anti-join at runtime
-    (un-hinted on purpose: a pathological input with millions of hot keys
-    falls back to a shuffled anti-join instead of OOMing the driver). Run
-    EXACT dedup first (the documented workflow — ``dedup_exact``) so
-    byte-identical mass never reaches the band join; ``max_bucket=None``
-    disables the guard.
+    trivially discoverable as a group) and is dropped from the join by the
+    shared matcher's hot-key census + anti-join (dcspark/hotkey.py): a
+    groupBy count shuffles only map-side-combined partial counts, never
+    every band-key row. Run EXACT dedup first (the documented workflow —
+    ``dedup_exact``) so byte-identical mass never reaches the band join;
+    ``max_bucket=None`` disables the guard.
     """
-    from pyspark import StorageLevel
-
-    bk_persisted = lsh_band_keys(docs, num_hashes, rows_per_band, n, sh=sh)
-    bk_persisted = bk_persisted.persist(StorageLevel.MEMORY_AND_DISK)
-    bk = bk_persisted
-    if max_bucket is not None:
-        hot = (
-            bk.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("_bc"))
-            .filter(F.col("_bc") > max_bucket)
-            .select("band", "key")
-        )
-        bk = bk.join(hot, on=["band", "key"], how="left_anti")
-    left = bk.alias("l")
-    right = bk.alias("r")
-    out = (
-        left.join(right, on=["band", "key"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # cache handle: dcspark.pipeline_ckpt.release_caches(out) after consuming.
-    # Tag the frame that IS persisted, not the bucket-cap derivative —
-    # unpersist() only matches sameResult plans, so tagging the derived frame
-    # would make the release a silent no-op
-    out._dcspark_cached = [bk_persisted]
+    joined, _ = hotkey.self_join(
+        lsh_band_keys(docs, num_hashes, rows_per_band, n, sh=sh),
+        "doc_id", ["band", "key"], max_bucket)
+    out = (joined
+           .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+           .distinct())
+    # cache handle: dcspark.pipeline_ckpt.release_caches(out) after consuming
+    out._dcspark_cached = joined._dcspark_cached
     return out
 
 
@@ -528,15 +497,15 @@ def allpairs_jaccard(docs: DataFrame, n: int = 3) -> DataFrame:
     sh = shingle_table(docs, n, persist=True)
     sizes = sh.select("doc_id", F.size("sh").cast("long").alias("sz"))
     inv = sh.select("doc_id", F.explode("sh").alias("s"))
-    a = inv.select(F.col("doc_id").alias("doc_a"), "s")
-    b = inv.select(F.col("doc_id").alias("doc_b"), "s")
+    joined, _ = hotkey.self_join(inv, "doc_id", ["s"], None)
     inter = (
-        a.join(b, "s").filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b").agg(F.count(F.lit(1)).cast("long").alias("inter"))
+        joined.groupBy(F.col("a.doc_id").alias("doc_a"),
+                       F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("inter"))
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    return (
+    out = (
         inter.join(sa, "doc_a").join(sb, "doc_b")
         .select(
             "doc_a", "doc_b", "inter",
@@ -545,6 +514,9 @@ def allpairs_jaccard(docs: DataFrame, n: int = 3) -> DataFrame:
             .alias("jaccard"),
         )
     )
+    # cache handle: dcspark.pipeline_ckpt.release_caches(out) after consuming
+    out._dcspark_cached = joined._dcspark_cached + [sh]
+    return out
 
 
 def minhash_near_dups(

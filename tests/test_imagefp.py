@@ -348,8 +348,8 @@ def test_contamination_and_near_dup_decode_corpus_once(spark):
     """The posexplode single-join shape: one action over
     image_contaminated_ids decodes every payload exactly once (the
     per-block join-loop it replaced re-evaluated the unpersisted
-    fingerprint lineage four times); image_near_dup's self-join decodes
-    each payload at most twice (two aliases of one lineage)."""
+    fingerprint lineage four times); so does image_near_dup, whose bucket
+    census and anti-join read one persisted frame."""
     from dcspark import imagefp
     from dcspark.imagefp import image_contaminated_ids, image_near_dup
     from dcspark.multimodal import real_image_decoder
@@ -377,4 +377,4 @@ def test_contamination_and_near_dup_decode_corpus_once(spark):
         return real_image_decoder(raw)
 
     image_near_dup(corpus, decoder=counting2).collect()
-    assert acc2.value <= 2 * n, acc2.value
+    assert acc2.value == n, acc2.value

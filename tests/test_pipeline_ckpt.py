@@ -618,11 +618,51 @@ def test_contamination_resumable_broadcast_guard(spark, tmp_path, monkeypatch):
     assert e2e == base
 
     # the budget is overridable per-call (parity with the one-shot
-    # decontam.contamination signature): 0 forces the shuffle path
+    # decontam.contamination signature): 0 forces the shuffle path. A
+    # checkpointed report comes back as a parquet scan, whose plan shows no
+    # join at all, so the probe is read from the frame the report builder
+    # returned before it was written
+    built = {}
+    stage = pipeline_ckpt.StageCheckpoint.stage
+
+    def capturing_stage(self, name, builder):
+        def build():
+            built[name] = builder()
+            return built[name]
+        return stage(self, name, build)
+
+    monkeypatch.setattr(pipeline_ckpt.StageCheckpoint, "stage", capturing_stage)
     rep3 = dmod.contamination(
         docs, ev, n=3, broadcast_max_grams=0, checkpoint=str(tmp_path / "c2"))
     rows3 = {r["doc_id"]: r["contamination"] for r in rep3.collect()}
-    plan3 = rep3._jdf.queryExecution().executedPlan().toString()
-    plan3 = plan3.split("== Initial Plan ==")[0]
+    plan3 = built["report"]._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan3
+    assert "ShuffledHashJoin" in plan3 or "SortMergeJoin" in plan3
     assert rows3 == base
+
+
+def test_in_memory_inputs_sign_their_content(spark, tmp_path):
+    """Two in-memory inputs (no files) with one schema and plan shape must
+    not resume into each other's stages: their content is signed."""
+    ck = str(tmp_path / "mem")
+    first = spark.createDataFrame(DOCS, "doc_id long, text string")
+    second = spark.createDataFrame(
+        DOCS[:2] + [(9, "yet another unrelated text about stage signatures")],
+        "doc_id long, text string")
+    assert (pipeline_ckpt.input_lineage(first)
+            != pipeline_ckpt.input_lineage(second))
+    # row order does not change the signature
+    assert (pipeline_ckpt.input_lineage(first)
+            == pipeline_ckpt.input_lineage(
+                spark.createDataFrame(DOCS[::-1], "doc_id long, text string")))
+
+    def signature():
+        with open(os.path.join(ck, "candidates.manifest.json")) as f:
+            return json.load(f)["signature"]
+
+    textops.minhash_near_dups(first, threshold=0.0, checkpoint=ck).collect()
+    before = signature()
+    out = textops.minhash_near_dups(second, threshold=0.0, checkpoint=ck).collect()
+    assert signature() != before, "the second input resumed the first one's stages"
+    fresh = textops.minhash_near_dups(second, threshold=0.0).collect()
+    assert _pairs_key(out) == _pairs_key(fresh)

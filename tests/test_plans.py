@@ -452,58 +452,69 @@ def test_image_and_video_passes_prune_scan(spark, tmp_path):
             assert col not in read_schema, (op, col, read_schema)
 
 
-def test_near_dup_operators_evaluate_source_once(spark):
-    """The standalone near-dup operators must evaluate the payload source
-    (i.e. the decode pass) exactly once per row. Before the fingerprint
-    frames were persisted, video_near_dup re-evaluated its source lineage
-    2x (the self-join's two sides), and audio/image relied on fragile
-    exchange reuse. Counted via an accumulator in the source itself."""
+def _counted_source(spark, kind, n, acc):
+    """An n-row (id, bytes) payload source that adds 1 to ``acc`` per row
+    it produces: audio WAVs, PNG images or Motion-JPEG AVI videos."""
     import numpy as np
 
-    from dcspark import imagefp
-    from dcspark.audiofp import audio_near_dup
+    def payload(i):
+        if kind == "audio":
+            from dcspark.synth import wav_bytes
+            t = np.arange(8000) / 8000.0
+            return wav_bytes((np.sin(2 * np.pi * (300 + i * 37 % 1700) * t)
+                              * 20000).astype(np.int16), 8000)
+        if kind == "image":
+            from dcspark.multimodal import png_bytes
+            return png_bytes((np.arange(16 * 20 * 3).reshape(16, 20, 3)
+                              * (i + 1) % 256).astype(np.uint8))
+        from dcspark.avi import avi_bytes
+        return avi_bytes([(np.full((16, 20, 3), (j * 40 + i * 3) % 256, np.uint8)
+                           + np.arange(20, dtype=np.uint8)[None, :, None])
+                          for j in range(3)], fps=25.0)
 
-    acc = spark.sparkContext.accumulator(0)
+    id_col = "clip_id" if kind == "audio" else "id"
 
-    def gen_audio(batches):
+    def gen(batches):
         import pandas as pd
-
-        from dcspark.synth import wav_bytes
         for pdf in batches:
             rows = []
             for i in pdf["id"].tolist():
                 acc.add(1)
-                t = np.arange(8000) / 8000.0
-                pcm = (np.sin(2 * np.pi * (300 + i * 37 % 1700) * t)
-                       * 20000).astype(np.int16)
-                rows.append({"clip_id": f"c{i}", "bytes": wav_bytes(pcm, 8000)})
+                rows.append({id_col: f"{kind[0]}{i}", "bytes": payload(i)})
             yield pd.DataFrame(rows)
 
-    src = spark.range(0, 8, 1, 2).mapInPandas(
-        gen_audio, "clip_id string, bytes binary")
-    audio_near_dup(src, threshold=0.35).collect()
-    assert acc.value == 8, f"audio source evaluated {acc.value / 8.0}x per row"
+    return spark.range(0, n, 1, 2).mapInPandas(gen, f"{id_col} string, bytes binary")
 
-    acc2 = spark.sparkContext.accumulator(0)
 
-    def gen_video(batches):
-        import pandas as pd
+def test_near_dup_operators_evaluate_source_once(spark):
+    """The standalone near-dup and contamination operators must evaluate
+    each payload source (i.e. the decode pass) exactly once per row. Before
+    the fingerprint frames were persisted, video_near_dup re-evaluated its
+    source lineage 2x (the self-join's two sides), audio relied on fragile
+    exchange reuse, and image_near_dup decoded twice (the bucket census and
+    the anti-join each read the unpersisted fingerprint lineage). Counted
+    via an accumulator in each source itself."""
+    from dcspark import imagefp
+    from dcspark.audiofp import audio_contaminated_ids, audio_near_dup
 
-        from dcspark.avi import avi_bytes
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].tolist():
-                acc2.add(1)
-                frs = [(np.full((16, 20, 3), (j * 40 + i * 3) % 256, np.uint8)
-                        + np.arange(20, dtype=np.uint8)[None, :, None])
-                       for j in range(3)]
-                rows.append({"id": f"v{i}",
-                             "bytes": avi_bytes(list(frs), fps=25.0)})
-            yield pd.DataFrame(rows)
+    sizes = {"audio": 8, "image": 6, "video": 4}
+    near_dup = {"audio": lambda d: audio_near_dup(d, threshold=0.35),
+                "image": imagefp.image_near_dup,
+                "video": lambda d: imagefp.video_near_dup(d, threshold=0.6)}
+    contaminated = {"audio": audio_contaminated_ids,
+                    "image": imagefp.image_contaminated_ids,
+                    "video": imagefp.video_contaminated_ids}
+    for kind, n in sizes.items():
+        acc = spark.sparkContext.accumulator(0)
+        near_dup[kind](_counted_source(spark, kind, n, acc)).collect()
+        assert acc.value == n, f"{kind} source evaluated {acc.value / n}x per row"
 
-    vsrc = spark.range(0, 4, 1, 2).mapInPandas(gen_video, "id string, bytes binary")
-    imagefp.video_near_dup(vsrc, threshold=0.6).collect()
-    assert acc2.value == 4, f"video source evaluated {acc2.value / 4.0}x per row"
+        corpus_acc = spark.sparkContext.accumulator(0)
+        eval_acc = spark.sparkContext.accumulator(0)
+        contaminated[kind](_counted_source(spark, kind, n, corpus_acc),
+                           _counted_source(spark, kind, n, eval_acc)).collect()
+        assert (corpus_acc.value, eval_acc.value) == (n, n), \
+            f"{kind} contamination: corpus/eval decoded {corpus_acc.value}/{eval_acc.value}"
 
 
 def test_embedding_near_dup_scans_corpus_twice_not_thrice(spark):
