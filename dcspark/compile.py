@@ -127,7 +127,13 @@ def check_field_is_present(model: str, fname: str) -> CompiledCheck:
 
 
 def check_field_type(model: str, fname: str, field_: Field) -> CompiledCheck:
-    expected = to_spark_data_type(field_)
+    """A declared type Spark has no type for compiles to a check that records
+    ``error`` with the reason, never one that passes on some stand-in type."""
+    try:
+        dtype = to_spark_data_type(field_)
+        expected, params = dtype.simpleString(), {"expected_spark_type": dtype}
+    except ValueError as e:
+        expected, params = f"<{e}>", {"type_error": str(e)}
     return CompiledCheck(
         key=_key(model, fname, "field_type"),
         check_type="field_type",
@@ -136,9 +142,9 @@ def check_field_type(model: str, fname: str, field_: Field) -> CompiledCheck:
         model=model,
         field=fname,
         kind="schema_type",
-        params={"expected_spark_type": expected, "declared_type": field_.type},
-        expected=expected.simpleString(),
-        implementation=f"df.schema['{fname}'].dataType == {expected.simpleString()}",
+        params={**params, "declared_type": field_.type},
+        expected=expected,
+        implementation=f"df.schema['{fname}'].dataType == {expected}",
     )
 
 

@@ -103,12 +103,6 @@ def _elements(scope: Reader) -> Iterator[Tuple[int, Reader]]:
         yield eid, r.sub(size, f"element 0x{eid:x}")
 
 
-def _iter_elements(buf: bytes, start: int, end: int) -> Iterator[Tuple[int, int, int]]:
-    """(element_id, payload_start, payload_end) within ``buf[start:end]``."""
-    for eid, el in _elements(Reader(buf, "ebml", start, end)):
-        yield eid, el.pos, el.end
-
-
 #: ids legal as direct Cluster children (Matroska spec): Timestamp,
 #: SilentTracks, Position, PrevSize, SimpleBlock, BlockGroup, EncryptedBlock
 _CLUSTER_CHILDREN = {0xE7, 0x5854, 0xA7, 0xAB, _SIMPLE_BLOCK, _BLOCK_GROUP,

@@ -901,8 +901,9 @@ class Validator:
                     None if ok else f"column {chk.field} missing in schema", None,
                 )
             else:  # schema_type
-                if resolved is None:
-                    self._record(chk, None, ResultEnum.error, f"column {chk.field} missing", None)
+                if resolved is None or "type_error" in chk.params:
+                    self._record(chk, None, ResultEnum.error,
+                                 chk.params.get("type_error", f"column {chk.field} missing"), None)
                     continue
                 actual = resolved.dataType
                 expected = chk.params["expected_spark_type"]

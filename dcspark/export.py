@@ -20,6 +20,7 @@ from typing import Any, Dict, Optional
 
 from .compile import create_checks
 from .spec import DataContractSpecification, Field, Model, to_spark_schema
+from .typemap import target_type
 
 # ---------------------------------------------------------------------------
 # spark
@@ -48,33 +49,13 @@ def to_spark_dict(spec: DataContractSpecification) -> Dict[str, Any]:
 # jsonschema (draft-07; parity: export/jsonschema_converter.py:34-128)
 # ---------------------------------------------------------------------------
 
-_JSON_TYPES = {
-    "string": "string", "text": "string", "varchar": "string",
-    "number": "number", "decimal": "number", "numeric": "number",
-    "float": "number", "double": "number",
-    "int": "integer", "integer": "integer", "long": "integer", "bigint": "integer",
-    "boolean": "boolean",
-    "timestamp": "string", "timestamp_tz": "string", "timestamp_ntz": "string",
-    "date": "string",
-    "bytes": "string",
-    "array": "array",
-    "object": "object", "record": "object", "struct": "object",
-    "null": "null",
-}
-
-_JSON_FORMATS = {"timestamp": "date-time", "timestamp_tz": "date-time",
-                 "timestamp_ntz": "date-time", "date": "date"}
-
-
 def _field_to_jsonschema(field: Field) -> Dict[str, Any]:
-    ftype = (field.type or "").lower()
     out: Dict[str, Any] = {}
-    jtype = _JSON_TYPES.get(ftype)
-    if jtype:
-        # nullable union unless required (jsonschema_converter.py:40-47)
-        out["type"] = jtype if field.required else [jtype, "null"]
-    if ftype in _JSON_FORMATS:
-        out["format"] = _JSON_FORMATS[ftype]
+    if field.type:  # an untyped field validates any value
+        out.update(target_type(field, "jsonschema"))
+        if not field.required:
+            # nullable union unless required (jsonschema_converter.py:40-47)
+            out["type"] = [out["type"], "null"]
     if field.format in ("uuid", "email", "uri"):
         out["format"] = field.format
     if field.pattern:
@@ -93,8 +74,11 @@ def _field_to_jsonschema(field: Field) -> Dict[str, Any]:
         out["exclusiveMinimum"] = field.exclusiveMinimum
     if field.exclusiveMaximum is not None:
         out["exclusiveMaximum"] = field.exclusiveMaximum
+    ftype = (field.type or "").lower()
     if ftype == "array" and field.items is not None:
         out["items"] = _field_to_jsonschema(field.items)
+    if ftype == "map" and field.values is not None:
+        out["additionalProperties"] = _field_to_jsonschema(field.values)
     if ftype in ("object", "record", "struct") and field.fields:
         out["properties"] = {n: _field_to_jsonschema(f) for n, f in field.fields.items()}
         req = [n for n, f in field.fields.items() if f.required]
@@ -151,41 +135,15 @@ def to_checks_dict(spec: DataContractSpecification,
 # iceberg schema (parity: export/iceberg_converter.py)
 # ---------------------------------------------------------------------------
 
-_ICEBERG_TYPES = {
-    "string": "string", "text": "string", "varchar": "string",
-    "int": "int", "integer": "int",
-    "long": "long", "bigint": "long",
-    "float": "float", "double": "double",
-    "boolean": "boolean",
-    "timestamp": "timestamptz", "timestamp_tz": "timestamptz",
-    "timestamp_ntz": "timestamp",
-    "date": "date",
-    "bytes": "binary",
-}
-
-
 def to_iceberg_schema(model: Model) -> Dict[str, Any]:
-    """Model -> Iceberg schema JSON (identifier-field-ids from primaryKey,
-    parity: export/iceberg_converter.py:83-92)."""
-    fields = []
-    identifier_ids = []
-    next_id = 1
-    for name, f in model.fields.items():
-        ftype = (f.type or "string").lower()
-        if ftype in ("number", "decimal", "numeric"):
-            itype: Any = f"decimal({f.precision or 38}, {f.scale or 0})"
-        else:
-            itype = _ICEBERG_TYPES.get(ftype, "binary")
-        fields.append({
-            "id": next_id,
-            "name": name,
-            "required": bool(f.required),
-            "type": itype,
-        })
-        if f.primaryKey or name in (model.primaryKey or []):
-            identifier_ids.append(next_id)
-        next_id += 1
-    out: Dict[str, Any] = {"type": "struct", "schema-id": 0, "fields": fields}
+    """Model -> Iceberg schema JSON through the table format's own Spark
+    converter, nested types included; identifier-field-ids from primaryKey
+    (parity: export/iceberg_converter.py:83-92)."""
+    from .iceberg import spark_to_iceberg_schema
+
+    out, _ = spark_to_iceberg_schema(to_spark_schema(model))
+    pks = set(model.primaryKey or []) | {n for n, f in model.fields.items() if f.primaryKey}
+    identifier_ids = [f["id"] for f in out["fields"] if f["name"] in pks]
     if identifier_ids:
         out["identifier-field-ids"] = identifier_ids
     return out
@@ -195,24 +153,6 @@ def to_iceberg_schema(model: Model) -> Dict[str, Any]:
 # sql / sql-query (parity: export/sql_converter.py, sql_type_converter.py:5-24)
 # ---------------------------------------------------------------------------
 
-_SQL_TYPES = {
-    "string": "VARCHAR", "text": "VARCHAR", "varchar": "VARCHAR",
-    "int": "INTEGER", "integer": "INTEGER", "long": "BIGINT", "bigint": "BIGINT",
-    "float": "FLOAT", "double": "DOUBLE", "boolean": "BOOLEAN",
-    "timestamp": "TIMESTAMP", "timestamp_tz": "TIMESTAMP WITH TIME ZONE",
-    "timestamp_ntz": "TIMESTAMP", "date": "DATE", "bytes": "BLOB",
-    "array": "ARRAY", "object": "STRUCT", "record": "STRUCT", "struct": "STRUCT",
-    "null": "NULL",
-}
-
-
-def _sql_type(f: Field) -> str:
-    ftype = (f.type or "string").lower()
-    if ftype in ("number", "decimal", "numeric"):
-        return f"DECIMAL({f.precision or 38},{f.scale or 0})"
-    return _SQL_TYPES.get(ftype, "VARCHAR")
-
-
 def to_sql_ddl(spec: DataContractSpecification) -> str:
     """ANSI `CREATE TABLE` DDL per model with NOT NULL + PRIMARY KEY."""
     blocks = []
@@ -220,7 +160,7 @@ def to_sql_ddl(spec: DataContractSpecification) -> str:
         lines = []
         pks = list(model.primaryKey or [])
         for name, f in model.fields.items():
-            line = f"  {name} {_sql_type(f)}"
+            line = f"  {name} {target_type(f, 'sql')}"
             if f.required:
                 line += " NOT NULL"
             lines.append(line)
@@ -246,42 +186,8 @@ def to_sql_query(spec: DataContractSpecification, model: Optional[str] = None) -
 # avro (parity: export/avro_converter.py:62-110 type map)
 # ---------------------------------------------------------------------------
 
-_AVRO_SCALARS = {
-    "string": "string", "varchar": "string", "text": "string",
-    "float": "float", "double": "double",
-    "int": "int", "integer": "int", "long": "long", "bigint": "long",
-    "boolean": "boolean", "bytes": "bytes", "null": "null",
-}
-
-
 def _avro_type(f: Field, name: str):
-    ftype = (f.type or "null").lower()
-    if ftype in _AVRO_SCALARS:
-        return _AVRO_SCALARS[ftype]
-    if ftype == "decimal":
-        out: Dict[str, Any] = {"type": "bytes", "logicalType": "decimal"}
-        if f.precision is not None:
-            out["precision"] = f.precision
-        if f.scale is not None:
-            out["scale"] = f.scale
-        return out
-    if ftype in ("number", "numeric"):
-        return "bytes"
-    if ftype in ("timestamp", "timestamp_tz"):
-        return {"type": "long", "logicalType": "timestamp-millis"}
-    if ftype == "timestamp_ntz":
-        return {"type": "long", "logicalType": "local-timestamp-millis"}
-    if ftype == "date":
-        return {"type": "int", "logicalType": "date"}
-    if ftype == "array":
-        items = _avro_type(f.items, f"{name}_item") if f.items else "string"
-        return {"type": "array", "items": items}
-    if ftype in ("object", "record", "struct"):
-        return _avro_record(name, f.fields or {})
-    if ftype == "map":
-        values = _avro_type(f.values, f"{name}_value") if f.values else "string"
-        return {"type": "map", "values": values}
-    return "bytes"
+    return target_type(f, "avro", lambda rec, n: _avro_record(n, rec.fields), name)
 
 
 def _avro_record(name: str, fields: Dict[str, Field]) -> Dict[str, Any]:
@@ -310,15 +216,6 @@ def to_avro_schema(model_name: str, model: Model) -> Dict[str, Any]:
 # protobuf (parity: export/protobuf_converter.py)
 # ---------------------------------------------------------------------------
 
-_PROTO_TYPES = {
-    "string": "string", "varchar": "string", "text": "string",
-    "int": "int32", "integer": "int32", "long": "int64", "bigint": "int64",
-    "float": "float", "double": "double", "boolean": "bool", "bytes": "bytes",
-    "timestamp": "int64", "timestamp_tz": "int64", "timestamp_ntz": "int64",
-    "date": "int32", "number": "string", "decimal": "string", "numeric": "string",
-}
-
-
 def to_protobuf(spec: DataContractSpecification) -> str:
     """proto3 document: one message per model, enums from `enum` constraints,
     `repeated` for arrays, nested messages for structs."""
@@ -331,20 +228,16 @@ def to_protobuf(spec: DataContractSpecification) -> str:
     msgs = []
 
     def field_line(scope: str, name: str, f: Field, idx: int, nested: list) -> str:
-        ftype = (f.type or "string").lower()
         if f.enum:
             ename = f"{scope.capitalize()}_{name.capitalize()}_Enum"
             enums[ename] = list(f.enum)
             ptype = ename
-        elif ftype == "array":
-            inner = f.items.type if f.items and f.items.type else "string"
-            ptype = "repeated " + _PROTO_TYPES.get(inner.lower(), "string")
-        elif ftype in ("object", "record", "struct"):
-            mname = name.capitalize()
-            nested.append(message(mname, f.fields or {}))
-            ptype = mname
         else:
-            ptype = _PROTO_TYPES.get(ftype, "string")
+            def record(rec: Field, path: str) -> str:
+                nested.append(message(path.capitalize(), rec.fields))
+                return path.capitalize()
+
+            ptype = target_type(f, "protobuf", record, name)
         return f"  {ptype} {name} = {idx};"
 
     def message(name: str, fields: Dict[str, Field]) -> str:
@@ -390,7 +283,7 @@ def to_dbt_sources(spec: DataContractSpecification) -> Dict[str, Any]:
                 tests.append({"relationships": {
                     "to": f"source('{spec.id or 'contract'}', '{parent}')",
                     "field": pfield}})
-            col: Dict[str, Any] = {"name": fname, "data_type": _sql_type(f).lower()}
+            col: Dict[str, Any] = {"name": fname, "data_type": target_type(f, "sql").lower()}
             if f.description:
                 col["description"] = f.description
             if tests:

@@ -25,6 +25,7 @@ import re
 from typing import Any, Dict, List, Optional
 
 from .spec import DataContractSpecification, Field, Model
+from .typemap import target_type
 
 
 def _dump_yaml(doc: Any) -> str:
@@ -41,18 +42,6 @@ def spec_to_yaml(spec: DataContractSpecification) -> str:
 # ---------------------------------------------------------------------------
 # odcs v3 (round-trips with imports.import_from_odcs_v3)
 # ---------------------------------------------------------------------------
-
-_ODCS_LOGICAL = {
-    "string": "string", "varchar": "string", "text": "string", "time": "string",
-    "timestamp": "date", "timestamp_tz": "date", "timestamp_ntz": "date", "date": "date",
-    "number": "number", "decimal": "number", "numeric": "number",
-    "float": "number", "double": "number",
-    "integer": "integer", "int": "integer", "long": "integer", "bigint": "integer",
-    "boolean": "boolean",
-    "object": "object", "record": "object", "struct": "object",
-    "bytes": "array", "array": "array",
-}
-
 
 def to_odcs_v3(spec: DataContractSpecification) -> Dict[str, Any]:
     """Open Data Contract Standard v3 document (dict; YAML via export())."""
@@ -83,10 +72,13 @@ def to_odcs_v3(spec: DataContractSpecification) -> Dict[str, Any]:
             if f.title:
                 prop["businessName"] = f.title
             if f.type:
-                logical = _ODCS_LOGICAL.get(f.type.lower())
-                if logical is not None:  # a null logicalType fails ODCS validation
-                    prop["logicalType"] = logical
-                prop["physicalType"] = f.type
+                try:
+                    prop["logicalType"] = target_type(f, "odcs")
+                except ValueError:
+                    pass  # no ODCS logical type; a null one fails validation
+                # the exact contract type, which the importer prefers
+                prop["physicalType"] = f.type if f.precision is None else (
+                    f"{f.type}({f.precision},{f.scale or 0})")
             if f.description:
                 prop["description"] = f.description
             if f.required is not None:
@@ -225,13 +217,11 @@ pre{{background:#f7fafc;padding:1rem;overflow-x:auto;border:1px solid #e2e8f0}}
 
 def to_dbt_models(spec: DataContractSpecification) -> Dict[str, Any]:
     """dbt `models:` YAML: enforced contract + constraint tests per column."""
-    from .export import _sql_type
-
     models = []
     for mname, model in spec.models.items():
         cols = []
         for fname, f in model.fields.items():
-            col: Dict[str, Any] = {"name": fname, "data_type": _sql_type(f).lower()}
+            col: Dict[str, Any] = {"name": fname, "data_type": target_type(f, "sql").lower()}
             if f.description:
                 col["description"] = f.description
             constraints = []
@@ -276,40 +266,18 @@ def to_dbt_staging_sql(spec: DataContractSpecification, model: Optional[str] = N
 # bigquery schema JSON
 # ---------------------------------------------------------------------------
 
-_BQ_TYPES = {
-    "string": "STRING", "varchar": "STRING", "text": "STRING", "null": "STRING",
-    "bytes": "BYTES",
-    "int": "INTEGER", "integer": "INTEGER",
-    "long": "INT64", "bigint": "INT64",
-    "float": "FLOAT64", "boolean": "BOOL",
-    "timestamp": "TIMESTAMP", "timestamp_tz": "TIMESTAMP",
-    "timestamp_ntz": "TIME", "date": "DATE",
-    "number": "NUMERIC", "decimal": "NUMERIC", "numeric": "NUMERIC",
-    "double": "FLOAT64", "struct": "STRUCT",
-}
-
-
 def _bq_field(name: str, f: Field) -> Dict[str, Any]:
-    ftype = (f.type or "string").lower()
-    if ftype in ("object", "record"):
-        bq_type = "RECORD" if f.fields else "JSON"
-    else:
-        bq_type = _BQ_TYPES.get(ftype, "STRING")
     out: Dict[str, Any] = {
         "name": name,
-        "type": bq_type,
+        "type": target_type(f, "bigquery"),
         "mode": "REQUIRED" if f.required else "NULLABLE",
     }
     if f.description is not None:
         out["description"] = f.description
-    if ftype == "array":
+    if (f.type or "").lower() == "array":
         out["mode"] = "REPEATED"
-        if f.items is not None and (f.items.type or "").lower() in ("object", "record", "struct"):
-            out["type"] = "RECORD"
-            out["fields"] = [_bq_field(n, c) for n, c in (f.items.fields or {}).items()]
-        elif f.items is not None:
-            out["type"] = _BQ_TYPES.get((f.items.type or "string").lower(), "STRING")
-    elif bq_type in ("RECORD", "STRUCT"):
+        f = f.items or f
+    if out["type"] in ("RECORD", "STRUCT"):
         out["fields"] = [_bq_field(n, c) for n, c in (f.fields or {}).items()]
     # the tables API rejects null-valued properties — omit, never emit null
     if out["type"] == "STRING" and f.maxLength is not None:
@@ -339,8 +307,6 @@ def to_bigquery_schema(spec: DataContractSpecification,
 # ---------------------------------------------------------------------------
 
 def to_dbml(spec: DataContractSpecification) -> str:
-    from .export import _sql_type
-
     info = spec.info
     out = [
         f'Project "{(info.title if info else None) or spec.id}" {{',
@@ -363,7 +329,7 @@ def to_dbml(spec: DataContractSpecification) -> str:
             if f.description:
                 settings.append(f"note: '{f.description}'")
             suffix = f" [{', '.join(settings)}]" if settings else ""
-            out.append(f'  "{fname}" "{_sql_type(f)}"{suffix}')
+            out.append(f'  "{fname}" "{target_type(f, "sql")}"{suffix}')
             if f.references:
                 parent, _, pfield = f.references.rpartition(".")
                 refs.append(f'Ref: "{mname}"."{fname}" > "{parent}"."{pfield}"')
@@ -376,26 +342,6 @@ def to_dbml(spec: DataContractSpecification) -> str:
 # ---------------------------------------------------------------------------
 # sqlalchemy model source
 # ---------------------------------------------------------------------------
-
-_SA_TYPES = {
-    "string": "String", "text": "Text", "varchar": "VARCHAR",
-    "int": "Integer", "integer": "Integer", "long": "BigInteger", "bigint": "BigInteger",
-    "float": "Float", "double": "Double", "boolean": "Boolean",
-    "timestamp": "TIMESTAMP", "timestamp_tz": "TIMESTAMP", "timestamp_ntz": "TIMESTAMP",
-    "date": "Date", "bytes": "LargeBinary", "array": "ARRAY",
-}
-
-
-def _sa_type(f: Field) -> str:
-    ftype = (f.type or "string").lower()
-    if ftype in ("number", "decimal", "numeric"):
-        args = ", ".join(str(x) for x in (f.precision, f.scale) if x is not None)
-        return f"Numeric({args})"
-    base = _SA_TYPES.get(ftype, "String")
-    if base in ("String", "Text", "VARCHAR") and f.maxLength is not None:
-        return f"{base}({f.maxLength})"
-    return base
-
 
 def _py_ident(name: str) -> str:
     ident = re.sub(r"\W", "_", name)
@@ -428,24 +374,13 @@ def to_sqlalchemy_model(spec: DataContractSpecification) -> str:
             if f.description:
                 kwargs.append(f"comment={f.description!r}")
             lines.append(
-                f"    {_py_ident(fname)} = Column({_sa_type(f)}, {', '.join(kwargs)})")
+                f"    {_py_ident(fname)} = Column({target_type(f, 'sqlalchemy')}, {', '.join(kwargs)})")
     return "\n".join(lines) + "\n"
 
 
 # ---------------------------------------------------------------------------
 # pydantic model source
 # ---------------------------------------------------------------------------
-
-_PYDANTIC_TYPES = {
-    "string": "str", "text": "str", "varchar": "str",
-    "number": "float", "decimal": "float", "numeric": "float",
-    "float": "float", "double": "float",
-    "int": "int", "integer": "int", "long": "int", "bigint": "int",
-    "boolean": "bool", "bytes": "bytes",
-    "timestamp": "datetime.datetime", "timestamp_tz": "datetime.datetime",
-    "timestamp_ntz": "datetime.datetime", "date": "datetime.date",
-}
-
 
 def to_pydantic_model(spec: DataContractSpecification) -> str:
     out = ["import datetime", "import typing", "", "import pydantic"]
@@ -454,17 +389,11 @@ def to_pydantic_model(spec: DataContractSpecification) -> str:
         return "".join(_py_ident(p).capitalize() for p in parts)
 
     def annotate(scope: str, fname: str, f: Field, nested: List[str]) -> str:
-        ftype = (f.type or "").lower()
-        if ftype in ("object", "record", "struct") and f.fields:
-            ann = clsname(scope, fname)
-            nested.append(render_class(ann, f.fields))
-        elif ftype == "array":
-            inner = (annotate(scope, fname + "_item", f.items, nested)
-                     if f.items is not None else "typing.Any")
-            ann = f"list[{inner}]"
-        else:
-            ann = _PYDANTIC_TYPES.get(ftype, "typing.Any")
-        return ann
+        def record(rec: Field, path: str) -> str:
+            nested.append(render_class(clsname(scope, path), rec.fields))
+            return clsname(scope, path)
+
+        return target_type(f, "pydantic", record, fname)
 
     def render_class(name: str, fields: Dict[str, Field]) -> str:
         nested: List[str] = []
@@ -567,17 +496,6 @@ def to_rdf_n3(spec: DataContractSpecification, base: Optional[str] = None) -> st
 # go structs
 # ---------------------------------------------------------------------------
 
-_GO_TYPES = {
-    "string": "string", "text": "string", "varchar": "string",
-    "int": "int", "integer": "int", "long": "int64", "bigint": "int64",
-    "float": "float64", "double": "float64",
-    "number": "float64", "decimal": "float64", "numeric": "float64",
-    "boolean": "bool", "bytes": "[]byte",
-    "timestamp": "time.Time", "timestamp_tz": "time.Time",
-    "timestamp_ntz": "time.Time", "date": "time.Time",
-}
-
-
 def _camel(name: str) -> str:
     return "".join(
         w.capitalize() for w in re.split(r"[^0-9a-zA-Z]+|(?<!^)(?=[A-Z])", name) if w
@@ -591,16 +509,13 @@ def to_go_types(spec: DataContractSpecification) -> str:
         nested: List[str] = []
         lines = [f"type {name} struct {{"]
         for fname, f in fields.items():
-            ftype = (f.type or "").lower()
             camel = _camel(fname)
-            if ftype in ("object", "record", "struct") and f.fields:
-                go_type = f"{name}{camel}"
-                nested += struct(go_type, f.fields)
-            elif ftype == "array":
-                inner = (f.items.type or "string").lower() if f.items else "string"
-                go_type = "[]" + _GO_TYPES.get(inner, "interface{}")
-            else:
-                go_type = _GO_TYPES.get(ftype, "interface{}")
+
+            def record(rec: Field, path: str) -> str:
+                nested.extend(struct(name + _camel(path), rec.fields))
+                return name + _camel(path)
+
+            go_type = target_type(f, "go", record, fname)
             if not f.required:
                 go_type = "*" + go_type
                 json_tag = f"{fname},omitempty"
@@ -620,35 +535,18 @@ def to_go_types(spec: DataContractSpecification) -> str:
 # avro idl
 # ---------------------------------------------------------------------------
 
-_AVRO_IDL_TYPES = {
-    "string": "string", "text": "string", "varchar": "string",
-    "int": "int", "integer": "int", "long": "long", "bigint": "long",
-    "float": "float", "double": "double", "boolean": "boolean",
-    "bytes": "bytes", "null": "null",
-    "timestamp": "timestamp_ms", "timestamp_tz": "timestamp_ms",
-    "timestamp_ntz": "timestamp_ms", "date": "date",
-    "number": "decimal(38, 0)", "numeric": "decimal(38, 0)",
-}
-
-
 def _avro_idl_type(f: Field, scope: str, nested: List[str]) -> str:
-    ftype = (f.type or "string").lower()
-    if ftype == "decimal":
-        return f"decimal({f.precision or 38}, {f.scale or 0})"
-    if ftype == "array":
-        inner = _avro_idl_type(f.items, scope + "_item", nested) if f.items else "string"
-        return f"array<{inner}>"
-    if ftype in ("object", "record", "struct"):
-        name = _camel(scope)
+    def record(rec: Field, path: str) -> str:
         body = []
-        for fname, child in (f.fields or {}).items():
-            t = _avro_idl_type(child, f"{scope}_{fname}", nested)
+        for fname, child in rec.fields.items():
+            t = _avro_idl_type(child, f"{path}_{fname}", nested)
             if not child.required:
                 t = f"{t}?"
             body.append(f"        {t} {fname};")
-        nested.append("    record " + name + " {\n" + "\n".join(body) + "\n    }")
-        return name
-    return _AVRO_IDL_TYPES.get(ftype, "bytes")
+        nested.append("    record " + _camel(path) + " {\n" + "\n".join(body) + "\n    }")
+        return _camel(path)
+
+    return target_type(f, "avro-idl", record, scope)
 
 
 def to_avro_idl(spec: DataContractSpecification) -> str:

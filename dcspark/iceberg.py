@@ -405,7 +405,7 @@ def iceberg_to_spark_schema(ice: dict) -> T.StructType:
                 return T.DecimalType(int(p), int(s.strip()))
             if t.startswith("fixed"):
                 return T.BinaryType()
-            return {
+            spark = {
                 "boolean": T.BooleanType(), "int": T.IntegerType(),
                 "long": T.LongType(), "float": T.FloatType(),
                 "double": T.DoubleType(), "date": T.DateType(),
@@ -414,7 +414,10 @@ def iceberg_to_spark_schema(ice: dict) -> T.StructType:
                 "timestamp": getattr(T, "TimestampNTZType", T.TimestampType)(),
                 "timestamptz": T.TimestampType(),
                 "time": T.LongType(),
-            }[t]
+            }.get(t)
+            if spark is None:
+                raise ValueError(f"unknown iceberg type {t!r}")
+            return spark
         if t["type"] == "struct":
             return T.StructType([
                 T.StructField(f["name"], conv(f["type"]), not f.get("required", False))

@@ -11,7 +11,8 @@ uses the pyarrow footer, CSV uses a bounded pandas sniff.
 from __future__ import annotations
 
 import os
-from typing import Dict, List, Optional
+import re
+from typing import Dict, Optional
 
 from .spec import (
     DataContractSpecification,
@@ -20,6 +21,7 @@ from .spec import (
     Model,
     from_spark_schema,
 )
+from .typemap import source_type, source_types
 
 
 def _base_spec(contract_id: str, title: str) -> DataContractSpecification:
@@ -37,18 +39,6 @@ def import_from_spark(df_or_schema, model_name: str = "imported",
     spec = _base_spec(contract_id, model_name)
     spec.models[model_name] = from_spark_schema(schema)
     return spec
-
-
-_ARROW_TO_CONTRACT = {
-    "string": "string", "large_string": "string", "utf8": "string",
-    "int8": "integer", "int16": "integer", "int32": "integer",
-    "int64": "long", "uint32": "long", "uint64": "long",
-    "float": "float", "halffloat": "float",
-    "double": "double",
-    "bool": "boolean",
-    "date32[day]": "date", "date64[ms]": "date",
-    "binary": "bytes", "large_binary": "bytes",
-}
 
 
 def _arrow_field_to_contract(arrow_type) -> Field:
@@ -71,7 +61,7 @@ def _arrow_field_to_contract(arrow_type) -> Field:
             arrow_type.field(i).name: _arrow_field_to_contract(arrow_type.field(i).type)
             for i in range(arrow_type.num_fields)
         })
-    return Field(type=_ARROW_TO_CONTRACT.get(str(arrow_type), "bytes"))
+    return Field(type=source_type(str(arrow_type), "arrow"))
 
 
 def import_from_parquet(path: str, model_name: Optional[str] = None,
@@ -92,15 +82,6 @@ def import_from_parquet(path: str, model_name: Optional[str] = None,
     return spec
 
 
-_PANDAS_TO_CONTRACT = {
-    "object": "string", "string": "string",
-    "int64": "long", "Int64": "long", "int32": "integer", "Int32": "integer",
-    "float64": "double", "float32": "float",
-    "bool": "boolean", "boolean": "boolean",
-    "datetime64[ns]": "timestamp_ntz",
-}
-
-
 def import_from_csv(path: str, model_name: Optional[str] = None,
                     delimiter: str = ",", sniff_rows: int = 1000,
                     contract_id: str = "imported") -> DataContractSpecification:
@@ -113,7 +94,7 @@ def import_from_csv(path: str, model_name: Optional[str] = None,
     fields: Dict[str, Field] = {}
     for col in sample.columns:
         dtype = str(sample[col].dtype)
-        ctype = _PANDAS_TO_CONTRACT.get(dtype, "string")
+        ctype = source_type(dtype, "pandas")
         if ctype == "string" and sample[col].notna().any():
             # try datetime promotion on non-numeric object columns
             try:
@@ -126,51 +107,26 @@ def import_from_csv(path: str, model_name: Optional[str] = None,
     return spec
 
 
-_ICEBERG_TO_CONTRACT = {
-    "string": "string", "int": "integer", "long": "long",
-    "float": "float", "double": "double", "boolean": "boolean",
-    "timestamptz": "timestamp", "timestamp": "timestamp_ntz",
-    "date": "date", "binary": "bytes", "uuid": "string",
-}
-
-
 def import_from_iceberg(schema_json, model_name: str = "imported",
                         contract_id: str = "imported") -> DataContractSpecification:
-    """Iceberg schema JSON (dict or path) -> contract; identifier-field-ids
+    """Iceberg schema JSON (dict or path) -> contract through the table
+    format's own Spark converter, nested types included; identifier-field-ids
     become primaryKey (parity: imports/iceberg_importer.py:49-56,126-172)."""
     import json as _json
+
+    from .iceberg import iceberg_to_spark_schema
 
     if isinstance(schema_json, str):
         with open(schema_json, "r", encoding="utf-8") as f:
             schema_json = _json.load(f)
     spec = _base_spec(contract_id, model_name)
-    fields: Dict[str, Field] = {}
-    pk: List[str] = []
+    model = from_spark_schema(iceberg_to_spark_schema(schema_json))
     ident = set(schema_json.get("identifier-field-ids", []))
-    for fdef in schema_json.get("fields", []):
-        itype = fdef.get("type")
-        if isinstance(itype, str) and itype.startswith("decimal"):
-            inner = itype[itype.index("(") + 1:itype.index(")")]
-            p, s = [int(x.strip()) for x in inner.split(",")]
-            cf = Field(type="decimal", precision=p, scale=s)
-        elif isinstance(itype, str):
-            cf = Field(type=_ICEBERG_TO_CONTRACT.get(itype, "bytes"))
-        else:
-            cf = Field(type="bytes")  # nested/struct types: opaque fallback
-        if fdef.get("required"):
-            cf.required = True
-        if fdef.get("id") in ident:
-            cf.primaryKey = True
-            pk.append(fdef["name"])
-        fields[fdef["name"]] = cf
-    spec.models[model_name] = Model(type="table", fields=fields, primaryKey=pk)
+    model.primaryKey = [f["name"] for f in schema_json.get("fields", []) if f.get("id") in ident]
+    for name in model.primaryKey:
+        model.fields[name].primaryKey = True
+    spec.models[model_name] = model
     return spec
-
-
-_AVRO_TO_CONTRACT = {
-    "string": "string", "int": "int", "long": "long", "float": "float",
-    "double": "double", "boolean": "boolean", "bytes": "bytes", "null": "null",
-}
 
 
 def _avro_field_to_contract(atype) -> Field:
@@ -180,34 +136,21 @@ def _avro_field_to_contract(atype) -> Field:
         non_null = [t for t in atype if t != "null"]
         required = "null" not in atype
         atype = non_null[0] if non_null else "null"
-    if isinstance(atype, dict):
-        logical = atype.get("logicalType")
-        base = atype.get("type")
-        if logical == "decimal":
-            f = Field(type="decimal", precision=atype.get("precision"),
-                      scale=atype.get("scale"))
-        elif logical in ("timestamp-millis", "timestamp-micros"):
-            f = Field(type="timestamp")
-        elif logical in ("local-timestamp-millis", "local-timestamp-micros"):
-            f = Field(type="timestamp_ntz")
-        elif logical == "date":
-            f = Field(type="date")
-        elif base == "array":
-            f = Field(type="array", items=_avro_field_to_contract(atype.get("items")))
-        elif base == "map":
-            f = Field(type="map", keys=Field(type="string"),
-                      values=_avro_field_to_contract(atype.get("values")))
-        elif base == "record":
-            f = Field(type="struct", fields={
-                fd["name"]: _avro_field_to_contract(fd["type"])
-                for fd in atype.get("fields", [])
-            })
-        elif base == "enum":
-            f = Field(type="string", enum=list(atype.get("symbols", [])))
-        else:
-            f = Field(type=_AVRO_TO_CONTRACT.get(base, "bytes"))
-    else:
-        f = Field(type=_AVRO_TO_CONTRACT.get(atype, "bytes"))
+    if not isinstance(atype, dict):
+        atype = {"type": atype}
+    base = atype.get("type")
+    f = Field(type=source_type(atype.get("logicalType") or base, "avro"))
+    if f.type == "decimal":
+        f.precision, f.scale = atype.get("precision"), atype.get("scale")
+    elif base == "array":
+        f.items = _avro_field_to_contract(atype.get("items"))
+    elif base == "map":
+        f.keys, f.values = Field(type="string"), _avro_field_to_contract(atype.get("values"))
+    elif base == "record":
+        f.fields = {fd["name"]: _avro_field_to_contract(fd["type"])
+                    for fd in atype.get("fields", [])}
+    elif base == "enum":
+        f.enum = list(atype.get("symbols", []))
     if not required:
         f.required = False
     return f
@@ -237,31 +180,23 @@ def import_from_avro(schema_json, model_name: Optional[str] = None,
     return spec
 
 
-_JSONSCHEMA_TO_CONTRACT = {
-    "string": "string", "integer": "long", "number": "double",
-    "boolean": "boolean", "object": "struct", "array": "array", "null": "null",
-}
-
-
 def _jsonschema_prop_to_contract(prop: dict) -> Field:
     jtype = prop.get("type")
     if isinstance(jtype, list):  # ["string", "null"] union
         jtype = next((t for t in jtype if t != "null"), "null")
-    fmt = prop.get("format")
-    if jtype == "string" and fmt == "date-time":
-        f = Field(type="timestamp")
-    elif jtype == "string" and fmt == "date":
-        f = Field(type="date")
-    elif jtype == "object":
-        f = Field(type="struct", fields={
-            k: _jsonschema_prop_to_contract(v)
-            for k, v in prop.get("properties", {}).items()
-        })
-    elif jtype == "array":
-        f = Field(type="array",
-                  items=_jsonschema_prop_to_contract(prop.get("items", {})))
+    values = prop.get("additionalProperties")
+    if jtype is None:  # an untyped property validates any value
+        f = Field()
+    elif jtype == "object" and isinstance(values, dict) and "properties" not in prop:
+        f = Field(type="map", keys=Field(type="string"),
+                  values=_jsonschema_prop_to_contract(values))
     else:
-        f = Field(type=_JSONSCHEMA_TO_CONTRACT.get(jtype, "string"))
+        spelled = f"{jtype}/{prop.get('format')}"
+        f = Field(type=source_types("jsonschema").get(spelled) or source_type(jtype, "jsonschema"))
+    if f.type == "struct":
+        f.fields = _jsonschema_properties(prop)
+    elif f.type == "array" and "items" in prop:
+        f.items = _jsonschema_prop_to_contract(prop["items"])
     for src, dst in (("pattern", "pattern"), ("enum", "enum"),
                      ("minLength", "minLength"), ("maxLength", "maxLength"),
                      ("minimum", "minimum"), ("maximum", "maximum")):
@@ -270,6 +205,16 @@ def _jsonschema_prop_to_contract(prop: dict) -> Field:
     if prop.get("description"):
         f.description = prop["description"]
     return f
+
+
+def _jsonschema_properties(obj: dict) -> Dict[str, Field]:
+    required = set(obj.get("required", []))
+    fields: Dict[str, Field] = {}
+    for name, prop in obj.get("properties", {}).items():
+        fields[name] = _jsonschema_prop_to_contract(prop)
+        if name in required:
+            fields[name].required = True
+    return fields
 
 
 def import_from_jsonschema(schema_json, model_name: str = "imported",
@@ -282,14 +227,7 @@ def import_from_jsonschema(schema_json, model_name: str = "imported",
         with open(schema_json, "r", encoding="utf-8") as f:
             schema_json = _json.load(f)
     spec = _base_spec(contract_id, model_name)
-    required = set(schema_json.get("required", []))
-    fields: Dict[str, Field] = {}
-    for name, prop in schema_json.get("properties", {}).items():
-        cf = _jsonschema_prop_to_contract(prop)
-        if name in required:
-            cf.required = True
-        fields[name] = cf
-    spec.models[model_name] = Model(type="table", fields=fields)
+    spec.models[model_name] = Model(type="table", fields=_jsonschema_properties(schema_json))
     return spec
 
 
@@ -323,11 +261,15 @@ def import_from_odcs_v3(doc, contract_id: Optional[str] = None) -> DataContractS
         ),
     )
 
-    def map_type(logical: Optional[str]) -> Optional[str]:
-        if logical is None:
-            return None
-        t = logical.lower()
-        return t if t in DATACONTRACT_TYPES else None
+    def field_type(prop: dict) -> Optional[Field]:
+        """physicalType when it names a contract type (``decimal(10,2)``
+        included), else logicalType when that does, else None."""
+        m = re.match(r"(\w+)(?:\((\d+),(\d+)\))?$", str(prop.get("physicalType")).lower())
+        if m and m.group(1) in DATACONTRACT_TYPES:
+            p, s = m.group(2), m.group(3)
+            return Field(type=m.group(1), precision=p and int(p), scale=s and int(s))
+        logical = str(prop.get("logicalType")).lower()
+        return Field(type=logical) if logical in DATACONTRACT_TYPES else None
 
     for schema in doc.get("schema") or []:
         model_name = schema.get("physicalName") or schema.get("name")
@@ -335,25 +277,22 @@ def import_from_odcs_v3(doc, contract_id: Optional[str] = None) -> DataContractS
         pk_count = sum(1 for p in props if p.get("primaryKey"))
         fields: Dict[str, Field] = {}
         for prop in props:
-            ftype = map_type(prop.get("logicalType"))
-            if ftype is None:
-                continue  # unmappable logical type: skip (reference logs + skips)
             # ODCS docs in the wild carry either `required` or `nullable`
             # (the reference exporter writes nullable but its importer reads
             # only required — accepting both closes our own round-trip)
             required = prop.get("required")
             if required is None and prop.get("nullable") is not None:
                 required = not prop["nullable"]
-            f = Field(
-                type=ftype,
-                description=prop.get("description"),
-                required=required,
-                unique=prop.get("unique"),
-                # composite PKs live on the model, not per-field (reference
-                # odcs_v3_importer.py:259-262,286-288)
-                primaryKey=bool(prop.get("primaryKey")) if pk_count == 1 else False,
-                classification=prop.get("classification"),
-            )
+            f = field_type(prop)
+            if f is None:
+                continue  # unmappable type: skip (reference logs + skips)
+            f.description = prop.get("description")
+            f.required = required
+            f.unique = prop.get("unique")
+            # composite PKs live on the model, not per-field (reference
+            # odcs_v3_importer.py:259-262,286-288)
+            f.primaryKey = bool(prop.get("primaryKey")) if pk_count == 1 else False
+            f.classification = prop.get("classification")
             # constraints round-trip via logicalTypeOptions (reference
             # odcs_v3_importer reads these back; exporter writes them at
             # odcs_v3_exporter.py:252-268)

@@ -24,6 +24,7 @@ import re
 from typing import Any, Dict, List, Optional, Tuple
 
 from .spec import DataContractSpecification, Field, Info, Model
+from .typemap import source_type, source_types
 
 
 def _base(contract_id: str) -> DataContractSpecification:
@@ -54,39 +55,15 @@ def _read_text(source: str) -> str:
 # bigquery
 # ---------------------------------------------------------------------------
 
-_BQ_TO_CONTRACT = {
-    "STRING": "string", "BYTES": "bytes",
-    "INTEGER": "int", "INT64": "bigint",
-    "FLOAT": "float", "FLOAT64": "double",
-    "BOOLEAN": "boolean", "BOOL": "boolean",
-    "TIMESTAMP": "timestamp", "DATETIME": "timestamp", "DATE": "date",
-    "TIME": "timestamp_ntz",
-    "NUMERIC": "numeric", "BIGNUMERIC": "double",
-    "GEOGRAPHY": "object", "JSON": "object",
-}
-
-
 def _bq_fields(cols: List[dict]) -> Dict[str, Field]:
     out: Dict[str, Field] = {}
     for col in cols or []:
-        f = Field()
-        f.required = col.get("mode") == "REQUIRED" or None
-        f.description = col.get("description")
         btype = col.get("type")
-        if col.get("mode") == "REPEATED":
-            f.type = "array"
-            if btype in ("RECORD", "STRUCT"):
-                f.items = Field(type="object", fields=_bq_fields(col.get("fields")))
-            else:
-                f.items = Field(type=_BQ_TO_CONTRACT.get(btype, "string"))
-        elif btype == "RECORD":
-            f.type = "object"
-            f.fields = _bq_fields(col.get("fields"))
-        elif btype == "STRUCT":
-            f.type = "struct"
-            f.fields = _bq_fields(col.get("fields"))
+        if btype in ("RECORD", "STRUCT"):
+            f = Field(type="object" if btype == "RECORD" else "struct",
+                      fields=_bq_fields(col.get("fields")))
         else:
-            f.type = _BQ_TO_CONTRACT.get(btype, "string")
+            f = Field(type=source_type(btype, "bigquery"))
         if btype == "STRING" and col.get("maxLength") is not None:
             f.maxLength = int(col["maxLength"])
         if btype in ("NUMERIC", "BIGNUMERIC"):
@@ -94,6 +71,10 @@ def _bq_fields(cols: List[dict]) -> Dict[str, Field]:
                 f.precision = int(col["precision"])
             if col.get("scale") is not None:
                 f.scale = int(col["scale"])
+        if col.get("mode") == "REPEATED":  # the column's type is the element's
+            f = Field(type="array", items=f)
+        f.required = col.get("mode") == "REQUIRED" or None
+        f.description = col.get("description")
         out[col.get("name")] = f
     return out
 
@@ -139,7 +120,7 @@ def import_from_unity(source, contract_id: str = "imported") -> DataContractSpec
             simple_types[col.get("name")] = col.get("type_name") or col.get("type_text") or "string"
     model = from_spark_schema(T.StructType(struct_fields)) if struct_fields else Model(type="table")
     for name, tname in simple_types.items():
-        model.fields[name] = Field(type=_UNITY_SIMPLE.get(tname.upper(), "string"))
+        model.fields[name] = hive_type_to_field(tname)
     for col in doc.get("columns") or []:
         f = model.fields.get(col.get("name"))
         if f is not None and col.get("comment"):
@@ -152,14 +133,6 @@ def import_from_unity(source, contract_id: str = "imported") -> DataContractSpec
         model.description = doc["comment"]
     spec.models[name] = model
     return spec
-
-
-_UNITY_SIMPLE = {
-    "STRING": "string", "INT": "integer", "LONG": "long", "BIGINT": "long",
-    "FLOAT": "float", "DOUBLE": "double", "BOOLEAN": "boolean",
-    "TIMESTAMP": "timestamp", "TIMESTAMP_NTZ": "timestamp_ntz", "DATE": "date",
-    "BINARY": "bytes", "DECIMAL": "decimal",
-}
 
 
 # ---------------------------------------------------------------------------
@@ -182,15 +155,6 @@ def _split_top(s: str, sep: str = ",") -> List[str]:
     if cur:
         parts.append("".join(cur))
     return parts
-
-
-_HIVE_SCALARS = {
-    "string": "string", "varchar": "varchar", "char": "string",
-    "tinyint": "integer", "smallint": "integer", "int": "integer", "integer": "integer",
-    "bigint": "long", "float": "float", "double": "double",
-    "boolean": "boolean", "binary": "bytes",
-    "timestamp": "timestamp", "date": "date",
-}
 
 
 def hive_type_to_field(dtype: str) -> Field:
@@ -218,7 +182,7 @@ def hive_type_to_field(dtype: str) -> Field:
     m = re.match(r"(?:varchar|char)\((\d+)\)$", t)
     if m:
         return Field(type="varchar", maxLength=int(m.group(1)))
-    return Field(type=_HIVE_SCALARS.get(t, "bytes"))
+    return Field(type=source_type(t, "hive"))
 
 
 def import_from_glue(source, contract_id: str = "imported") -> DataContractSpecification:
@@ -252,32 +216,6 @@ def import_from_glue(source, contract_id: str = "imported") -> DataContractSpeci
 # sql CREATE TABLE DDL
 # ---------------------------------------------------------------------------
 
-_SQL_TO_CONTRACT: List[Tuple[str, str]] = [
-    (r"varchar\((\d+)\)", "varchar"), (r"char\((\d+)\)", "string"),
-    (r"varchar", "varchar"), (r"text", "text"), (r"string", "string"),
-    (r"bigint", "bigint"), (r"smallint", "integer"), (r"tinyint", "integer"),
-    (r"int(eger)?", "integer"),
-    (r"double precision", "double"), (r"double", "double"),
-    (r"float|real", "float"),
-    (r"decimal\((\d+),\s*(\d+)\)|numeric\((\d+),\s*(\d+)\)", "decimal"),
-    (r"decimal|numeric|number", "decimal"),
-    (r"bool(ean)?", "boolean"),
-    (r"timestamp with time zone|timestamptz", "timestamp_tz"),
-    (r"timestamp", "timestamp"), (r"datetime", "timestamp"),
-    (r"date", "date"), (r"blob|bytea|binary|varbinary", "bytes"),
-    (r"array", "array"), (r"struct", "struct"), (r"json", "object"),
-]
-
-
-_SQL_TYPE_WORDS = {
-    "varchar", "char", "character", "text", "string", "nvarchar", "clob",
-    "int", "integer", "bigint", "smallint", "tinyint", "serial", "bigserial",
-    "double", "float", "real", "decimal", "numeric", "number",
-    "bool", "boolean", "timestamp", "timestamptz", "datetime", "date", "time",
-    "blob", "bytea", "binary", "varbinary", "array", "struct", "map", "json",
-}
-
-
 def _is_table_constraint(part: str) -> bool:
     """True for table-level constraint clauses, never for column definitions.
 
@@ -290,27 +228,27 @@ def _is_table_constraint(part: str) -> bool:
         return True
     m = re.match(r"(?:key|index)\s+(\w+)", p)
     if m:
-        return m.group(1) not in _SQL_TYPE_WORDS
+        return not any(k.split()[0] == m.group(1).upper() for k in source_types("sql"))
     return bool(re.match(r"(?:key|index)\s*\(", p))
 
 
 def _sql_col_type(raw: str) -> Field:
-    t = raw.strip().lower()
-    for pat, ctype in _SQL_TO_CONTRACT:
+    """The leading SQL type of a column definition -> contract Field; the
+    longest known spelling wins (``double precision`` over ``double``)."""
+    t = raw.strip().upper()
+    for spelling in sorted(source_types("sql"), key=len, reverse=True):
         # (?!\w) instead of \b: after "varchar(255)" the next char is a space
         # and ")"+" " has no word boundary, so \b silently dropped maxLength
         # whenever constraints followed the type
-        m = re.match(pat + r"(?!\w)", t)
+        m = re.match(re.escape(spelling) + r"(?:\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\))?(?!\w)", t)
         if m:
-            f = Field(type=ctype)
-            if ctype == "varchar" and m.groups() and m.group(1):
+            f = Field(type=source_type(spelling, "sql"))
+            if f.type == "varchar" and m.group(1):
                 f.maxLength = int(m.group(1))
-            if ctype == "decimal":
-                nums = [g for g in m.groups() if g is not None]
-                if len(nums) >= 2:
-                    f.precision, f.scale = int(nums[0]), int(nums[1])
+            if f.type == "decimal" and m.group(2):
+                f.precision, f.scale = int(m.group(1)), int(m.group(2))
             return f
-    return Field(type="string")
+    raise ValueError(f"sql type {raw.strip()!r} has no contract type")
 
 
 def import_from_sql(source: str, contract_id: str = "imported") -> DataContractSpecification:
@@ -427,13 +365,16 @@ def import_from_dbml(source: str, contract_id: str = "imported") -> DataContract
     ):
         tname = tm.group(1).split(".")[-1]
         fields: Dict[str, Field] = {}
-        for line in tm.group(2).splitlines():
+        # index blocks and (possibly multi-line) notes are not columns
+        body = re.sub(r"\bindexes\s*\{[^}]*\}|\b[Nn]ote:\s*'''.*?'''", "",
+                      tm.group(2), flags=re.DOTALL)
+        for line in body.splitlines():
             line = line.strip()
-            if not line or line.startswith(("Note:", "note:", "indexes", "//")):
+            if not line or line.startswith(("Note:", "note:", "//")):
                 continue
-            cm = re.match(r'"?([\w]+)"?\s+"?([\w()\s]+?)"?\s*(\[(.*)\])?$', line)
+            cm = re.match(r'"?([\w]+)"?\s+"?([\w(),\s]+?)"?\s*(\[(.*)\])?$', line)
             if not cm:
-                continue
+                raise ValueError(f"dbml table {tname!r}: cannot parse column line {line!r}")
             cname, ctype, settings = cm.group(1), cm.group(2), cm.group(4) or ""
             f = _sql_col_type(ctype)
             nm = re.search(r"note:\s*'([^']*)'", settings)
@@ -466,16 +407,6 @@ def import_from_dbml(source: str, contract_id: str = "imported") -> DataContract
 # protobuf
 # ---------------------------------------------------------------------------
 
-_PROTO_TO_CONTRACT = {
-    "string": "string", "bytes": "bytes",
-    "int32": "integer", "sint32": "integer", "uint32": "integer",
-    "sfixed32": "integer", "fixed32": "integer",
-    "int64": "long", "sint64": "long", "uint64": "long",
-    "sfixed64": "long", "fixed64": "long",
-    "float": "float", "double": "double", "bool": "boolean",
-}
-
-
 def import_from_protobuf(source: str, contract_id: str = "imported") -> DataContractSpecification:
     """proto3 document -> contract: one model per top-level message; enums map
     to string fields with `enum` constraints; `repeated` -> array; message-typed
@@ -483,14 +414,15 @@ def import_from_protobuf(source: str, contract_id: str = "imported") -> DataCont
     text = _read_text(source)
     spec = _base(contract_id)
 
-    def parse_block(body: str) -> Dict[str, str]:
-        """name -> inner body for each TOP-LEVEL `message`/`enum` block.
+    def parse_block(body: str) -> Tuple[Dict[Tuple[str, str], str], str]:
+        """((kind, name) -> inner body for each TOP-LEVEL `message`/`enum`
+        block, ``body`` with those blocks cut out).
 
         Depth-aware, and matches that start inside an already-captured block
         are skipped — a nested `message LineItem {...}` belongs to its parent
         as a struct field, never to the model list (a phantom top-level model
         would make the engine look for a table that doesn't exist)."""
-        blocks = {}
+        blocks, rest = {}, []
         pos = 0
         for m in re.finditer(r"\b(message|enum)\s+(\w+)\s*\{", body):
             if m.start() < pos:
@@ -503,10 +435,11 @@ def import_from_protobuf(source: str, contract_id: str = "imported") -> DataCont
                     depth -= 1
                 i += 1
             blocks[(m.group(1), m.group(2))] = body[m.end():i - 1]
+            rest.append(body[pos:m.start()])
             pos = i
-        return blocks
+        return blocks, "".join(rest) + body[pos:]
 
-    top = parse_block(text)
+    top, _ = parse_block(text)
     enums: Dict[str, List[str]] = {}
     for (kind, name), body in top.items():
         if kind == "enum":
@@ -522,20 +455,25 @@ def import_from_protobuf(source: str, contract_id: str = "imported") -> DataCont
 
     def fields_of(body: str, scope_msgs: Dict[str, str]) -> Dict[str, Field]:
         out: Dict[str, Field] = {}
-        # strip nested blocks for the field scan
-        flat = re.sub(r"\b(message|enum)\s+\w+\s*\{[^{}]*\}", "", body)
+        blocks, flat = parse_block(body)
+        scope_msgs = {**scope_msgs, **{n: b for (k, n), b in blocks.items() if k == "message"}}
+
+        def field_of(ptype: str) -> Field:
+            if ptype in enums:
+                return Field(type="string", enum=list(enums[ptype]))
+            if ptype in scope_msgs:
+                return Field(type="struct", fields=fields_of(scope_msgs[ptype], scope_msgs))
+            return Field(type=source_type(ptype, "protobuf"))
+
         for fm in re.finditer(
-            r"^\s*(repeated\s+|optional\s+)?([\w.]+)\s+(\w+)\s*=\s*\d+\s*;", flat, re.MULTILINE
+            r"^\s*(repeated\s+|optional\s+)?(?:map\s*<\s*([\w.]+)\s*,\s*([\w.]+)\s*>|([\w.]+))"
+            r"\s+(\w+)\s*=\s*\d+\s*;", flat, re.MULTILINE
         ):
-            label, ptype, name = fm.group(1) or "", fm.group(2), fm.group(3)
-            if ptype in _PROTO_TO_CONTRACT:
-                f = Field(type=_PROTO_TO_CONTRACT[ptype])
-            elif ptype in enums:
-                f = Field(type="string", enum=list(enums[ptype]))
-            elif ptype in scope_msgs:
-                f = Field(type="struct", fields=fields_of(scope_msgs[ptype], scope_msgs))
+            label, name = fm.group(1) or "", fm.group(5)
+            if fm.group(4) is None:
+                f = Field(type="map", keys=field_of(fm.group(2)), values=field_of(fm.group(3)))
             else:
-                f = Field(type="string")
+                f = field_of(fm.group(4))
             if label.strip() == "repeated":
                 f = Field(type="array", items=f)
             out[name] = f
@@ -543,8 +481,5 @@ def import_from_protobuf(source: str, contract_id: str = "imported") -> DataCont
 
     msg_bodies = {name: body for (kind, name), body in top.items() if kind == "message"}
     for name, body in msg_bodies.items():
-        nested = {n: b for (k, n), b in parse_block(body).items() if k == "message"}
-        spec.models[name] = Model(
-            type="table", fields=fields_of(body, {**msg_bodies, **nested})
-        )
+        spec.models[name] = Model(type="table", fields=fields_of(body, msg_bodies))
     return spec

@@ -71,12 +71,6 @@ def _boxes(scope: Reader) -> Iterator[Tuple[bytes, Reader]]:
         yield btype, r.sub(size - (r.pos - start), btype.decode("latin-1"))
 
 
-def _iter_boxes(buf: bytes, start: int, end: int) -> Iterator[Tuple[bytes, int, int]]:
-    """(type, payload_start, payload_end) per box of ``buf[start:end]``."""
-    for t, box in _boxes(Reader(buf, "mp4", start, end)):
-        yield t, box.pos, box.end
-
-
 def _find(scope: Reader, btype: bytes) -> Optional[Reader]:
     for t, box in _boxes(scope):
         if t == btype:
@@ -104,10 +98,6 @@ def _timing(box: Reader) -> Tuple[int, int]:
     if timescale == 0:
         box.fail("timescale is zero")
     return timescale, duration
-
-
-def _parse_mvhd(buf: bytes, s: int, e: int) -> Tuple[int, int]:
-    return _timing(Reader(buf, "mp4", s, e, "mvhd"))
 
 
 def _stts(box: Reader) -> Tuple[int, int]:

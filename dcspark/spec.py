@@ -281,51 +281,12 @@ def resolve_data_contract_from_dict(data: dict) -> DataContractSpecification:
     return spec
 
 
-# ---------------------------------------------------------------------------
-# Contract type -> Spark type (parity: export/spark_converter.py:110-153)
-# ---------------------------------------------------------------------------
-
 def to_spark_data_type(field: Field) -> T.DataType:
-    ftype = (field.type or "").lower()
-    if ftype in ("string", "varchar", "text"):
-        return T.StringType()
-    if ftype in ("number", "decimal", "numeric"):
-        return T.DecimalType(field.precision or 38, field.scale or 0)
-    if ftype in ("integer", "int"):
-        return T.IntegerType()
-    if ftype in ("long", "bigint"):
-        return T.LongType()
-    if ftype == "float":
-        return T.FloatType()
-    if ftype == "double":
-        return T.DoubleType()
-    if ftype == "boolean":
-        return T.BooleanType()
-    if ftype in ("timestamp", "timestamp_tz"):
-        return T.TimestampType()
-    if ftype == "timestamp_ntz":
-        return T.TimestampNTZType()
-    if ftype == "date":
-        return T.DateType()
-    if ftype == "bytes":
-        return T.BinaryType()
-    if ftype == "array":
-        element = to_spark_data_type(field.items) if field.items else T.NullType()
-        return T.ArrayType(element)
-    if ftype == "map":
-        key = to_spark_data_type(field.keys) if field.keys else T.StringType()
-        value = to_spark_data_type(field.values) if field.values else T.NullType()
-        return T.MapType(key, value)
-    if ftype in ("object", "record", "struct"):
-        return T.StructType(
-            [
-                T.StructField(name, to_spark_data_type(child), nullable=not child.required)
-                for name, child in field.fields.items()
-            ]
-        )
-    if ftype in ("null", "", None):
-        return T.NullType()
-    return T.BinaryType()  # unknown fallback (spark_converter.py:153)
+    """Contract type -> Spark type, read from the one type table
+    (``typemap``); an undeclared type raises ``ValueError``."""
+    from .typemap import target_type
+
+    return target_type(field, "spark")
 
 
 def to_spark_schema(model: Model) -> T.StructType:
@@ -357,51 +318,27 @@ def resolve_schema_field(schema: T.StructType, path: str) -> Optional[T.StructFi
 
 
 def from_spark_schema(schema: T.StructType) -> Model:
-    """Spark StructType -> contract Model (inverse map; parity: imports/spark_importer.py:115-158)."""
+    """Spark StructType -> contract Model: the type table read backwards
+    (parity: imports/spark_importer.py:115-158). A Spark type the table
+    has no contract type for raises ``ValueError``."""
+    from .typemap import source_type
 
-    def from_dtype(dtype: T.DataType) -> Field:
-        if isinstance(dtype, T.StringType):
-            return Field(type="string")
+    def from_dtype(dtype: T.DataType, nullable: bool = True) -> Field:
+        f = Field(type=source_type(dtype.typeName(), "spark"))
+        if not nullable:
+            f.required = True
         if isinstance(dtype, T.DecimalType):
-            return Field(type="decimal", precision=dtype.precision, scale=dtype.scale)
-        if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType)):
-            return Field(type="integer")
-        if isinstance(dtype, T.LongType):
-            return Field(type="long")
-        if isinstance(dtype, T.FloatType):
-            return Field(type="float")
-        if isinstance(dtype, T.DoubleType):
-            return Field(type="double")
-        if isinstance(dtype, T.BooleanType):
-            return Field(type="boolean")
-        if isinstance(dtype, T.TimestampType):
-            return Field(type="timestamp")
-        if isinstance(dtype, T.TimestampNTZType):
-            return Field(type="timestamp_ntz")
-        if isinstance(dtype, T.DateType):
-            return Field(type="date")
-        if isinstance(dtype, T.BinaryType):
-            return Field(type="bytes")
-        if isinstance(dtype, T.ArrayType):
-            return Field(type="array", items=from_dtype(dtype.elementType))
-        if isinstance(dtype, T.MapType):
-            return Field(type="map", keys=from_dtype(dtype.keyType), values=from_dtype(dtype.valueType))
-        if isinstance(dtype, T.StructType):
-            return Field(
-                type="struct",
-                fields={f.name: from_dtype(f.dataType) for f in dtype.fields},
-            )
-        if isinstance(dtype, T.NullType):
-            return Field(type="null")
-        return Field(type="bytes")
+            f.precision, f.scale = dtype.precision, dtype.scale
+        elif isinstance(dtype, T.ArrayType):
+            f.items = from_dtype(dtype.elementType)
+        elif isinstance(dtype, T.MapType):
+            f.keys, f.values = from_dtype(dtype.keyType), from_dtype(dtype.valueType)
+        elif isinstance(dtype, T.StructType):
+            f.fields = {c.name: from_dtype(c.dataType, c.nullable) for c in dtype.fields}
+        return f
 
-    fields = {}
-    for sf in schema.fields:
-        field = from_dtype(sf.dataType)
-        if not sf.nullable:
-            field.required = True
-        fields[sf.name] = field
-    return Model(type="table", fields=fields)
+    return Model(type="table", fields={
+        sf.name: from_dtype(sf.dataType, sf.nullable) for sf in schema.fields})
 
 
 def model_pk(spec: "DataContractSpecification", model_name: str, df) -> str:

@@ -446,6 +446,18 @@ def lsh_candidate_pairs(
     return out
 
 
+def _shingle_sizes(sh: DataFrame) -> DataFrame:
+    """(doc_id, sz) distinct-shingle count per doc. A doc_id on two rows
+    raises naming it: its shingles would enter the inverted index twice,
+    and every intersection with it (and its Jaccard) would be wrong."""
+    per_id = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("rows"),
+                                      F.max(F.size("sh")).cast("long").alias("sz"))
+    dup = F.raise_error(F.concat(F.lit("duplicate doc_id in the corpus: "),
+                                 F.col("doc_id").cast("string")))
+    return per_id.select("doc_id", F.when(F.col("rows") > 1, dup)
+                         .otherwise(F.col("sz")).alias("sz"))
+
+
 def jaccard_on_pairs(docs: DataFrame, pairs: DataFrame, n: int = 3,
                      sh: Optional[DataFrame] = None) -> DataFrame:
     """Exact shingle-set Jaccard for given (doc_a, doc_b) pairs.
@@ -455,7 +467,7 @@ def jaccard_on_pairs(docs: DataFrame, pairs: DataFrame, n: int = 3,
     """
     if sh is None:
         sh = shingle_table(docs, n, persist=False)
-    sizes = sh.select("doc_id", F.size("sh").cast("long").alias("sz"))
+    sizes = _shingle_sizes(sh)
     inv = sh.select("doc_id", F.explode("sh").alias("s"))
     docs_in_pairs = pairs.select(F.col("doc_a").alias("doc_id")).union(
         pairs.select(F.col("doc_b").alias("doc_id"))).distinct()
@@ -495,7 +507,7 @@ def allpairs_jaccard(docs: DataFrame, n: int = 3) -> DataFrame:
     subsets / per-bucket); the unbounded-scale path is ``minhash_near_dups``.
     """
     sh = shingle_table(docs, n, persist=True)
-    sizes = sh.select("doc_id", F.size("sh").cast("long").alias("sz"))
+    sizes = _shingle_sizes(sh)
     inv = sh.select("doc_id", F.explode("sh").alias("s"))
     joined, _ = hotkey.self_join(inv, "doc_id", ["s"], None)
     inter = (

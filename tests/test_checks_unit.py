@@ -140,6 +140,16 @@ def test_type_mismatch(spark):
     assert chk.result == ResultEnum.failed and "string" in chk.reason
 
 
+def test_undeclared_type_records_error(spark):
+    """`type: wat` has no Spark type: the check records error with the
+    reason instead of passing on a stand-in binary column."""
+    spec = _contract("      a: {type: wat}\n")
+    df = spark.createDataFrame([(bytearray(b"x"),)], "a binary")
+    res = _run(spark, spec, {"m": df})
+    chk = _result(res, "m__a__field_type")
+    assert chk.result == ResultEnum.error and "'wat' has no spark type" in chk.reason
+
+
 def test_sql_quality_thresholds(spark):
     spec = DataContractSpecification.from_string("""
 id: t

@@ -10,6 +10,7 @@ multimodal.video_metadata + the `type: video` contract rule.
 import pytest
 from pyspark.sql import functions as F
 
+from dcspark.binread import Reader
 from dcspark.ebml import is_webm, parse_webm, webm_bytes
 
 
@@ -83,11 +84,11 @@ def test_unknown_size_segment_parses():
     # locate the Segment element and rewrite its size as unknown (8-byte
     # all-ones VINT requires re-assembling: header + id + 0x01FF..FF + body)
     hdr_end = 0
-    for eid, s, e in E._iter_elements(bytes(raw), 0, len(raw)):
+    for eid, el in E._elements(Reader(bytes(raw), "ebml")):
         if eid == E._SEGMENT:
-            seg_body = bytes(raw[s:e])
+            seg_body = bytes(raw[el.pos:el.end])
             break
-        hdr_end = e
+        hdr_end = el.end
     head = bytes(raw[:hdr_end])
     unknown = head + E._enc_id(E._SEGMENT) + b"\x01" + b"\xff" * 7 + seg_body
     m = parse_webm(unknown)
@@ -163,14 +164,14 @@ def test_multiple_unknown_size_clusters_all_counted():
     raw = bytes(webm_bytes(320, 240, 25.0, 9, frames_per_cluster=3))
     # rebuild the segment with every cluster's size rewritten as unknown
     hdr_end = 0
-    for eid, s, e in E._iter_elements(raw, 0, len(raw)):
+    for eid, el in E._elements(Reader(raw, "ebml")):
         if eid == E._SEGMENT:
-            seg_s, seg_e = s, e
+            segment = el
             break
-        hdr_end = e
+        hdr_end = el.end
     pieces = []
-    for eid, s, e in E._iter_elements(raw, seg_s, seg_e):
-        body = raw[s:e]
+    for eid, el in E._elements(segment):
+        body = raw[el.pos:el.end]
         if eid == E._CLUSTER:
             pieces.append(E._enc_id(E._CLUSTER) + b"\x01" + b"\xff" * 7 + body)
         else:

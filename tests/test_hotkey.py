@@ -332,7 +332,7 @@ DOCS = [(1, "the quick brown fox jumps over the lazy dog"),
         (6, "the quick brown fox jumps over the lazy dog"),
         (7, "an entirely different sentence about spark joins"),
         (None, "an entirely different sentence about spark joins")]
-#: without the repeated doc 6: a repeated id makes a Jaccard union zero
+#: without the repeated doc 6, which the Jaccard operators reject
 UNIQUE_DOCS = DOCS[:6] + DOCS[7:]
 
 
@@ -430,6 +430,20 @@ def test_allpairs_jaccard_matches_brute_force(spark):
     got = _consume(spark, textops.allpairs_jaccard(docs, 3))
     assert [r[:4] for r in got] == [r[:4] for r in want]
     assert all(abs(g[4] - w[4]) < 1e-9 for g, w in zip(got, want))
+
+
+@pytest.mark.parametrize("op", [
+    lambda docs: textops.allpairs_jaccard(docs, 3),
+    lambda docs: textops.minhash_near_dups(docs, threshold=0.1),
+], ids=["allpairs_jaccard", "minhash_near_dups"])
+def test_text_jaccard_names_a_repeated_doc_id(spark, op):
+    """Doc 6 on two rows would enter the inverted index twice, double its
+    intersections and zero its Jaccard union; both operators raise naming
+    the id instead of dividing by zero."""
+    out = op(spark.createDataFrame(DOCS, "doc_id long, text string"))
+    with pytest.raises(Exception, match="duplicate doc_id in the corpus: 6"):
+        out.collect()
+    release_caches(out)
 
 
 # ---------------------------------------------------------------------------

@@ -62,12 +62,11 @@ def test_no_video_track_raises():
     # strip the moov down to just mvhd: no trak at all
     raw = mp4_bytes(64, 48, 24.0, 4)
     from dcspark import mp4 as m4
+    from dcspark.binread import Reader
     buf = bytes(raw)
-    boxes = list(m4._iter_boxes(buf, 0, len(buf)))
-    moov_s, moov_e = next((s, e) for t, s, e in boxes if t == b"moov")
-    mvhd_s, mvhd_e = next((s, e) for t, s, e in m4._iter_boxes(buf, moov_s, moov_e)
-                          if t == b"mvhd")
-    mvhd_box = buf[mvhd_s - 8:mvhd_e]
+    moov = next(box for t, box in m4._boxes(Reader(buf, "mp4")) if t == b"moov")
+    mvhd = next(box for t, box in m4._boxes(moov) if t == b"mvhd")
+    moov_s, mvhd_box = moov.pos, buf[mvhd.pos - 8:mvhd.end]
     gutted = buf[:moov_s - 8] + struct.pack(">I", 8 + len(mvhd_box)) + b"moov" + mvhd_box
     with pytest.raises(ValueError, match="no video track"):
         parse_mp4(gutted)
@@ -83,7 +82,8 @@ def test_mvhd_v1_64bit_times():
                + struct.pack(">QQIQ", 0, 0, 1000, 2500)
                + b"\x00" * 80)
     box = struct.pack(">I", 8 + len(payload)) + b"mvhd" + payload
-    ts, dur = m4._parse_mvhd(box, 8, len(box))
+    from dcspark.binread import Reader
+    ts, dur = m4._timing(Reader(box, "mp4", 8, len(box), "mvhd"))
     assert (ts, dur) == (1000, 2500)
 
 

@@ -52,7 +52,8 @@ def test_type_mapping_parity():
     assert to_spark_data_type(Field(type="timestamp_ntz")) == T.TimestampNTZType()
     assert to_spark_data_type(Field(type="bytes")) == T.BinaryType()
     assert to_spark_data_type(Field(type="array", items=Field(type="int"))) == T.ArrayType(T.IntegerType())
-    assert to_spark_data_type(Field(type="weird?")) == T.BinaryType()  # unknown fallback
+    with pytest.raises(ValueError, match="'weird\\?' has no spark type"):
+        to_spark_data_type(Field(type="weird?"))  # undeclared types fail closed
 
 
 def test_schema_roundtrip():
