@@ -24,7 +24,7 @@ import json
 import re
 from typing import Any, Dict, List, Optional
 
-from .spec import DataContractSpecification, Field, Model
+from .spec import DATACONTRACT_TYPES, DataContractSpecification, Field, Model
 from .typemap import target_type
 
 
@@ -72,10 +72,12 @@ def to_odcs_v3(spec: DataContractSpecification) -> Dict[str, Any]:
             if f.title:
                 prop["businessName"] = f.title
             if f.type:
+                if f.type.lower() not in DATACONTRACT_TYPES:
+                    raise ValueError(f"contract type {f.type!r} has no odcs type")
                 try:
                     prop["logicalType"] = target_type(f, "odcs")
                 except ValueError:
-                    pass  # no ODCS logical type; a null one fails validation
+                    pass  # map and null have none; a null one fails validation
                 # the exact contract type, which the importer prefers
                 prop["physicalType"] = f.type if f.precision is None else (
                     f"{f.type}({f.precision},{f.scale or 0})")

@@ -139,7 +139,9 @@ def _avro_field_to_contract(atype) -> Field:
     if not isinstance(atype, dict):
         atype = {"type": atype}
     base = atype.get("type")
-    f = Field(type=source_type(atype.get("logicalType") or base, "avro"))
+    # a reader ignores a logical type it does not know and reads the base type
+    logical = atype.get("logicalType")
+    f = Field(type=source_type(logical if logical in source_types("avro") else base, "avro"))
     if f.type == "decimal":
         f.precision, f.scale = atype.get("precision"), atype.get("scale")
     elif base == "array":

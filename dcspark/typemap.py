@@ -1,8 +1,8 @@
 """The one mapping between contract types and the type spellings of every
 export and import format.
 
-``_TABLE`` has one row per ``spec.DATACONTRACT_TYPES`` name and one column
-per target in ``TARGETS``. A cell is one of:
+``_TABLE`` has one row per ``spec.DATACONTRACT_TYPES`` name, plus one for a
+field without a type, and one column per target in ``TARGETS``. A cell is one of:
 
 - a constant spelling (a string, a Spark ``DataType``, or a JSON fragment);
 - a rule, ``rule(field, sub)``, for what depends on the field: decimal
@@ -15,9 +15,12 @@ per target in ``TARGETS``. A cell is one of:
   ``ValueError`` naming both, instead of writing a stand-in type.
 
 Importers read the same table backwards: :func:`source_type` inverts a
-target's column (a spelling that several types share goes to the type of
-the same name, else to the first in table order) and adds only that
-source's own synonyms. A foreign spelling that neither knows raises.
+target's column and adds that source's own synonyms. A spelling that
+several types share goes to the type of the same name; one that names none
+of them must be listed as a synonym, so table order never decides an
+import. JSON Schema and BigQuery, whose imports the inverse would mostly
+override, list every spelling. A foreign spelling that none of these
+knows raises.
 """
 
 from __future__ import annotations
@@ -123,6 +126,11 @@ def _sa_string(base: str) -> Callable:
     return lambda f, sub: base if f.maxLength is None else f"{base}({f.maxLength})"
 
 
+def _record_or(any_type: str) -> Callable:
+    """A struct with children is a named record; one without is free-form."""
+    return lambda f, sub: RECORD if f.fields else any_type
+
+
 def _py_array(f, sub):
     return f"list[{sub(f.items, '_item') if f.items is not None else 'typing.Any'}]"
 
@@ -160,8 +168,10 @@ _JINT = {"type": "integer"}
 _JOBJ = {"type": "object"}
 _ATS = {"type": "long", "logicalType": "timestamp-millis"}
 _ANTZ = {"type": "long", "logicalType": "local-timestamp-millis"}
+_PY_OBJ = _record_or("typing.Any")
+_GO_OBJ = _record_or("interface{}")
 
-_TABLE: Dict[str, tuple] = {
+_TABLE: Dict[Optional[str], tuple] = {
     # type:         spark, jsonschema, sql, avro, protobuf, odcs,
     #               bigquery, sqlalchemy, pydantic, go, avro-idl
     "string":        (T.StringType(), _JSTR, "VARCHAR", "string", "string", "string",
@@ -208,13 +218,18 @@ _TABLE: Dict[str, tuple] = {
     "bytes":         (T.BinaryType(), _JSTR, "BLOB", "bytes", "bytes", "array",
                       "BYTES", "LargeBinary", "bytes", "[]byte", "bytes"),
     "object":        (_spark_struct, _JOBJ, "STRUCT", RECORD, RECORD, "object",
-                      _bq_object, None, RECORD, RECORD, RECORD),
+                      _bq_object, None, _PY_OBJ, _GO_OBJ, RECORD),
     "record":        (_spark_struct, _JOBJ, "STRUCT", RECORD, RECORD, "object",
-                      _bq_object, None, RECORD, RECORD, RECORD),
+                      _bq_object, None, _PY_OBJ, _GO_OBJ, RECORD),
     "struct":        (_spark_struct, _JOBJ, "STRUCT", RECORD, RECORD, "object",
-                      "STRUCT", None, RECORD, RECORD, RECORD),
+                      "STRUCT", None, _PY_OBJ, _GO_OBJ, RECORD),
     "null":          (T.NullType(), {"type": "null"}, "NULL", "null", None, None,
                       "STRING", None, "None", None, "null"),
+    # no type: the field holds any value. JSON Schema and ODCS write no type
+    # at all; the other targets write their most permissive spelling, or for
+    # Spark and Avro their null type, which Iceberg has no type for.
+    None:            (T.NullType(), None, "VARCHAR", "null", "string", None,
+                      "STRING", "String", "typing.Any", "interface{}", "string"),
 }
 
 _COLUMN = {t: i for i, t in enumerate(TARGETS)}
@@ -225,23 +240,21 @@ def target_type(field: Field, target: str,
                 name: str = "") -> Any:
     """How ``target`` spells ``field``'s contract type.
 
-    A field without a type reads the ``null`` row. ``record(field, name)``
-    renders a struct for targets whose cell is ``RECORD``; ``name`` is the
-    field's name, suffixed ``_item``/``_value`` down into array elements and
-    map values so nested records get distinct names. A missing element type
+    A field without a type reads the untyped row. ``record(field, name)``
+    renders a struct for targets whose cell is, or whose rule returns,
+    ``RECORD``; ``name`` is the field's name, suffixed ``_item``/``_value``
+    down into array elements and map values so nested records get distinct
+    names. A missing element type
     reads as ``string``. Raises ``ValueError`` naming the type and the target
     when the cell is empty."""
-    ftype = (field.type or "null").lower()
-    row = _TABLE.get(ftype)
+    row = _TABLE.get(field.type.lower() if field.type else None)
     cell = row[_COLUMN[target]] if row is not None else None
     if cell is None:
         raise ValueError(f"contract type {field.type!r} has no {target} type")
-    if cell is RECORD:
-        return record(field, name)
     if callable(cell):
-        return cell(field, lambda child, suffix="": target_type(
+        cell = cell(field, lambda child, suffix="": target_type(
             _STRING if child is None else child, target, record, name + suffix))
-    return cell
+    return record(field, name) if cell is RECORD else cell
 
 
 # -- the table read backwards -------------------------------------------------
@@ -269,8 +282,10 @@ _SOURCES: Dict[str, tuple] = {
         "int32": "integer", "Int32": "integer", "float64": "double",
         "float32": "float", "bool": "boolean", "boolean": "boolean",
         "datetime64[ns]": "timestamp_ntz"}),
-    "jsonschema": ("jsonschema", lambda c: "/".join(filter(None, (c["type"], c.get("format")))),
-                   {"integer": "long", "number": "double", "object": "struct"}),
+    "jsonschema": (None, None, {
+        "string": "string", "string/date-time": "timestamp", "string/date": "date",
+        "integer": "long", "number": "double", "boolean": "boolean",
+        "object": "struct", "array": "array", "null": "null"}),
     "sql": ("sql", lambda c: c.split("(")[0], {
         "CHAR": "string", "CHARACTER": "string", "NCHAR": "string", "STRING": "string",
         "CHARACTER VARYING": "varchar", "NVARCHAR": "varchar", "TEXT": "text",
@@ -281,16 +296,18 @@ _SOURCES: Dict[str, tuple] = {
         "TIMESTAMP WITHOUT TIME ZONE": "timestamp_ntz", "DATETIME": "timestamp",
         "BYTEA": "bytes", "BINARY": "bytes", "VARBINARY": "bytes", "JSON": "object"}),
     "avro": ("avro", lambda c: c if isinstance(c, str) else c.get("logicalType") or c["type"], {
-        "timestamp-micros": "timestamp", "local-timestamp-micros": "timestamp_ntz",
-        "fixed": "bytes", "enum": "string"}),
+        "timestamp-millis": "timestamp", "timestamp-micros": "timestamp",
+        "local-timestamp-micros": "timestamp_ntz", "fixed": "bytes", "enum": "string"}),
     "protobuf": ("protobuf", str, {
         "int32": "integer", "sint32": "integer", "uint32": "integer",
-        "fixed32": "integer", "sfixed32": "integer",
+        "fixed32": "integer", "sfixed32": "integer", "int64": "long",
         "sint64": "long", "uint64": "long", "fixed64": "long", "sfixed64": "long"}),
-    "bigquery": ("bigquery", str, {
-        "INTEGER": "int", "FLOAT": "float", "FLOAT64": "double", "BOOLEAN": "boolean",
-        "DATETIME": "timestamp", "BIGNUMERIC": "double", "GEOGRAPHY": "object",
-        "JSON": "object"}),
+    "bigquery": (None, None, {
+        "STRING": "string", "BYTES": "bytes", "INTEGER": "int", "INT64": "bigint",
+        "FLOAT": "float", "FLOAT64": "double", "BOOLEAN": "boolean", "BOOL": "boolean",
+        "TIMESTAMP": "timestamp", "DATETIME": "timestamp", "DATE": "date",
+        "TIME": "timestamp_ntz", "NUMERIC": "numeric", "BIGNUMERIC": "double",
+        "GEOGRAPHY": "object", "JSON": "object"}),
 }
 
 
@@ -298,15 +315,17 @@ _SOURCES: Dict[str, tuple] = {
 def source_types(source: str) -> Dict[str, str]:
     """Every foreign spelling ``source`` knows -> its contract type."""
     column, spell, synonyms = _SOURCES[source]
-    inverse: Dict[str, str] = {}
+    shared: Dict[str, list] = {}
     for ctype in DATACONTRACT_TYPES if column else ():
         try:
             key = spell(target_type(Field(type=ctype), column,
                                     record=lambda f, n: "record"))
         except ValueError:
             continue
-        if key not in inverse or key.lower() == ctype:
-            inverse[key] = ctype
+        shared.setdefault(key, []).append(ctype)
+    inverse = {key: key.lower() if key.lower() in ctypes else ctypes[0]
+               for key, ctypes in shared.items()
+               if len(ctypes) == 1 or key.lower() in ctypes}
     return {**inverse, **synonyms}
 
 

@@ -20,7 +20,7 @@ from dcspark.spec import (
     DATACONTRACT_TYPES, DataContractSpecification, Field, Model, from_spark_schema,
     to_spark_data_type, to_spark_schema,
 )
-from dcspark.typemap import TARGETS, source_type, target_type
+from dcspark.typemap import _SOURCES, TARGETS, source_type, source_types, target_type
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -51,6 +51,90 @@ def test_every_cell_maps_or_names_type_and_target(ctype, target):
 def test_undeclared_type_raises_for_every_target(target):
     with pytest.raises(ValueError, match=f"'wat' has no {target} type"):
         target_type(Field(type="wat"), target, lambda f, name: "Rec")
+
+
+def test_odcs_export_raises_on_undeclared_type():
+    spec = DataContractSpecification.from_string(
+        "id: o\nmodels:\n  m:\n    fields:\n      f: {type: wat}\n")
+    with pytest.raises(ValueError, match="'wat' has no odcs type"):
+        export(spec, "odcs")
+
+
+#: an untyped field holds any value; each target's spelling of it
+UNTYPED = {"spark": T.NullType(), "sql": "VARCHAR", "avro": "null", "protobuf": "string",
+           "bigquery": "STRING", "sqlalchemy": "String", "pydantic": "typing.Any",
+           "go": "interface{}", "avro-idl": "string"}
+
+
+@pytest.mark.parametrize("target", TARGETS)
+def test_untyped_field_spelling(target):
+    if target in UNTYPED:
+        assert target_type(Field(), target) == UNTYPED[target]
+    else:  # JSON Schema and ODCS write no type at all
+        with pytest.raises(ValueError, match=f"None has no {target} type"):
+            target_type(Field(), target)
+
+
+def test_untyped_json_schema_property_exports_as_any():
+    spec = import_from_jsonschema({"type": "object", "properties": {"f": {}}})
+    assert "f: typing.Optional[typing.Any] = None" in export(spec, "pydantic-model")
+    assert "F *interface{}" in export(spec, "go")
+    assert to_jsonschema(_model(spec))["properties"]["f"] == {}
+
+
+@pytest.mark.parametrize("ctype", ["object", "record", "struct"])
+def test_struct_without_children_is_free_form(ctype):
+    rec = lambda f, name: "Rec"  # noqa: E731
+    assert target_type(Field(type=ctype), "pydantic", rec) == "typing.Any"
+    assert target_type(Field(type=ctype), "go", rec) == "interface{}"
+    nested = Field(type=ctype, fields={"a": Field(type="int")})
+    assert target_type(nested, "pydantic", rec) == target_type(nested, "go", rec) == "Rec"
+
+
+def test_avro_reads_unknown_logical_type_as_its_base_type():
+    doc = {"type": "record", "name": "r", "fields": [
+        {"name": "id", "type": {"type": "string", "logicalType": "uuid"}},
+        {"name": "t_ms", "type": {"type": "int", "logicalType": "time-millis"}},
+        {"name": "t_us", "type": {"type": "long", "logicalType": "time-micros"}},
+        {"name": "ns", "type": {"type": "long", "logicalType": "timestamp-nanos"}},
+        {"name": "d", "type": {"type": "fixed", "size": 12, "name": "d",
+                               "logicalType": "duration"}},
+        {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+    ]}
+    fields = import_from_avro(doc).models["r"].fields
+    assert {n: f.type for n, f in fields.items()} == {
+        "id": "string", "t_ms": "int", "t_us": "long", "ns": "long", "d": "bytes",
+        "ts": "timestamp"}
+
+
+@pytest.mark.parametrize("source", sorted(s for s, (column, _, _) in _SOURCES.items() if column))
+def test_every_exported_spelling_imports_without_table_order(source):
+    """A spelling several types share imports as the type of the same name
+    or as a listed synonym; reading the table in reverse changes nothing."""
+    column, spell, synonyms = _SOURCES[source]
+    shared = {}
+    for ctype in DATACONTRACT_TYPES:
+        try:
+            key = spell(target_type(Field(type=ctype), column, lambda f, n: "record"))
+        except ValueError:
+            continue
+        shared.setdefault(key, set()).add(ctype)
+        assert key in source_types(source), (source, ctype, key)
+    for key, ctypes in shared.items():
+        assert source_types(source)[key] in ctypes | {synonyms.get(key)}
+        assert len(ctypes) == 1 or key.lower() in ctypes or key in synonyms, (source, key)
+
+
+def test_bigquery_and_jsonschema_import_spellings():
+    for ctype in DATACONTRACT_TYPES:  # every spelling the exporters write is listed
+        bq = target_type(_example(ctype), "bigquery", lambda f, n: "RECORD")
+        assert bq in source_types("bigquery") or bq in ("RECORD", "STRUCT"), ctype
+        js = target_type(_example(ctype), "jsonschema")
+        assert "/".join(filter(None, (js["type"], js.get("format")))) in source_types("jsonschema")
+    assert source_types("bigquery")["INT64"] == "bigint"
+    assert source_types("bigquery")["INTEGER"] == "int"
+    assert source_types("jsonschema")["integer"] == "long"
+    assert source_types("jsonschema")["string/date-time"] == "timestamp"
 
 
 def test_unknown_foreign_type_raises():
