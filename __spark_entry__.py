@@ -2259,7 +2259,7 @@ def q_audio_loudness_drift(spark: SparkSession, _sf: str) -> DataFrame:
 
     def hist_counts(df: DataFrame) -> list:
         compact = audio_mod.audio_decode_compact(
-            df, oracle=None, snr_fn=None, violation_cap=0,
+            df, snr_fn=None, violation_cap=0,
             feat_bins={"rms_dbfs": edges})
         rows = (
             compact.filter(F.col("row_type") == "fh")
@@ -5161,17 +5161,17 @@ def q_filtered_checks(spark: SparkSession, sf: str) -> DataFrame:
     a scoped duplicate count (filter applied before the groupBy). All four
     fold into ordinary aggregates — one shared scan plus one unique job."""
     from dcspark.compile import (
-        check_field_minimum,
         check_quality_expression,
         check_quality_metric,
+        field_constraint_checks,
         scope_to_filter,
     )
-    from dcspark.spec import Quality
+    from dcspark.spec import Field, Quality
 
     orders = _t(spark, sf, "orders")
     flt = "o_orderstatus = 'F'"
-    min_chk = scope_to_filter(
-        check_field_minimum("m", "o_totalprice", 25000.0), flt)
+    min_chk, = field_constraint_checks("m", "o_totalprice", Field(minimum=25000.0))
+    min_chk = scope_to_filter(min_chk, flt)
     avg_chk = check_quality_metric(
         "m",
         Quality(type="metric", metric="avg", column="o_totalprice",

@@ -438,25 +438,23 @@ def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
     return 10.0 * np.log10(p_sig / p_err)
 
 
-OraclePcm = Callable[[str, int, int], Optional[np.ndarray]]
-"""(clip_id, declared_sr, declared_dur_ms) -> expected PCM or None (skip SNR)."""
-
 SnrFn = Callable[[str, int, int, np.ndarray], Optional[float]]
 """(clip_id, declared_sr, declared_dur_ms, decoded_pcm) -> SNR dB or None (skip)."""
 
 
-def synth_oracle(seed: int, dur_lo: int = 200, dur_hi: int = 30000) -> OraclePcm:
-    """Oracle for the deterministic synthetic table: re-synthesize from clip_id."""
+def synth_oracle(seed: int, dur_lo: int = 200, dur_hi: int = 30000) -> SnrFn:
+    """SNR oracle for the deterministic synthetic table: re-synthesize the
+    reference PCM from clip_id and compare it whole (:func:`snr_db`)."""
     from . import synth
 
-    def oracle(clip_id: str, _sr: int, _dur: int) -> Optional[np.ndarray]:
+    def snr_fn(clip_id: str, _sr: int, _dur: int, decoded: np.ndarray) -> Optional[float]:
         try:
             i = int(clip_id.rsplit("-", 1)[1])
         except (IndexError, ValueError):
             return None
-        return synth.oracle_pcm(seed, i, dur_lo, dur_hi)
+        return snr_db(synth.oracle_pcm(seed, i, dur_lo, dur_hi), decoded)
 
-    return oracle
+    return snr_fn
 
 
 def synth_snr_oracle(seed: int, dur_lo: int = 200, dur_hi: int = 30000,
@@ -478,7 +476,7 @@ def synth_snr_oracle(seed: int, dur_lo: int = 200, dur_hi: int = 30000,
     return snr_fn
 
 
-def _eval_batch(batch, oracle, snr_fn, snr_floor_db, fp_fn=None, feat_fns=None):
+def _eval_batch(batch, snr_fn, snr_floor_db, fp_fn=None, feat_fns=None):
     """Evaluate the decode-conformance invariant for every row of one Arrow
     batch -> list of (clip_id, rec-dict). Shared by the per-row report and the
     compact engine pass so the two can never drift semantically.
@@ -528,13 +526,6 @@ def _eval_batch(batch, oracle, snr_fn, snr_floor_db, fp_fn=None, feat_fns=None):
                     finite = not (math.isinf(s) or math.isnan(s))
                     rec["snr_db"] = float(s) if finite else None
                     rec["snr_ok"] = bool(s >= snr_floor_db)
-            elif oracle is not None:
-                expected = oracle(clip_id, d_sr, d_dur)
-                if expected is not None:
-                    s = snr_db(expected, pcm)
-                    finite = not (math.isinf(s) or math.isnan(s))
-                    rec["snr_db"] = float(s) if finite else None
-                    rec["snr_ok"] = bool(s >= snr_floor_db)
         except DECODE_ERRORS as e:
             rec["decode_error"] = str(e)
         out.append((clip_id, rec))
@@ -567,14 +558,13 @@ def _rec_observed(rec: dict) -> str:
 def audio_decode_report(
     df: DataFrame,
     snr_floor_db: float = 30.0,
-    oracle: Optional[OraclePcm] = None,
     snr_fn: Optional[SnrFn] = None,
     id_col: str = "clip_id",
 ) -> DataFrame:
     """Per-row decode-conformance report (one output row per input row).
 
     Reads ONLY the columns it needs (clip_id, bytes, sr_hz, dur_ms, codec) so the
-    parquet scan prunes everything else. When ``oracle`` is None the SNR invariant
+    parquet scan prunes everything else. When ``snr_fn`` is None the SNR invariant
     is skipped (snr_ok = null) and header conformance alone decides.
     """
     spark_schema, arrow_schema = ddl_schemas(AUDIO_REPORT_DDL)
@@ -584,7 +574,7 @@ def audio_decode_report(
 
         for batch in batches:
             rows = [{**rec, "clip_id": clip_id} for clip_id, rec
-                    in _eval_batch(batch, oracle, snr_fn, snr_floor_db)]
+                    in _eval_batch(batch, snr_fn, snr_floor_db)]
             yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     cols = [F.col(id_col), F.col("bytes"), F.col("sr_hz"), F.col("dur_ms"), F.col("codec")]
@@ -878,7 +868,6 @@ def eval_features(pcm, sr, fns: Dict[str, Callable]) -> Dict[str, float]:
 def audio_decode_compact(
     df: DataFrame,
     snr_floor_db: float = 30.0,
-    oracle: Optional[OraclePcm] = None,
     snr_fn: Optional[SnrFn] = None,
     id_col: str = "clip_id",
     partition_col: Optional[str] = None,
@@ -956,7 +945,7 @@ def audio_decode_compact(
             parts = batch.column(base).to_pylist() if has_part else None
             chars = batch.column(5).to_pylist() if needs_chars else None
             for i, (clip_id, rec) in enumerate(
-                    _eval_batch(batch, oracle, snr_fn, snr_floor_db,
+                    _eval_batch(batch, snr_fn, snr_floor_db,
                                 fp_fn=fp_fn, feat_fns=feat_fns)):
                 part = parts[i] if parts is not None else None
                 fp = rec.get("fp")

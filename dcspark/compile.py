@@ -98,15 +98,9 @@ def _key(model: str, field_: Optional[str], check_type: str) -> str:
     return f"{model}__{check_type}"
 
 
-def _missing_count(col: str) -> Column:
-    return F.coalesce(F.sum(F.when(F.col(col).isNull(), 1).otherwise(0)), F.lit(0))
-
-
-def _invalid_count(col: str, invalid_pred: Column) -> Column:
-    # invalid_count counts only non-missing violating values (soda semantics)
-    return F.coalesce(
-        F.sum(F.when(F.col(col).isNotNull() & invalid_pred, 1).otherwise(0)), F.lit(0)
-    )
+def _count_rows(pred: Column) -> Column:
+    """Rows matching ``pred``: every row-level check's metric."""
+    return F.coalesce(F.sum(F.when(pred, 1).otherwise(0)), F.lit(0))
 
 
 # ---------------------------------------------------------------------------
@@ -145,23 +139,6 @@ def check_field_type(model: str, fname: str, field_: Field) -> CompiledCheck:
         params={**params, "declared_type": field_.type},
         expected=expected,
         implementation=f"df.schema['{fname}'].dataType == {expected}",
-    )
-
-
-def check_field_required(model: str, fname: str) -> CompiledCheck:
-    return CompiledCheck(
-        key=_key(model, fname, "field_required"),
-        check_type="field_required",
-        category="field",
-        name=f"Check that required field {fname} has no null values",
-        model=model,
-        field=fname,
-        agg_alias=f"{fname}__missing_count",
-        agg_expr=lambda: _missing_count(fname),
-        violation_predicate=lambda: F.col(fname).isNull(),
-        observed_expr=lambda: F.lit(None).cast("string"),
-        expected="not null",
-        implementation=f"missing_count({fname}) = 0 :: sum(when({fname} is null,1))",
     )
 
 
@@ -250,9 +227,7 @@ def scope_to_filter(chk: CompiledCheck, flt: str) -> CompiledCheck:
         vp = chk.violation_predicate
         scoped = lambda: _in_scope(flt) & vp()
         chk.violation_predicate = scoped
-        chk.agg_expr = lambda: F.coalesce(
-            F.sum(F.when(scoped(), 1).otherwise(0)), F.lit(0)
-        )
+        chk.agg_expr = lambda: _count_rows(scoped())
         chk.extra_aggs = {}
         # machine-readable scope marker, like the unique/reference branch:
         # engine._reroute_bytes_aliases must NOT substitute the audio pass's
@@ -292,7 +267,7 @@ def check_composite_key_null(model: str, key_cols: List[str]) -> CompiledCheck:
         model=model,
         kind="agg",
         agg_alias="__pk__null_count",
-        agg_expr=lambda: F.coalesce(F.sum(F.when(pred(), 1).otherwise(0)), F.lit(0)),
+        agg_expr=lambda: _count_rows(pred()),
         violation_predicate=pred,
         observed_expr=lambda: F.concat_ws(
             "|", *[F.coalesce(F.col(c).cast("string"), F.lit("NULL")) for c in key_cols]
@@ -329,150 +304,6 @@ def check_composite_key_unique(model: str, key_cols: List[str]) -> CompiledCheck
     )
 
 
-def check_field_min_length(model: str, fname: str, n: int) -> CompiledCheck:
-    pred = lambda: F.length(F.col(fname)) < n
-    return CompiledCheck(
-        key=_key(model, fname, "field_min_length"),
-        check_type="field_min_length",
-        category="field",
-        name=f"Check that field {fname} has a min length of {n}",
-        model=model,
-        field=fname,
-        agg_alias=f"{fname}__min_length_invalid",
-        agg_expr=lambda: _invalid_count(fname, pred()),
-        violation_predicate=lambda: F.col(fname).isNotNull() & pred(),
-        observed_expr=lambda: F.length(F.col(fname)).cast("string"),
-        expected=f"length >= {n}",
-        implementation=f"invalid_count(length({fname}) < {n}) = 0",
-    )
-
-
-def check_field_max_length(model: str, fname: str, n: int) -> CompiledCheck:
-    pred = lambda: F.length(F.col(fname)) > n
-    return CompiledCheck(
-        key=_key(model, fname, "field_max_length"),
-        check_type="field_max_length",
-        category="field",
-        name=f"Check that field {fname} has a max length of {n}",
-        model=model,
-        field=fname,
-        agg_alias=f"{fname}__max_length_invalid",
-        agg_expr=lambda: _invalid_count(fname, pred()),
-        violation_predicate=lambda: F.col(fname).isNotNull() & pred(),
-        observed_expr=lambda: F.length(F.col(fname)).cast("string"),
-        expected=f"length <= {n}",
-        implementation=f"invalid_count(length({fname}) > {n}) = 0",
-    )
-
-
-def check_field_minimum(model: str, fname: str, v: float,
-                        tag: str = "") -> CompiledCheck:
-    # ``tag`` ("_excl" when emitted for exclusiveMinimum) keeps the key AND
-    # agg_alias distinct when BOTH minimum and exclusiveMinimum are set on
-    # one field: the shared-scan exprs dict dedups by alias, so colliding
-    # aliases silently evaluated the second check against the first bound's
-    # aggregate (the element-constraint code already documents this hazard).
-    pred = lambda: F.col(fname) < F.lit(v)
-    return CompiledCheck(
-        key=_key(model, fname, f"field_minimum{tag}"),
-        check_type="field_minimum",
-        category="field",
-        name=f"Check that field {fname} has a minimum of {v}",
-        model=model,
-        field=fname,
-        agg_alias=f"{fname}__minimum{tag}_invalid",
-        agg_expr=lambda: _invalid_count(fname, pred()),
-        extra_aggs={f"{fname}__min": lambda: F.min(F.col(fname))},
-        violation_predicate=lambda: F.col(fname).isNotNull() & pred(),
-        observed_expr=lambda: F.col(fname).cast("string"),
-        expected=f">= {v}",
-        implementation=f"invalid_count({fname} < {v}) = 0",
-    )
-
-
-def check_field_maximum(model: str, fname: str, v: float,
-                        tag: str = "") -> CompiledCheck:
-    pred = lambda: F.col(fname) > F.lit(v)
-    return CompiledCheck(
-        key=_key(model, fname, f"field_maximum{tag}"),
-        check_type="field_maximum",
-        category="field",
-        name=f"Check that field {fname} has a maximum of {v}",
-        model=model,
-        field=fname,
-        agg_alias=f"{fname}__maximum{tag}_invalid",
-        agg_expr=lambda: _invalid_count(fname, pred()),
-        extra_aggs={f"{fname}__max": lambda: F.max(F.col(fname))},
-        violation_predicate=lambda: F.col(fname).isNotNull() & pred(),
-        observed_expr=lambda: F.col(fname).cast("string"),
-        expected=f"<= {v}",
-        implementation=f"invalid_count({fname} > {v}) = 0",
-    )
-
-
-def check_field_not_equal(model: str, fname: str, v: Any,
-                          tag: str = "") -> CompiledCheck:
-    # Emitted in addition to min/max for exclusiveMinimum/Maximum
-    # (parity: data_contract_checks.py:48-53,354-383). ``tag`` ("_min" /
-    # "_max") keeps key and agg_alias distinct when BOTH exclusive bounds
-    # are set: with colliding aliases the shared scan registered only the
-    # first bound's count(v==lo) and the !=hi check read it too — rows
-    # equal to the upper bound passed every check.
-    pred = lambda: F.col(fname) == F.lit(v)
-    return CompiledCheck(
-        key=_key(model, fname, f"field_not_equal{tag}"),
-        check_type="field_not_equal",
-        category="field",
-        name=f"Check that field {fname} is not equal to {v}",
-        model=model,
-        field=fname,
-        agg_alias=f"{fname}__not_equal{tag}_invalid",
-        agg_expr=lambda: _invalid_count(fname, pred()),
-        violation_predicate=lambda: F.col(fname).isNotNull() & pred(),
-        observed_expr=lambda: F.col(fname).cast("string"),
-        expected=f"!= {v}",
-        implementation=f"invalid_count({fname} == {v}) = 0",
-    )
-
-
-def check_field_enum(model: str, fname: str, enum: List[Any]) -> CompiledCheck:
-    pred = lambda: ~F.col(fname).isin(enum)
-    return CompiledCheck(
-        key=_key(model, fname, "field_enum"),
-        check_type="field_enum",
-        category="field",
-        name=f"Check that field {fname} only contains enum values",
-        model=model,
-        field=fname,
-        agg_alias=f"{fname}__enum_invalid",
-        agg_expr=lambda: _invalid_count(fname, pred()),
-        violation_predicate=lambda: F.col(fname).isNotNull() & pred(),
-        observed_expr=lambda: F.col(fname).cast("string"),
-        expected=f"in {enum}",
-        implementation=f"invalid_count({fname} not in {enum}) = 0",
-    )
-
-
-def check_field_regex(model: str, fname: str, pattern: str, check_type: str = "field_regex") -> CompiledCheck:
-    # rlike is unanchored regex-search, matching Soda semantics (SURVEY.md §7 hard
-    # parts (b)); contract patterns should anchor explicitly when needed.
-    pred = lambda: ~F.col(fname).rlike(pattern)
-    return CompiledCheck(
-        key=_key(model, fname, check_type),
-        check_type=check_type,
-        category="field",
-        name=f"Check that field {fname} matches {pattern}",
-        model=model,
-        field=fname,
-        agg_alias=f"{fname}__{check_type}_invalid",
-        agg_expr=lambda: _invalid_count(fname, pred()),
-        violation_predicate=lambda: F.col(fname).isNotNull() & pred(),
-        observed_expr=lambda: F.col(fname).cast("string"),
-        expected=f"matches {pattern}",
-        implementation=f"invalid_count(not rlike({fname}, '{pattern}')) = 0",
-    )
-
-
 def check_field_reference(model: str, fname: str, references: str) -> CompiledCheck:
     """Referential integrity (declared but TODO in the reference,
     data_contract_checks.py:62) — implemented here as an anti-join.
@@ -499,143 +330,245 @@ def check_field_reference(model: str, fname: str, references: str) -> CompiledCh
 
 
 # ---------------------------------------------------------------------------
-# Collection-element constraints: array ``items``, map ``keys``/``values``.
-# EXCEEDS the reference — its native engine never descends into collections
-# (to_model_checks iterates scalar constraints only, data_contract_checks.py:31-63);
-# element constraints reach only its per-row jsonschema engine via the ``items``
-# property (export/jsonschema_converter.py:84-102). Here they are evaluated
-# vectorized with higher-order functions (F.exists / F.filter) so they join the
-# SAME shared multi-aggregate scan: no explode, no shuffle, no Python.
+# Field constraints (parity: data_contract_checks.py:31-63,104-447). ONE table
+# says which constraints a field declares and which values each rejects; it
+# compiles the scalar checks of top-level and dotted nested fields, the
+# element checks of array ``items`` and map ``keys``/``values``, and
+# repair's rejection predicates (repair._field_fix).
 #
-# Metric semantics: the metric counts ROWS containing >=1 violating element
-# (mirroring the jsonschema engine's row-keyed error model, check_jsonschema.py:21-48),
-# so violation rows line up 1:1 with the metric.
+# Element checks EXCEED the reference — its native engine never descends
+# into collections; element constraints reach only its per-row jsonschema
+# engine via the ``items`` property (export/jsonschema_converter.py:84-102).
+# Here they are evaluated vectorized with higher-order functions
+# (F.exists / F.filter) so they join the SAME shared multi-aggregate scan:
+# no explode, no shuffle, no Python. Their metric counts ROWS containing
+# >=1 violating element (the jsonschema engine's row-keyed error model,
+# check_jsonschema.py:21-48), so violation rows line up 1:1 with it.
 # ---------------------------------------------------------------------------
 
-@dataclass
-class ElementConstraint:
-    """One element-level rule: ``pred`` maps an element Column to True when the
-    element violates the rule. ``path`` is a dotted path inside a struct element
-    (array-of-struct support)."""
+def _non_null(rejects: Callable[[Column, Any], Column]) -> Callable[[Column, Any], Column]:
+    # invalid_count counts only non-missing violating values (soda
+    # semantics): NULL is the required constraint's business
+    return lambda c, v: c.isNotNull() & rejects(c, v)
 
+
+@dataclass(frozen=True)
+class FieldConstraint:
+    """One table row. ``attr`` is the ``Field`` attribute declaring the
+    constraint; ``rejects(value, bound)`` is True for a violating value.
+    The string templates fill ``{f}`` (field), ``{v}`` (bound), ``{fmt}``
+    (format name) and ``{tag}``; ``tag(field)`` keeps key and alias apart
+    when one field declares two rows of the same ``check_type``. Every
+    spelling is a history watch key or a results-table row — byte-stable."""
+
+    attr: str
+    rejects: Callable[[Column, Any], Column]
+    # scalar spelling
     check_type: str
-    label: str
-    pred: Callable[[Column], Column]
+    alias: str
+    name: str
     expected: str
-    path: str = ""
+    implementation: str
+    # element spelling
+    element_type: str
+    label: str
+    element_expected: str
+    observed: Callable[[Column], Column] = lambda c: c.cast("string")
+    extra: Optional[Tuple[str, Callable[[Column], Column]]] = None
+    tag: Callable[[Field], str] = lambda f_: ""
+
+    def bound(self, f_: Field) -> Any:
+        """The declared bound, or None when ``f_`` does not declare this."""
+        v = getattr(f_, self.attr)
+        if self.attr == "format":
+            return FORMAT_REGEX.get((v or "").lower())
+        if isinstance(v, (bool, str, list)) and not v:
+            return None
+        return v
 
 
-def _element_constraints(f_: Field, path: str = "") -> List["ElementConstraint"]:
-    out: List[ElementConstraint] = []
-
-    def at(x: Column) -> Column:
-        c = x
-        for part in path.split("."):
-            if part:
-                c = c[part]
-        return c
-
-    def add(ct: str, label: str, pred: Callable[[Column], Column], expected: str) -> None:
-        out.append(ElementConstraint(ct, label, pred, expected, path))
-
-    def bind(f: Callable[..., Column], **kw: Any) -> Callable[[Column], Column]:
-        # The returned lambda must take EXACTLY ONE positional parameter:
-        # pyspark's _create_lambda derives the higher-order function's arity
-        # from the Python signature, so a default-arg closure (lambda x, v=v)
-        # would be called as a 2-arg (element, index) lambda.
-        return lambda x: f(x, **kw)
-
-    if f_.required:
-        add("required", "no null elements", lambda x: at(x).isNull(), "element not null")
-    if f_.minimum is not None:
-        add("minimum", f"minimum {f_.minimum}",
-            bind(lambda x, v: at(x).isNotNull() & (at(x) < F.lit(v)), v=f_.minimum),
-            f"element >= {f_.minimum}")
-    if f_.maximum is not None:
-        add("maximum", f"maximum {f_.maximum}",
-            bind(lambda x, v: at(x).isNotNull() & (at(x) > F.lit(v)), v=f_.maximum),
-            f"element <= {f_.maximum}")
-    if f_.exclusiveMinimum is not None:
-        # exclusive emits bound + not-equal, mirroring the top-level parity rule
-        # (data_contract_checks.py:48-53). check_types are distinct from the
-        # inclusive "minimum"/"maximum" (and from each other when both
-        # exclusive bounds are set) so the shared-scan exprs dict — keyed by
-        # agg_alias — never silently overwrites one aggregate with another.
-        add("exclusive_minimum", f"minimum {f_.exclusiveMinimum}",
-            bind(lambda x, v: at(x).isNotNull() & (at(x) < F.lit(v)), v=f_.exclusiveMinimum),
-            f"element >= {f_.exclusiveMinimum}")
-        add("not_equal_minimum", f"not equal {f_.exclusiveMinimum}",
-            bind(lambda x, v: at(x).isNotNull() & (at(x) == F.lit(v)), v=f_.exclusiveMinimum),
-            f"element != {f_.exclusiveMinimum}")
-    if f_.exclusiveMaximum is not None:
-        add("exclusive_maximum", f"maximum {f_.exclusiveMaximum}",
-            bind(lambda x, v: at(x).isNotNull() & (at(x) > F.lit(v)), v=f_.exclusiveMaximum),
-            f"element <= {f_.exclusiveMaximum}")
-        add("not_equal_maximum", f"not equal {f_.exclusiveMaximum}",
-            bind(lambda x, v: at(x).isNotNull() & (at(x) == F.lit(v)), v=f_.exclusiveMaximum),
-            f"element != {f_.exclusiveMaximum}")
-    if f_.minLength is not None:
-        add("min_length", f"min length {f_.minLength}",
-            bind(lambda x, n: at(x).isNotNull() & (F.length(at(x)) < n), n=f_.minLength),
-            f"element length >= {f_.minLength}")
-    if f_.maxLength is not None:
-        add("max_length", f"max length {f_.maxLength}",
-            bind(lambda x, n: at(x).isNotNull() & (F.length(at(x)) > n), n=f_.maxLength),
-            f"element length <= {f_.maxLength}")
-    if f_.enum:
-        add("enum", f"enum {list(f_.enum)}",
-            bind(lambda x, e: at(x).isNotNull() & ~at(x).isin(e), e=list(f_.enum)),
-            f"element in {list(f_.enum)}")
-    if f_.pattern:
-        add("regex", f"pattern {f_.pattern}",
-            bind(lambda x, p: at(x).isNotNull() & ~at(x).rlike(p), p=f_.pattern),
-            f"element matches {f_.pattern}")
-    if f_.format and f_.format.lower() in FORMAT_REGEX:
-        fmt = f_.format.lower()
-        add(f"format_{fmt}", f"format {fmt}",
-            bind(lambda x, p: at(x).isNotNull() & ~at(x).rlike(p), p=FORMAT_REGEX[fmt]),
-            f"element is {fmt}")
-    if (f_.type or "").lower() in ("object", "record", "struct"):
-        for child_name, child in f_.fields.items():
-            out.extend(_element_constraints(child, f"{path}.{child_name}" if path else child_name))
-    return out
+_OK_OP = {"<": ">=", ">": "<="}
 
 
-def check_collection_elements(model: str, fname: str, where: str, ec: "ElementConstraint") -> CompiledCheck:
-    """One element-level rule on an array/map column as an ``agg``-kind check.
+def _bound_row(attr: str, word: str, op: str, element_type: str,
+               tag: Callable[[Field], str] = lambda f_: "") -> FieldConstraint:
+    """An inclusive bound, or the bound half of an exclusive one; ``op`` is
+    the comparison a violating value makes with it."""
+    rejects = ((lambda c, v: c < F.lit(v)) if op == "<"
+               else (lambda c, v: c > F.lit(v)))
+    return FieldConstraint(
+        attr, _non_null(rejects), f"field_{word}", f"{{f}}__{word}{{tag}}_invalid",
+        f"Check that field {{f}} has a {word} of {{v}}", f"{_OK_OP[op]} {{v}}",
+        f"invalid_count({{f}} {op} {{v}}) = 0",
+        element_type, f"{word} {{v}}", f"element {_OK_OP[op]} {{v}}",
+        extra=(f"{{f}}__{word[:3]}", F.min if op == "<" else F.max), tag=tag)
 
-    ``where`` selects the element stream: ``items`` (the array itself),
-    ``keys`` / ``values`` (map projected via map_keys/map_values — both are
-    metadata-only projections, no data movement).
-    """
+
+def _not_equal_row(attr: str, side: str) -> FieldConstraint:
+    # exclusiveMinimum/Maximum emit this besides the bound check (parity:
+    # data_contract_checks.py:48-53,354-383); the "_min"/"_max" tag keeps
+    # both exclusive bounds' twins apart in the shared scan, which dedups
+    # aggregates by alias
+    return FieldConstraint(
+        attr, _non_null(lambda c, v: c == F.lit(v)), "field_not_equal",
+        "{f}__not_equal{tag}_invalid", "Check that field {f} is not equal to {v}",
+        "!= {v}", "invalid_count({f} == {v}) = 0",
+        f"not_equal_{side}imum", "not equal {v}", "element != {v}",
+        tag=lambda f_: f"_{side}")
+
+
+def _length_row(attr: str, word: str, op: str) -> FieldConstraint:
+    rejects = ((lambda c, n: F.length(c) < n) if op == "<"
+               else (lambda c, n: F.length(c) > n))
+    snake = f"{word}_length"
+    return FieldConstraint(
+        attr, _non_null(rejects), f"field_{snake}", f"{{f}}__{snake}_invalid",
+        f"Check that field {{f}} has a {word} length of {{v}}",
+        f"length {_OK_OP[op]} {{v}}", f"invalid_count(length({{f}}) {op} {{v}}) = 0",
+        snake, f"{word} length {{v}}", f"element length {_OK_OP[op]} {{v}}",
+        observed=lambda c: F.length(c).cast("string"))
+
+
+def _regex_row(attr: str, check_type: str, element_type: str, label: str,
+               element_expected: str) -> FieldConstraint:
+    # rlike is unanchored regex-search, matching Soda semantics (SURVEY.md
+    # §7 hard parts (b)); contract patterns should anchor explicitly
+    return FieldConstraint(
+        attr, _non_null(lambda c, p: ~c.rlike(p)), check_type,
+        f"{{f}}__{check_type}_invalid", "Check that field {f} matches {v}",
+        "matches {v}", "invalid_count(not rlike({f}, '{v}')) = 0",
+        element_type, label, element_expected)
+
+
+#: Scalar checks are emitted in this order. An exclusive bound is two rows:
+#: the bound itself, tagged "_excl" when the inclusive bound is declared too,
+#: and its not-equal twin.
+FIELD_CONSTRAINTS: List[FieldConstraint] = [
+    FieldConstraint(
+        "required", lambda c, _: c.isNull(), "field_required", "{f}__missing_count",
+        "Check that required field {f} has no null values", "not null",
+        "missing_count({f}) = 0 :: sum(when({f} is null,1))",
+        "required", "no null elements", "element not null",
+        observed=lambda c: F.lit(None).cast("string")),
+    _length_row("minLength", "min", "<"),
+    _length_row("maxLength", "max", ">"),
+    _bound_row("minimum", "minimum", "<", "minimum"),
+    _bound_row("maximum", "maximum", ">", "maximum"),
+    _bound_row("exclusiveMinimum", "minimum", "<", "exclusive_minimum",
+               lambda f_: "_excl" if f_.minimum is not None else ""),
+    _not_equal_row("exclusiveMinimum", "min"),
+    _bound_row("exclusiveMaximum", "maximum", ">", "exclusive_maximum",
+               lambda f_: "_excl" if f_.maximum is not None else ""),
+    _not_equal_row("exclusiveMaximum", "max"),
+    FieldConstraint(
+        "enum", _non_null(lambda c, e: ~c.isin(e)), "field_enum", "{f}__enum_invalid",
+        "Check that field {f} only contains enum values", "in {v}",
+        "invalid_count({f} not in {v}) = 0", "enum", "enum {v}", "element in {v}"),
+    _regex_row("pattern", "field_regex", "regex", "pattern {v}", "element matches {v}"),
+    _regex_row("format", "field_format_{fmt}", "format_{fmt}", "format {fmt}",
+               "element is {fmt}"),
+]
+
+
+def declared_constraints(f_: Field) -> List[Tuple[FieldConstraint, Any]]:
+    """(row, bound) of every constraint ``f_`` declares, in table order."""
+    return [(con, v) for con in FIELD_CONSTRAINTS
+            if (v := con.bound(f_)) is not None]
+
+
+def _words(con: FieldConstraint, f_: Field, fname: str, v: Any) -> Dict[str, Any]:
+    return {"f": fname, "v": v, "fmt": (f_.format or "").lower(), "tag": con.tag(f_)}
+
+
+def _scalar_check(model: str, fname: str, f_: Field, con: FieldConstraint,
+                  v: Any) -> CompiledCheck:
+    w = _words(con, f_, fname, v)
+    check_type = con.check_type.format(**w)
+    vp = lambda: con.rejects(F.col(fname), v)
+    extra = con.extra
+    return CompiledCheck(
+        key=_key(model, fname, check_type + w["tag"]),
+        check_type=check_type,
+        category="field",
+        name=con.name.format(**w),
+        model=model,
+        field=fname,
+        agg_alias=con.alias.format(**w),
+        agg_expr=lambda: _count_rows(vp()),
+        extra_aggs={extra[0].format(**w): lambda: extra[1](F.col(fname))} if extra else {},
+        violation_predicate=vp,
+        observed_expr=lambda: con.observed(F.col(fname)),
+        expected=con.expected.format(**w),
+        implementation=con.implementation.format(**w),
+    )
+
+
+def field_constraint_checks(model: str, fname: str, f_: Field) -> List[CompiledCheck]:
+    """The scalar checks of every constraint ``f_`` declares."""
+    return [_scalar_check(model, fname, f_, con, v)
+            for con, v in declared_constraints(f_)]
+
+
+def _element_check(model: str, fname: str, where: str, f_: Field, path: str,
+                   con: FieldConstraint, v: Any) -> CompiledCheck:
     if where == "keys":
         arr = lambda: F.map_keys(F.col(fname))
     elif where == "values":
         arr = lambda: F.map_values(F.col(fname))
     else:
         arr = lambda: F.col(fname)
-    row_pred = lambda: F.col(fname).isNotNull() & F.exists(arr(), ec.pred)
-    dotted = f"{fname}[{where}]" + (f".{ec.path}" if ec.path else "")
-    check_type = f"{where}_{ec.check_type}"
+
+    # exactly ONE positional parameter: pyspark derives the higher-order
+    # function's arity from the Python signature
+    def pred(x: Column) -> Column:
+        for part in path.split("."):
+            if part:
+                x = x[part]
+        return con.rejects(x, v)
+
+    w = _words(con, f_, fname, v)
+    element_type, label = con.element_type.format(**w), con.label.format(**w)
+    row_pred = lambda: F.col(fname).isNotNull() & F.exists(arr(), pred)
+    dotted = f"{fname}[{where}]" + (f".{path}" if path else "")
+    check_type = f"{where}_{element_type}"
     return CompiledCheck(
         key=_key(model, dotted, check_type),
         check_type=check_type,
         category="field",
-        name=f"Check that {where} of field {fname} satisfy {ec.label}"
-        + (f" at {ec.path}" if ec.path else ""),
+        name=f"Check that {where} of field {fname} satisfy {label}"
+        + (f" at {path}" if path else ""),
         model=model,
         field=fname,
-        agg_alias=f"{dotted}__{ec.check_type}_invalid",
-        agg_expr=lambda: F.coalesce(F.sum(F.when(row_pred(), 1).otherwise(0)), F.lit(0)),
+        agg_alias=f"{dotted}__{element_type}_invalid",
+        agg_expr=lambda: _count_rows(row_pred()),
         violation_predicate=row_pred,
-        observed_expr=lambda: F.filter(arr(), ec.pred).cast("string"),
-        expected=ec.expected,
+        observed_expr=lambda: F.filter(arr(), pred).cast("string"),
+        expected=con.element_expected.format(**w),
         implementation=(
             f"rows_with_invalid_element = sum(when(exists({where}({fname})"
-            + (f".{ec.path}" if ec.path else "")
-            + f", element violates '{ec.label}'), 1)) :: higher-order fn, no explode"
+            + (f".{path}" if path else "")
+            + f", element violates '{label}'), 1)) :: higher-order fn, no explode"
         ),
     )
+
+
+def check_collection_elements(model: str, fname: str, where: str, f_: Field,
+                              path: str = "") -> List[CompiledCheck]:
+    """The element checks of an array/map column: every constraint the
+    element field ``f_`` declares, and for a struct element its children's
+    at a dotted ``path``.
+
+    ``where`` selects the element stream: ``items`` (the array itself),
+    ``keys`` / ``values`` (map projected via map_keys/map_values — both are
+    metadata-only projections, no data movement).
+    """
+    out = [_element_check(model, fname, where, f_, path, con, v)
+           for con, v in declared_constraints(f_)]
+    if (f_.type or "").lower() in ("object", "record", "struct"):
+        for child_name, child in f_.fields.items():
+            out += check_collection_elements(
+                model, fname, where, child, f"{path}.{child_name}" if path else child_name)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -872,7 +805,7 @@ def check_quality_expression(model: str, q: Quality, idx: int, fname: Optional[s
         field=fname,
         kind="agg",
         agg_alias=f"__expr__{model}__{fname or 'model'}_{idx}__invalid",
-        agg_expr=lambda: F.coalesce(F.sum(F.when(pred(), 1).otherwise(0)), F.lit(0)),
+        agg_expr=lambda: _count_rows(pred()),
         violation_predicate=pred,
         observed_expr=lambda: F.lit(None).cast("string"),
         expected=f"satisfies: {expr_s}",
@@ -1737,44 +1670,14 @@ def create_checks(
             checks.append(check_field_is_present(model_name, fname))
             if f_.type and is_check_types(server_format):
                 checks.append(check_field_type(model_name, fname, f_))
-            if f_.required:
-                checks.append(check_field_required(model_name, fname))
+            constraints = field_constraint_checks(model_name, fname, f_)
+            # `required` leads the table and `unique` follows it: check
+            # order is the results order the goldens pin
+            lead = 1 if f_.required else 0
+            checks.extend(constraints[:lead])
             if f_.unique:
                 checks.append(check_field_unique(model_name, fname))
-            if f_.minLength is not None:
-                checks.append(check_field_min_length(model_name, fname, f_.minLength))
-            if f_.maxLength is not None:
-                checks.append(check_field_max_length(model_name, fname, f_.maxLength))
-            if f_.minimum is not None:
-                checks.append(check_field_minimum(model_name, fname, f_.minimum))
-            if f_.maximum is not None:
-                checks.append(check_field_maximum(model_name, fname, f_.maximum))
-            if f_.exclusiveMinimum is not None:
-                # exclusiveMinimum emits min + not_equal (parity :48-53);
-                # tags keep keys/aliases distinct from the inclusive bounds
-                # and from the other exclusive bound's not_equal twin
-                checks.append(check_field_minimum(
-                    model_name, fname, f_.exclusiveMinimum,
-                    tag="_excl" if f_.minimum is not None else ""))
-                checks.append(check_field_not_equal(
-                    model_name, fname, f_.exclusiveMinimum, tag="_min"))
-            if f_.exclusiveMaximum is not None:
-                checks.append(check_field_maximum(
-                    model_name, fname, f_.exclusiveMaximum,
-                    tag="_excl" if f_.maximum is not None else ""))
-                checks.append(check_field_not_equal(
-                    model_name, fname, f_.exclusiveMaximum, tag="_max"))
-            if f_.enum:
-                checks.append(check_field_enum(model_name, fname, f_.enum))
-            if f_.pattern:
-                checks.append(check_field_regex(model_name, fname, f_.pattern))
-            if f_.format and f_.format.lower() in FORMAT_REGEX:
-                checks.append(
-                    check_field_regex(
-                        model_name, fname, FORMAT_REGEX[f_.format.lower()],
-                        check_type=f"field_format_{f_.format.lower()}",
-                    )
-                )
+            checks.extend(constraints[lead:])
             if f_.references:
                 checks.append(check_field_reference(model_name, fname, f_.references))
             # collection-element constraints are CONSTRAINT checks of this
@@ -1782,16 +1685,11 @@ def create_checks(
             # — a filtered array field's element checks would otherwise
             # silently escape the scope
             ftype = (f_.type or "").lower()
-            if ftype == "array" and f_.items is not None:
-                for ec in _element_constraints(f_.items):
-                    checks.append(check_collection_elements(model_name, fname, "items", ec))
-            elif ftype == "map":
-                if f_.keys is not None:
-                    for ec in _element_constraints(f_.keys):
-                        checks.append(check_collection_elements(model_name, fname, "keys", ec))
-                if f_.values is not None:
-                    for ec in _element_constraints(f_.values):
-                        checks.append(check_collection_elements(model_name, fname, "values", ec))
+            streams = ({"items": f_.items} if ftype == "array" else
+                       {"keys": f_.keys, "values": f_.values} if ftype == "map" else {})
+            for where, element in streams.items():
+                if element is not None:
+                    checks.extend(check_collection_elements(model_name, fname, where, element))
             if f_.filter:
                 for c in checks[n0:]:
                     scope_to_filter(c, f_.filter)

@@ -113,8 +113,9 @@ class ValidationConfig:
     violation_cap: int = VIOLATION_CAP_DEFAULT
     # model -> column -> ref snapshot (drift_mod.build_ref_stats output)
     ref_stats: Dict[str, Dict[str, dict]] = dc_field(default_factory=dict)
-    audio_oracle: Optional[audio_mod.OraclePcm] = None
-    audio_snr_fn: Optional[audio_mod.SnrFn] = None  # blocked-SNR scale path (wins over oracle)
+    # SNR oracle of the decode-conformance check (audio.synth_oracle,
+    # audio.synth_snr_oracle); None skips the SNR invariant
+    audio_snr_fn: Optional[audio_mod.SnrFn] = None
     now: Optional[dt.datetime] = None  # injectable clock for freshness/retention
     checkpoint_dir: Optional[str] = None
     resume: bool = False
@@ -614,7 +615,29 @@ class Validator:
         for name, df in self.tables.items():
             df.createOrReplaceTempView(name)
 
-        items = list(checks_by_model.items())
+        # ONE scope on the calling thread around every model's jobs: the
+        # conf is session-wide and read when an action plans, so a scope
+        # per job on a worker thread closed before lazily built decode
+        # passes ran, and its exit could unset the conf under a concurrent
+        # job
+        arrow_rows = {"spark.sql.execution.arrow.maxRecordsPerBatch":
+                      str(self.config.arrow_batch_rows)}
+        with _ConfScope(self.spark, arrow_rows):
+            self._run_models(list(checks_by_model.items()))
+
+        self.run.finish()
+        violations = None
+        if self._violation_rows is not None:
+            violations = rows_frame(self.spark, self._violation_rows, VIOLATIONS_DDL)
+        return ValidationResult(
+            run=self.run,
+            results=self._results_rows,
+            violations=violations,
+            metrics=self._metrics,
+            phase_timings=self._phase_timings,
+        )
+
+    def _run_models(self, items: List[Tuple[str, List[CompiledCheck]]]) -> None:
         if self.config.parallel_jobs > 1 and len(items) > 1:
             # Models are independent — overlap their Spark jobs instead of
             # paying each model's wall sequentially (the small reference-table
@@ -644,18 +667,6 @@ class Validator:
         else:
             for model_name, checks in items:
                 self._run_model(model_name, checks, self.tables.get(model_name))
-
-        self.run.finish()
-        violations = None
-        if self._violation_rows is not None:
-            violations = rows_frame(self.spark, self._violation_rows, VIOLATIONS_DDL)
-        return ValidationResult(
-            run=self.run,
-            results=self._results_rows,
-            violations=violations,
-            metrics=self._metrics,
-            phase_timings=self._phase_timings,
-        )
 
     def _child_recorder(self) -> "Validator":
         """A clone sharing session/spec/tables/config but with isolated result
@@ -977,7 +988,6 @@ class Validator:
         return audio_mod.audio_decode_compact(
             df,
             snr_floor_db=chk.params.get("snr_db", 30.0) if chk is not None else 30.0,
-            oracle=self.config.audio_oracle if chk is not None else None,
             snr_fn=self.config.audio_snr_fn if chk is not None else None,
             partition_col=partition_col,
             violation_cap=self.config.violation_cap if (chk is not None or feat_limits) else 0,
@@ -1214,8 +1224,7 @@ class Validator:
         thunks: List[Any] = [scan]
         if pctl_aliases and part_col:
             thunks.append(pctl_job)
-        with self._arrow_batch_conf():
-            outs = self._parallel(thunks)
+        outs = self._parallel(thunks)
         states, fused_fp_results = outs[0]
         part_states = states if part_col else {}
         glob = self._fold(states, spec)
@@ -1468,12 +1477,6 @@ class Validator:
                 [states[k].digests[col] for k in sorted(states)
                  if col in states[k].digests], td_mod.DEFAULT_DELTA)
         return out
-
-    def _arrow_batch_conf(self):
-        return _ConfScope(
-            self.spark,
-            {"spark.sql.execution.arrow.maxRecordsPerBatch": str(self.config.arrow_batch_rows)},
-        )
 
     def _agg_metric(self, chk: CompiledCheck, row: Dict[str, Any]) -> Optional[float]:
         finisher = chk.params.get("finisher")
@@ -1804,12 +1807,11 @@ class Validator:
         if bytes_col not in df.columns:
             return {"error": f"bytes column {bytes_col} missing"}
         id_col = self._pk_column(model_name, df)
-        with self._arrow_batch_conf():
-            pairs = afp.audio_near_dup(
-                df, id_col=id_col, bytes_col=bytes_col,
-                threshold=float(p["score_threshold"]),
-            )
-            return self._audio_fp_result(pairs, chk)
+        pairs = afp.audio_near_dup(
+            df, id_col=id_col, bytes_col=bytes_col,
+            threshold=float(p["score_threshold"]),
+        )
+        return self._audio_fp_result(pairs, chk)
 
     def _audio_fp_result(self, pairs: DataFrame, chk: CompiledCheck) -> dict:
         """Pair count + capped example pairs of a near-dup pair frame."""
@@ -1868,10 +1870,9 @@ class Validator:
             {c.params["feature"] for c in quality_checks}
             | {c.params["feature"] for c, _ in drift_eval}))
         id_col = self._pk_column(model_name, df)
-        with self._arrow_batch_conf():
-            compact = self._image_compact(
-                df, id_col=id_col, bytes_col=bytes_col,
-                with_dhash=bool(fp_checks), features=features)
+        compact = self._image_compact(
+            df, id_col=id_col, bytes_col=bytes_col,
+            with_dhash=bool(fp_checks), features=features)
         compact = compact.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             for c in decode_checks:
@@ -2006,8 +2007,7 @@ class Validator:
             if col not in df.columns:
                 return {"error": f"declared column {col} missing"}
         id_col = self._pk_column(model_name, df)
-        with self._arrow_batch_conf():
-            meta = multimodal.video_metadata(df, id_col=id_col, bytes_col=bytes_col)
+        meta = multimodal.video_metadata(df, id_col=id_col, bytes_col=bytes_col)
         decoded = {"fps": "fps", "frames": "n_frames", "width": "width", "height": "height"}
         return self._count_and_sample(self._declared_mismatch(
             meta, df, id_col,
@@ -2086,6 +2086,8 @@ class Validator:
                 cap = self.config.violation_cap
                 # per-row violation semantics preserved: a value orphaned k
                 # times contributes min(k, cap) example rows, capped overall
+                # in (partition, value) order so the sample does not depend
+                # on shuffle partitioning
                 examples = grouped.select(
                     (F.col(PART_KEY) if part_col
                      else F.lit(None).cast("string")).alias("__part"),
@@ -2095,7 +2097,7 @@ class Validator:
                             F.least(F.col("__cnt"), F.lit(cap)).cast("int"),
                         )
                     ).alias("__child"),
-                ).limit(cap)
+                ).orderBy("__part", "__child").limit(cap)
                 child = F.col("__child").cast("string")
                 vio = self._violation_frame(examples, chk.key, child, child,
                                             chk.expected, F.col("__part"))
@@ -2228,8 +2230,11 @@ class Validator:
                 }
             vio_rows = None
             if metric > 0:
+                # a total order before the cap: the sample must not depend
+                # on shuffle partitioning
+                order = ["__k", "__child", "__ref"] + ([part_col] if part_col else [])
                 vio = self._violation_frame(
-                    mismatch.limit(self.config.violation_cap), chk.key,
+                    mismatch.orderBy(*order).limit(self.config.violation_cap), chk.key,
                     F.col("__k").cast("string"), F.col("__child").cast("string"),
                     F.concat(F.lit("ref: "), F.col("__ref").cast("string")),
                     F.col(part_col) if part_col else None)

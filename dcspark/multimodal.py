@@ -182,10 +182,9 @@ def decode_png(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
         length, ctype = r.unpack(">I4s", "chunk header")
         body = r.sub(length, f"{ctype.decode('latin-1')} chunk")
         if ctype == b"IHDR":
-            # exactly 13 bytes: struct's own error for any other length is
-            # the decode_error text callers see (a decode error like
-            # ValueError, as is zlib.error below)
-            ihdr = struct.unpack(">IIBBBBB", body.take(length))
+            if length != 13:
+                raise ValueError(f"PNG IHDR chunk is {length} bytes, not 13")
+            ihdr = body.unpack(">IIBBBBB", "IHDR")
         elif ctype == b"IDAT":
             idat.append(body.take(length))
         elif ctype == b"IEND":
@@ -205,8 +204,11 @@ def decode_png(raw: bytes) -> Tuple[int, int, int, np.ndarray]:
     # inflate at most one byte past the declared scanlines: a zlib bomb
     # stops there and fails the length check in _png_unfilter
     inflater = zlib.decompressobj()
-    data = np.frombuffer(inflater.decompress(b"".join(idat), size + 1),
-                         np.uint8)
+    try:
+        data = np.frombuffer(inflater.decompress(b"".join(idat), size + 1),
+                             np.uint8)
+    except zlib.error as e:
+        raise ValueError(f"PNG zlib stream corrupt: {e}") from None
     if data.size == size and not inflater.eof:
         raise ValueError("PNG zlib stream truncated")
     px = _png_unfilter(data, height, width, channels)

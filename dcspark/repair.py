@@ -28,83 +28,70 @@ aggregate so the decision to coerce can be reviewed before it is applied.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Tuple
+import math
+from functools import reduce
+from operator import or_
+from typing import Dict, List, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .compile import FORMAT_REGEX
+from .compile import declared_constraints
 from .spec import DataContractSpecification
 
 
 _INT_TYPES = {"int", "integer", "long", "bigint"}
 
 
-def _clamp_lit(field_, bound: float) -> Column:
+def _clamp_lit(field_, bound: float, rounding) -> Column:
     """Clamp target for an inclusive bound: on integral columns a fractional
-    bound rounds toward the INTERIOR of the range (ceil for minimum, floor
-    for maximum), so the clamped value still satisfies the constraint after
-    the type cast instead of truncating back outside it."""
-    import math
-
+    bound rounds toward the INTERIOR of the range (``rounding`` is ceil for
+    minimum, floor for maximum), so the clamped value still satisfies the
+    constraint after the type cast instead of truncating back outside it."""
     if (field_.type or "").lower() in _INT_TYPES:
-        is_min = bound == field_.minimum
-        return F.lit(int(math.ceil(bound) if is_min else math.floor(bound)))
+        return F.lit(int(rounding(bound)))
     return F.lit(bound)
 
 
-def _field_fix(fname: str, field_, strategy: str) -> Optional[Column]:
-    """Repaired value expression for one field, or None if nothing to fix."""
-    c = F.col(fname)
-    null = F.lit(None)
-    coerce = strategy == "coerce"
+#: the "coerce" strategy's fix per constraint attribute; every other
+#: constraint, and every constraint under "null", NULLs a violating value
+#: (``required`` has no repair: a NULL stays NULL)
+_COERCE = {
+    "maxLength": lambda field_, c, n: F.substring(c, 1, int(n)),
+    "minimum": lambda field_, c, v: _clamp_lit(field_, v, math.ceil),
+    "maximum": lambda field_, c, v: _clamp_lit(field_, v, math.floor),
+}
 
-    # NULL-ing steps come first in this list; the wrap below applies the
-    # list in REVERSE so they end outermost — a value that breaks several
-    # constraints ends NULL unless every break is coercible (e.g. an
-    # oversize enum violation must NULL, not truncate to a still-invalid
-    # prefix)
-    steps: List[Tuple[Column, Column]] = []
-    if field_.enum:
-        steps.append((~c.isin(list(field_.enum)), null))
-    rx = None
-    if field_.pattern:
-        rx = field_.pattern
-    elif field_.format and field_.format.lower() in FORMAT_REGEX:
-        rx = FORMAT_REGEX[field_.format.lower()]
-    if rx is not None:
-        steps.append((~c.rlike(rx), null))
-    if field_.minLength is not None:
-        steps.append((F.length(c) < field_.minLength, null))
-    # open intervals have no well-defined nearest valid value — exclusive
-    # bound violations NULL under every strategy
-    if field_.exclusiveMinimum is not None:
-        steps.append((c <= field_.exclusiveMinimum, null))
-    if field_.exclusiveMaximum is not None:
-        steps.append((c >= field_.exclusiveMaximum, null))
-    if field_.maxLength is not None:
-        steps.append((
-            F.length(c) > field_.maxLength,
-            F.substring(c, 1, int(field_.maxLength)) if coerce else null))
-    if field_.minimum is not None:
-        steps.append((
-            c < field_.minimum,
-            _clamp_lit(field_, field_.minimum) if coerce else null))
-    if field_.maximum is not None:
-        steps.append((
-            c > field_.maximum,
-            _clamp_lit(field_, field_.maximum) if coerce else null))
-    if not steps:
+
+def _field_fix(fname: str, field_, strategy: str) -> Optional[Column]:
+    """Repaired value expression for one field, or None if nothing to fix.
+    Each rule's rejection predicate comes from the compiler's constraint
+    table, so repair tests exactly what the validator tests."""
+    c = F.col(fname)
+    nulling, coerced = [], []
+    for con, v in declared_constraints(field_):
+        if con.attr == "required":
+            continue
+        fix = _COERCE.get(con.attr) if strategy == "coerce" else None
+        if fix is None:
+            nulling.append((con, v))
+        else:
+            coerced.append((con.rejects(c, v), fix(field_, c, v)))
+    if not nulling and not coerced:
         return None
     out = c
-    for pred, repl in reversed(steps):
-        out = F.when(c.isNotNull() & pred, repl).otherwise(out)
-    if rx is not None and coerce:
-        # a coercion (maxLength truncation) can NEWLY violate a format the
-        # original satisfied ('user@x.com' truncated to 6 chars is no email):
-        # re-test the pattern on the REPAIRED value and null what fails —
-        # the repaired frame must satisfy the contract it repairs toward
-        out = F.when(out.isNotNull() & ~out.rlike(rx), null).otherwise(out)
+    for pred, repl in coerced:
+        out = F.when(pred, repl).otherwise(out)
+    # NULL-ing wins: a value breaking several constraints ends NULL unless
+    # every break is coercible (an oversize enum violation must NULL, not
+    # truncate to a still-invalid prefix). The NULL-ing rules are tested
+    # on the repaired value too: a truncation can NEWLY break a pattern or
+    # format the original satisfied ('user@x.com' cut to 6 chars is no
+    # email) — the repaired frame must satisfy the contract it repairs toward
+    tested = [c, out] if coerced else [c]
+    broken = [con.rejects(x, v) for x in tested for con, v in nulling]
+    if broken:
+        out = F.when(reduce(or_, broken), F.lit(None)).otherwise(out)
     return out
 
 

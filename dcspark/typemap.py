@@ -207,7 +207,7 @@ _TABLE: Dict[Optional[str], tuple] = {
                       "date", "TIMESTAMP", "TIMESTAMP", "datetime.datetime", "time.Time",
                       "timestamp_ms"),
     "timestamp_ntz": (T.TimestampNTZType(), _JTS, "TIMESTAMP", _ANTZ, "int64", "date",
-                      "TIME", "TIMESTAMP", "datetime.datetime", "time.Time", "timestamp_ms"),
+                      "DATETIME", "TIMESTAMP", "datetime.datetime", "time.Time", "timestamp_ms"),
     "date":          (T.DateType(), {"type": "string", "format": "date"}, "DATE",
                       {"type": "int", "logicalType": "date"}, "int32", "date",
                       "DATE", "Date", "datetime.date", "time.Time", "date"),
@@ -305,8 +305,8 @@ _SOURCES: Dict[str, tuple] = {
     "bigquery": (None, None, {
         "STRING": "string", "BYTES": "bytes", "INTEGER": "int", "INT64": "bigint",
         "FLOAT": "float", "FLOAT64": "double", "BOOLEAN": "boolean", "BOOL": "boolean",
-        "TIMESTAMP": "timestamp", "DATETIME": "timestamp", "DATE": "date",
-        "TIME": "timestamp_ntz", "NUMERIC": "numeric", "BIGNUMERIC": "double",
+        "TIMESTAMP": "timestamp", "DATETIME": "timestamp_ntz", "DATE": "date",
+        "NUMERIC": "numeric", "BIGNUMERIC": "double",
         "GEOGRAPHY": "object", "JSON": "object"}),
 }
 

@@ -43,17 +43,17 @@ feat_fns = {k: audio.FEATURE_FNS[k]
             for k in ("rms_dbfs", "speech_ratio", "speech_seconds")}
 
 # warm-up
-audio._eval_batch(batch, None, snr_fn, 30.0, feat_fns=feat_fns)
+audio._eval_batch(batch, snr_fn, 30.0, feat_fns=feat_fns)
 
 t0 = time.perf_counter()
-audio._eval_batch(batch, None, snr_fn, 30.0, feat_fns=feat_fns)
+audio._eval_batch(batch, snr_fn, 30.0, feat_fns=feat_fns)
 dt = time.perf_counter() - t0
 print(f"{N} clips in {dt:.3f}s = {1e6 * dt / N:.1f} us/clip "
       f"({N / dt:.0f} clips/s/core)")
 
 pr = cProfile.Profile()
 pr.enable()
-audio._eval_batch(batch, None, snr_fn, 30.0, feat_fns=feat_fns)
+audio._eval_batch(batch, snr_fn, 30.0, feat_fns=feat_fns)
 pr.disable()
 s = io.StringIO()
 pstats.Stats(pr, stream=s).sort_stats("cumulative").print_stats(25)

@@ -30,7 +30,7 @@ ref_stats = {"audio_clips": drift_mod.build_ref_stats(clips, ["dur_ms", "sr_hz"]
 
 cfg = ValidationConfig(
     ref_stats=ref_stats,
-    audio_oracle=synth_oracle(SEED, 200, 2000),
+    audio_snr_fn=synth_oracle(SEED, 200, 2000),
 )
 t1 = time.time()
 res = validate(spark, spec, {"audio_clips": clips, "transcripts_ref": ref}, cfg)

@@ -30,7 +30,7 @@ clean = synth.generate_audio_table(spark, N, seed=SEED, dur_lo=200, dur_hi=2000,
 
 spec = DataContractSpecification.from_file("/root/repo/contracts/audio_clips.yaml")
 ref_stats = {"audio_clips": drift_mod.build_ref_stats(clean, ["dur_ms", "sr_hz"], n_quantiles=49, n_bins=10)}
-cfg = ValidationConfig(ref_stats=ref_stats, audio_oracle=synth_oracle(SEED, 200, 2000))
+cfg = ValidationConfig(ref_stats=ref_stats, audio_snr_fn=synth_oracle(SEED, 200, 2000))
 res = validate(spark, spec, {"audio_clips": clips, "transcripts_ref": ref}, cfg)
 
 print("RUN RESULT:", res.run.result.value)

@@ -56,7 +56,7 @@ def cfg_for(seed):
     return ValidationConfig(
         ref_stats={"audio_clips": drift_mod.build_ref_stats(
             clean, ["dur_ms", "sr_hz"], n_quantiles=49, n_bins=10)},
-        audio_oracle=synth_oracle(seed, 200, 2000))
+        audio_snr_fn=synth_oracle(seed, 200, 2000))
 
 
 def static_for(seed):

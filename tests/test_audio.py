@@ -49,7 +49,7 @@ def test_decode_report_clean_and_corrupt(spark):
     for r in rows + [lying, garbled, broken]:
         r.pop("_i", None)
     df = spark.createDataFrame(rows + [lying, garbled, broken], synth.AUDIO_SCHEMA_DDL)
-    report = audio_decode_report(df, oracle=synth_oracle(42, 200, 1000)).collect()
+    report = audio_decode_report(df, snr_fn=synth_oracle(42, 200, 1000)).collect()
     by_id = {r["clip_id"]: r for r in report}
     for i in range(20):
         r = by_id[synth.clip_id_for(i)]
@@ -68,5 +68,5 @@ def test_decode_report_without_oracle_skips_snr(spark):
     for r in rows:
         r.pop("_i", None)
     df = spark.createDataFrame(rows, synth.AUDIO_SCHEMA_DDL)
-    report = audio_decode_report(df, oracle=None).collect()
+    report = audio_decode_report(df, snr_fn=None).collect()
     assert all(r["snr_ok"] is None and r["sr_ok"] for r in report)

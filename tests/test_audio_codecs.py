@@ -206,7 +206,7 @@ def test_engine_multicodec_contract(spark):
     ref_stats = {"audio_clips": drift_mod.build_ref_stats(
         clips, ["dur_ms", "sr_hz"], n_quantiles=49, n_bins=10)}
     cfg = ValidationConfig(ref_stats=ref_stats,
-                           audio_oracle=synth_oracle(seed, 200, 1500))
+                           audio_snr_fn=synth_oracle(seed, 200, 1500))
     res = validate(spark, spec, {"audio_clips": clips, "transcripts_ref": ref}, cfg)
     assert res.run.result == ResultEnum.passed, [
         (c.key, c.result) for c in res.run.checks if c.result != ResultEnum.passed]

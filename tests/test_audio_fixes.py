@@ -53,7 +53,7 @@ def test_nan_snr_normalizes_like_inf():
     rows = [(r["clip_id"], bytes(r["bytes"]), r["sr_hz"], r["dur_ms"],
              r["codec"])]
     recs = A._eval_batch(
-        _batch_of(rows), None,
+        _batch_of(rows),
         snr_fn=lambda cid, sr, dur, pcm: float("nan"),
         snr_floor_db=30.0)
     rec = recs[0][1]

@@ -170,10 +170,6 @@ ADOPTED = ("mp4", "ebml", "ogg", "mp3", "avi", "flac", "gif", "webp", "jpeg",
 #: the entropy bit readers read their own bit streams
 BIT_READERS = {("flac", "_Bits"), ("webp", "BitReader"),
                ("jpeg", "_BitReader")}
-#: the one byte-parse call left outside binread: decode_png parses IHDR with
-#: struct.unpack, whose struct.error for an IHDR that is not 13 bytes is
-#: pinned by tests/test_multimodal.py
-PINNED = {"multimodal": [("decode_png", "struct.unpack")]}
 
 
 def _is_writer(name):
@@ -208,7 +204,7 @@ def _byte_parse_calls(module):
 
 @pytest.mark.parametrize("module", ADOPTED)
 def test_adopted_modules_read_bytes_only_through_binread(module):
-    assert _byte_parse_calls(module) == PINNED.get(module, [])
+    assert _byte_parse_calls(module) == []
 
 
 @pytest.mark.parametrize("module", ADOPTED)

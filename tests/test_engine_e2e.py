@@ -42,7 +42,7 @@ def ref_stats(spark, clean_tables):
 
 def _cfg(ref_stats, **kw):
     return ValidationConfig(
-        ref_stats=ref_stats, audio_oracle=synth_oracle(SEED, DUR[0], DUR[1]), **kw
+        ref_stats=ref_stats, audio_snr_fn=synth_oracle(SEED, DUR[0], DUR[1]), **kw
     )
 
 

@@ -59,7 +59,7 @@ def iceberg_root(spark, tmp_path_factory):
 
 def _cfg(ref_stats, **kw):
     return ValidationConfig(
-        ref_stats=ref_stats, audio_oracle=synth_oracle(SEED, DUR[0], DUR[1]),
+        ref_stats=ref_stats, audio_snr_fn=synth_oracle(SEED, DUR[0], DUR[1]),
         **kw)
 
 
@@ -110,7 +110,7 @@ def test_incremental_validation_of_appended_snapshot(spark, spec,
         ["dur_ms", "sr_hz"], n_quantiles=49, n_bins=10)}
     cfg = ValidationConfig(
         ref_stats=ref_stats,
-        audio_oracle=synth_oracle(SEED + 1, DUR[0], DUR[1]))
+        audio_snr_fn=synth_oracle(SEED + 1, DUR[0], DUR[1]))
     res = validate(spark, spec, {"audio_clips": inc,
                                  "transcripts_ref": ref}, cfg)
     failed = {c.key for c in res.run.checks if c.result == ResultEnum.failed}
@@ -155,7 +155,7 @@ def test_polling_incremental_validator(spark, spec, tmp_path):
     stats1 = {"audio_clips": drift_mod.build_ref_stats(
         clips1, ["dur_ms", "sr_hz"], n_quantiles=49, n_bins=10)}
     cfg1 = ValidationConfig(ref_stats=stats1,
-                            audio_oracle=synth_oracle(5, DUR[0], DUR[1]))
+                            audio_snr_fn=synth_oracle(5, DUR[0], DUR[1]))
     sink = str(tmp_path / "results_tbl")
     r1 = validate_iceberg_increments(
         spark, spec, loc, "audio_clips", state,
@@ -180,7 +180,7 @@ def test_polling_incremental_validator(spark, spec, tmp_path):
                                    dur_hi=DUR[1], num_partitions=2),
         ["dur_ms", "sr_hz"], n_quantiles=49, n_bins=10)}
     cfg2 = ValidationConfig(ref_stats=stats2,
-                            audio_oracle=synth_oracle(6, DUR[0], DUR[1]))
+                            audio_snr_fn=synth_oracle(6, DUR[0], DUR[1]))
     r2 = validate_iceberg_increments(
         spark, spec, loc, "audio_clips", state,
         static_tables={"transcripts_ref": ref2}, config=cfg2,

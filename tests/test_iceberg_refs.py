@@ -153,7 +153,7 @@ def test_write_audit_publish_with_contract_engine(spark, tmp_path):
         cfg = ValidationConfig(
             ref_stats={"audio_clips": drift_mod.build_ref_stats(
                 clean, ["dur_ms", "sr_hz"], n_quantiles=49, n_bins=10)},
-            audio_oracle=synth_oracle(seed, 200, 900))
+            audio_snr_fn=synth_oracle(seed, 200, 900))
         res = validate(spark, spec, {"audio_clips": inc,
                                      "transcripts_ref": batch_ref}, cfg)
         return res.run.result

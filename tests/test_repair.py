@@ -196,3 +196,31 @@ models:
     # truncate to 'user@x' (not an email) -> nulled, never emitted invalid
     assert vals[0] == "a@b.co"
     assert vals[1] is None
+
+
+def test_pattern_and_format_are_both_repaired(spark):
+    """A field declaring both ``pattern`` and ``format`` is repaired toward
+    both, and truncation re-tests both: the repaired frame passes every
+    row-local check validate runs on it."""
+    spec2 = DataContractSpecification.from_string("""
+id: both
+models:
+  m:
+    fields:
+      k: {type: string, primaryKey: true}
+      email: {type: string, pattern: '^[a-z@.]+$', format: email, maxLength: 8}
+""")
+    df = spark.createDataFrame(
+        [("k1", "notanemail"),       # pattern ok, format broken -> NULL
+         ("k2", "AB@x.co"),          # format ok, pattern broken -> NULL
+         ("k3", "ab@cd.efgh"),       # truncates to 'ab@cd.ef', still valid
+         ("k4", "abcdefgh@x.com"),   # truncates to 'abcdefgh', no email
+         ("k5", "a@b.co")],
+        "k string, email string")
+    fixed = repair_mod.repair(df, spec2, "m")
+    rows = {r["k"]: r["email"] for r in fixed.collect()}
+    assert rows == {"k1": None, "k2": None, "k3": "ab@cd.ef", "k4": None,
+                    "k5": "a@b.co"}
+    res = validate(spark, spec2, {"m": fixed}, ValidationConfig())
+    bad = [c.key for c in res.run.checks if c.result != ResultEnum.passed]
+    assert bad == []

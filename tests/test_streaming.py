@@ -279,7 +279,7 @@ def test_stream_audio_decode_conformance(spark, tmp_path):
               .option("maxFilesPerTrigger", 1).parquet(str(src)))
     handle = validate_stream(
         spark, spec, stream, "clips",
-        config=ValidationConfig(audio_oracle=synth_oracle(seed, dur[0], dur[1])),
+        config=ValidationConfig(audio_snr_fn=synth_oracle(seed, dur[0], dur[1])),
         checkpoint_location=str(tmp_path / "ckpt_audio"),
     )
     try:

@@ -137,6 +137,15 @@ def test_bigquery_and_jsonschema_import_spellings():
     assert source_types("jsonschema")["string/date-time"] == "timestamp"
 
 
+def test_bigquery_zone_less_timestamp_is_datetime():
+    """BigQuery's zone-less timestamp is DATETIME; TIME is a time of day,
+    which no contract type names, so it fails closed."""
+    assert target_type(Field(type="timestamp_ntz"), "bigquery") == "DATETIME"
+    assert source_type("DATETIME", "bigquery") == "timestamp_ntz"
+    with pytest.raises(ValueError, match="bigquery type 'TIME'"):
+        source_type("TIME", "bigquery")
+
+
 def test_unknown_foreign_type_raises():
     with pytest.raises(ValueError, match="protobuf type 'google.Any'"):
         source_type("google.Any", "protobuf")

@@ -334,3 +334,46 @@ def test_video_contamination_broadcast_plan(spark):
     probe_smj = [l for l in plan.splitlines()
                  if "SortMergeJoin" in l and "__k" in l]
     assert not probe_smj, probe_smj
+
+
+IMAGE_CONTRACT = """
+id: image-batches
+models:
+  images:
+    fields:
+      image_id: {type: string, primaryKey: true}
+      bytes: {type: bytes}
+    quality:
+      - {type: image, invariant: signal-quality, column: brightness, minimum: 0}
+"""
+
+
+def test_decode_passes_get_the_configured_arrow_batch(spark, monkeypatch):
+    """``arrow_batch_rows`` reaches the image and video decode passes,
+    which run after the check that built them returns."""
+    from dcspark import rowmap
+
+    big, small = spark.sparkContext.accumulator(0), spark.sparkContext.accumulator(0)
+    orig = rowmap._binary_views
+
+    def counting_views(col, n_rows):
+        (big if n_rows > 7 else small).add(1)
+        return orig(col, n_rows)
+
+    # map_payloads' per-batch closure reads this module global
+    monkeypatch.setattr(rowmap, "_binary_views", counting_views)
+    videos = spark.createDataFrame(
+        [(f"v-{i}", bytearray(avi_bytes(_frames(2, phase=i), fps=25.0)),
+          25.0, 2, 20, 16) for i in range(20)], DDL).coalesce(1)
+    images = spark.createDataFrame(
+        [(f"i-{i}", bytearray(multimodal.png_bytes(_frames(1, phase=i)[0])))
+         for i in range(20)], "image_id string, bytes binary").coalesce(1)
+    cfg = ValidationConfig(arrow_batch_rows=7)
+    for contract, name, df in ((CONTRACT, "videos", videos),
+                               (IMAGE_CONTRACT, "images", images)):
+        res = validate(spark, DataContractSpecification.from_string(contract),
+                       {name: df}, cfg)
+        assert res.run.result == ResultEnum.passed, [
+            (c.key, c.result, c.reason) for c in res.run.checks]
+    assert big.value == 0
+    assert small.value >= 6  # 20 rows in batches of at most 7, per pass

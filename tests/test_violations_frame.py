@@ -43,12 +43,12 @@ EXPECTED_ROWS = [
     (None, 'clips__dur_ms__field_minimum', 'c02', '180', '>= 200'),
     (None, 'clips__clip_id__field_unique', 'c03', 'count=2', 'unique'),
     (None, 'clips__clip_id__field_unique', 'c07', 'count=2', 'unique'),
+    (None, 'clips__clip_id__field_reference', 'x0', 'x0', 'exists in refs.clip_id'),
     (None, 'clips__clip_id__field_reference', 'x1', 'x1', 'exists in refs.clip_id'),
     (None, 'clips__clip_id__field_reference', 'x2', 'x2', 'exists in refs.clip_id'),
-    (None, 'clips__clip_id__field_reference', 'x0', 'x0', 'exists in refs.clip_id'),
     (None, 'clips__transcript__transcript_equality', 'c00', 't0', 'ref: other0xx'),
-    (None, 'clips__transcript__transcript_equality', 'c10', 't10', 'ref: other10xx'),
     (None, 'clips__transcript__transcript_equality', 'c05', 't5', 'ref: other5xx'),
+    (None, 'clips__transcript__transcript_equality', 'c10', 't10', 'ref: other10xx'),
     (None, 'clips__transcript__transcript_equality', 'c15', 't15', 'ref: other15xx'),
     (None, 'refs__text__field_max_length', 'c10', '9', 'length <= 8'),
     (None, 'refs__text__field_max_length', 'c15', '9', 'length <= 8'),
@@ -136,3 +136,47 @@ def test_rows_frame_tuples_and_naive_timestamps(spark):
     empty = rows_frame(spark, [], ddl)
     assert empty.count() == 0
     assert empty.schema == spark.createDataFrame([], ddl).schema
+
+
+SAMPLE_CONTRACT = """
+id: capped-samples
+models:
+  t:
+    fields:
+      k: {type: string, references: r.k}
+      v: {type: string}
+    quality:
+      - {type: audio, invariant: transcript-equality, ref: r, key: k,
+         column: v, ref_column: txt}
+  r:
+    fields:
+      k: {type: string}
+      txt: {type: string}
+"""
+
+
+def test_capped_samples_do_not_depend_on_shuffle_partitions(spark):
+    """The referential and transcript-equality samples are the first
+    ``violation_cap`` rows in a total order, whatever the shuffle width."""
+    spec = DataContractSpecification.from_string(SAMPLE_CONTRACT)
+    # odd keys are orphans, even keys mismatch their reference text
+    tables = {
+        "t": spark.createDataFrame([(f"k{i:04d}", "WRONG") for i in range(3000)],
+                                   "k string, v string"),
+        "r": spark.createDataFrame([(f"k{i:04d}", f"text-{i}")
+                                    for i in range(0, 3000, 2)], "k string, txt string"),
+    }
+    samples = []
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in ("4", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            res = validate(spark, spec, tables, ValidationConfig(violation_cap=50))
+            samples.append([(r["check_key"], r["clip_id"])
+                            for r in res.violations.collect()])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert samples[0] == samples[1]
+    assert samples[0] == (
+        [("t__k__field_reference", f"k{i:04d}") for i in range(1, 100, 2)]
+        + [("t__v__transcript_equality", f"k{i:04d}") for i in range(0, 100, 2)])
