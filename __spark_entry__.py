@@ -4487,11 +4487,11 @@ def q_iceberg_compaction(spark: SparkSession, sf: str) -> DataFrame:
            .withColumn("o_totalprice", F.col("o_totalprice") + 1000.0))
     t.upsert(upd, ["o_orderkey"])
     files_before = len(t.data_files())
-    _d, pos_before, eq_before = t._plan_files()
+    _d, pos_before, eq_before = t._plan(t.metadata())
     if not pos_before or not eq_before:
         raise AssertionError("setup: expected both delete families live")
     stats = t.compact(spark, target_file_bytes=1 << 30)
-    _d2, pos_after, eq_after = t._plan_files()
+    _d2, pos_after, eq_after = t._plan(t.metadata())
     if pos_after or eq_after:
         raise AssertionError(
             f"compact left delete files: pos={len(pos_after)} "

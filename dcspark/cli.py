@@ -173,27 +173,26 @@ def cmd_iceberg(args: argparse.Namespace) -> int:
         if snap is None:
             print("no snapshot")
             return 1
-        for m in t._read_manifest_list(snap["manifest-list"]):
-            for e in t._read_manifest(m["manifest_path"]):
-                d = e["data_file"]
-                if d.get("content", 0) != 0 or e.get("status") == 2:
+        for r in t._live_files(t._read_manifest_list(snap["manifest-list"])):
+            if r["content"] != 0:
+                continue
+            d = r["entry"]["data_file"]
+            lo = {x["key"]: x["value"] for x in (d.get("lower_bounds") or [])}
+            hi = {x["key"]: x["value"] for x in (d.get("upper_bounds") or [])}
+            nn = {x["key"]: x["value"] for x in
+                  (d.get("null_value_counts") or [])}
+            parts = []
+            for fid in sorted(by_fid):
+                name, ice_t = by_fid[fid]
+                l_ = deserialize_bound(lo.get(fid), ice_t)
+                h_ = deserialize_bound(hi.get(fid), ice_t)
+                if l_ is None and h_ is None and fid not in nn:
                     continue
-                lo = {x["key"]: x["value"] for x in (d.get("lower_bounds") or [])}
-                hi = {x["key"]: x["value"] for x in (d.get("upper_bounds") or [])}
-                nn = {x["key"]: x["value"] for x in
-                      (d.get("null_value_counts") or [])}
-                parts = []
-                for fid in sorted(by_fid):
-                    name, ice_t = by_fid[fid]
-                    l_ = deserialize_bound(lo.get(fid), ice_t)
-                    h_ = deserialize_bound(hi.get(fid), ice_t)
-                    if l_ is None and h_ is None and fid not in nn:
-                        continue
-                    parts.append(f"{name}=[{l_!r}..{h_!r}] "
-                                 f"nulls={nn.get(fid, '?')}")
-                print(f"{d['file_path']}  rows={d['record_count']}")
-                for p in parts:
-                    print(f"  {p}")
+                parts.append(f"{name}=[{l_!r}..{h_!r}] "
+                             f"nulls={nn.get(fid, '?')}")
+            print(f"{d['file_path']}  rows={d['record_count']}")
+            for p in parts:
+                print(f"  {p}")
         return 0
     if args.action == "expire":
         out = t.expire_snapshots(keep_last=args.keep_last)

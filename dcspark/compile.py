@@ -47,6 +47,10 @@ FORMAT_REGEX = {
     "uri": r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^\s]+$",
 }
 
+#: the ``format`` row's bound for a declared format that FORMAT_REGEX has no
+#: regex for: the row then compiles to a check that records ``error``
+NO_REGEX = object()
+
 Evaluator = Callable[[Optional[float], Dict[str, Any]], Tuple[ResultEnum, Optional[str]]]
 
 
@@ -381,7 +385,7 @@ class FieldConstraint:
         """The declared bound, or None when ``f_`` does not declare this."""
         v = getattr(f_, self.attr)
         if self.attr == "format":
-            return FORMAT_REGEX.get((v or "").lower())
+            return FORMAT_REGEX.get(v.lower(), NO_REGEX) if v else None
         if isinstance(v, (bool, str, list)) and not v:
             return None
         return v
@@ -484,6 +488,8 @@ def _scalar_check(model: str, fname: str, f_: Field, con: FieldConstraint,
                   v: Any) -> CompiledCheck:
     w = _words(con, f_, fname, v)
     check_type = con.check_type.format(**w)
+    if v is NO_REGEX:
+        return _format_error(model, fname, fname, check_type, w["fmt"])
     vp = lambda: con.rejects(F.col(fname), v)
     extra = con.extra
     return CompiledCheck(
@@ -500,6 +506,27 @@ def _scalar_check(model: str, fname: str, f_: Field, con: FieldConstraint,
         observed_expr=lambda: con.observed(F.col(fname)),
         expected=con.expected.format(**w),
         implementation=con.implementation.format(**w),
+    )
+
+
+def _format_error(model: str, fname: str, dotted: str, check_type: str,
+                  fmt: str) -> CompiledCheck:
+    """A format with no regex compiles to a driver-side check that records
+    ``error`` naming the format, the way an unmappable type errors through
+    ``field_type`` — never to no check, which would pass any value."""
+    reason = (f"format {fmt!r} has no check (supported: "
+              f"{', '.join(FORMAT_REGEX)})")
+    return CompiledCheck(
+        key=_key(model, dotted, check_type),
+        check_type=check_type,
+        category="field",
+        name=f"Check that field {dotted} has format {fmt}",
+        model=model,
+        field=fname,
+        kind="schema_type",
+        params={"type_error": reason},
+        expected=f"<{reason}>",
+        implementation=reason,
     )
 
 
@@ -531,6 +558,8 @@ def _element_check(model: str, fname: str, where: str, f_: Field, path: str,
     row_pred = lambda: F.col(fname).isNotNull() & F.exists(arr(), pred)
     dotted = f"{fname}[{where}]" + (f".{path}" if path else "")
     check_type = f"{where}_{element_type}"
+    if v is NO_REGEX:
+        return _format_error(model, fname, dotted, check_type, w["fmt"])
     return CompiledCheck(
         key=_key(model, dotted, check_type),
         check_type=check_type,

@@ -14,10 +14,13 @@ parquet source:
 - **manifests**: manifest-list and manifest files are real Avro OCF with the
   spec's field names AND field-id annotations (manifest_file fields 500-517,
   manifest_entry/data_file fields 0-134).
-- **commits**: append / overwrite / positional delete, each producing a new
-  snapshot + metadata version committed via an atomic `os.link` (fails if a
-  concurrent writer took the version — optimistic concurrency, single
-  metadata pointer, exactly the spec's swap semantics).
+- **commits**: every change — a snapshot (append / overwrite / row-level
+  delete / upsert / compaction) or a metadata-only edit (schema, spec, sort
+  order, refs, expiry) — reads (metadata, version) once, plans from it, and
+  links version+1 through one `_commit` via an atomic `os.link`. If a
+  concurrent writer took that version the commit raises `CommitConflict`
+  instead of erasing it — optimistic concurrency, single metadata pointer,
+  exactly the spec's swap semantics.
 - **reads**: snapshot time-travel (by id or timestamp), partition pruning
   against the manifest partition values (driver-side, proportional to file
   count, never row count), and **v2 positional deletes** applied as an
@@ -79,6 +82,7 @@ import os
 import re
 import shutil
 import struct
+import time
 import uuid as _uuid
 from dataclasses import dataclass
 from typing import Any, Dict, List, Optional, Sequence, Tuple
@@ -1054,13 +1058,19 @@ class CommitConflict(RuntimeError):
     """Another writer committed the metadata version we raced for."""
 
 
-def _now_ms(spark: SparkSession) -> int:
-    # Date.now() is unavailable under the workflow runtime and test clocks
-    # want determinism anyway: take the JVM clock via Spark when present,
-    # else time.time (normal CLI path).
-    import time
-
+def _now_ms() -> int:
     return int(time.time() * 1000)
+
+
+def _added(files: Sequence[dict]) -> List[dict]:
+    """Manifest entries that add ``files`` in the committing snapshot."""
+    return [{"status": 1, "data_file": f} for f in files]
+
+
+#: partition field name suffix per transform (spec naming convention)
+_PART_SUFFIX = {"identity": "", "bucket": "_bucket", "truncate": "_trunc",
+                "year": "_year", "month": "_month", "day": "_day",
+                "hour": "_hour", "void": "_null"}
 
 
 class IcebergTable:
@@ -1097,12 +1107,17 @@ class IcebergTable:
     def exists(self) -> bool:
         return self._version() > 0
 
-    def metadata(self) -> dict:
+    def _load(self) -> Tuple[dict, int]:
+        """(metadata, version): what an operation reads once, plans from,
+        and commits against."""
         v = self._version()
         if v == 0:
             raise FileNotFoundError(f"no Iceberg metadata under {self.meta_dir}")
         with open(self._meta_path(v)) as f:
-            return json.load(f)
+            return json.load(f), v
+
+    def metadata(self) -> dict:
+        return self._load()[0]
 
     def _current_schema(self, md: dict) -> dict:
         sid = md.get("current-schema-id", 0)
@@ -1118,7 +1133,15 @@ class IcebergTable:
         return list(self.metadata().get("snapshots", []))
 
     def current_snapshot_id(self) -> Optional[int]:
-        cur = self.metadata().get("current-snapshot-id")
+        return self._head(self.metadata())
+
+    @staticmethod
+    def _head(md: dict, branch: str = "main") -> Optional[int]:
+        """The snapshot id ``branch`` points at; None on an empty table."""
+        if branch != "main":
+            r = (md.get("refs") or {}).get(branch)
+            return r["snapshot-id"] if r else None
+        cur = md.get("current-snapshot-id")
         # the spec writes -1 for "no current snapshot" (fresh table)
         return None if cur is None or cur == -1 else cur
 
@@ -1188,14 +1211,10 @@ class IcebergTable:
             if col not in by_name:
                 raise ValueError(f"partition column {col!r} not in schema")
             transform = Transform.parse(tr)
-            src = by_name[col]
-            suffix = {"identity": "", "bucket": "_bucket", "truncate": "_trunc",
-                      "year": "_year", "month": "_month", "day": "_day",
-                      "hour": "_hour", "void": "_null"}[transform.kind]
             spec_fields.append({
-                "source-id": src["id"],
+                "source-id": by_name[col]["id"],
                 "field-id": 1000 + i,
-                "name": f"{col}{suffix}",
+                "name": col + _PART_SUFFIX[transform.kind],
                 "transform": str(transform),
             })
         sort_orders = [{"order-id": 0, "fields": []}]
@@ -1210,7 +1229,7 @@ class IcebergTable:
             "table-uuid": str(_uuid.uuid4()),
             "location": t.location,
             "last-sequence-number": 0,
-            "last-updated-ms": 0,
+            "last-updated-ms": _now_ms(),
             "last-column-id": last_col,
             "current-schema-id": 0,
             "schemas": [ice_schema],
@@ -1376,8 +1395,7 @@ class IcebergTable:
                          [self._local(f["file_path"]) for f in files], bcols)
         return files
 
-    def _bloom_cols(self, md: Optional[dict] = None) -> List[str]:
-        md = md or self.metadata()
+    def _bloom_cols(self, md: dict) -> List[str]:
         prop = (md.get("properties") or {}).get("bloom.columns", "")
         names = {f["name"] for f in self._current_schema(md)["fields"]}
         return [c.strip() for c in prop.split(",") if c.strip() in names]
@@ -1402,62 +1420,28 @@ class IcebergTable:
             out.append((pf["name"], name))
         return out
 
-    def _new_snapshot(
-        self, md: dict, operation: str,
-        added_files: int, added_rows: int, ts_ms: int,
-        parent_id: Optional[int] = None,
-    ) -> dict:
-        """Name a new snapshot (id, sequence, manifest-list PATH). The list
-        file is NOT written here: every commit path needs the snapshot id
-        before it can write its new manifest, so the final manifest set only
-        exists afterwards — `_finalize_manifest_list` writes the list ONCE
-        with that final set and fills the summary totals (previously each
-        caller wrote a stale list here and immediately rewrote it, with the
-        8-line rewrite block copy-pasted at six call sites)."""
-        seq = md.get("last-sequence-number", 0) + 1
-        snap_id = int(_uuid.uuid4().int % (1 << 62)) + 1
-        ml_name = f"snap-{snap_id}-1-{_uuid.uuid4().hex}.avro"
-        ml_path = os.path.join(self.meta_dir, ml_name)
+    def _snapshot(self, md: dict, operation: str,
+                  branch: str = "main") -> dict:
+        """A new snapshot on ``branch``'s head in ``md``: its id and the
+        next sequence number, which its manifests are written with before
+        `_commit` completes it."""
         snap = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": ts_ms,
-            "manifest-list": "file://" + ml_path,
+            "snapshot-id": int(_uuid.uuid4().int % (1 << 62)) + 1,
+            "sequence-number": md.get("last-sequence-number", 0) + 1,
             "schema-id": md.get("current-schema-id", 0),
-            "summary": {
-                "operation": operation,
-                "added-data-files": str(added_files),
-                "added-records": str(added_rows),
-            },
+            "summary": {"operation": operation},
         }
-        parent = (parent_id if parent_id is not None
-                  else md.get("current-snapshot-id"))
-        if parent and parent != -1:
+        parent = self._head(md, branch)
+        if parent is not None:
             snap["parent-snapshot-id"] = parent
         return snap
 
-    def _finalize_manifest_list(self, snap: dict,
-                                manifests: List[dict]) -> None:
-        """Write the snapshot's manifest list with the FINAL manifest set
-        and fill the content-0 totals in its summary."""
-        ml_path = self._local(snap["manifest-list"])
-        blob = write_container(MANIFEST_LIST_SCHEMA, manifests,
-                               codec="deflate",
-                               sync_seed=os.path.basename(ml_path))
-        with open(ml_path, "wb") as f:
-            f.write(blob)
-        snap["summary"]["total-data-files"] = str(
-            sum(m["added_files_count"] + m["existing_files_count"]
-                for m in manifests if m["content"] == 0))
-        snap["summary"]["total-records"] = str(
-            sum(m["added_rows_count"] + m["existing_rows_count"]
-                for m in manifests if m["content"] == 0))
-
-    def _write_manifest(self, md: dict, entries: List[dict], snap_id: int,
-                        seq: int, content: int,
+    def _write_manifest(self, md: dict, snap: dict, entries: List[dict],
+                        content: int, seq: Optional[int] = None,
                         embed_schema: Optional[dict] = None,
                         spec_id: Optional[int] = None) -> dict:
-        """entries: list of (status, data_file) dicts -> manifest_file row.
+        """entries: list of (status, data_file) dicts -> manifest_file row
+        of ``snap``, at its sequence number unless ``seq`` is given.
 
         ``embed_schema`` overrides the embedded write-time table schema —
         required when REWRITING an old manifest (compaction): its surviving
@@ -1466,6 +1450,9 @@ class IcebergTable:
         likewise pins the manifest's PARTITION spec — surviving entries of
         a pre-evolution manifest carry partition records in the old spec's
         field names, and pruning interprets them by this id."""
+        snap_id = snap["snapshot-id"]
+        if seq is None:
+            seq = snap["sequence-number"]
         if spec_id is None:
             spec_id = md.get("default-spec-id", 0)
         part_types = self._part_types(md, spec_id)
@@ -1527,17 +1514,11 @@ class IcebergTable:
             "partitions": None,
         }
 
-    def _existing_manifests(self, md: dict,
-                            branch: Optional[str] = None) -> List[dict]:
-        if branch and branch != "main":
-            r = md.get("refs", {}).get(branch)
-            snap_id = r["snapshot-id"] if r else None
-        else:
-            snap_id = md.get("current-snapshot-id")
-        if not snap_id or snap_id == -1:
-            return []
+    def _manifests(self, md: dict, branch: str = "main") -> List[dict]:
+        """The manifest rows of ``branch``'s head ([] on an empty table)."""
+        head = self._head(md, branch)
         for s in md.get("snapshots", []):
-            if s["snapshot-id"] == snap_id:
+            if s["snapshot-id"] == head:
                 return self._read_manifest_list(s["manifest-list"])
         return []
 
@@ -1549,10 +1530,6 @@ class IcebergTable:
         with open(self._local(path), "rb") as f:
             _schema, rows = parse_container(f.read())
         return list(rows)
-
-    # same OCF container shape for both levels of the metadata tree — one
-    # reader, two names kept for call-site clarity
-    _read_manifest = _read_manifest_list
 
     def _read_manifest_full(
         self, path: str
@@ -1572,32 +1549,76 @@ class IcebergTable:
         _schema, rows = parse_container(data)
         return emb, list(rows)
 
-    def _apply_commit(self, md: dict, snap: dict, ts_ms: int,
-                      branch: Optional[str] = None) -> None:
-        v = self._version()
-        md = dict(md)
-        md["last-sequence-number"] = snap["sequence-number"]
-        md["last-updated-ms"] = ts_ms
-        md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-        md["metadata-log"] = list(md.get("metadata-log", [])) + [
-            {"timestamp-ms": ts_ms,
-             "metadata-file": "file://" + self._meta_path(v)}]
-        refs = dict(md.get("refs") or {})
-        if branch is None or branch == "main":
-            # main advances: current pointer + the spec's snapshot-log
-            md["current-snapshot-id"] = snap["snapshot-id"]
-            md["snapshot-log"] = list(md.get("snapshot-log", [])) + [
-                {"timestamp-ms": ts_ms, "snapshot-id": snap["snapshot-id"]}]
-            refs["main"] = {"snapshot-id": snap["snapshot-id"],
-                            "type": "branch"}
-        else:
-            refs[branch] = {"snapshot-id": snap["snapshot-id"],
-                            "type": "branch"}
-        md["refs"] = refs
-        self._commit_metadata(md, expected_version=v)
+    def _commit(self, base: dict, version: int, md: Optional[dict] = None,
+                snap: Optional[dict] = None, manifests: Sequence[dict] = (),
+                branch: str = "main") -> None:
+        """The one way a table change becomes metadata version
+        ``version + 1``.
 
-    def _check_schema(self, df: DataFrame) -> None:
-        want = self.spark_schema()
+        ``base`` is the metadata the operation read at ``version`` and
+        ``md`` its edited copy (default: ``base`` unchanged). A snapshot
+        operation also passes ``snap`` (from `_snapshot`) with its final
+        manifest set: the manifest list is written here, the summary's
+        added and total counts filled in, and ``branch`` moved to the new
+        snapshot. Every commit stamps ``last-updated-ms`` (and the
+        snapshot's timestamp) from one clock reading, logs the base file in
+        ``metadata-log``, and appends ``snapshot-log`` when main moves.
+
+        The link is made against ``version``, so a commit that another
+        writer made since the read raises `CommitConflict` and nothing is
+        lost. The losing snapshot's manifest list and the manifests it
+        added are removed before the raise; the data and delete files it
+        wrote stay unreferenced for `remove_orphan_files`."""
+        ts = _now_ms()
+        md = dict(base if md is None else md)
+        if snap is not None:
+            sid = snap["snapshot-id"]
+            ml_path = os.path.join(
+                self.meta_dir, f"snap-{sid}-1-{_uuid.uuid4().hex}.avro")
+            with open(ml_path, "wb") as f:
+                f.write(write_container(MANIFEST_LIST_SCHEMA, list(manifests),
+                                        codec="deflate",
+                                        sync_seed=os.path.basename(ml_path)))
+            data = [m for m in manifests if m["content"] == 0]
+            new = [m for m in data if m["added_snapshot_id"] == sid]
+            snap["timestamp-ms"] = ts
+            snap["manifest-list"] = "file://" + ml_path
+            snap["summary"].update({
+                "added-data-files": str(
+                    sum(m["added_files_count"] for m in new)),
+                "added-records": str(sum(m["added_rows_count"] for m in new)),
+                "total-data-files": str(
+                    sum(m["added_files_count"] + m["existing_files_count"]
+                        for m in data)),
+                "total-records": str(
+                    sum(m["added_rows_count"] + m["existing_rows_count"]
+                        for m in data)),
+            })
+            md["snapshots"] = list(md.get("snapshots", [])) + [snap]
+            md["last-sequence-number"] = snap["sequence-number"]
+            md["refs"] = {**(md.get("refs") or {}),
+                          branch: {"snapshot-id": sid, "type": "branch"}}
+        head = (md.get("refs") or {}).get("main", {}).get("snapshot-id")
+        if head is not None and head != base.get("current-snapshot-id"):
+            md["current-snapshot-id"] = head
+            md["snapshot-log"] = list(md.get("snapshot-log", [])) + [
+                {"timestamp-ms": ts, "snapshot-id": head}]
+        md["last-updated-ms"] = ts
+        md["metadata-log"] = list(md.get("metadata-log", [])) + [
+            {"timestamp-ms": base.get("last-updated-ms", 0),
+             "metadata-file": "file://" + self._meta_path(version)}]
+        try:
+            self._commit_metadata(md, expected_version=version)
+        except CommitConflict:
+            if snap is not None:
+                for m in manifests:
+                    if m["added_snapshot_id"] == sid:
+                        os.unlink(self._local(m["manifest_path"]))
+                os.unlink(ml_path)
+            raise
+
+    def _check_schema(self, md: dict, df: DataFrame) -> None:
+        want = iceberg_to_spark_schema(self._current_schema(md))
         got = df.schema
         wantn = [(f.name, f.dataType.simpleString()) for f in want.fields]
         gotn = [(f.name, f.dataType.simpleString()) for f in got.fields]
@@ -1614,47 +1635,44 @@ class IcebergTable:
         data on an audit branch, run the contract engine over
         ``read(ref=branch)``, and `fast_forward("main", branch)` only when
         the run is green. Main readers never see unaudited rows."""
-        md = self.metadata()
-        if branch and branch != "main":
+        md, v = self._load()
+        branch = branch or "main"
+        if branch != "main":
             r = md.get("refs", {}).get(branch)
             if r is None or r.get("type") != "branch":
                 raise ValueError(
                     f"unknown branch {branch!r} — create_branch first")
-            parent_id: Optional[int] = r["snapshot-id"]
-        else:
-            parent_id = None
-        self._check_schema(df)
-        ts = _now_ms(df.sparkSession)
-        new_files = self._write_data_files(df, md)
-        seq = md.get("last-sequence-number", 0) + 1
-        snap_id = None
-        entries = [{"status": 1, "data_file": f} for f in new_files]
+        self._check_schema(md, df)
+        files = self._write_data_files(df, md)
+        snap = self._snapshot(md, "append", branch)
         # carry prior manifests forward untouched (fast append)
-        manifests = self._existing_manifests(md, branch)
-        snap = self._new_snapshot(md, "append", len(new_files),
-                                  sum(f["record_count"] for f in new_files),
-                                  ts, parent_id=parent_id)
-        snap_id = snap["snapshot-id"]
-        new_manifest = self._write_manifest(md, entries, snap_id, seq, content=0)
-        self._finalize_manifest_list(snap, [new_manifest] + manifests)
-        self._apply_commit(md, snap, ts, branch=branch)
-        return snap_id
+        manifests = ([self._write_manifest(md, snap, _added(files), 0)]
+                     + self._manifests(md, branch))
+        self._commit(md, v, snap=snap, manifests=manifests, branch=branch)
+        return snap["snapshot-id"]
 
     def overwrite(self, df: DataFrame) -> int:
         """Replace the table contents atomically (new snapshot; old snapshots
         stay readable via time-travel)."""
-        md = self.metadata()
-        self._check_schema(df)
-        ts = _now_ms(df.sparkSession)
-        new_files = self._write_data_files(df, md)
-        seq = md.get("last-sequence-number", 0) + 1
-        entries = [{"status": 1, "data_file": f} for f in new_files]
-        snap = self._new_snapshot(md, "overwrite", len(new_files),
-                                  sum(f["record_count"] for f in new_files), ts)
-        new_manifest = self._write_manifest(md, entries, snap["snapshot-id"],
-                                            seq, content=0)
-        self._finalize_manifest_list(snap, [new_manifest])
-        self._apply_commit(md, snap, ts)
+        md, v = self._load()
+        self._check_schema(md, df)
+        files = self._write_data_files(df, md)
+        snap = self._snapshot(md, "overwrite")
+        self._commit(md, v, snap=snap, manifests=[
+            self._write_manifest(md, snap, _added(files), 0)])
+        return snap["snapshot-id"]
+
+    def _commit_deletes(self, md: dict, v: int, files: List[dict],
+                        summary_key: str) -> int:
+        """Commit delete files as a "delete" snapshot of main."""
+        snap = self._snapshot(md, "delete")
+        snap["summary"][summary_key] = str(
+            sum(f["record_count"] for f in files))
+        manifests = self._manifests(md)
+        if files:
+            manifests = [self._write_manifest(md, snap, _added(files), 1)
+                         ] + manifests
+        self._commit(md, v, snap=snap, manifests=manifests)
         return snap["snapshot-id"]
 
     def delete_where(self, spark: SparkSession, condition: str) -> int:
@@ -1665,71 +1683,35 @@ class IcebergTable:
         parquet file + delete manifest — the data files are untouched, so
         prior snapshots still time-travel to the undeleted state.
         """
-        md = self.metadata()
-        ts = _now_ms(spark)
-        data, _pos, _eq = self._plan_files()
+        md, v = self._load()
+        data, _pos, _eq = self._plan(md)
         if not data:
             raise ValueError("delete_where on an empty table")
-        import pyarrow.parquet as pq
-
         df = self._scan(spark, data, self._current_schema(md),
                         with_meta=True)
         hits = (df.filter(condition)
                   .select(F.col("__ice_fp").alias("file_path"),
                           F.col("__ice_pos").alias("pos"))
                   .orderBy("file_path", "pos"))
-        staging = os.path.join(self.data_dir, f".staging-{_uuid.uuid4().hex}")
-        hits.coalesce(1).write.parquet(staging)
-        seq = md.get("last-sequence-number", 0) + 1
-        delete_files = []
-        commit_id = _uuid.uuid4().hex[:12]
-        for root, _d, names in os.walk(staging):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(root, name)
-                n_rows = pq.ParquetFile(src).metadata.num_rows
-                if n_rows == 0:
-                    continue
-                dest = os.path.join(self.data_dir, f"{commit_id}-delete-{name}")
-                os.rename(src, dest)
-                delete_files.append({
-                    "content": 1,  # position deletes
-                    "file_path": "file://" + dest,
-                    "file_format": "PARQUET",
-                    "partition": {n: None for n, _t in self._part_types(md)},
-                    "record_count": n_rows,
-                    "file_size_in_bytes": os.path.getsize(dest),
-                })
-        shutil.rmtree(staging, ignore_errors=True)
-        manifests = self._existing_manifests(md)
-        snap = self._new_snapshot(md, "delete", 0, 0, ts)
-        if delete_files:
-            entries = [{"status": 1, "data_file": f} for f in delete_files]
-            del_manifest = self._write_manifest(md, entries,
-                                                snap["snapshot-id"], seq,
-                                                content=1)
-            all_manifests = [del_manifest] + manifests
-        else:
-            all_manifests = manifests
-        self._finalize_manifest_list(snap, all_manifests)
-        snap["summary"]["deleted-position-records"] = str(
-            sum(f["record_count"] for f in delete_files))
-        self._apply_commit(md, snap, ts)
-        return snap["snapshot-id"]
+        files = self._write_delete_files(hits.coalesce(1), md, content=1)
+        return self._commit_deletes(md, v, files, "deleted-position-records")
 
     # -- equality deletes + upsert -------------------------------------------
 
-    def _write_eq_delete_files(
-        self, keys_df: DataFrame, md: dict, eq_ids: Sequence[int]
+    def _write_delete_files(
+        self, rows: DataFrame, md: dict, content: int,
+        eq_ids: Sequence[int] = (),
     ) -> List[dict]:
-        """Distributed parquet write of delete-key rows -> data_file dicts
-        with content=2 and the spec's equality_ids field (135)."""
+        """Distributed parquet write of delete rows -> data_file dicts:
+        position deletes (content=1, ``(file_path, pos)`` rows) or equality
+        deletes (content=2, key rows, with the spec's equality_ids field
+        135)."""
         import pyarrow.parquet as pq
 
         staging = os.path.join(self.data_dir, f".staging-{_uuid.uuid4().hex}")
-        keys_df.write.parquet(staging)
-        commit_id = _uuid.uuid4().hex[:12]
+        rows.write.parquet(staging)
+        prefix = (f"{_uuid.uuid4().hex[:12]}-"
+                  f"{'delete' if content == 1 else 'eqdelete'}-")
         out: List[dict] = []
         for root, _d, names in os.walk(staging):
             for name in sorted(names):
@@ -1739,19 +1721,20 @@ class IcebergTable:
                 n_rows = pq.ParquetFile(src).metadata.num_rows
                 if n_rows == 0:
                     continue
-                dest = os.path.join(self.data_dir,
-                                    f"{commit_id}-eqdelete-{name}")
+                dest = os.path.join(self.data_dir, prefix + name)
                 os.rename(src, dest)
-                out.append({
-                    "content": 2,  # equality deletes
+                dfile = {
+                    "content": content,
                     "file_path": "file://" + dest,
                     "file_format": "PARQUET",
                     "partition": {pn: None
                                   for pn, _t in self._part_types(md)},
                     "record_count": n_rows,
                     "file_size_in_bytes": os.path.getsize(dest),
-                    "equality_ids": list(eq_ids),
-                })
+                }
+                if content == 2:
+                    dfile["equality_ids"] = list(eq_ids)
+                out.append(dfile)
         shutil.rmtree(staging, ignore_errors=True)
         return out
 
@@ -1772,27 +1755,11 @@ class IcebergTable:
         columns) disappears from subsequent reads. Data files are untouched,
         prior snapshots still time-travel; the keys flow through a
         distributed write, never the driver. Returns the snapshot id."""
-        md = self.metadata()
+        md, v = self._load()
         eq_ids = self._eq_ids_for(md, keys_df.columns)
-        ts = _now_ms(keys_df.sparkSession)
-        files = self._write_eq_delete_files(keys_df.dropDuplicates(), md,
-                                            eq_ids)
-        seq = md.get("last-sequence-number", 0) + 1
-        manifests = self._existing_manifests(md)
-        snap = self._new_snapshot(md, "delete", 0, 0, ts)
-        if files:
-            entries = [{"status": 1, "data_file": f} for f in files]
-            del_manifest = self._write_manifest(md, entries,
-                                                snap["snapshot-id"], seq,
-                                                content=1)
-            all_manifests = [del_manifest] + manifests
-        else:
-            all_manifests = manifests
-        self._finalize_manifest_list(snap, all_manifests)
-        snap["summary"]["deleted-equality-records"] = str(
-            sum(f["record_count"] for f in files))
-        self._apply_commit(md, snap, ts)
-        return snap["snapshot-id"]
+        files = self._write_delete_files(keys_df.dropDuplicates(), md, 2,
+                                         eq_ids)
+        return self._commit_deletes(md, v, files, "deleted-equality-records")
 
     def upsert(self, df: DataFrame, key_cols: Sequence[str]) -> int:
         """MERGE by key in ONE snapshot: an equality delete on ``key_cols``
@@ -1801,30 +1768,19 @@ class IcebergTable:
         delete hits only files with a SMALLER sequence number, so the new
         rows survive their own delete — upsert without rewriting a single
         existing file. Returns the snapshot id."""
-        md = self.metadata()
-        self._check_schema(df)
+        md, v = self._load()
+        self._check_schema(md, df)
         eq_ids = self._eq_ids_for(md, list(key_cols))
-        ts = _now_ms(df.sparkSession)
-        keys = df.select(*key_cols).dropDuplicates()
-        del_files = self._write_eq_delete_files(keys, md, eq_ids)
-        new_files = self._write_data_files(df, md)
-        seq = md.get("last-sequence-number", 0) + 1
-        manifests = self._existing_manifests(md)
-        snap = self._new_snapshot(md, "overwrite",
-                                  len(new_files),
-                                  sum(f["record_count"] for f in new_files),
-                                  ts)
-        data_manifest = self._write_manifest(
-            md, [{"status": 1, "data_file": f} for f in new_files],
-            snap["snapshot-id"], seq, content=0)
-        all_manifests = [data_manifest] + manifests
+        del_files = self._write_delete_files(
+            df.select(*key_cols).dropDuplicates(), md, 2, eq_ids)
+        files = self._write_data_files(df, md)
+        snap = self._snapshot(md, "overwrite")
+        manifests = ([self._write_manifest(md, snap, _added(files), 0)]
+                     + self._manifests(md))
         if del_files:
-            del_manifest = self._write_manifest(
-                md, [{"status": 1, "data_file": f} for f in del_files],
-                snap["snapshot-id"], seq, content=1)
-            all_manifests = [del_manifest] + all_manifests
-        self._finalize_manifest_list(snap, all_manifests)
-        self._apply_commit(md, snap, ts)
+            manifests.insert(
+                0, self._write_manifest(md, snap, _added(del_files), 1))
+        self._commit(md, v, snap=snap, manifests=manifests)
         return snap["snapshot-id"]
 
     # -- schema evolution -----------------------------------------------------
@@ -1853,7 +1809,7 @@ class IcebergTable:
         Names refer to the CURRENT schema (drop/promote apply before
         rename). Returns the new schema-id.
         """
-        md = self.metadata()
+        md, v = self._load()
         cur = self._current_schema(md)
         fields = [dict(f) for f in cur["fields"]]
         by_name = {f["name"]: f for f in fields}
@@ -1924,8 +1880,7 @@ class IcebergTable:
             {"type": "struct", "schema-id": new_sid, "fields": fields}]
         new_md["current-schema-id"] = new_sid
         new_md["last-column-id"] = last_col
-        new_md["last-updated-ms"] = md.get("last-updated-ms", 0) + 1
-        self._commit_metadata(new_md, expected_version=self._version())
+        self._commit(md, v, new_md)
         return new_sid
 
     # -- sort orders ----------------------------------------------------------
@@ -1949,7 +1904,7 @@ class IcebergTable:
         the table unpartitioned going forward. A (source, transform) pair
         seen in any prior spec keeps its partition field-id and name, as
         the spec requires. Returns the (possibly reused) spec id."""
-        md = self.metadata()
+        md, v = self._load()
         src_types = self._source_types(md)
         by_name = {n: fid for fid, (n, _t) in src_types.items()}
         prior: Dict[Tuple[int, str], Tuple[int, str]] = {}
@@ -1969,11 +1924,7 @@ class IcebergTable:
             if key in prior:
                 fid, name = prior[key]
             else:
-                suffix = {"identity": "", "bucket": "_bucket",
-                          "truncate": "_trunc", "year": "_year",
-                          "month": "_month", "day": "_day", "hour": "_hour",
-                          "void": "_null"}[transform.kind]
-                name = f"{col}{suffix}"
+                name = col + _PART_SUFFIX[transform.kind]
                 last_pid += 1
                 fid = last_pid
                 if name in used_names:  # same col, different bucket/trunc arg
@@ -1986,25 +1937,20 @@ class IcebergTable:
             return tuple((f["source-id"], f["transform"]) for f in fs)
 
         new_md = dict(md)
-        for s in md.get("partition-specs", []):
-            if sig(s.get("fields", [])) == sig(fields):
-                if s["spec-id"] == md.get("default-spec-id", 0):
-                    return s["spec-id"]  # already the default: no-op
-                new_md["default-spec-id"] = s["spec-id"]
-                new_md["last-updated-ms"] = md.get("last-updated-ms", 0) + 1
-                self._commit_metadata(new_md,
-                                      expected_version=self._version())
-                return s["spec-id"]
-        new_id = max((s["spec-id"] for s in md.get("partition-specs", [])),
-                     default=-1) + 1
-        new_md["partition-specs"] = list(md.get("partition-specs", [])) + [
-            {"spec-id": new_id, "fields": fields}]
-        new_md["default-spec-id"] = new_id
-        new_md["last-partition-id"] = max(last_pid,
-                                          md.get("last-partition-id", 999))
-        new_md["last-updated-ms"] = md.get("last-updated-ms", 0) + 1
-        self._commit_metadata(new_md, expected_version=self._version())
-        return new_id
+        specs = md.get("partition-specs", [])
+        spec_id = next((s["spec-id"] for s in specs
+                        if sig(s.get("fields", [])) == sig(fields)), None)
+        if spec_id is None:
+            spec_id = max((s["spec-id"] for s in specs), default=-1) + 1
+            new_md["partition-specs"] = list(specs) + [
+                {"spec-id": spec_id, "fields": fields}]
+            new_md["last-partition-id"] = max(
+                last_pid, md.get("last-partition-id", 999))
+        elif spec_id == md.get("default-spec-id", 0):
+            return spec_id  # already the default: no-op
+        new_md["default-spec-id"] = spec_id
+        self._commit(md, v, new_md)
+        return spec_id
 
     def _default_sort_fields(self, md: dict) -> Tuple[int, List[dict]]:
         soid = md.get("default-sort-order-id", 0)
@@ -2019,7 +1965,7 @@ class IcebergTable:
         (order 0). Existing files keep their recorded sort_order_id; only
         FUTURE writes sort. An identical existing order is reused rather
         than re-registered. Returns the new default order id."""
-        md = self.metadata()
+        md, v = self._load()
         cur = self._current_schema(md)
         by_name = {f["name"]: f for f in cur["fields"]}
         fields = _normalize_sort_fields(sort_by, by_name) if sort_by else []
@@ -2035,8 +1981,7 @@ class IcebergTable:
         new_md = dict(md)
         new_md["sort-orders"] = orders
         new_md["default-sort-order-id"] = soid
-        new_md["last-updated-ms"] = md.get("last-updated-ms", 0) + 1
-        self._commit_metadata(new_md, expected_version=self._version())
+        self._commit(md, v, new_md)
         return soid
 
     def _sort_exprs(self, md: dict, sfields: List[dict]):
@@ -2064,7 +2009,7 @@ class IcebergTable:
 
     def _create_ref(self, name: str, kind: str,
                     snapshot_id: Optional[int]) -> int:
-        md = self.metadata()
+        md, v = self._load()
         if name in (md.get("refs") or {}):
             raise ValueError(f"ref {name!r} already exists")
         snap = self._resolve_snapshot(md, snapshot_id, None)
@@ -2074,8 +2019,7 @@ class IcebergTable:
         new_md["refs"] = {**(md.get("refs") or {}),
                           name: {"snapshot-id": snap["snapshot-id"],
                                  "type": kind}}
-        new_md["last-updated-ms"] = md.get("last-updated-ms", 0) + 1
-        self._commit_metadata(new_md, expected_version=self._version())
+        self._commit(md, v, new_md)
         return snap["snapshot-id"]
 
     def create_tag(self, name: str,
@@ -2094,15 +2038,12 @@ class IcebergTable:
     def drop_ref(self, name: str) -> None:
         if name == "main":
             raise ValueError("cannot drop the main branch")
-        md = self.metadata()
+        md, v = self._load()
         refs = dict(md.get("refs") or {})
         if name not in refs:
             raise ValueError(f"unknown ref {name!r}")
         del refs[name]
-        new_md = dict(md)
-        new_md["refs"] = refs
-        new_md["last-updated-ms"] = md.get("last-updated-ms", 0) + 1
-        self._commit_metadata(new_md, expected_version=self._version())
+        self._commit(md, v, {**md, "refs": refs})
 
     def fast_forward(self, to_ref: str, from_ref: str) -> int:
         """Advance branch ``to_ref`` to ``from_ref``'s head — the PUBLISH
@@ -2111,7 +2052,7 @@ class IcebergTable:
         branch needs an explicit overwrite instead). Metadata-only; the
         audited data files are served to main readers with zero rewrites.
         Returns the new head snapshot id."""
-        md = self.metadata()
+        md, v = self._load()
         refs = dict(md.get("refs") or {})
         src = refs.get(from_ref)
         dst = refs.get(to_ref)
@@ -2133,15 +2074,8 @@ class IcebergTable:
                 f"{to_ref!r} ({dst['snapshot-id']}) is not an ancestor of "
                 f"{from_ref!r} ({head}) — fast-forward impossible")
         refs[to_ref] = {"snapshot-id": head, "type": "branch"}
-        new_md = dict(md)
-        new_md["refs"] = refs
-        new_md["last-updated-ms"] = md.get("last-updated-ms", 0) + 1
-        if to_ref == "main":
-            new_md["current-snapshot-id"] = head
-            new_md["snapshot-log"] = list(md.get("snapshot-log", [])) + [
-                {"timestamp-ms": new_md["last-updated-ms"],
-                 "snapshot-id": head}]
-        self._commit_metadata(new_md, expected_version=self._version())
+        # moving main moves the current pointer and logs it (`_commit`)
+        self._commit(md, v, {**md, "refs": refs})
         return head
 
     # -- read path ----------------------------------------------------------
@@ -2165,13 +2099,8 @@ class IcebergTable:
             if not eligible:
                 return None
             return max(eligible, key=lambda s: s["timestamp-ms"])
-        cur = md.get("current-snapshot-id")
-        if not cur or cur == -1:
-            return None
-        for s in snaps:
-            if s["snapshot-id"] == cur:
-                return s
-        return None
+        cur = self._head(md)
+        return next((s for s in snaps if s["snapshot-id"] == cur), None)
 
     def _partition_keep_fn(
         self, md: dict, partition_filter: Optional[Dict[str, Any]]
@@ -2209,15 +2138,49 @@ class IcebergTable:
 
         return keep
 
-    def _plan_files(
+    def _live_files(self, manifests: Sequence[dict]) -> List[dict]:
+        """Every live (not deleted) entry of ``manifests``, in manifest-list
+        order, as ``{"path", "seq", "schema", "content", "entry", "m"}`` —
+        the one walk and classification the planner, compaction and the
+        metadata tables share.
+
+        ``seq`` is the entry's data sequence number (inherited from the
+        manifest when the entry has none), which the equality-delete rule
+        compares; ``schema`` the manifest's embedded write-time table schema
+        (None for pre-evolution manifests); ``content`` 0 data, 1 position
+        deletes, 2 equality deletes (these also carry ``equality_ids``);
+        ``entry`` the manifest entry and ``m`` its manifest row."""
+        out: List[dict] = []
+        for m in manifests:
+            emb, entries = self._read_manifest_full(m["manifest_path"])
+            for e in entries:
+                if e.get("status") == 2:  # deleted entry
+                    continue
+                dfile = e["data_file"]
+                content = dfile.get("content", 0)
+                if content == 0 and m.get("content", 0) == 1:
+                    content = 1
+                rec = {"path": dfile["file_path"],
+                       "seq": (e.get("sequence_number")
+                               or m.get("sequence_number", 0)),
+                       "schema": emb, "content": content, "entry": e, "m": m}
+                if content == 2:
+                    rec["equality_ids"] = list(dfile.get("equality_ids")
+                                               or [])
+                out.append(rec)
+        return out
+
+    def _plan(
         self,
+        md: dict,
         snapshot_id: Optional[int] = None,
         as_of_ms: Optional[int] = None,
         partition_filter: Optional[Dict[str, Any]] = None,
         column_filter: Optional[Sequence[Tuple[str, str, Any]]] = None,
         ref: Optional[str] = None,
     ) -> Tuple[List[dict], List[str], List[dict]]:
-        """-> (data entries, position-delete paths, equality-delete entries).
+        """-> (data entries, position-delete paths, equality-delete entries)
+        of the selected snapshot of ``md`` (default: main's head).
 
         Data entries are ``{"path", "seq", "schema"}`` — ``schema`` is the
         manifest's embedded write-time table schema (None for pre-evolution
@@ -2233,7 +2196,6 @@ class IcebergTable:
         stats envelope provably misses every matching row is skipped without
         being opened. Both are O(#files) metadata work.
         """
-        md = self.metadata()
         snap = self._resolve_snapshot(md, snapshot_id, as_of_ms, ref=ref)
         if snap is None:
             return [], [], []
@@ -2242,40 +2204,24 @@ class IcebergTable:
         data_entries: List[dict] = []
         pos_deletes: List[str] = []
         eq_entries: List[dict] = []
-        for m in self._read_manifest_list(snap["manifest-list"]):
-            emb, entries = self._read_manifest_full(m["manifest_path"])
-            for entry in entries:
-                if entry.get("status") == 2:  # deleted entry
-                    continue
-                dfile = entry["data_file"]
-                seq = (entry.get("sequence_number")
-                       or m.get("sequence_number", 0))
-                if dfile.get("content", 0) == 2:
-                    eq_entries.append({
-                        "path": dfile["file_path"],
-                        "seq": seq,
-                        "equality_ids": list(dfile.get("equality_ids") or []),
-                        "schema": emb,
-                    })
-                    continue
-                if m.get("content", 0) == 1 or dfile.get("content", 0) == 1:
-                    pos_deletes.append(dfile["file_path"])
-                    continue
-                if not keep(dfile.get("partition") or {},
-                            m.get("partition_spec_id", 0)):
-                    continue
-                if column_filter and not file_may_match(
-                        dfile, column_filter, fid_types):
-                    continue
-                data_entries.append({
-                    "path": dfile["file_path"],
-                    "seq": seq,
-                    "schema": emb,
-                })
+        for r in self._live_files(
+                self._read_manifest_list(snap["manifest-list"])):
+            dfile = r["entry"]["data_file"]
+            if r["content"] == 2:
+                eq_entries.append({k: r[k] for k in
+                                   ("path", "seq", "equality_ids", "schema")})
+            elif r["content"] == 1:
+                pos_deletes.append(r["path"])
+            elif keep(dfile.get("partition") or {},
+                      r["m"].get("partition_spec_id", 0)) and (
+                    not column_filter
+                    or file_may_match(dfile, column_filter, fid_types)):
+                data_entries.append({k: r[k] for k in
+                                     ("path", "seq", "schema")})
         return data_entries, pos_deletes, eq_entries
 
     def data_files(self, **kw) -> List[str]:
-        return [e["path"] for e in self._plan_files(**kw)[0]]
+        return [e["path"] for e in self._plan(self.metadata(), **kw)[0]]
 
     def inspect(self, spark: SparkSession, kind: str) -> DataFrame:
         """Metadata tables as DataFrames — the engine-side parity surface
@@ -2340,17 +2286,14 @@ class IcebergTable:
                       "deleted_files int, added_rows long")
         if kind in ("files", "partitions"):
             frows = []
-            for m in manifests:
-                for e in self._read_manifest(m["manifest_path"]):
-                    if e.get("status") == 2:
-                        continue
-                    d = e["data_file"]
-                    frows.append((d["file_path"], d.get("content", 0),
-                                  d.get("record_count", 0),
-                                  d.get("file_size_in_bytes", 0),
-                                  m.get("partition_spec_id", 0),
-                                  _json.dumps(d.get("partition") or {},
-                                              sort_keys=True, default=str)))
+            for r in self._live_files(manifests):
+                d = r["entry"]["data_file"]
+                frows.append((r["path"], r["content"],
+                              d.get("record_count", 0),
+                              d.get("file_size_in_bytes", 0),
+                              r["m"].get("partition_spec_id", 0),
+                              _json.dumps(d.get("partition") or {},
+                                          sort_keys=True, default=str)))
             if kind == "files":
                 return spark.createDataFrame(
                     frows, "file_path string, content int, "
@@ -2395,27 +2338,16 @@ class IcebergTable:
         # (validate-only-new-data) must not re-validate them
         replace_ids = {s["snapshot-id"] for s in md.get("snapshots", [])
                        if s.get("summary", {}).get("operation") == "replace"}
-        out: List[dict] = []
-        for m in self._read_manifest_list(to_snap["manifest-list"]):
-            if m.get("sequence_number", 0) <= from_seq or \
-                    m.get("content", 0) == 1 or \
-                    m.get("added_snapshot_id") in replace_ids:
-                continue
-            emb, entries = self._read_manifest_full(m["manifest_path"])
-            for entry in entries:
-                if entry.get("status") != 1:
-                    continue
-                if (entry.get("sequence_number") or 0) <= from_seq:
-                    continue
-                dfile = entry["data_file"]
-                if dfile.get("content", 0) != 0:
-                    continue
-                if column_filter and not file_may_match(
-                        dfile, column_filter, fid_types):
-                    continue
-                out.append({"path": dfile["file_path"],
-                            "seq": entry.get("sequence_number") or 0,
-                            "schema": emb})
+        fresh = [m for m in self._read_manifest_list(to_snap["manifest-list"])
+                 if m.get("sequence_number", 0) > from_seq
+                 and m.get("content", 0) != 1
+                 and m.get("added_snapshot_id") not in replace_ids]
+        out = [{k: r[k] for k in ("path", "seq", "schema")}
+               for r in self._live_files(fresh)
+               if r["entry"].get("status") == 1 and r["content"] == 0
+               and r["seq"] > from_seq
+               and (not column_filter or file_may_match(
+                   r["entry"]["data_file"], column_filter, fid_types))]
         return [e["path"] for e in out] if _paths_only else out
 
     def expire_snapshots(self, keep_last: int = 1) -> Dict[str, int]:
@@ -2427,9 +2359,10 @@ class IcebergTable:
 
         The reachability walk is metadata-only (O(#files), driver-side,
         same as a catalog's expire action); time-travel to an expired
-        snapshot subsequently raises, current reads are untouched.
+        snapshot subsequently raises, current reads are untouched. Files
+        are deleted only after the commit, so a lost race deletes nothing.
         """
-        md = self.metadata()
+        md, v = self._load()
         snaps = list(md.get("snapshots", []))
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
@@ -2462,51 +2395,38 @@ class IcebergTable:
         for s in keep:
             for m in self._read_manifest_list(s["manifest-list"]):
                 kept_manifests.add(m["manifest_path"])
-                for e in self._read_manifest(m["manifest_path"]):
+                for e in self._read_manifest_full(m["manifest_path"])[1]:
                     kept_files.add(e["data_file"]["file_path"])
-        # snapshot of the LIVE file set before the drop loop mutates
-        # kept_files as its delete-once ledger (bloom GC needs the real set)
+        # the LIVE file set, before the walk below grows kept_files into
+        # its visit-once ledger (bloom GC needs the real set)
         live_local = {os.path.abspath(self._local(p)) for p in kept_files}
-        deleted = 0
-        dropped_manifests: set = set()
+        doomed: List[str] = []
         for s in drop:
             for m in self._read_manifest_list(s["manifest-list"]):
                 mp = m["manifest_path"]
-                if mp in kept_manifests or mp in dropped_manifests:
+                if mp in kept_manifests:
                     # a manifest can appear in SEVERAL dropped snapshots'
-                    # lists (append chains share manifests): process and
-                    # unlink it exactly once, or the second dropped snapshot
-                    # crashes mid-expiry on the already-deleted file —
-                    # leaving data files gone but metadata uncommitted, and
-                    # every later maintenance run wedged on the missing path
+                    # lists (append chains share manifests): visit it once
                     continue
-                dropped_manifests.add(mp)
-                for e in self._read_manifest(mp):
+                kept_manifests.add(mp)
+                for e in self._read_manifest_full(mp)[1]:
                     p = e["data_file"]["file_path"]
                     if p not in kept_files:
-                        kept_files.add(p)  # delete once
-                        try:
-                            os.unlink(self._local(p))
-                            deleted += 1
-                        except FileNotFoundError:
-                            pass
-                try:
-                    os.unlink(self._local(mp))
-                    deleted += 1
-                except FileNotFoundError:
-                    pass
+                        kept_files.add(p)
+                        doomed.append(p)
+                doomed.append(mp)
+            doomed.append(s["manifest-list"])
+        kept_ids = {s["snapshot-id"] for s in keep}
+        self._commit(md, v, {**md, "snapshots": keep, "snapshot-log": [
+            e for e in md.get("snapshot-log", [])
+            if e["snapshot-id"] in kept_ids]})
+        deleted = 0
+        for p in doomed:
             try:
-                os.unlink(self._local(s["manifest-list"]))
+                os.unlink(self._local(p))
                 deleted += 1
             except FileNotFoundError:
                 pass
-        kept_ids = {s["snapshot-id"] for s in keep}
-        new_md = dict(md)
-        new_md["snapshots"] = keep
-        new_md["snapshot-log"] = [
-            e for e in md.get("snapshot-log", [])
-            if e["snapshot-id"] in kept_ids]
-        self._commit_metadata(new_md, expected_version=self._version())
         deleted += self._gc_blooms(live_local)
         return {"snapshots_removed": len(drop), "files_deleted": deleted}
 
@@ -2527,7 +2447,7 @@ class IcebergTable:
         referenced: set = set()
         for s in md.get("snapshots", []):
             for m in self._read_manifest_list(s["manifest-list"]):
-                for e in self._read_manifest(m["manifest_path"]):
+                for e in self._read_manifest_full(m["manifest_path"])[1]:
                     referenced.add(
                         os.path.abspath(
                             self._local(e["data_file"]["file_path"])))
@@ -2648,40 +2568,18 @@ class IcebergTable:
         if small_file_bytes is None:
             small_file_bytes = (float("inf") if cluster_by
                                 else target_file_bytes * 3 // 4)
-        md = self.metadata()
+        nothing = {"rewritten_data_files": 0, "added_data_files": 0,
+                   "removed_delete_files": 0, "rewritten_bytes": 0}
+        md, v = self._load()
         snap = self._resolve_snapshot(md, None, None)
         if snap is None:
-            return {"rewritten_data_files": 0, "added_data_files": 0,
-                    "removed_delete_files": 0, "rewritten_bytes": 0}
+            return nothing
         keep = self._partition_keep_fn(md, partition_filter)
         mlist = self._read_manifest_list(snap["manifest-list"])
-        manifests: List[dict] = []  # (manifest row, emb schema, entries)
-        data_recs: List[dict] = []
-        pos_recs: List[dict] = []
-        eq_recs: List[dict] = []
-        for m in mlist:
-            emb, entries = self._read_manifest_full(m["manifest_path"])
-            manifests.append({"m": m, "emb": emb, "entries": entries})
-            for e in entries:
-                if e.get("status") == 2:
-                    continue
-                dfile = e["data_file"]
-                seq = (e.get("sequence_number")
-                       or m.get("sequence_number", 0))
-                rec = {"path": dfile["file_path"], "seq": seq,
-                       "schema": emb, "dfile": dfile}
-                content = dfile.get("content", 0)
-                if content == 2:
-                    rec["equality_ids"] = list(dfile.get("equality_ids")
-                                               or [])
-                    eq_recs.append(rec)
-                elif content == 1 or m.get("content", 0) == 1:
-                    pos_recs.append(rec)
-                else:
-                    rec["in_scope"] = keep(
-                        dfile.get("partition") or {},
-                        m.get("partition_spec_id", 0))
-                    data_recs.append(rec)
+        recs = self._live_files(mlist)
+        data_recs = [r for r in recs if r["content"] == 0]
+        pos_recs = [r for r in recs if r["content"] == 1]
+        eq_recs = [r for r in recs if r["content"] == 2]
         # positional-delete target file sets (delete files are small and
         # bounded; this is the same driver-side metadata work as planning)
         import pyarrow.parquet as pq
@@ -2701,13 +2599,17 @@ class IcebergTable:
             pinned |= targets
         max_eq_seq = max((r["seq"] for r in eq_recs), default=0)
 
-        def is_candidate(rec: dict) -> bool:
-            if not rec["in_scope"]:
+        def size(r: dict) -> int:
+            return r["entry"]["data_file"].get("file_size_in_bytes", 0)
+
+        def is_candidate(r: dict) -> bool:
+            if not keep(r["entry"]["data_file"].get("partition") or {},
+                        r["m"].get("partition_spec_id", 0)):
                 return False
-            if rec["dfile"].get("file_size_in_bytes", 0) < small_file_bytes:
+            if size(r) < small_file_bytes:
                 return True
-            if rewrite_deletes and (norm(rec["path"]) in pinned
-                                    or rec["seq"] < max_eq_seq):
+            if rewrite_deletes and (norm(r["path"]) in pinned
+                                    or r["seq"] < max_eq_seq):
                 return True
             return False
 
@@ -2718,44 +2620,26 @@ class IcebergTable:
             norm(r["path"]) in pinned or r["seq"] < max_eq_seq
             for r in cands)
         if not cands or (len(cands) < 2 and not carries_deletes):
-            return {"rewritten_data_files": 0, "added_data_files": 0,
-                    "removed_delete_files": 0, "rewritten_bytes": 0}
+            return nothing
         # -- one distributed read of the candidates, deletes applied --------
-        current = self._current_schema(md)
-        applicable_eq = [r for r in eq_recs
-                         if any(c["seq"] < r["seq"] for c in cands)]
-        applicable_pos = [r for r in pos_recs
-                          if pos_targets[r["path"]] & cand_norm]
-        need_meta = bool(applicable_eq) or bool(applicable_pos)
-        df = self._scan(spark, cands, current, with_meta=need_meta)
-        if applicable_eq:
-            df = self._apply_equality_deletes(spark, df, cands,
-                                              applicable_eq, current)
-        if applicable_pos:
-            pos = (spark.read.parquet(
-                       *[self._local(r["path"]) for r in applicable_pos])
-                   .select(F.col("file_path").alias("__ice_fp"),
-                           F.col("pos").alias("__ice_pos"))
-                   .dropDuplicates(["__ice_fp", "__ice_pos"]))
-            df = df.join(pos, ["__ice_fp", "__ice_pos"], "left_anti")
-        if need_meta:
-            df = df.drop("__ice_fp", "__ice_pos")
-        cand_bytes = sum(r["dfile"].get("file_size_in_bytes", 0)
-                         for r in cands)
+        df = self._read_entries(
+            spark, md, cands,
+            [r["path"] for r in pos_recs
+             if pos_targets[r["path"]] & cand_norm],
+            [r for r in eq_recs if any(c["seq"] < r["seq"] for c in cands)])
+        cand_bytes = sum(size(r) for r in cands)
         n_out = (int(output_files) if output_files
                  else max(1, -(-cand_bytes // target_file_bytes)))
         # coalesce, not repartition: narrow (no shuffle) when the table is
         # unsorted; under a write order _write_data_files range-shuffles to
         # the incoming partition count anyway, so sizing still holds
-        ts = _now_ms(spark)
         if cluster_by:
             df = zorder_value(df, list(cluster_by), bits=zorder_bits)
             df = (df.repartitionByRange(n_out, F.col("__ice_zval"))
                   .sortWithinPartitions("__ice_zval").drop("__ice_zval"))
-            new_files = self._write_data_files(df, md, table_order=False)
+            files = self._write_data_files(df, md, table_order=False)
         else:
-            new_files = self._write_data_files(df.coalesce(n_out), md)
-        seq = md.get("last-sequence-number", 0) + 1
+            files = self._write_data_files(df.coalesce(n_out), md)
         # -- which delete files are now fully applied? ----------------------
         survivor_min_seq = min(
             (r["seq"] for r in data_recs if r["path"] not in cand_paths),
@@ -2768,59 +2652,38 @@ class IcebergTable:
             if survivor_min_seq is None or survivor_min_seq >= r["seq"]:
                 dead_deletes.add(r["path"])  # nothing older remains
         # -- commit: added manifest + rewritten survivors --------------------
-        snap_new = self._new_snapshot(
-            md, "replace", len(new_files),
-            sum(f["record_count"] for f in new_files), ts)
-        snap_id = snap_new["snapshot-id"]
-        new_manifests = []
-        if new_files:
-            new_manifests.append(self._write_manifest(
-                md, [{"status": 1, "data_file": f} for f in new_files],
-                snap_id, seq, content=0))
-        removed_delete_files = 0
-        for rec in manifests:
-            m = rec["m"]
-            drop_here = []
-            for e in rec["entries"]:
-                if e.get("status") == 2:
-                    continue
-                p = e["data_file"]["file_path"]
-                if p in cand_paths or p in dead_deletes:
-                    drop_here.append(p)
-            if not drop_here:
+        gone = cand_paths | dead_deletes
+        snap_new = self._snapshot(md, "replace")
+        snap_new["summary"]["deleted-data-files"] = str(len(cands))
+        new_manifests = ([self._write_manifest(md, snap_new, _added(files), 0)]
+                         if files else [])
+        by_manifest: Dict[str, List[dict]] = {}
+        for r in recs:
+            by_manifest.setdefault(r["m"]["manifest_path"], []).append(r)
+        for m in mlist:
+            live = by_manifest.get(m["manifest_path"], [])
+            if not any(r["path"] in gone for r in live):
                 new_manifests.append(m)
                 continue
-            removed_delete_files += sum(1 for p in drop_here
-                                        if p in dead_deletes)
-            survivors = []
-            for e in rec["entries"]:
-                if e.get("status") == 2:
-                    continue
-                p = e["data_file"]["file_path"]
-                if p in cand_paths or p in dead_deletes:
-                    continue
-                eseq = (e.get("sequence_number")
-                        or m.get("sequence_number", 0))
-                survivors.append({
-                    "status": 0,  # existing
-                    "data_file": e["data_file"],
-                    "sequence_number": eseq,
-                    "file_sequence_number": (e.get("file_sequence_number")
-                                             or eseq),
-                })
+            # survivors keep status=existing, their data sequence numbers
+            # and the manifest's write-time schema and partition spec
+            survivors = [{"status": 0, "data_file": r["entry"]["data_file"],
+                          "sequence_number": r["seq"],
+                          "file_sequence_number": (
+                              r["entry"].get("file_sequence_number")
+                              or r["seq"])}
+                         for r in live if r["path"] not in gone]
             if survivors:
                 new_manifests.append(self._write_manifest(
-                    md, survivors, snap_id,
-                    m.get("sequence_number", seq),
-                    content=m.get("content", 0),
-                    embed_schema=rec["emb"],
+                    md, snap_new, survivors, m.get("content", 0),
+                    seq=m.get("sequence_number", snap_new["sequence-number"]),
+                    embed_schema=live[0]["schema"],
                     spec_id=m.get("partition_spec_id", 0)))
-        self._finalize_manifest_list(snap_new, new_manifests)
-        snap_new["summary"]["deleted-data-files"] = str(len(cands))
-        self._apply_commit(md, snap_new, ts)
+        self._commit(md, v, snap=snap_new, manifests=new_manifests)
         return {"rewritten_data_files": len(cands),
-                "added_data_files": len(new_files),
-                "removed_delete_files": removed_delete_files,
+                "added_data_files": len(files),
+                "removed_delete_files": sum(1 for r in recs
+                                            if r["path"] in dead_deletes),
                 "rewritten_bytes": cand_bytes}
 
     def verify_rewrite(
@@ -3011,14 +2874,15 @@ class IcebergTable:
         surviving files, so the result is exact regardless of how much the
         stats could prune. At 10^12 rows this is the difference between
         scanning a time/range slice and scanning the table."""
-        data, pos_deletes, eq_entries = self._plan_files(
-            snapshot_id, as_of_ms, partition_filter, column_filter=where,
-            ref=ref)
-        data = self._bloom_prune(spark, data, where)
-        return self._read_entries(spark, data, pos_deletes, eq_entries, where)
+        md = self.metadata()
+        data, pos_deletes, eq_entries = self._plan(
+            md, snapshot_id, as_of_ms, partition_filter, where, ref)
+        data = self._bloom_prune(spark, md, data, where)
+        return self._read_entries(spark, md, data, pos_deletes, eq_entries,
+                                  where)
 
     def _bloom_prune(
-        self, spark: SparkSession, data: List[dict],
+        self, spark: SparkSession, md: dict, data: List[dict],
         where: Optional[Sequence[Tuple[str, str, Any]]],
     ) -> List[dict]:
         """Drop planned files whose bloom sidecar provably misses every
@@ -3028,11 +2892,11 @@ class IcebergTable:
         Conjunct semantics: each predicate may only shrink the file set."""
         if not where or not data:
             return data
-        bcols = self._bloom_cols()
+        bcols = self._bloom_cols(md)
         if not bcols:
             return data
         from .bloomfilter import prune_files
-        schema = self.spark_schema()
+        schema = iceberg_to_spark_schema(self._current_schema(md))
         for col, op, val in where:
             if col not in bcols or op not in ("=", "in") or not data:
                 continue
@@ -3048,16 +2912,17 @@ class IcebergTable:
     def _read_entries(
         self,
         spark: SparkSession,
+        md: dict,
         data: List[dict],
         pos_deletes: List[str],
         eq_entries: List[dict],
         where: Optional[Sequence[Tuple[str, str, Any]]] = None,
     ) -> DataFrame:
-        """Planned entries -> DataFrame (scan + deletes + exact filter);
-        shared tail of `read` and the bloom-pruned `lookup`."""
+        """Planned entries of ``md`` -> DataFrame (scan + deletes + exact
+        filter); shared tail of `read` and `compact`."""
+        current = self._current_schema(md)
         if not data:
-            return spark.createDataFrame([], self.spark_schema())
-        current = self._current_schema(self.metadata())
+            return spark.createDataFrame([], iceberg_to_spark_schema(current))
         need_meta = bool(pos_deletes) or bool(eq_entries)
         df = self._scan(spark, data, current, with_meta=need_meta)
         if where:
@@ -3075,7 +2940,6 @@ class IcebergTable:
             df = df.drop("__ice_fp", "__ice_pos")
         return df
 
-
     def lookup_plan(
         self, spark: SparkSession, column: str, values: Sequence[Any],
         **plan_kw,
@@ -3089,9 +2953,10 @@ class IcebergTable:
         Surviving ⊆ candidates always; a file without a bloom row (written
         before `bloom.columns` was set) always survives."""
         where = [(column, "in", list(values))]
-        data, pos_deletes, eq_entries = self._plan_files(
-            column_filter=where, **plan_kw)
-        survivors = self._bloom_prune(spark, data, where)
+        md = self.metadata()
+        data, pos_deletes, eq_entries = self._plan(
+            md, column_filter=where, **plan_kw)
+        survivors = self._bloom_prune(spark, md, data, where)
         return survivors, data, pos_deletes, eq_entries
 
     def lookup(self, spark: SparkSession, column: str,
@@ -3102,17 +2967,16 @@ class IcebergTable:
         the real ``IN`` predicate, so bloom false positives cost IO only.
         At 10^12 rows with `bloom.columns` on the key this is the
         difference between a thousand-file read and a table scan."""
-        survivors, _cand, pos_deletes, eq_entries = self.lookup_plan(
-            spark, column, values, **plan_kw)
-        return self._read_entries(spark, survivors, pos_deletes, eq_entries,
-                                  where=[(column, "in", list(values))])
+        return self.read(spark, where=[(column, "in", list(values))],
+                         **plan_kw)
 
     def build_blooms(self, spark: SparkSession) -> int:
         """Backfill bloom sidecars for current-snapshot data files that
         lack them (files written before `bloom.columns` was set, or after
         the property gained a column). Returns the number of files
         indexed. New writes index themselves in `_write_data_files`."""
-        bcols = self._bloom_cols()
+        md = self.metadata()
+        bcols = self._bloom_cols(md)
         if not bcols:
             return 0
         blooms_dir = os.path.join(self.meta_dir, "blooms")
@@ -3126,7 +2990,7 @@ class IcebergTable:
             have = {(r.file_path, r.column) for r in
                     spark.read.parquet(*dirs)
                     .select("file_path", "column").distinct().collect()}
-        todo = [e["path"] for e in self._plan_files()[0]
+        todo = [e["path"] for e in self._plan(md)[0]
                 if any((e["path"], c) not in have for c in bcols)]
         if not todo:
             return 0

@@ -36,7 +36,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .compile import declared_constraints
+from .compile import NO_REGEX, declared_constraints
 from .spec import DataContractSpecification
 
 
@@ -70,7 +70,9 @@ def _field_fix(fname: str, field_, strategy: str) -> Optional[Column]:
     c = F.col(fname)
     nulling, coerced = [], []
     for con, v in declared_constraints(field_):
-        if con.attr == "required":
+        # a format with no regex has nothing to test: the validator
+        # reports it as error, repair leaves the value alone
+        if con.attr == "required" or v is NO_REGEX:
             continue
         fix = _COERCE.get(con.attr) if strategy == "coerce" else None
         if fix is None:

@@ -73,9 +73,9 @@ def _sql_decimal(f, sub):
 
 
 def _avro_decimal(f, sub):
-    out: Dict[str, Any] = {"type": "bytes", "logicalType": "decimal"}
-    if f.precision is not None:
-        out["precision"] = f.precision
+    # the Avro spec requires precision on the decimal logical type
+    out: Dict[str, Any] = {"type": "bytes", "logicalType": "decimal",
+                           "precision": _p(f)}
     if f.scale is not None:
         out["scale"] = f.scale
     return out
@@ -180,11 +180,11 @@ _TABLE: Dict[Optional[str], tuple] = {
                       "STRING", _sa_string("Text"), "str", "string", "string"),
     "varchar":       (T.StringType(), _JSTR, "VARCHAR", "string", "string", "string",
                       "STRING", _sa_string("VARCHAR"), "str", "string", "string"),
-    "number":        (_spark_decimal, _JNUM, _sql_decimal, "bytes", "string", "number",
+    "number":        (_spark_decimal, _JNUM, _sql_decimal, _avro_decimal, "string", "number",
                       "NUMERIC", _sa_numeric, "float", "float64", _idl_decimal),
     "decimal":       (_spark_decimal, _JNUM, _sql_decimal, _avro_decimal, "string", "number",
                       "NUMERIC", _sa_numeric, "float", "float64", _idl_decimal),
-    "numeric":       (_spark_decimal, _JNUM, _sql_decimal, "bytes", "string", "number",
+    "numeric":       (_spark_decimal, _JNUM, _sql_decimal, _avro_decimal, "string", "number",
                       "NUMERIC", _sa_numeric, "float", "float64", _idl_decimal),
     "int":           (T.IntegerType(), _JINT, "INTEGER", "int", "int32", "integer",
                       "INTEGER", "Integer", "int", "int", "int"),

@@ -72,6 +72,37 @@ def test_keys_aliases_and_element_names_are_stable():
     assert by_key["m__x__field_not_equal_max"].extra_aggs == {}
 
 
+def test_unknown_format_fails_closed(spark):
+    """A format without a regex errors its own check, naming the format;
+    it never compiles to no check, which would pass whatever the field
+    holds. The rest of the run still evaluates."""
+    from dcspark import ValidationConfig, validate
+    from dcspark.repair import repair
+    from dcspark.run_model import ResultEnum
+
+    spec = DataContractSpecification.from_string("""
+id: formats
+models:
+  m:
+    fields:
+      d: {type: string, format: date, required: true}
+      ip: {type: string, format: IPv4}
+      xs: {type: array, items: {type: string, format: date}}
+""")
+    df = spark.createDataFrame([("not a date", "999.1.1.1", ["x"])],
+                               "d string, ip string, xs array<string>")
+    res = validate(spark, spec, {"m": df}, ValidationConfig())
+    by_key = {c.key: c for c in res.run.checks}
+    for key, fmt in (("m__d__field_format_date", "date"),
+                     ("m__ip__field_format_ipv4", "ipv4"),
+                     ("m__xs[items]__items_format_date", "date")):
+        assert by_key[key].result == ResultEnum.error, key
+        assert f"format '{fmt}'" in by_key[key].reason
+    assert by_key["m__d__field_required"].result == ResultEnum.passed
+    # repair has no predicate for such a format, so it leaves the value
+    assert repair(df, spec, "m").collect() == df.collect()
+
+
 # ---------------------------------------------------------------------------
 # source guard: constraint predicates live in the table only
 # ---------------------------------------------------------------------------

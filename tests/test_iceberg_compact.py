@@ -63,11 +63,11 @@ def test_positional_deletes_materialized(spark, small_df, tmp_path):
     t = IcebergTable.create(str(tmp_path / "t"), small_df(0, 1).schema)
     t.append(small_df(0, 200))
     t.delete_where(spark, "k % 10 = 0")
-    _d, pos, _e = t._plan_files()
+    _d, pos, _e = t._plan(t.metadata())
     assert pos
     out = t.compact(spark, target_file_bytes=1 << 30)
     assert out["removed_delete_files"] == len(pos)
-    d2, pos2, eq2 = t._plan_files()
+    d2, pos2, eq2 = t._plan(t.metadata())
     assert pos2 == [] and eq2 == []
     assert _collect_ids(t, spark) == [k for k in range(200) if k % 10]
 
@@ -77,10 +77,10 @@ def test_equality_deletes_materialized(spark, small_df, tmp_path):
     t.append(small_df(0, 200))
     upd = small_df(0, 50).withColumn("val", F.lit("updated"))
     t.upsert(upd, ["k"])
-    _d, _p, eq = t._plan_files()
+    _d, _p, eq = t._plan(t.metadata())
     assert eq
     t.compact(spark, target_file_bytes=1 << 30)
-    _d2, _p2, eq2 = t._plan_files()
+    _d2, _p2, eq2 = t._plan(t.metadata())
     assert eq2 == []
     rows = {r["k"]: r["val"] for r in t.read(spark).collect()}
     assert len(rows) == 200
@@ -126,13 +126,13 @@ def test_partial_compact_keeps_deletes_for_survivors(spark, small_df,
     t.delete_equality(dels)
     t.compact(spark, target_file_bytes=1 << 30,
               partition_filter={"shard": 0})
-    _d, _p, eq = t._plan_files()
+    _d, _p, eq = t._plan(t.metadata())
     assert eq, "delete file retired while shard 1/2 files still need it"
     want = [k for k in range(300) if k % 7]
     assert _collect_ids(t, spark) == want
     # a second, full compact can now retire it
     t.compact(spark, target_file_bytes=1 << 30)
-    _d2, _p2, eq2 = t._plan_files()
+    _d2, _p2, eq2 = t._plan(t.metadata())
     assert eq2 == []
     assert _collect_ids(t, spark) == want
 

@@ -248,7 +248,7 @@ def test_eq_delete_file_is_spec_shaped(spark, clips_df, tmp_path):
     mls = t._read_manifest_list(snap["manifest-list"])
     del_manifests = [m for m in mls if m["content"] == 1]
     assert len(del_manifests) == 1
-    entries = t._read_manifest(del_manifests[0]["manifest_path"])
+    entries = t._read_manifest_full(del_manifests[0]["manifest_path"])[1]
     dfile = entries[0]["data_file"]
     assert dfile["content"] == 2
     assert dfile["equality_ids"] == [1]  # clip_id is field-id 1

@@ -52,7 +52,7 @@ def test_append_to_date_partitioned_table(spark, tmp_path):
     snap = md["snapshots"][-1]
     days = set()
     for m in t._read_manifest_list(snap["manifest-list"]):
-        for e in t._read_manifest(m["manifest_path"]):
+        for e in t._read_manifest_full(m["manifest_path"])[1]:
             days.add(e["data_file"]["partition"]["d"])
     assert days == {(datetime.date(2024, 1, 1) - datetime.date(1970, 1, 1)).days,
                     (datetime.date(2024, 1, 2) - datetime.date(1970, 1, 1)).days}

@@ -70,7 +70,7 @@ def test_sorted_files_carry_sort_order_id(spark, events_df, tmp_path):
     t = IcebergTable.create(str(tmp_path / "t"), events_df.schema,
                             sort_by=["event_id"])
     t.append(events_df)
-    entries, _, _ = t._plan_files()
+    entries, _, _ = t._plan(t.metadata())
     assert entries
     # re-read the manifest record to check the serialized field, not the
     # in-memory dict

@@ -215,7 +215,7 @@ def test_e2e_stats_written_and_roundtrip(stats_table):
     snap = t.metadata()["snapshots"][-1]
     entries = []
     for m in t._read_manifest_list(snap["manifest-list"]):
-        entries.extend(t._read_manifest(m["manifest_path"]))
+        entries.extend(t._read_manifest_full(m["manifest_path"])[1])
     assert len(entries) == 8
     fids = t._field_id_types(t.metadata())
     k_fid = fids["k"][0]
@@ -304,7 +304,7 @@ def test_e2e_legacy_manifest_without_stats_still_plans(spark, tmp_path):
     fids = t._field_id_types(t.metadata())
     snap = t.metadata()["snapshots"][-1]
     for m in t._read_manifest_list(snap["manifest-list"]):
-        for e in t._read_manifest(m["manifest_path"]):
+        for e in t._read_manifest_full(m["manifest_path"])[1]:
             d = dict(e["data_file"])
             for key in ("value_counts", "null_value_counts",
                         "lower_bounds", "upper_bounds"):

@@ -220,8 +220,7 @@ def _spec(model):
 FORMATS = {
     "avro": (lambda m: json.dumps(to_avro_schema("m", m)),
              lambda s: _model(import_from_avro(json.loads(s))),
-             {"number", "numeric",  # no logical type: plain bytes
-              "map-key"}),          # Avro map keys are strings
+             {"map-key"}),  # Avro map keys are strings
     "jsonschema": (lambda m: json.dumps(to_jsonschema(m)),
                    lambda s: _model(import_from_jsonschema(json.loads(s))),
                    {"int", "integer",  # integer reads back as long
