@@ -26,10 +26,13 @@ printed plan is the executed one. Per model (scale rationale in SURVEY.md §4):
    genuinely need their own shuffle or decode: uniqueness (groupBy-key
    duplicate count — map-side partial aggregation bounds shuffle volume by
    the number of DISTINCT keys per partition, AQE handles skew), referential
-   integrity (anti-join; broadcast hint when the parent is declared small),
-   transcript equality, group thresholds, fingerprints, image and video
+   integrity (anti-join against the parent's distinct keys, always
+   broadcast; a Bloom probe under ``reference_mode="approx"``), transcript
+   equality, group thresholds, fingerprints, image and video
    decode, and scalar SQL quality queries. They run concurrently and record
-   afterwards in table order.
+   afterwards in table order; each that yields a frame of violating rows
+   turns it into its metric, per-partition metrics and capped sample in
+   one place (``Validator._count_and_sample``).
 4. After the model: metric-history checks judge this run's metrics.
 5. A violations pass runs ONLY for checks that failed, evaluating all failed
    predicates in a single scan (array-of-structs -> filter -> explode) with a
@@ -133,12 +136,14 @@ class ValidationConfig:
     unique_mode: str = "exact"
     unique_hll_lgk: int = 14  # 2^14 buckets: rsd ~0.8%, ~16 KB sketch/partition
     # referential-integrity strategy: "exact" anti-joins child vs parent keys
-    # (broadcast when the parent fits, else sort-merge — the child table
-    # shuffles); "approx" folds the parent keys into ONE Bloom bitset and
+    # and always broadcasts the parent's distinct keys (the child never
+    # shuffles, but every parent key must fit the driver and each
+    # executor); "approx" folds the parent keys into ONE Bloom bitset and
     # probes child membership MAP-ONLY (zero child-side shuffle at 10^12
-    # rows). One-sided semantics, disclosed in the run log + diagnostics:
-    # every reported orphan is real (no bloom false negatives), a pass may
-    # miss each true orphan with probability ~fpp (~0.8% at 10 bits/key).
+    # rows) — the mode for a parent too large to broadcast. One-sided
+    # semantics, disclosed in the run log + diagnostics: every reported
+    # orphan is real (no bloom false negatives), a pass may miss each true
+    # orphan with probability ~fpp (~0.8% at 10 bits/key).
     # Falls back to exact when the bitset would exceed the broadcast budget.
     reference_mode: str = "exact"
     reference_bloom_max_bytes: int = 256 << 20  # 256 MB ~ 1.7e8 parent keys
@@ -474,7 +479,7 @@ FAMILIES: Tuple[Family, ...] = (
            needs_columns=True,
            to_scan=lambda cs, plan: plan_approx_unique(cs, plan.unique_mode)),
     Family(("reference",), PER_CHECK, "_reference_compute", "reference",
-           {"": ("anti-join vs the parent table (broadcast when it fits)", None),
+           {"": ("anti-join vs the parent's distinct keys (always broadcast)", None),
             "approx": ("parent Bloom bitset + MAP-ONLY child membership probe "
                        "(--reference-mode approx; falls back to the exact "
                        "anti-join over the bitset budget)", None)},
@@ -999,13 +1004,22 @@ class Validator:
 
     def _capped(self, rows: DataFrame, keys: List[str]) -> DataFrame:
         """The first ``violation_cap`` of ``rows`` by clip_id in each group
-        of ``keys`` (overall when there are none): per-task caps in the
-        compact frame can sum past the cap."""
+        of ``keys`` (overall when there are none).
+
+        Grouped, the cap runs in two phases: a window over the keys alone
+        would send every row of a hot group (a failing rule on a 10^12-row
+        table) to one reducer. Phase 1 keeps each input partition's first
+        ``cap`` per group — the global first ``cap`` are among them — and
+        phase 2 ranks those <= cap x partitions survivors per group."""
         cap = self.config.violation_cap
         if not keys:
             return rows.orderBy("clip_id").limit(cap)
-        w = Window.partitionBy(*keys).orderBy("clip_id")
-        return rows.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= cap)
+        rows = rows.withColumn("__pid", F.spark_partition_id())
+        for phase in ([*keys, "__pid"], keys):
+            w = Window.partitionBy(*phase).orderBy("clip_id")
+            rows = rows.withColumn("__rn", F.row_number().over(w)).filter(
+                F.col("__rn") <= cap).drop("__rn")
+        return rows.drop("__pid")
 
     def _audio_compact_collect(
         self, compact: DataFrame, keyed: bool,
@@ -1559,28 +1573,7 @@ class Validator:
             base.select("partition_id", F.explode("__v").alias("v"), "clip_id"),
             F.col("v.check_key"), F.col("clip_id"), F.col("v.observed"),
             F.col("v.expected"), partition_id=F.col("partition_id"))
-        # Two-phase cap: a naive window over check_key alone would shuffle
-        # EVERY violating row to one reducer per check (billions of rows on a
-        # 10^12-row table with a hot failing rule). Phase 1 caps per
-        # (check_key, input-partition) — keys are spread across reducers, and
-        # the global top-cap by clip_id is a subset of the local top-caps, so
-        # results are identical. Phase 2 ranks the <= cap * num_partitions
-        # survivors per check, which is small by construction.
-        cap = self.config.violation_cap
-        w_local = Window.partitionBy("check_key", "__pid").orderBy("clip_id")
-        local = (
-            exploded.withColumn("__pid", F.spark_partition_id())
-            .withColumn("__rn", F.row_number().over(w_local))
-            .filter(F.col("__rn") <= cap)
-            .drop("__rn", "__pid")
-        )
-        w = Window.partitionBy("check_key").orderBy("clip_id")
-        capped = (
-            local.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= cap)
-            .drop("__rn")
-        )
-        self._add_violations(capped.collect())
+        self._add_violations(self._capped(exploded, ["check_key"]).collect())
 
     def _violation_frame(self, frame: DataFrame, check_key: Any, clip_id: Any,
                          observed: Any, expected: Any,
@@ -1600,31 +1593,52 @@ class Validator:
         )
 
     def _count_and_sample(self, frame: DataFrame, chk: CompiledCheck,
-                          order: Tuple[str, ...] = ("id_a",),
+                          order: Tuple[Any, ...] = ("id_a",),
                           clip_id: Optional[Column] = None,
-                          observed: Optional[Column] = None) -> dict:
-        """Count of the violating rows in ``frame`` and their capped sample
-        in ``order``, from one persisted evaluation (the sample never
-        recomputes the frame); the internal caches of the operator that
-        built ``frame`` are released with it. The defaults fit a
-        violating-payload frame (id_a, __observed) whose NULL ids report as
-        <null-id>."""
+                          observed: Optional[Column] = None,
+                          expected: Any = None, *,
+                          weight: Optional[str] = None,
+                          part: Optional[str] = None,
+                          sums: Optional[Dict[str, Column]] = None) -> dict:
+        """The result of a per-check job from its violating ``frame``.
+
+        The metric counts violating rows; with ``weight`` each frame row
+        stands for ``weight`` of them and repeats min(weight, cap) times in
+        the sample. ``part`` names the per-partition column of
+        ``part_metrics``; ``sums`` are totals reported as diagnostics. One
+        persisted evaluation serves one aggregate action and, only when the
+        metric is above 0, one sample of the first ``violation_cap`` rows in
+        ``order``; then the frame is unpersisted and what the operator that
+        built it holds (cached frames, a broadcast) is released. The
+        defaults fit a violating-payload frame (id_a, __observed) whose NULL
+        ids report as <null-id>."""
         from .pipeline_ckpt import release_caches
 
         if clip_id is None:
             clip_id = F.coalesce(F.col("id_a"), F.lit("<null-id>"))
             observed = F.col("__observed")
-
+        cap = self.config.violation_cap
+        n = F.sum(weight) if weight else F.count(F.lit(1))
         frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            metric = float(frame.count())
-            vio_rows = None
-            if metric > 0:
-                vio = self._violation_frame(
-                    frame.orderBy(*order).limit(self.config.violation_cap),
-                    chk.key, clip_id, observed, chk.expected)
-                vio_rows = vio.collect()
-            return {"metric": metric, "vio_rows": vio_rows}
+            rows = frame.groupBy(*([part] if part else [])).agg(
+                n.alias("__n"), *[c.alias(k) for k, c in (sums or {}).items()]
+            ).collect()
+            out: Dict[str, Any] = {"metric": float(sum(r["__n"] or 0 for r in rows)),
+                                   "vio_rows": None}
+            if part:
+                out["part_metrics"] = {r[part]: float(r["__n"]) for r in rows}
+            if sums:
+                out["diagnostics"] = {k: sum(r[k] or 0 for r in rows) for k in sums}
+            if out["metric"] > 0:
+                sample = frame if weight is None else frame.withColumn(
+                    "__rep", F.explode(F.array_repeat(
+                        F.lit(1), F.least(F.col(weight), F.lit(cap)).cast("int"))))
+                out["vio_rows"] = self._violation_frame(
+                    sample.orderBy(*order).limit(cap), chk.key, clip_id, observed,
+                    chk.expected if expected is None else expected,
+                    F.col(part) if part else None).collect()
+            return out
         finally:
             frame.unpersist()
             release_caches(frame)
@@ -1730,30 +1744,13 @@ class Validator:
                 "__cnt",
             )
         )
-        # dup holds only keys with count > 1 — tiny relative to the input.
-        # Persist it across the stats action and the violation sample so a
-        # FAILING unique check does not re-run the key shuffle (the single
-        # most expensive job at 10^12 rows) a second time just to collect
-        # the capped examples.
-        dup = dup.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            stats = dup.agg(
-                F.count(F.lit(1)).alias("dup_values"),
-                F.coalesce(F.sum(F.col("__cnt") - 1), F.lit(0)).alias("dup_rows"),
-            ).first()
-            metric = float(stats["dup_values"] or 0)
-            vio_rows = None
-            if metric > 0:
-                vio = self._violation_frame(
-                    dup.orderBy(F.col("__cnt").desc(), F.col("__key")).limit(
-                        self.config.violation_cap),
-                    chk.key, F.col("__key").cast("string"),
-                    F.concat(F.lit("count="), F.col("__cnt").cast("string")), "unique")
-                vio_rows = vio.collect()
-        finally:
-            dup.unpersist()
-        return {"metric": metric, "vio_rows": vio_rows, "diagnostics": {
-            "dup_values": stats["dup_values"], "dup_rows": stats["dup_rows"]}}
+        return self._count_and_sample(
+            # only keys with count > 1: tiny relative to the input
+            dup, chk, (F.col("__cnt").desc(), F.col("__key")),
+            F.col("__key").cast("string"),
+            F.concat(F.lit("count="), F.col("__cnt").cast("string")),
+            sums={"dup_values": F.count(F.lit(1)),
+                  "dup_rows": F.sum(F.col("__cnt") - 1)})
 
     # -- per-group aggregate thresholds (group quality checks) ----------------
 
@@ -2022,7 +2019,8 @@ class Validator:
         parent = self.tables.get(parent_name)
         if parent is None:
             return {"error": f"parent table {parent_name} not provided"}
-        if parent_field not in parent.columns:
+        resolved = resolve_schema_field(parent.schema, parent_field)
+        if resolved is None:
             return {"error": f"parent column {parent_field} missing in {parent_name}"}
         child_col = chk.field
         flt = chk.params.get("filter")
@@ -2031,15 +2029,13 @@ class Validator:
             # resolve (filter applied before the anti-join, so pushdown
             # shrinks the probe side)
             df = df.filter(F.expr(flt))
-        part_col = self._partition_col(df)
-        if part_col == child_col:
-            part_col = None
+        # the partition key rides along for per-partition orphan attribution
+        part = PART_KEY if self._partition_col(df) not in (None, child_col) else None
         diagnostics = None
         orphans = None
         if self.config.reference_mode == "approx":
-            built = self._reference_bloom_orphans(df, chk, parent,
-                                                  parent_field, child_col,
-                                                  part_col)
+            built = self._reference_bloom_orphans(df, chk, parent, parent_field,
+                                                  resolved.dataType, child_col, part)
             if built is not None:
                 orphans, diagnostics = built
             # else: bloom over budget — fall through to the exact anti-join
@@ -2047,89 +2043,38 @@ class Validator:
             keys = F.broadcast(parent.select(
                 F.col(parent_field).alias("__parent_key")).distinct())
             # alias so dotted (nested-struct) paths keep a stable key column
-            # name; the partition column rides along for per-partition
-            # orphan attribution
-            sel = [F.col(child_col).alias("__child")]
-            if part_col:
-                sel.append(F.col(part_col))
-            orphans = df.select(*sel).filter(
+            # name
+            orphans = df.select(F.col(child_col).alias("__child"),
+                                *([part] if part else [])).filter(
                 F.col("__child").isNotNull()
             ).join(keys, on=F.col("__child") == F.col("__parent_key"),
                    how="left_anti")
-        # Reduce to (orphan value[, partition], row count) before any action:
-        # the grouped frame is bounded by DISTINCT orphan values (map-side
-        # partial agg), so persisting it is cheap even when billions of rows
-        # are orphaned — and the exact row-level metric, the per-partition
-        # rollup, and the capped per-row example sample all derive from it
-        # without re-running the anti-join (the full child-table shuffle) a
-        # second time.
-        gcols = ["__child"] + ([part_col] if part_col else [])
-        grouped = orphans.groupBy(*gcols).agg(F.count(F.lit(1)).alias("__cnt"))
-        if part_col:
-            # keyed after grouping by the column itself, which orders the
-            # violation sample
-            grouped = grouped.withColumn(PART_KEY, drift_mod.partition_key(part_col))
-        grouped = grouped.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            metric = float(
-                grouped.agg(F.coalesce(F.sum("__cnt"), F.lit(0)).alias("n")).first()["n"]
-            )
-            part_metrics = None
-            if part_col:
-                part_metrics = {
-                    r[PART_KEY]: float(r["n"])
-                    for r in grouped.groupBy(PART_KEY)
-                    .agg(F.sum("__cnt").alias("n")).collect()
-                }
-            vio_rows = None
-            if metric > 0:
-                cap = self.config.violation_cap
-                # per-row violation semantics preserved: a value orphaned k
-                # times contributes min(k, cap) example rows, capped overall
-                # in (partition, value) order so the sample does not depend
-                # on shuffle partitioning
-                examples = grouped.select(
-                    (F.col(PART_KEY) if part_col
-                     else F.lit(None).cast("string")).alias("__part"),
-                    F.explode(
-                        F.array_repeat(
-                            F.col("__child"),
-                            F.least(F.col("__cnt"), F.lit(cap)).cast("int"),
-                        )
-                    ).alias("__child"),
-                ).orderBy("__part", "__child").limit(cap)
-                child = F.col("__child").cast("string")
-                vio = self._violation_frame(examples, chk.key, child, child,
-                                            chk.expected, F.col("__part"))
-                vio_rows = vio.collect()
-        finally:
-            grouped.unpersist()
-            # approx path: the bitset broadcast is only needed while the
-            # probe can still (re-)run — after grouped is unpersisted nothing
-            # derives from it, and Spark never GCs broadcasts on long-lived
-            # sessions (a bench loop would accumulate one per check run)
-            bc = getattr(orphans, "_dcspark_broadcast", None)
-            if bc is not None:
-                try:
-                    bc.destroy()
-                except Exception:  # noqa: BLE001 — cleanup must never mask results
-                    pass
-        out = {"metric": metric, "vio_rows": vio_rows,
-               "part_metrics": part_metrics}
+        # One row per (orphan value[, partition]) weighted by its row count:
+        # bounded by DISTINCT orphan values (map-side partial agg), however
+        # many rows are orphaned. The approx probe's Bloom broadcast is
+        # released with it.
+        grouped = orphans.groupBy("__child", *([part] if part else [])).agg(
+            F.count(F.lit(1)).alias("__cnt"))
+        grouped._dcspark_broadcast = getattr(orphans, "_dcspark_broadcast", None)
+        child = F.col("__child").cast("string")
+        out = self._count_and_sample(
+            grouped, chk, ([part] if part else []) + ["__child"], child, child,
+            weight="__cnt", part=part)
         if diagnostics:
             out["diagnostics"] = diagnostics
         return out
 
     def _reference_bloom_orphans(self, df: DataFrame, chk: CompiledCheck,
                                  parent: DataFrame, parent_field: str,
-                                 child_col: str,
-                                 part_col: Optional[str] = None):
+                                 parent_type: Any, child_col: str,
+                                 part: Optional[str] = None):
         """Approx referential path (``reference_mode="approx"``): parent keys
         fold into ONE Bloom bitset; child rows whose key is provably absent
         are the orphans — the membership probe is MAP-ONLY, so the
-        10^12-row child table never shuffles (vs the exact path's anti-join,
-        whose sort-merge fallback shuffles every child row when the parent
-        outgrows broadcast).
+        10^12-row child table never shuffles and the parent's keys never
+        reach the driver (the exact path broadcasts all of them). This is
+        the path for a parent too large to broadcast. ``parent_type`` is
+        the parent key's type; ``part`` a column carried beside each orphan.
 
         Semantics are one-sided and disclosed: a Bloom filter has no false
         negatives, so every reported orphan is REAL (a failing check is
@@ -2169,22 +2114,18 @@ class Validator:
         # cast is null provably matches no parent key, so it flows through
         # the probe as a definite orphan (ADVICE r04) — still one child
         # scan, zero shuffle.
-        parent_type = parent.schema[parent_field].dataType
-        sel = [F.col(child_col).try_cast(parent_type).alias("__cast"),
-               F.col(child_col).alias("__orig")]
-        if part_col:
-            sel.append(F.col(part_col))
-        src = df.select(*sel).filter(F.col("__orig").isNotNull())
-        probe = bf.non_members(
-            src, "__cast", m, k, bits,
-            keep_cols=["__orig"] + ([part_col] if part_col else []),
-            null_is_orphan=True)
+        extra = [part] if part else []
+        src = df.select(F.col(child_col).try_cast(parent_type).alias("__cast"),
+                        F.col(child_col).alias("__orig"), *extra
+                        ).filter(F.col("__orig").isNotNull())
+        probe = bf.non_members(src, "__cast", m, k, bits,
+                               keep_cols=["__orig", *extra], null_is_orphan=True)
         # report the ORIGINAL value for uncastable keys (the cast is null);
         # string-typed __child is fine downstream (groupBy + cast-to-string)
         orphans = probe.select(
             F.coalesce(F.col("__child").cast("string"),
                        F.col("__orig").cast("string")).alias("__child"),
-            *([F.col(part_col)] if part_col else []))
+            *extra)
         orphans._dcspark_broadcast = probe._dcspark_broadcast
         diagnostics = {"approx": True, "bloom_bytes": m // 8,
                        "bloom_fpp": fpp, "parent_keys_est": n_b}
@@ -2198,51 +2139,26 @@ class Validator:
         if ref is None:
             return {"error": f"reference table {p['ref_model']} not provided"}
         key, child_col, ref_col = p["key"], p["child_col"], p["ref_col"]
-        if key not in df.columns or child_col not in df.columns or key not in ref.columns or ref_col not in ref.columns:
+        if any(resolve_schema_field(t.schema, c) is None
+               for t, c in ((df, key), (df, child_col), (ref, key), (ref, ref_col))):
             return {"error": "join/compare column missing"}
-        part_col = PART_KEY if (self._partition_col(df)
-                                and self.config.partition_col not in (key, child_col)) else None
+        part = PART_KEY if (self._partition_col(df)
+                            and self.config.partition_col not in (key, child_col)) else None
         # inner equi-join on the key (rows absent from the reference are the
         # referential check's concern, not equality's); null-safe inequality;
-        # the partition column rides along for per-partition attribution
-        child_sel = [F.col(key).alias("__k"), F.col(child_col).alias("__child")]
-        if part_col:
-            child_sel.append(F.col(part_col))
-        joined = df.select(*child_sel).join(
+        # the partition key rides along for per-partition attribution
+        joined = df.select(F.col(key).alias("__k"), F.col(child_col).alias("__child"),
+                           *([part] if part else [])).join(
             ref.select(F.col(key).alias("__k"), F.col(ref_col).alias("__ref")),
             on="__k", how="inner",
         )
-        # mismatching rows only — persist across the count and the capped
-        # sample so a FAILING equality check doesn't re-run the key join of
-        # two corpus-sized tables (the same single-scan-on-fail guarantee as
-        # unique/group/reference; gated in tests/test_single_scan_on_fail.py)
-        mismatch = joined.filter(
-            ~F.col("__child").eqNullSafe(F.col("__ref"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            metric = float(mismatch.count())
-            part_metrics = None
-            if part_col:
-                part_metrics = {
-                    r[part_col]: float(r["n"])
-                    for r in mismatch.groupBy(part_col)
-                    .agg(F.count(F.lit(1)).alias("n")).collect()
-                }
-            vio_rows = None
-            if metric > 0:
-                # a total order before the cap: the sample must not depend
-                # on shuffle partitioning
-                order = ["__k", "__child", "__ref"] + ([part_col] if part_col else [])
-                vio = self._violation_frame(
-                    mismatch.orderBy(*order).limit(self.config.violation_cap), chk.key,
-                    F.col("__k").cast("string"), F.col("__child").cast("string"),
-                    F.concat(F.lit("ref: "), F.col("__ref").cast("string")),
-                    F.col(part_col) if part_col else None)
-                vio_rows = vio.collect()
-        finally:
-            mismatch.unpersist()
-        return {"metric": metric, "vio_rows": vio_rows,
-                "part_metrics": part_metrics}
+        # mismatching rows only, in a total order so the sample does not
+        # depend on shuffle partitioning
+        return self._count_and_sample(
+            joined.filter(~F.col("__child").eqNullSafe(F.col("__ref"))), chk,
+            ["__k", "__child", "__ref"] + ([part] if part else []),
+            F.col("__k").cast("string"), F.col("__child").cast("string"),
+            F.concat(F.lit("ref: "), F.col("__ref").cast("string")), part=part)
 
     # -- SQL quality ----------------------------------------------------------
 

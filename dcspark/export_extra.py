@@ -43,6 +43,56 @@ def spec_to_yaml(spec: DataContractSpecification) -> str:
 # odcs v3 (round-trips with imports.import_from_odcs_v3)
 # ---------------------------------------------------------------------------
 
+def _odcs_property(name: Optional[str], f: Field) -> Dict[str, Any]:
+    """One ODCS property (an array's ``items`` has no name); an array's
+    element is its ``items``, a struct's fields its nested ``properties``."""
+    prop: Dict[str, Any] = {} if name is None else {"name": name}
+    if f.title:
+        prop["businessName"] = f.title
+    if f.type:
+        if f.type.lower() not in DATACONTRACT_TYPES:
+            raise ValueError(f"contract type {f.type!r} has no odcs type")
+        try:
+            prop["logicalType"] = target_type(f, "odcs")
+        except ValueError:
+            pass  # map and null have none; a null one fails validation
+        # the exact contract type, which the importer prefers
+        prop["physicalType"] = f.type if f.precision is None else (
+            f"{f.type}({f.precision},{f.scale or 0})")
+    if f.description:
+        prop["description"] = f.description
+    if f.required is not None:
+        prop["nullable"] = not f.required
+    if f.unique is not None:
+        prop["unique"] = f.unique
+    if f.classification:
+        prop["classification"] = f.classification
+    if f.primaryKey:
+        prop["primaryKey"] = True
+        prop["primaryKeyPosition"] = 1
+    if f.pii is not None:
+        prop["customProperties"] = [{"property": "pii", "value": f.pii}]
+    # field constraints ride logicalTypeOptions so the documented
+    # round-trip keeps them (reference odcs_v3_exporter.py:252-268)
+    lto: Dict[str, Any] = {}
+    for attr in ("minLength", "maxLength", "pattern", "minimum",
+                 "maximum", "exclusiveMinimum", "exclusiveMaximum"):
+        v = getattr(f, attr, None)
+        if v is not None:
+            lto[attr] = v
+    if lto:
+        prop["logicalTypeOptions"] = lto
+    if f.quality:
+        prop["quality"] = [
+            q.model_dump(exclude_none=True, exclude_defaults=True) for q in f.quality
+        ]
+    if f.items is not None:
+        prop["items"] = _odcs_property(None, f.items)
+    if f.fields:
+        prop["properties"] = [_odcs_property(n, c) for n, c in f.fields.items()]
+    return prop
+
+
 def to_odcs_v3(spec: DataContractSpecification) -> Dict[str, Any]:
     """Open Data Contract Standard v3 document (dict; YAML via export())."""
     info = spec.info
@@ -66,49 +116,7 @@ def to_odcs_v3(spec: DataContractSpecification) -> Dict[str, Any]:
         }
         if model.description:
             schema["description"] = model.description
-        props = []
-        for fname, f in model.fields.items():
-            prop: Dict[str, Any] = {"name": fname}
-            if f.title:
-                prop["businessName"] = f.title
-            if f.type:
-                if f.type.lower() not in DATACONTRACT_TYPES:
-                    raise ValueError(f"contract type {f.type!r} has no odcs type")
-                try:
-                    prop["logicalType"] = target_type(f, "odcs")
-                except ValueError:
-                    pass  # map and null have none; a null one fails validation
-                # the exact contract type, which the importer prefers
-                prop["physicalType"] = f.type if f.precision is None else (
-                    f"{f.type}({f.precision},{f.scale or 0})")
-            if f.description:
-                prop["description"] = f.description
-            if f.required is not None:
-                prop["nullable"] = not f.required
-            if f.unique is not None:
-                prop["unique"] = f.unique
-            if f.classification:
-                prop["classification"] = f.classification
-            if f.primaryKey:
-                prop["primaryKey"] = True
-                prop["primaryKeyPosition"] = 1
-            if f.pii is not None:
-                prop["customProperties"] = [{"property": "pii", "value": f.pii}]
-            # field constraints ride logicalTypeOptions so the documented
-            # round-trip keeps them (reference odcs_v3_exporter.py:252-268)
-            lto: Dict[str, Any] = {}
-            for attr in ("minLength", "maxLength", "pattern", "minimum",
-                         "maximum", "exclusiveMinimum", "exclusiveMaximum"):
-                v = getattr(f, attr, None)
-                if v is not None:
-                    lto[attr] = v
-            if lto:
-                prop["logicalTypeOptions"] = lto
-            if f.quality:
-                prop["quality"] = [
-                    q.model_dump(exclude_none=True, exclude_defaults=True) for q in f.quality
-                ]
-            props.append(prop)
+        props = [_odcs_property(fname, f) for fname, f in model.fields.items()]
         if props:
             schema["properties"] = props
         if model.quality:

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Dict, Optional
+from typing import Dict, List, Optional
 
 from .spec import (
     DataContractSpecification,
@@ -273,39 +273,55 @@ def import_from_odcs_v3(doc, contract_id: Optional[str] = None) -> DataContractS
         logical = str(prop.get("logicalType")).lower()
         return Field(type=logical) if logical in DATACONTRACT_TYPES else None
 
+    def field_of(prop: dict, primary_key: bool) -> Optional[Field]:
+        """The field of one ODCS property (None when its type does not
+        map); an array's ``items`` and a struct's ``properties`` become
+        its element and fields."""
+        f = field_type(prop)
+        if f is None:
+            return None  # unmappable type: skip (reference logs + skips)
+        # ODCS docs in the wild carry either `required` or `nullable`
+        # (the reference exporter writes nullable but its importer reads
+        # only required — accepting both closes our own round-trip)
+        required = prop.get("required")
+        if required is None and prop.get("nullable") is not None:
+            required = not prop["nullable"]
+        f.description = prop.get("description")
+        f.required = required
+        f.unique = prop.get("unique")
+        f.primaryKey = primary_key
+        f.classification = prop.get("classification")
+        # constraints round-trip via logicalTypeOptions (reference
+        # odcs_v3_importer reads these back; exporter writes them at
+        # odcs_v3_exporter.py:252-268)
+        lto = prop.get("logicalTypeOptions") or {}
+        for attr in ("minLength", "maxLength", "pattern", "minimum",
+                     "maximum", "exclusiveMinimum", "exclusiveMaximum"):
+            if lto.get(attr) is not None:
+                setattr(f, attr, lto[attr])
+        if prop.get("quality"):
+            f.quality = [Quality.model_validate(q) for q in prop["quality"]]
+        if prop.get("items"):
+            f.items = field_of(prop["items"], False)
+        f.fields = fields_of(prop.get("properties") or [])
+        return f
+
+    def fields_of(props: List[dict]) -> Dict[str, Field]:
+        # composite PKs live on the model, not per-field (reference
+        # odcs_v3_importer.py:259-262,286-288)
+        single_pk = sum(1 for p in props if p.get("primaryKey")) == 1
+        fields: Dict[str, Field] = {}
+        for prop in props:
+            f = field_of(prop, single_pk and bool(prop.get("primaryKey")))
+            if f is not None:
+                fields[prop["name"]] = f
+        return fields
+
     for schema in doc.get("schema") or []:
         model_name = schema.get("physicalName") or schema.get("name")
         props = schema.get("properties") or []
         pk_count = sum(1 for p in props if p.get("primaryKey"))
-        fields: Dict[str, Field] = {}
-        for prop in props:
-            # ODCS docs in the wild carry either `required` or `nullable`
-            # (the reference exporter writes nullable but its importer reads
-            # only required — accepting both closes our own round-trip)
-            required = prop.get("required")
-            if required is None and prop.get("nullable") is not None:
-                required = not prop["nullable"]
-            f = field_type(prop)
-            if f is None:
-                continue  # unmappable type: skip (reference logs + skips)
-            f.description = prop.get("description")
-            f.required = required
-            f.unique = prop.get("unique")
-            # composite PKs live on the model, not per-field (reference
-            # odcs_v3_importer.py:259-262,286-288)
-            f.primaryKey = bool(prop.get("primaryKey")) if pk_count == 1 else False
-            f.classification = prop.get("classification")
-            # constraints round-trip via logicalTypeOptions (reference
-            # odcs_v3_importer reads these back; exporter writes them at
-            # odcs_v3_exporter.py:252-268)
-            lto = prop.get("logicalTypeOptions") or {}
-            for attr in ("minLength", "maxLength", "pattern", "minimum",
-                         "maximum", "exclusiveMinimum", "exclusiveMaximum"):
-                if lto.get(attr) is not None:
-                    setattr(f, attr, lto[attr])
-            if prop.get("quality"):
-                f.quality = [Quality.model_validate(q) for q in prop["quality"]]
-            fields[prop["name"]] = f
+        fields = fields_of(props)
         model = Model(
             type="table",
             title=schema.get("name"),

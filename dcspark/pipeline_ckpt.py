@@ -172,16 +172,21 @@ def _require_signable(kwargs: Dict[str, Any]) -> Dict[str, Any]:
 
 
 def release_caches(df: DataFrame) -> None:
-    """Unpersist the internal frames an operator cached while building ``df``.
+    """Release what an operator held while building ``df``.
 
     Operators that must evaluate their (decode-expensive) input exactly once
     persist an internal hash frame and tag the returned DataFrame with the
-    handles (``_dcspark_cached``); once the result is consumed/materialized,
-    callers on a long-lived session release them here — otherwise each call
-    leaks MEMORY_AND_DISK blocks until session end (Spark's CacheManager does
-    not GC Dataset caches)."""
+    handles (``_dcspark_cached``); a Bloom probe tags it with its bitset
+    broadcast (``_dcspark_broadcast``). Once the result is
+    consumed/materialized, callers on a long-lived session release them
+    here — otherwise each call leaks MEMORY_AND_DISK blocks and broadcast
+    blocks until session end (Spark's CacheManager does not GC Dataset
+    caches, and a long-lived session never GCs broadcasts)."""
     for cached in getattr(df, "_dcspark_cached", ()):
         cached.unpersist()
+    broadcast = getattr(df, "_dcspark_broadcast", None)
+    if broadcast is not None:
+        broadcast.destroy()
 
 
 class Stages:

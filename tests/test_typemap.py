@@ -249,7 +249,7 @@ FORMATS = {
                   "date"}),  # epoch-day int32
     "odcs": (lambda m: export(_spec(m), "odcs"),
              lambda s: _model(import_from_odcs_v3(s)),
-             {"array", "map", "object", "record", "struct"}),  # children not exported
+             {"map"}),  # ODCS has no map type
     "spark": (lambda m: json.dumps(to_spark_schema(m).jsonValue()),
               lambda s: from_spark_schema(T.StructType.fromJson(json.loads(s))), set()),
 }
